@@ -25,10 +25,11 @@ SENIORITY_JUNIOR_MAX_YEARS = 2
 SENIORITY_PLENO_MAX_YEARS = 6
 
 # --- engine scale tuning ---------------------------------------------------
-# spans-per-doc above this are considered skewed and salted before the
-# media join / OCR stage (SURVEY.md §4: media-heavy docs pin tasks)
+# media spans per doc above this count as skewed (extract.skewed_doc_ids;
+# SURVEY.md §4: media-heavy docs pin tasks). The pipeline needs no salt:
+# the OCR stage repartitions by (doc_id, offset), so a skewed doc's spans
+# spread over every task
 SKEW_SPAN_THRESHOLD = 32
-SKEW_SALT_BUCKETS = 16
 # Iceberg-layout shim: number of hash(doc_id) buckets in the warehouse
 WAREHOUSE_BUCKETS = 8
 # Arrow batch size for the extraction UDFs (bounds per-batch memory when a

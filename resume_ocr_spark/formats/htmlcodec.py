@@ -211,3 +211,16 @@ def strip_boilerplate(doc: str, mode: str = "tags") -> str:
         if len(text) >= MIN_BLOCK_CHARS:
             kept.append(text)
     return "\n".join(kept)
+
+
+def strip_span(raw: str | None, mode: str = "tags") -> tuple[str, str | None]:
+    """Total per-span strip: ``(text, error)``, never raises. Empty or
+    whitespace-only input is ``"empty file"``; a classifier exception is
+    an ``"unexpected: …"`` error value (error-as-data). The oracle's html
+    branch and the Spark batch runner both call this one function."""
+    if not (raw or "").strip():
+        return "", "empty file"
+    try:
+        return strip_boilerplate(raw, mode=mode), None
+    except Exception as exc:
+        return "", f"unexpected: {exc}"

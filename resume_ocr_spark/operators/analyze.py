@@ -7,52 +7,24 @@ Distributed re-expression of the reference's LLM analysis + assembly
   - resume/not-resume judge: pure Column ops — per-heading ``contains`` over
     the first 3000 chars (cap preserved, validation_service.py:149)
   - field extraction: native ``regexp_extract_all`` (JVM, codegen — P8)
-  - sections/score/seniority/summary: one Arrow batch UDF sharing the same
-    pure functions as the single-node oracle
+  - sections/score/seniority/summary: ``textproc.analysis_fields`` run by
+    the shared Arrow batch runner (extract.map_rows) — the same function
+    the single-node oracle calls
   - ranking: ``orderBy().limit(K)`` → TakeOrderedAndProject (no global
     window; scale-safe top-k), rank joined back onto the full table
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import textproc
 from ..config import TOP_K, VALIDATION_TEXT_CAP
-
-ANALYSIS_UDF_SCHEMA = (
-    "doc_id string, score_num double, score_label string, summary string, "
-    "n_sections int"
-)
-
-
-def _make_analysis_batches(query: str | None):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["full_text"]):
-                text = text or ""
-                if query:
-                    score_num = textproc.score_against_query(text, query)
-                    score_label = None
-                else:
-                    score_num = None
-                    score_label = textproc.seniority_label(text)
-                sections = textproc.segment_sections(text)
-                rows.append((
-                    doc_id, score_num, score_label, textproc.summarize(text),
-                    sum(1 for k in sections if k != "_HEADER"),
-                ))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "score_num", "score_label", "summary",
-                               "n_sections"],
-            )
-    return fn
+from .extract import map_rows
 
 
 def classify_resumes(extracted: DataFrame) -> DataFrame:
@@ -132,10 +104,11 @@ def analyze_documents(extracted: DataFrame, query: str | None = None,
     base = extract_fields(base)
 
     eligible = base.filter(~F.col("rejected") & F.col("doc_error").isNull())
-    analysis = (
-        eligible.select("doc_id", "full_text")
-        .mapInPandas(_make_analysis_batches(query), schema=ANALYSIS_UDF_SCHEMA)
-    )
+    analysis = map_rows(
+        eligible, ["doc_id"], ["full_text"],
+        functools.partial(textproc.analysis_fields, query=query),
+        "score_num double, score_label string, summary string, "
+        "n_sections int")
     out = base.join(analysis, "doc_id", "left")
     # non-eligible rows: null analysis columns except n_sections, which the
     # oracle defines as 0 for rejected/error docs (oracle.analyze_doc);

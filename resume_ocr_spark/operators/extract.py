@@ -9,7 +9,7 @@ app/services/ocr_service.py:20-127 extraction; SURVEY.md §3.1 stage map):
       → split by branch                        (F5 kind dispatch — the OCR UDF
                                                 only ever sees media spans)
         text  : pure Column ops (no Python)
-        html  : mapInPandas boilerplate strip
+        html  : boilerplate strip in the batch runner (map_rows)
         media : LEFT join media_blobs (broadcast small dict / AQE skew-join
                 otherwise) → repartition on (doc_id, offset) — span-level
                 parallelism is the skew salt: a doc with 10^3 media spans
@@ -21,16 +21,22 @@ app/services/ocr_service.py:20-127 extraction; SURVEY.md §3.1 stage map):
       → left join doc ids (empty-span docs survive)
 
 Every branch emits the same span-result shape; failures are error *values*
-(error-as-data, reference: app/services/analyze_service.py:105-117).
+(error-as-data, reference: app/services/analyze_service.py:105-117). The
+html and media branches run ``oracle.extract_span`` itself through
+``map_rows``, the one Arrow batch runner for the extraction and analysis
+UDFs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+from collections.abc import Callable
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructType
 
 from .. import oracle
 from ..config import SKEW_SPAN_THRESHOLD
@@ -52,54 +58,44 @@ def blob_broadcast_cutoff(spark: SparkSession) -> int:
     return BROADCAST_CUTOFF_LOCAL if is_single_jvm else BROADCAST_CUTOFF_CLUSTER
 
 
-SPAN_RESULT_SCHEMA = (
-    "doc_id string, offset int, kind string, media_ref string, "
-    "text string, error string, ocr_pages int"
-)
-_RESULT_COLS = ["doc_id", "offset", "kind", "media_ref", "text", "error", "ocr_pages"]
+_SPAN_KEYS = ["doc_id", "offset", "kind", "media_ref"]
+_RESULT_COLS = _SPAN_KEYS + ["text", "error", "ocr_pages"]
 
 
 # --------------------------------------------------------------------------
-# batch UDFs (Arrow-transferred; the only Python in the pipeline)
+# batch runner (Arrow-transferred; the only Python in the pipeline)
 # --------------------------------------------------------------------------
 
-def _html_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..formats import htmlcodec
+def map_rows(df: DataFrame, keep: list[str], args: list[str],
+             fn: Callable[..., tuple], out_ddl: str) -> DataFrame:
+    """The one Python batch UDF runner: ``fn(*args)`` runs once per row and
+    its tuple fills the ``out_ddl`` columns; the ``keep`` columns pass
+    through as Arrow arrays, untouched and with their ``df`` types. ``fn``
+    must be total (error-as-data), so no input row can fail the task."""
+    out = StructType.fromDDL(out_ddl)
+    schema = StructType([df.schema[c] for c in keep] + out.fields)
+    types = [to_arrow_type(f.dataType) for f in out.fields]
 
-    for pdf in batches:
-        texts, errors = [], []
-        for raw in pdf["text"]:
-            if not (raw or "").strip():
-                texts.append("")
-                errors.append("empty file")
-                continue
-            try:
-                texts.append(htmlcodec.strip_boilerplate(raw))
-                errors.append(None)
-            except Exception as exc:  # never fail the task on bad input
-                texts.append("")
-                errors.append(f"unexpected: {exc}")
-        out = pdf[["doc_id", "offset", "kind", "media_ref"]].copy()
-        out["text"] = texts
-        out["error"] = errors
-        out["ocr_pages"] = 0
-        yield out[_RESULT_COLS]
+    def run(batches):
+        for batch in batches:
+            cols = [batch.column(a).to_pylist() for a in args]
+            results = list(zip(*(fn(*row) for row in zip(*cols))))
+            results = results or [()] * len(types)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep]
+                + [pa.array(r, type=t) for r, t in zip(results, types)],
+                names=schema.fieldNames())
+
+    # a column may be both kept and an argument (``kind``): select it once
+    return df.select(*dict.fromkeys(keep + args)).mapInArrow(run, schema)
 
 
-def _media_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        texts, errors, pages = [], [], []
-        for kind, payload in zip(pdf["kind"], pdf["payload"]):
-            raw = bytes(payload) if payload is not None else None
-            text, error, n = oracle.extract_span(kind, "", "", raw)
-            texts.append(text)
-            errors.append(error)
-            pages.append(n)
-        out = pdf[["doc_id", "offset", "kind", "media_ref"]].copy()
-        out["text"] = texts
-        out["error"] = errors
-        out["ocr_pages"] = pages
-        yield out[_RESULT_COLS]
+def _extract_rows(spans: DataFrame) -> DataFrame:
+    """(doc_id, offset, kind, media_ref, text, payload) → span results via
+    ``oracle.extract_span``."""
+    return map_rows(spans, _SPAN_KEYS, ["kind", "text", "media_ref", "payload"],
+                    oracle.extract_span,
+                    "text string, error string, ocr_pages int")
 
 
 # --------------------------------------------------------------------------
@@ -160,11 +156,8 @@ def extract_spans(
         .select(_RESULT_COLS)
     )
 
-    html_b = (
-        spans_df.filter(is_html)
-        .select("doc_id", "offset", "kind", "media_ref", "text")
-        .mapInPandas(_html_batches, schema=SPAN_RESULT_SCHEMA)
-    )
+    html_b = _extract_rows(spans_df.filter(is_html).withColumn(
+        "payload", F.lit(None).cast("binary")))
 
     # media branch: spread spans, join payloads, batch-extract
     blobs = blobs_df.select("media_ref", "payload")
@@ -193,9 +186,7 @@ def extract_spans(
         # distribution afterwards (payload bytes must cross here regardless)
         media = media_spans.join(blobs, "media_ref", "left").repartition(
             ocr_partitions, "doc_id", "offset")
-    media_b = media.select(
-        "doc_id", "offset", "kind", "media_ref", "payload"
-    ).mapInPandas(_media_batches, schema=SPAN_RESULT_SCHEMA)
+    media_b = _extract_rows(media.withColumn("text", F.lit("")))
     # dangling media_ref: payload arrived null → oracle.extract_span returned
     # "missing media blob" (it sees payload=None), so nothing extra needed.
 
@@ -316,26 +307,6 @@ def strip_html_column(
 
     if mode not in ("tags", "justext"):
         raise ValueError(f"unknown strip mode: {mode!r}")
-    id_type = dict(df.dtypes)[id_col]  # preserve the caller's id type
-
-    def strip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts, errors = [], []
-            for raw in pdf[html_col]:
-                if not (raw or "").strip():
-                    texts.append("")
-                    errors.append("empty file")
-                    continue
-                try:
-                    texts.append(htmlcodec.strip_boilerplate(raw, mode=mode))
-                    errors.append(None)
-                except Exception as exc:  # error-as-data, never task death
-                    texts.append("")
-                    errors.append(f"unexpected: {exc}")
-            out = pdf[[id_col]].copy()
-            out["text"] = texts
-            out["error"] = errors
-            yield out
-
-    return df.select(id_col, html_col).mapInPandas(
-        strip, schema=f"{id_col} {id_type}, text string, error string")
+    return map_rows(df, [id_col], [html_col],
+                    functools.partial(htmlcodec.strip_span, mode=mode),
+                    "text string, error string")

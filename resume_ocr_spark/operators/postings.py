@@ -448,6 +448,7 @@ def multi_phrase_matches(
     (matching doc, phrase). Blocklist usage: ``corpus.join(
     multi_phrase_matches(...).select(id).distinct(), id, "left_anti")``.
     """
+    phrases = list(dict.fromkeys(phrases))  # a repeated phrase yields one row
     toks = {p: _phrase_tokens(p) for p in phrases}
     if not phrases or any(not t for t in toks.values()):
         raise ValueError("every phrase needs ≥1 token after normalization")

@@ -51,9 +51,7 @@ def extract_span(kind: str, text: str, media_ref: str, payload: bytes | None):
                 return "", "empty file", 0
             return text, None, 0
         if kind == "html":
-            if not (text or "").strip():
-                return "", "empty file", 0
-            return htmlcodec.strip_boilerplate(text), None, 0
+            return (*htmlcodec.strip_span(text), 0)
         if kind not in ("pdf", "image"):
             return "", f"unsupported kind: {kind}", 0
         if payload is None:
@@ -140,21 +138,12 @@ def analyze_doc(extracted_spans: list[dict], query: str | None) -> dict:
                 "score_label": None, "summary": None, "emails": [], "phones": [],
                 "dates": [], "n_sections": 0}
     fields = textproc.extract_fields(text)
-    sections = textproc.segment_sections(text)
-    row = {
-        "rejected": False, "error": None,
-        "summary": textproc.summarize(text),
-        "emails": fields["emails"], "phones": fields["phones"],
-        "dates": fields["dates"],
-        "n_sections": sum(1 for k in sections if k != "_HEADER"),
-    }
-    if query:  # ranked mode: numeric score (llm_service.py:16)
-        row["score_num"] = textproc.score_against_query(text, query)
-        row["score_label"] = None
-    else:      # summary mode: seniority label (llm_service.py:93)
-        row["score_num"] = None
-        row["score_label"] = textproc.seniority_label(text)
-    return row
+    score_num, score_label, summary, n_sections = textproc.analysis_fields(
+        text, query)
+    return {"rejected": False, "error": None, "score_num": score_num,
+            "score_label": score_label, "summary": summary,
+            "emails": fields["emails"], "phones": fields["phones"],
+            "dates": fields["dates"], "n_sections": n_sections}
 
 
 def run_pipeline(docs: list[dict], blob_rows: list[dict],

@@ -306,3 +306,17 @@ def summarize(text: str) -> str:
         f"seções: {', '.join(names) if names else 'nenhuma'}."
     )
     return summary
+
+
+def analysis_fields(text: str | None, query: str | None
+                    ) -> tuple[float | None, str | None, str, int]:
+    """``(score_num, score_label, summary, n_sections)`` for one accepted
+    document: a numeric query score in ranked mode, a seniority label
+    otherwise. The oracle and the Spark analysis UDF both call this."""
+    text = text or ""
+    n_sections = sum(1 for k in segment_sections(text) if k != "_HEADER")
+    if query:  # ranked mode: numeric score (llm_service.py:16)
+        return (score_against_query(text, query), None, summarize(text),
+                n_sections)
+    # summary mode: seniority label (llm_service.py:93)
+    return None, seniority_label(text), summarize(text), n_sections

@@ -21,6 +21,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructType
 
 from .config import WAREHOUSE_BUCKETS
 
@@ -67,9 +68,15 @@ def read_table(
     spark: SparkSession, root: str, table: str, buckets: list[int] | None = None
 ) -> DataFrame:
     """Read a table; ``buckets`` restricts to specific bucket partitions
-    (partition pruning — only those directories are scanned)."""
+    (partition pruning — only those directories are scanned). The schema
+    comes from the manifest, not the files, so an empty table reads as an
+    empty frame instead of failing schema inference."""
     base = os.path.join(root, table, "data")
-    df = spark.read.option("basePath", base).parquet(base)
+    man = manifest(root, table)
+    schema = StructType.fromJson(man["schema"])
+    if man["bucket_key"] is not None:
+        schema = schema.add("bucket", IntegerType())
+    df = spark.read.schema(schema).option("basePath", base).parquet(base)
     if buckets is not None:
         df = df.filter(F.col("bucket").isin([int(b) for b in buckets]))
     return df

@@ -248,6 +248,18 @@ def test_multi_phrase_blocklist_antijoin(docs, post):
     assert kept.count() == docs.count() - hits.select("doc_id").distinct().count()
 
 
+def test_multi_phrase_dedups_repeated_phrases(post):
+    """A repeated phrase (a blocklist file with a duplicated line) yields
+    one row per (doc, phrase), not one per repeat."""
+    def rows(phrases):
+        return sorted(map(tuple, postings.multi_phrase_matches(
+            post, phrases).collect()))
+    once = rows(["big data merge", "window fast query"])
+    assert once
+    assert rows(["big data merge", "window fast query",
+                 "big data merge"]) == once
+
+
 def test_multi_phrase_rejects_empty(post):
     with pytest.raises(ValueError):
         postings.multi_phrase_matches(post, ["big data", "!!!"])

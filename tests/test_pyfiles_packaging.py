@@ -15,16 +15,28 @@ import os
 import subprocess
 import sys
 import textwrap
+import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _package_sources() -> set[str]:
+    pkg = os.path.join(ROOT, "resume_ocr_spark")
+    return {
+        os.path.relpath(os.path.join(d, f), ROOT).replace(os.sep, "/")
+        for d, _, files in os.walk(pkg) if "__pycache__" not in d
+        for f in files if f.endswith(".py")
+    }
+
+
 def test_pipeline_runs_from_pyfiles_zip(tmp_path):
+    # built into tmp_path: the test never rewrites anything in the checkout
+    zip_path = str(tmp_path / "resume_ocr_spark.zip")
     subprocess.run(
-        [sys.executable, os.path.join(ROOT, "tools", "make_pyfiles.py")],
-        check=True, capture_output=True)
-    zip_path = os.path.join(ROOT, "dist", "resume_ocr_spark.zip")
-    assert os.path.exists(zip_path)
+        [sys.executable, os.path.join(ROOT, "tools", "make_pyfiles.py"),
+         zip_path], check=True, capture_output=True)
+    with zipfile.ZipFile(zip_path) as zf:
+        assert set(zf.namelist()) == _package_sources()
 
     script = textwrap.dedent(f"""
         import sys

@@ -159,7 +159,8 @@ def test_search_job_contract_fixes(spark, tmp_path, capsys):
     """Review-driven CLI contracts: bm25 no-match exits 4 (matched-only
     results, no zero-score padding), tokenless phrase exits 2 instead of
     a traceback, proximity input normalizes like every other mode, and
-    a non-default --text-col survives the manifest into snippets."""
+    a non-default --text-col survives the manifest into snippets and
+    merges."""
     docs = spark.read.parquet(DOCS)
     body_p = str(tmp_path / "body.parquet")
     docs.withColumnRenamed("text", "body").write.parquet(body_p)
@@ -208,3 +209,18 @@ def test_search_job_contract_fixes(spark, tmp_path, capsys):
     assert rc == 0 and meta["rows"] >= 1
     assert "big data merge" in spark.read.parquet(
         f"{out4}/results").collect()[0].snippet
+
+    # merge tokenizes the delta's manifest text_col (body) when
+    # --text-col is not given again
+    delta_p = str(tmp_path / "delta.parquet")
+    (spark.read.parquet(body_p).filter("doc_id < 5")
+     .withColumn("doc_id", F.col("doc_id") + 500)
+     .withColumn("body", F.concat(F.lit("zeppelin "), F.col("body")))
+     .write.parquet(delta_p))
+    merged = str(tmp_path / "merged")
+    rc, meta = _run(["merge", "--index", idx, "--delta", delta_p,
+                     "--output", merged], capsys)
+    assert rc == 0 and meta["n_docs"] == 505
+    hits = spark.read.parquet(f"{merged}/postings").filter(
+        "term = 'zeppelin'").collect()
+    assert {r.doc_id for r in hits} == {500, 501, 502, 503, 504}

@@ -121,3 +121,21 @@ class TestPartitionPruning:
         plan = pruned._jdf.queryExecution().executedPlan().toString()
         # partition filter must reach the scan, not a post-scan Filter
         assert "bucket" in plan
+
+
+def test_empty_media_table_reads_and_extracts(spark, small_corpus, tmp_path):
+    """A corpus with no media spans writes an empty media_blobs table;
+    read_table takes its schema from the manifest, so extraction runs and
+    matches the oracle span for span."""
+    docs = [{"doc_id": d["doc_id"],
+             "spans": [s for s in d["spans"] if s["kind"] in ("text", "html")]}
+            for d in small_corpus[0]]
+    root = str(tmp_path / "wh")
+    warehouse.build_warehouse(spark, root, docs, [])
+    blobs_df = warehouse.read_table(spark, root, "media_blobs")
+    assert blobs_df.count() == 0
+    out = extract.extract_documents(
+        warehouse.read_table(spark, root, "documents_raw"), blobs_df,
+        broadcast_blobs=True)
+    got = {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in out.collect()}
+    assert got == {d["doc_id"]: oracle.extract_doc(d, {}) for d in docs}

@@ -1,9 +1,10 @@
 """Package the engine for ``spark-submit --py-files``.
 
-Produces dist/resume_ocr_spark.zip containing the package (sources only).
-Cluster usage:
+Produces dist/resume_ocr_spark.zip (or the path given as the first
+argument) containing the package (sources only). The zip is a build
+output, not a tracked file: build it before each submit. Cluster usage:
 
-    python tools/make_pyfiles.py
+    python tools/make_pyfiles.py [out.zip]
     spark-submit --py-files dist/resume_ocr_spark.zip \
         tools/submit_extraction.py \
         --warehouse s3://bucket/warehouse --output s3://bucket/out \
@@ -13,15 +14,15 @@ Cluster usage:
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    dist = os.path.join(ROOT, "dist")
-    os.makedirs(dist, exist_ok=True)
-    out = os.path.join(dist, "resume_ocr_spark.zip")
+def main(out: str | None = None) -> str:
+    out = out or os.path.join(ROOT, "dist", "resume_ocr_spark.zip")
+    os.makedirs(os.path.dirname(os.path.abspath(out)), exist_ok=True)
     pkg = os.path.join(ROOT, "resume_ocr_spark")
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
         for dirpath, _, files in os.walk(pkg):
@@ -36,4 +37,4 @@ def main() -> str:
 
 
 if __name__ == "__main__":
-    main()
+    main(*sys.argv[1:2])

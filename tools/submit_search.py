@@ -20,7 +20,7 @@ segment merge.
 
     # merge a recrawl delta (replaced doc_ids re-index; corpus not rescanned)
     ... submit_search.py merge --index <dir> --delta <docs.parquet> \
-        --output <new index dir> [--id-col doc_id] [--text-col text]
+        --output <new index dir> [--text-col <index text_col>]
 
 query writes the result parquet under --output/results and prints one
 JSON metrics line (mode, rows, index buckets touched). Exits 2 on
@@ -151,14 +151,16 @@ def _merge(args) -> int:
         return 2
     post, dl, man = _load_index(spark, args.index)
     delta = spark.read.parquet(args.delta)
-    dpost = P.build_postings(delta, man["id_col"], args.text_col) \
+    # the index's own text column unless --text-col overrides it
+    text_col = args.text_col or man.get("text_col", "text")
+    dpost = P.build_postings(delta, man["id_col"], text_col) \
         .withColumn("tbucket",
                     P._bucket_col(F.col("term"), man["n_buckets"]))
     merged = P.merge_postings(post, dpost, man["id_col"])
     merged.write.mode("overwrite").partitionBy("tbucket") \
         .parquet(f"{args.output}/postings")
     dl_m = P.merge_postings(dl, P.doc_lengths(delta, man["id_col"],
-                                              args.text_col), man["id_col"])
+                                              text_col), man["id_col"])
     dl_m.write.mode("overwrite").parquet(f"{args.output}/doclens")
     n_docs = spark.read.parquet(f"{args.output}/doclens").count()
     man.update({"n_docs": n_docs})
@@ -198,7 +200,8 @@ def main() -> int:
     m.add_argument("--index", required=True)
     m.add_argument("--delta", required=True)
     m.add_argument("--output", required=True)
-    m.add_argument("--text-col", default="text")
+    m.add_argument("--text-col", default=None,
+                   help="delta text column (default: the index's text_col)")
 
     args = ap.parse_args()
     if args.cmd == "build":
