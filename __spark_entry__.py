@@ -1506,7 +1506,7 @@ def _warc_blobs() -> list[tuple[int, bytes | None]]:
 def warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WARC crawl-container ingest (round 5): binary members → one row
     per record via the from-scratch ISO 28500 codec
-    (formats/warcformat.py) inside a mapInPandas batch UDF — zero
+    (formats/warcformat.py) inside a map_rows batch UDF — zero
     shuffle, record explosion inside the scan, malformed members as
     named error ROWS. Oracle = precomputed VALUES from the same
     pure-python codec (the codec-entry convention)."""
@@ -1640,7 +1640,7 @@ def _encoding_fixture_rows() -> list[tuple[int, str | None]]:
 def encoding_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encoding triage (tail entry, round 5): mojibake detection counters
     as JVM-side regex Columns (the full-corpus routing scan) + the
-    cp1252-round-trip repair / NFC / control-strip pandas UDF, over
+    cp1252-round-trip repair / NFC / control-strip row UDF, over
     fixtures covering single- and double-encoded UTF-8, CJK, emoji,
     control bytes, replacement-char debris, NFD text, and NULL.  The
     Java-vs-Python regex dialects are part of what the hash pins: the
@@ -2456,7 +2456,7 @@ def _media_texts(n: int) -> list[tuple[int, str]]:
 def html_strip_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The HTML branch standalone under the hard gate: boilerplate strip +
     block classification over deterministic wrapped resumes, run through
-    the SAME mapInPandas path the pipeline uses; oracle = the shared pure
+    the SAME map_rows path the pipeline uses; oracle = the shared pure
     function's output as VALUES (length + md5 of the stripped text)."""
     import random
 

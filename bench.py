@@ -20,7 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "48000"))
 OCR_PARTITIONS = int(os.environ.get("SPARK_GRAFT_OCR_PARTITIONS", "96"))
 TRIALS = int(os.environ.get("SPARK_GRAFT_TRIALS", "3"))  # best-of: steady state

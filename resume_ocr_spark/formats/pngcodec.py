@@ -51,7 +51,7 @@ def _unfilter(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray:
     Row-vectorized where the filter allows (None, Up, and Sub via a
     byte-wise per-channel cumsum); Average and Paeth depend on the
     reconstructed left neighbor, so those rows fall back to a per-byte
-    Python loop — fine at fixture scale, and batched under mapInPandas in
+    Python loop — fine at fixture scale, and batched under map_rows in
     the pipeline."""
     if len(raw) != h * (stride + 1):
         raise PngDecodeError(

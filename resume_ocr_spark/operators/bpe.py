@@ -38,11 +38,11 @@ mirrors literally.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .extract import map_rows
 
 DEFAULT_NUM_MERGES = 120
 DEFAULT_SAMPLE_DOCS = 500
@@ -174,21 +174,14 @@ def with_bpe_token_counts(
     from .dedup import _tokens
 
     ranks = {tuple(p): i for i, p in enumerate(merges)}
-
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "word": pdf["word"],
-                "word_tokens": [len(encode_word(w, ranks))
-                                for w in pdf["word"]],
-            })
-
     toks = F.filter(_tokens(text_col), lambda x: x != "")
     occurrences = df.select(
         F.col(id_col), F.explode_outer(toks).alias("word"))
     vocab = occurrences.filter(F.col("word").isNotNull()) \
         .select("word").distinct()
-    encoded = vocab.mapInPandas(enc, schema="word string, word_tokens int")
+    encoded = map_rows(vocab, ["word"], ["word"],
+                       lambda w: (len(encode_word(w, ranks)),),
+                       "word_tokens int")
     if broadcast_encoded:
         encoded = F.broadcast(encoded)
     joined = occurrences.join(encoded, "word", "left")

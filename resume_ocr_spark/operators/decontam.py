@@ -211,40 +211,26 @@ def _semantic_contamination_udf(
     corpus: DataFrame, vecs: list[list[float]], vec_col: str,
     threshold: float,
 ) -> DataFrame:
-    """Large-bench path: one numpy matmul per Arrow batch."""
-    from collections.abc import Iterator
-
+    """Large-bench path: one bench-matrix × vector product per row."""
     import numpy as np
-    import pandas as pd
+
+    from .extract import map_rows
 
     bench = np.asarray(vecs, dtype=np.float64)
     bench_unit = bench / np.linalg.norm(bench, axis=1, keepdims=True)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            maxc: list[float | None] = []
-            for v in pdf[vec_col]:
-                if v is None:
-                    maxc.append(None)
-                    continue
-                x = np.asarray(list(v), dtype=np.float64)
-                n = np.linalg.norm(x)
-                if n == 0:
-                    maxc.append(None)
-                    continue
-                maxc.append(round(float((bench_unit @ (x / n)).max()), 6))
-            out["max_benchmark_cosine"] = maxc
-            out["contaminated"] = [
-                (c is not None and c >= threshold) for c in maxc]
-            yield out
+    def score(v):
+        if v is None:
+            return None, False
+        x = np.asarray(v, dtype=np.float64)
+        n = np.linalg.norm(x)
+        if n == 0:
+            return None, False
+        c = round(float((bench_unit @ (x / n)).max()), 6)
+        return c, c >= threshold
 
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in corpus.schema.fields)
-    return corpus.mapInPandas(
-        score,
-        schema=f"{fields}, max_benchmark_cosine double, "
-               "contaminated boolean")
+    return map_rows(corpus, corpus.columns, [vec_col], score,
+                    "max_benchmark_cosine double, contaminated boolean")
 
 
 def decontaminate(

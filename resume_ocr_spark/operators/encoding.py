@@ -15,8 +15,8 @@ Design (the 100 TB shape):
                         (zero shuffle, zero Python, codegen-friendly):
                         the cheap full-corpus scan that decides who pays
                         the repair path
-  fix_text            — Arrow-vectorized pandas UDF applying
-                        ``repair_encoding`` + NFC + C0-strip per row;
+  fix_text            — ``repair_encoding`` + NFC + C0-strip per row
+                        on the Arrow batch runner (``extract.map_rows``);
                         a projection (no shuffle), with every string
                         routine shared verbatim with the single-node
                         oracle (the htmlcodec pattern: distributed-
@@ -39,9 +39,10 @@ from __future__ import annotations
 import re
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .extract import map_rows
 
 # --- the mojibake signature -------------------------------------------
 # UTF-8 continuation bytes 0x80-0xBF, as they appear after a cp1252
@@ -148,8 +149,8 @@ def with_encoding_flags(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def fix_text(df: DataFrame, text_col: str = "text",
              out_col: str = "text_fixed", max_passes: int = 3) -> DataFrame:
-    """Repair + NFC + control-strip as an Arrow-batched pandas UDF
-    (struct return: ``out_col`` string, ``n_repair_passes`` int).  A pure
+    """Repair + NFC + control-strip per row on the Arrow batch runner
+    (adds ``out_col`` string and ``n_repair_passes`` int).  A pure
     projection — no shuffle; cost is per-row Python ONLY for rows whose
     signature count is nonzero (the fast path is two regex scans that
     bail immediately on clean text, which is ~all of a healthy corpus).
@@ -158,15 +159,9 @@ def fix_text(df: DataFrame, text_col: str = "text",
     ``mojibake_hits > 0`` first and repair only that slice, then union
     back — the flags scan is JVM-side and free next to the decode UDFs."""
 
-    @F.pandas_udf(f"{out_col} string, n_repair_passes int")
-    def _fix(s: pd.Series) -> pd.DataFrame:
-        fixed, passes = zip(*(repair_encoding(v, max_passes) for v in s)) \
-            if len(s) else ((), ())
-        return pd.DataFrame({out_col: list(fixed),
-                             "n_repair_passes": list(passes)})
-
-    struct = _fix(F.col(text_col))
-    return (df.withColumn("_enc", struct)
-            .withColumn(out_col, F.col(f"_enc.{out_col}"))
-            .withColumn("n_repair_passes", F.col("_enc.n_repair_passes"))
-            .drop("_enc"))
+    new = [out_col, "n_repair_passes"]
+    fixed = map_rows(df, [c for c in df.columns if c not in new], [text_col],
+                     lambda v: repair_encoding(v, max_passes),
+                     f"`{out_col}` string, n_repair_passes int")
+    # withColumn placement: a replaced column keeps its position
+    return fixed.select(*dict.fromkeys(df.columns + new))

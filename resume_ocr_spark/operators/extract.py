@@ -23,8 +23,8 @@ app/services/ocr_service.py:20-127 extraction; SURVEY.md §3.1 stage map):
 Every branch emits the same span-result shape; failures are error *values*
 (error-as-data, reference: app/services/analyze_service.py:105-117). The
 html and media branches run ``oracle.extract_span`` itself through
-``map_rows``, the one Arrow batch runner for the extraction and analysis
-UDFs.
+``map_rows``, the one Arrow batch runner for every per-row Python UDF in
+the package (extraction, analysis, media, curation and ingest operators).
 """
 
 from __future__ import annotations
@@ -68,10 +68,13 @@ _RESULT_COLS = _SPAN_KEYS + ["text", "error", "ocr_pages"]
 
 def map_rows(df: DataFrame, keep: list[str], args: list[str],
              fn: Callable[..., tuple], out_ddl: str) -> DataFrame:
-    """The one Python batch UDF runner: ``fn(*args)`` runs once per row and
-    its tuple fills the ``out_ddl`` columns; the ``keep`` columns pass
-    through as Arrow arrays, untouched and with their ``df`` types. ``fn``
-    must be total (error-as-data), so no input row can fail the task."""
+    """The one Python row UDF runner for the whole package: ``fn(*args)``
+    runs once per row and its tuple fills the ``out_ddl`` columns; the
+    ``keep`` columns pass through as Arrow arrays, untouched and with their
+    ``df`` types. ``fn`` must be total (error-as-data), so no input row can
+    fail the task. A row that fans out to several output rows returns one
+    ``array<struct<…>>`` column, which the caller explodes with
+    ``.select(*keep, F.inline(col))``."""
     out = StructType.fromDDL(out_ddl)
     schema = StructType([df.schema[c] for c in keep] + out.fields)
     types = [to_arrow_type(f.dataType) for f in out.fields]

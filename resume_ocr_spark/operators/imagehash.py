@@ -21,7 +21,7 @@ guaranteed to share a band; beyond that the bands act as a recall dial,
 exactly like MinHash band count. Exact Hamming distance (xor → bit_count,
 pure Column ops) then verifies each candidate.
 
-Scale posture: hashing is a zero-shuffle mapInPandas projection; pairing
+Scale posture: hashing is a zero-shuffle ``map_rows`` projection; pairing
 is one equi-join on band bits whose cost tracks true near-dup density.
 Degenerate buckets (a corpus of identical logos) fall under the same
 ``max_bucket_size`` / star-edge levers as the MinHash family.
@@ -29,14 +29,12 @@ Degenerate buckets (a corpus of identical logos) fall under the same
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..formats import imagecodec
+from .extract import map_rows
 
 PHASH_SIZE = 32   # pre-DCT resize edge
 PHASH_KEEP = 8    # low-frequency block edge (8×8 − DC = 63 bits + 1 pad)
@@ -111,28 +109,23 @@ def dhash64(img: np.ndarray) -> int:
     return _bits_to_i64(bits)
 
 
-HASH_SCHEMA = "doc_id long, phash long, dhash long, error string"
+HASH_SCHEMA = "phash long, dhash long, error string"
 
 
 def with_image_hashes(media_df: DataFrame) -> DataFrame:
     """binary image column → (phash, dhash) via an Arrow batch UDF.
     Zero-shuffle projection; corrupt payloads become error rows."""
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    rows.append((doc_id, None, None, "null payload"))
-                    continue
-                try:
-                    img = imagecodec.decode_image(bytes(payload))
-                    rows.append((doc_id, phash64(img), dhash64(img), None))
-                except imagecodec.ImageDecodeError as exc:
-                    rows.append((doc_id, None, None, str(exc)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "phash", "dhash", "error"])
+    return map_rows(media_df, ["doc_id"], ["media"], _hash_row, HASH_SCHEMA)
 
-    return media_df.mapInPandas(hash_batch, schema=HASH_SCHEMA)
+
+def _hash_row(payload: bytes | None) -> tuple:
+    if payload is None:
+        return None, None, "null payload"
+    try:
+        img = imagecodec.decode_image(payload)
+    except imagecodec.ImageDecodeError as exc:
+        return None, None, str(exc)
+    return phash64(img), dhash64(img), None
 
 
 def phash_near_dup(

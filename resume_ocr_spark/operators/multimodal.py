@@ -1,9 +1,11 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
 Real pipeline shape for image/audio/video columns at 100 TB scale: media
-travels as a ``binary`` column, every transform is an Arrow batch UDF over
-``mapInPandas`` (schema, partitioning, batch shape all real).  Decode is
-real for PNG (formats/pngcodec.py), baseline AND progressive JPEG
+travels as a ``binary`` column, every transform is a total per-row function
+run by the one Arrow batch runner, ``extract.map_rows`` (schema,
+partitioning, batch shape all real); fan-out transforms return one
+array-of-struct column that ``F.inline`` explodes.  Decode is real for PNG
+(formats/pngcodec.py), baseline AND progressive JPEG
 (formats/jpegcodec.py — SOF0 + SOF2, the majority web raster encodings),
 RIFF/WAV PCM (avcodec.decode_wav), MJPEG-in-MP4 (formats/mp4codec.py) and
 the engine's own RIMG/RAUD/RVID payloads; container-level probing (codec /
@@ -15,17 +17,17 @@ NotImplementedError.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..formats import avcodec, imagecodec
+from .extract import map_rows
 
 META_SCHEMA = (
-    "doc_id long, height int, width int, n_pixels long, mean_intensity double, "
-    "error string"
+    "height int, width int, n_pixels long, mean_intensity double, error string"
 )
 
 
@@ -88,6 +90,13 @@ def render_media_payload(doc_id: int, text: str,
     return rimg
 
 
+def _render(docs: DataFrame, id_col: str, text_col: str,
+            fn: Callable[[int, str | None], tuple]) -> DataFrame:
+    """``(doc_id long, media binary)`` from ``fn(id, text)`` per row."""
+    ids = docs.select(F.col(id_col).cast("long").alias("doc_id"), text_col)
+    return map_rows(ids, ["doc_id"], ["doc_id", text_col], fn, "media binary")
+
+
 def render_binary_column(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     progressive_every: int | None = None,
@@ -95,26 +104,13 @@ def render_binary_column(
     """Deterministic media synthesis: text → binary column (the stand-in
     for reading real image bytes from blob storage); see
     :func:`render_media_payload` for the container mix."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame({
-                "doc_id": pdf[id_col],
-                "media": [
-                    render_media_payload(i, t, progressive_every)
-                    for i, t in zip(pdf[id_col], pdf[text_col])
-                ],
-            })
-            yield out
-
-    return docs.select(id_col, text_col).mapInPandas(
-        gen, schema="doc_id long, media binary"
-    )
+    return _render(docs, id_col, text_col, lambda i, t: (
+        render_media_payload(i, t, progressive_every),))
 
 
 EXIF_META_SCHEMA = (
-    "doc_id long, orientation int, make string, model string, "
-    "datetime_original string, exif_w long, exif_h long, has_gps boolean, "
-    "error string"
+    "orientation int, make string, model string, datetime_original string, "
+    "exif_w long, exif_h long, has_gps boolean, error string"
 )
 
 
@@ -153,16 +149,8 @@ def render_exif_binary_column(
 ) -> DataFrame:
     """text → EXIF-tagged JPEG binary column (render_binary_column's
     camera-photo sibling; see :func:`render_exif_jpeg`)."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col],
-                "media": [render_exif_jpeg(i, t)
-                          for i, t in zip(pdf[id_col], pdf[text_col])],
-            })
-
-    return docs.select(id_col, text_col).mapInPandas(
-        gen, schema="doc_id long, media binary")
+    return _render(docs, id_col, text_col,
+                   lambda i, t: (render_exif_jpeg(i, t),))
 
 
 def exif_metadata(media_df: DataFrame) -> DataFrame:
@@ -174,85 +162,61 @@ def exif_metadata(media_df: DataFrame) -> DataFrame:
     extracted. Zero shuffles: pure per-batch projection."""
     from ..formats import exifcodec
 
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        nul = (None,) * 7
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    rows.append((doc_id, *nul, "null payload"))
-                    continue
-                try:
-                    info = exifcodec.parse_exif(bytes(payload))
-                except exifcodec.ExifError as exc:
-                    rows.append((doc_id, *nul, str(exc)))
-                    continue
-                if info is None:
-                    rows.append((doc_id, *nul, None))
-                else:
-                    rows.append((
-                        doc_id, info["orientation"], info["make"],
-                        info["model"], info["datetime_original"],
-                        info["pixel_x"], info["pixel_y"],
-                        info["has_gps"], None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "orientation", "make", "model",
-                "datetime_original", "exif_w", "exif_h", "has_gps",
-                "error"])
+    nul = (None,) * 7
 
-    return media_df.mapInPandas(meta, schema=EXIF_META_SCHEMA)
+    def meta(payload):
+        if payload is None:
+            return (*nul, "null payload")
+        try:
+            info = exifcodec.parse_exif(payload)
+        except exifcodec.ExifError as exc:
+            return (*nul, str(exc))
+        if info is None:
+            return (*nul, None)
+        return (info["orientation"], info["make"], info["model"],
+                info["datetime_original"], info["pixel_x"], info["pixel_y"],
+                info["has_gps"], None)
+
+    return map_rows(media_df, ["doc_id"], ["media"], meta, EXIF_META_SCHEMA)
 
 
 def image_metadata(media_df: DataFrame) -> DataFrame:
     """binary → typed metadata (h, w, pixel count, mean intensity) via a
     vectorized batch UDF; corrupt payloads become error rows."""
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:  # upstream error row — stay error-as-data
-                    rows.append((doc_id, None, None, None, None, "null payload"))
-                    continue
-                try:
-                    img = imagecodec.decode_image(bytes(payload))
-                    rows.append((doc_id, img.shape[0], img.shape[1],
-                                 int(img.size), round(float(img.mean()), 4), None))
-                except imagecodec.ImageDecodeError as exc:
-                    rows.append((doc_id, None, None, None, None, str(exc)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "height", "width", "n_pixels", "mean_intensity",
-                "error"])
+    def meta(payload):
+        if payload is None:  # upstream error row — stay error-as-data
+            return None, None, None, None, "null payload"
+        try:
+            img = imagecodec.decode_image(payload)
+        except imagecodec.ImageDecodeError as exc:
+            return None, None, None, None, str(exc)
+        return (img.shape[0], img.shape[1], int(img.size),
+                round(float(img.mean()), 4), None)
 
-    return media_df.mapInPandas(meta, schema=META_SCHEMA)
+    return map_rows(media_df, ["doc_id"], ["media"], meta, META_SCHEMA)
 
 
 def resize_half(media_df: DataFrame) -> DataFrame:
     """Real image transform on the binary column: 2× MIN-pool downsample
     (min preserves dark ink strokes on white documents, where mean/max
     would thin them; vectorized numpy inside the batch UDF)."""
-    def rz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_payloads = []
-            for payload in pdf["media"]:
-                if payload is None:  # propagate upstream error rows
-                    out_payloads.append(None)
-                    continue
-                try:  # any supported container (RIMG/PNG/JPEG incl. SOF2)
-                    img = imagecodec.decode_image(bytes(payload))
-                except imagecodec.ImageDecodeError:
-                    out_payloads.append(None)  # error-as-data: null payload
-                    continue
-                h, w = (img.shape[0] // 2) * 2, (img.shape[1] // 2) * 2
-                small = img[:h, :w].reshape(h // 2, 2, w // 2, 2).min(axis=(1, 3))
-                header = imagecodec.MAGIC + np.array(
-                    small.shape, dtype="<u4").tobytes()
-                out_payloads.append(header + small.tobytes())
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "media": out_payloads})
+    def rz(payload):
+        if payload is None:  # propagate upstream error rows
+            return (None,)
+        try:  # any supported container (RIMG/PNG/JPEG incl. SOF2)
+            img = imagecodec.decode_image(payload)
+        except imagecodec.ImageDecodeError:
+            return (None,)  # error-as-data: null payload
+        h, w = (img.shape[0] // 2) * 2, (img.shape[1] // 2) * 2
+        small = img[:h, :w].reshape(h // 2, 2, w // 2, 2).min(axis=(1, 3))
+        header = imagecodec.MAGIC + np.array(
+            small.shape, dtype="<u4").tobytes()
+        return (header + small.tobytes(),)
 
-    return media_df.mapInPandas(rz, schema="doc_id long, media binary")
+    return map_rows(media_df, ["doc_id"], ["media"], rz, "media binary")
 
 
-REENCODE_SCHEMA = "doc_id long, jpeg binary, n_bytes int, error string"
+REENCODE_SCHEMA = "jpeg binary, n_bytes int, error string"
 
 
 def reencode_jpeg(media_df: DataFrame, progressive: bool = False,
@@ -265,24 +229,18 @@ def reencode_jpeg(media_df: DataFrame, progressive: bool = False,
     corrupt payloads become error rows."""
     from ..formats import jpegenc
 
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    rows.append((doc_id, None, None, "null payload"))
-                    continue
-                try:
-                    img = imagecodec.decode_image(bytes(payload))
-                    out = jpegenc.encode_jpeg(
-                        img, progressive=progressive, subsample=subsample)
-                    rows.append((doc_id, out, len(out), None))
-                except imagecodec.ImageDecodeError as exc:
-                    rows.append((doc_id, None, None, str(exc)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "jpeg", "n_bytes", "error"])
+    def enc(payload):
+        if payload is None:
+            return None, None, "null payload"
+        try:
+            img = imagecodec.decode_image(payload)
+        except imagecodec.ImageDecodeError as exc:
+            return None, None, str(exc)
+        out = jpegenc.encode_jpeg(
+            img, progressive=progressive, subsample=subsample)
+        return out, len(out), None
 
-    return media_df.mapInPandas(enc, schema=REENCODE_SCHEMA)
+    return map_rows(media_df, ["doc_id"], ["media"], enc, REENCODE_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -290,8 +248,8 @@ def reencode_jpeg(media_df: DataFrame, progressive: bool = False,
 # --------------------------------------------------------------------------
 
 AUDIO_META_SCHEMA = (
-    "doc_id long, sample_rate int, n_samples long, duration_sec double, "
-    "rms double, zero_crossings int, error string"
+    "sample_rate int, n_samples long, duration_sec double, rms double, "
+    "zero_crossings int, error string"
 )
 
 
@@ -299,52 +257,31 @@ def render_audio_column(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Deterministic audio synthesis: text → RAUD PCM binary column."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col],
-                "media": [avcodec.render_audio((t or "")[:64])
-                          for t in pdf[text_col]],
-            })
-
-    return docs.select(id_col, text_col).mapInPandas(
-        gen, schema="doc_id long, media binary"
-    )
+    return _render(docs, id_col, text_col,
+                   lambda _i, t: (avcodec.render_audio((t or "")[:64]),))
 
 
 def audio_metadata(media_df: DataFrame) -> DataFrame:
     """binary PCM → typed features (duration, RMS, zero-crossing count) in a
     vectorized batch UDF; corrupt payloads become error rows."""
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    rows.append((doc_id, None, None, None, None, None,
-                                 "null payload"))
-                    continue
-                try:
-                    sr, pcm = avcodec.decode_audio_any(bytes(payload))
-                    x = pcm.astype(np.float64) / 32767.0
-                    rows.append((
-                        doc_id, sr, len(pcm), round(len(pcm) / sr, 4),
-                        round(float(np.sqrt(np.mean(x * x))), 6),
-                        int(np.count_nonzero(np.diff(np.signbit(x)))),
-                        None,
-                    ))
-                except avcodec.AudioDecodeError as exc:
-                    rows.append((doc_id, None, None, None, None, None, str(exc)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "sample_rate", "n_samples", "duration_sec", "rms",
-                "zero_crossings", "error"])
+    def meta(payload):
+        if payload is None:
+            return None, None, None, None, None, "null payload"
+        try:
+            sr, pcm = avcodec.decode_audio_any(payload)
+        except avcodec.AudioDecodeError as exc:
+            return None, None, None, None, None, str(exc)
+        x = pcm.astype(np.float64) / 32767.0
+        return (sr, len(pcm), round(len(pcm) / sr, 4),
+                round(float(np.sqrt(np.mean(x * x))), 6),
+                int(np.count_nonzero(np.diff(np.signbit(x)))), None)
 
-    return media_df.mapInPandas(meta, schema=AUDIO_META_SCHEMA)
+    return map_rows(media_df, ["doc_id"], ["media"], meta, AUDIO_META_SCHEMA)
 
 
 AUDIO_PROBE_SCHEMA = (
-    "doc_id long, codec string, sample_rate int, channels int, "
-    "bitrate_kbps int, n_frames long, duration_sec double, vbr boolean, "
-    "error string"
+    "codec string, sample_rate int, channels int, bitrate_kbps int, "
+    "n_frames long, duration_sec double, vbr boolean, error string"
 )
 
 
@@ -356,56 +293,44 @@ def audio_container_metadata(media_df: DataFrame) -> DataFrame:
     (MP3 frame headers + Xing/VBRI, OGG Vorbis/Opus ident + terminal
     granule), which is the pass a 100 TB ingest runs over every blob
     before deciding what to transcode."""
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    rows.append((doc_id, None, None, None, None, None, None,
-                                 None, "null payload"))
-                    continue
-                try:
-                    m = avcodec.probe_audio_any(bytes(payload))
-                    rows.append((doc_id, m["codec"], m["sample_rate"],
-                                 m["channels"], m["bitrate_kbps"],
-                                 m["n_frames"], m["duration_sec"], m["vbr"],
-                                 None))
-                except avcodec.AudioDecodeError as exc:
-                    rows.append((doc_id, None, None, None, None, None, None,
-                                 None, str(exc)))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "codec", "sample_rate", "channels", "bitrate_kbps",
-                "n_frames", "duration_sec", "vbr", "error"])
+    nul = (None,) * 7
 
-    return media_df.mapInPandas(probe, schema=AUDIO_PROBE_SCHEMA)
+    def probe(payload):
+        if payload is None:
+            return (*nul, "null payload")
+        try:
+            m = avcodec.probe_audio_any(payload)
+        except avcodec.AudioDecodeError as exc:
+            return (*nul, str(exc))
+        return (m["codec"], m["sample_rate"], m["channels"],
+                m["bitrate_kbps"], m["n_frames"], m["duration_sec"], m["vbr"],
+                None)
+
+    return map_rows(media_df, ["doc_id"], ["media"], probe,
+                    AUDIO_PROBE_SCHEMA)
 
 
 def audio_frame_energy(media_df: DataFrame, frame_len: int = 512) -> DataFrame:
     """Feature extraction with fan-out: fixed-length frames → one row per
     frame with its RMS energy (the UDTF-shaped audio op — each input row
     yields len(pcm)//frame_len output rows)."""
-    def feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, energies = [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    continue  # upstream error row, no frames to emit
-                try:
-                    _, pcm = avcodec.decode_audio_any(bytes(payload))
-                except avcodec.AudioDecodeError:
-                    continue  # corrupt rows surface via audio_metadata.error
-                x = pcm.astype(np.float64) / 32767.0
-                n_frames = len(x) // frame_len
-                framed = x[: n_frames * frame_len].reshape(n_frames, frame_len)
-                rms = np.sqrt(np.mean(framed * framed, axis=1)).round(6)
-                ids.extend([doc_id] * n_frames)
-                idxs.extend(range(n_frames))
-                energies.extend(rms.tolist())
-            yield pd.DataFrame({
-                "doc_id": ids, "frame_idx": idxs, "energy": energies})
+    def feat(payload):
+        if payload is None:
+            return ([],)  # upstream error row, no frames to emit
+        try:
+            _, pcm = avcodec.decode_audio_any(payload)
+        except avcodec.AudioDecodeError:
+            return ([],)  # corrupt rows surface via audio_metadata.error
+        x = pcm.astype(np.float64) / 32767.0
+        n_frames = len(x) // frame_len
+        framed = x[: n_frames * frame_len].reshape(n_frames, frame_len)
+        rms = np.sqrt(np.mean(framed * framed, axis=1)).round(6)
+        return (list(enumerate(rms.tolist())),)
 
-    return media_df.mapInPandas(
-        feat, schema="doc_id long, frame_idx int, energy double")
+    return map_rows(
+        media_df, ["doc_id"], ["media"], feat,
+        "frames array<struct<frame_idx int, energy double>>",
+    ).select("doc_id", F.inline("frames"))
 
 
 # --------------------------------------------------------------------------
@@ -416,17 +341,8 @@ def render_video_column(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """Deterministic clip synthesis: text → RVID binary column."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col],
-                "media": [avcodec.render_video((t or "")[:64])
-                          for t in pdf[text_col]],
-            })
-
-    return docs.select(id_col, text_col).mapInPandas(
-        gen, schema="doc_id long, media binary"
-    )
+    return _render(docs, id_col, text_col,
+                   lambda _i, t: (avcodec.render_video((t or "")[:64]),))
 
 
 def video_frame_sample(media_df: DataFrame, every_n: int = 2) -> DataFrame:
@@ -435,23 +351,17 @@ def video_frame_sample(media_df: DataFrame, every_n: int = 2) -> DataFrame:
     straight into image_metadata/resize_half. Accepts RVID and MJPEG-MP4
     containers (avcodec.decode_video_any). Corrupt clips → one error row
     (frame_idx = -1), preserving error-as-data."""
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                if payload is None:
-                    rows.append((doc_id, -1, None, "null payload"))
-                    continue
-                try:
-                    frames = avcodec.decode_video_any(bytes(payload))
-                except avcodec.VideoDecodeError as exc:
-                    rows.append((doc_id, -1, None, str(exc)))
-                    continue
-                for k in range(0, frames.shape[0], every_n):
-                    rows.append((doc_id, k, avcodec.frame_to_rimg(frames[k]),
-                                 None))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "frame_idx", "media", "error"])
+    def sample(payload):
+        if payload is None:
+            return ([(-1, None, "null payload")],)
+        try:
+            frames = avcodec.decode_video_any(payload)
+        except avcodec.VideoDecodeError as exc:
+            return ([(-1, None, str(exc))],)
+        return ([(k, avcodec.frame_to_rimg(frames[k]), None)
+                 for k in range(0, frames.shape[0], every_n)],)
 
-    return media_df.mapInPandas(
-        sample, schema="doc_id long, frame_idx int, media binary, error string")
+    return map_rows(
+        media_df, ["doc_id"], ["media"], sample,
+        "frames array<struct<frame_idx int, media binary, error string>>",
+    ).select("doc_id", F.inline("frames"))

@@ -223,27 +223,17 @@ def with_compression_ratio(df: DataFrame,
     batch UDF — still a zero-shuffle projection; the per-row cost is the
     deflate pass itself. NULL/empty text reports NULL (unscorable)."""
     import zlib
-    from collections.abc import Iterator
 
-    import pandas as pd
+    from .extract import map_rows
 
-    def comp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ratios = []
-            for t in pdf[text_col]:
-                if not t:
-                    ratios.append(None)
-                    continue
-                raw = t.encode("utf-8")
-                ratios.append(round(len(zlib.compress(raw, 6)) / len(raw), 4))
-            out = pdf.copy()
-            out["compression_ratio"] = ratios
-            yield out
+    def comp(t):
+        if not t:
+            return (None,)
+        raw = t.encode("utf-8")
+        return (round(len(zlib.compress(raw, 6)) / len(raw), 4),)
 
-    fields = ", ".join(f"{f.name} {f.dataType.simpleString()}"
-                       for f in df.schema.fields)
-    return df.mapInPandas(
-        comp, schema=f"{fields}, compression_ratio double")
+    return map_rows(df, df.columns, [text_col], comp,
+                    "compression_ratio double")
 
 
 def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -7,8 +7,9 @@ contained WARC record with the fields the downstream stages key on
 (target URI for :mod:`.urltools`, content type for kind dispatch, HTTP
 status + body for :mod:`.extract`'s HTML stages).
 
-100 TB shape: ``mapInPandas`` Arrow batch UDF, no shuffle — record
-explosion happens inside the scan, and each input blob is independent
+100 TB shape: one ``extract.map_rows`` Arrow batch pass, no shuffle — each
+blob's records come back as one array-of-struct value that ``F.inline``
+explodes inside the same scan, and each input blob is independent
 (Spark parallelism = input files, the natural crawl partitioning).
 Malformed containers become ERROR ROWS naming the violated invariant
 (the codec contract: poisoned inputs must never fail tasks); individual
@@ -23,17 +24,17 @@ divergence risk).
 
 from __future__ import annotations
 
-from typing import Iterator
+from collections.abc import Callable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..formats import warcformat
+from .extract import map_rows
 
 RECORD_SCHEMA = (
-    "doc_id long, rec_idx int, warc_type string, target_uri string, "
-    "content_type string, http_status int, n_payload_bytes int, "
-    "text_head string, error string"
+    "rec_idx int, warc_type string, target_uri string, content_type string, "
+    "http_status int, n_payload_bytes int, text_head string, error string"
 )
 TEXT_HEAD_CHARS = 64
 
@@ -86,6 +87,17 @@ def blob_rows(blob: bytes | None) -> Iterator[tuple]:
         i += 1
 
 
+def _blob_fan_out(df: DataFrame, bin_col: str, id_col: str,
+                  rows: Callable[[bytes | None], list[tuple]],
+                  rec_ddl: str) -> DataFrame:
+    """``(doc_id, <rec_ddl>…)``: one output row per tuple ``rows(blob)``
+    returns, in blob then list order."""
+    blobs = df.select(F.col(id_col).cast("long").alias("doc_id"), bin_col)
+    return map_rows(blobs, ["doc_id"], [bin_col], lambda b: (rows(b),),
+                    f"recs array<struct<{rec_ddl}>>",
+                    ).select("doc_id", F.inline("recs"))
+
+
 def text_head(body: bytes, chars: int = TEXT_HEAD_CHARS) -> str:
     """First ``chars`` characters of the (UTF-8, replace) body. The byte
     window is 4× chars — a UTF-8 code point is ≤ 4 bytes, so the slice
@@ -119,30 +131,23 @@ def warc_records(
     replace) body. A malformed blob yields ONE error row for that blob;
     a NULL blob likewise (error-as-data totality)."""
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "rec_idx", "warc_type", "target_uri",
-                "content_type", "http_status", "n_payload_bytes",
-                "text_head", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf[id_col], pdf[bin_col]):
-                for i, rec, status, _hdr, body, err in blob_rows(blob):
-                    if rec is None:  # null / blob-level error row
-                        rows.append((doc_id, None, None, None, None,
-                                     None, None, None, err))
-                        continue
-                    rows.append((
-                        doc_id, i, rec["warc_type"], rec["target_uri"],
-                        rec["content_type"], status,
-                        len(rec["payload"]), text_head(body), err))
-            yield pd.DataFrame(rows, columns=cols)
+    def parse(blob):
+        rows = []
+        for i, rec, status, _hdr, body, err in blob_rows(blob):
+            if rec is None:  # null / blob-level error row
+                rows.append((None, None, None, None, None, None, None, err))
+                continue
+            rows.append((i, rec["warc_type"], rec["target_uri"],
+                         rec["content_type"], status, len(rec["payload"]),
+                         text_head(body), err))
+        return rows
 
-    return df.mapInPandas(parse, schema=RECORD_SCHEMA)
+    return _blob_fan_out(df, bin_col, id_col, parse, RECORD_SCHEMA)
 
 
 DOC_SCHEMA = (
-    "doc_id long, rec_idx int, url string, http_status int, "
-    "text string, n_html_bytes int, error string"
+    "rec_idx int, url string, http_status int, text string, "
+    "n_html_bytes int, error string"
 )
 
 
@@ -162,44 +167,36 @@ def warc_html_documents(
     rows ready for the curation/dedup/selection stages (one
     :mod:`.urltools` pass away from domain triage).
 
-    Same zero-shuffle mapInPandas shape as :func:`warc_records`;
+    Same zero-shuffle ``map_rows`` fan-out as :func:`warc_records`;
     malformed members and non-keepable records are error rows and
     silent skips respectively (a crawl is MOSTLY non-HTML records —
     warcinfo, requests, metadata — and skipping them is the semantics,
     not an error)."""
     from ..formats import htmlcodec
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "rec_idx", "url", "http_status", "text",
-                "n_html_bytes", "error"]
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf[id_col], pdf[bin_col]):
-                for i, rec, status, hdr, body, err in blob_rows(blob):
-                    if rec is None:  # null / blob-level error row
-                        rows.append((doc_id, None, None, None, None,
-                                     None, err))
-                        continue
-                    if rec["warc_type"] != "response":
-                        continue
-                    if err is not None:  # response whose HTTP split failed
-                        rows.append((doc_id, i, rec["target_uri"], None,
-                                     None, None, err))
-                        continue
-                    if not is_keepable_html(rec, status, hdr):
-                        continue
-                    text = htmlcodec.strip_boilerplate(
-                        body.decode("utf-8", "replace"), mode=mode)
-                    rows.append((doc_id, i, rec["target_uri"], status,
-                                 text, len(body), None))
-            yield pd.DataFrame(rows, columns=cols)
+    def extract(blob):
+        rows = []
+        for i, rec, status, hdr, body, err in blob_rows(blob):
+            if rec is None:  # null / blob-level error row
+                rows.append((None, None, None, None, None, err))
+                continue
+            if rec["warc_type"] != "response":
+                continue
+            if err is not None:  # response whose HTTP split failed
+                rows.append((i, rec["target_uri"], None, None, None, err))
+                continue
+            if not is_keepable_html(rec, status, hdr):
+                continue
+            text = htmlcodec.strip_boilerplate(
+                body.decode("utf-8", "replace"), mode=mode)
+            rows.append((i, rec["target_uri"], status, text, len(body),
+                         None))
+        return rows
 
-    return df.mapInPandas(extract, schema=DOC_SCHEMA)
+    return _blob_fan_out(df, bin_col, id_col, extract, DOC_SCHEMA)
 
 
-ROBOTS_SCHEMA = (
-    "doc_id long, rec_idx int, url string, robots_txt string, error string"
-)
+ROBOTS_SCHEMA = "rec_idx int, url string, robots_txt string, error string"
 
 # the REP well-known path, anchored: scheme://authority/robots.txt with
 # nothing after but an optional query/fragment (RFC 9309 §2.3; the path
@@ -223,7 +220,7 @@ def warc_robots_txt(
     robots_txt)`` table :func:`urltools.parse_robots` and
     ``tools/submit_refresh.py --robots`` consume.
 
-    Distributed shape: zero-shuffle mapInPandas scan (robots fetches
+    Distributed shape: zero-shuffle ``map_rows`` scan (robots fetches
     are a tiny sliver of a crawl, so the emitted side is #hosts-sized),
     then with ``one_per_host`` exactly one hash shuffle on host with
     map-side combine. Malformed blobs stay error rows
@@ -231,35 +228,30 @@ def warc_robots_txt(
     drops them — a rules table has no use for an unparseable member)."""
     import re as _re
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["doc_id", "rec_idx", "url", "robots_txt", "error"]
-        pat = _re.compile(_ROBOTS_URI_RE)
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf[id_col], pdf[bin_col]):
-                for i, rec, status, _hdr, body, err in blob_rows(blob):
-                    if rec is None:  # null / blob-level error row
-                        rows.append((doc_id, None, None, None, err))
-                        continue
-                    if rec["warc_type"] != "response":
-                        continue
-                    uri = rec["target_uri"] or ""
-                    if not pat.match(uri):
-                        continue
-                    if err is not None:  # failed HTTP split, kept for audit
-                        rows.append((doc_id, i, uri, None, err))
-                        continue
-                    if status != 200:
-                        continue
-                    rows.append((doc_id, i, uri,
-                                 body.decode("utf-8", "replace"), None))
-            yield pd.DataFrame(rows, columns=cols)
+    pat = _re.compile(_ROBOTS_URI_RE)
 
-    recs = df.mapInPandas(extract, schema=ROBOTS_SCHEMA)
+    def extract(blob):
+        rows = []
+        for i, rec, status, _hdr, body, err in blob_rows(blob):
+            if rec is None:  # null / blob-level error row
+                rows.append((None, None, None, err))
+                continue
+            if rec["warc_type"] != "response":
+                continue
+            uri = rec["target_uri"] or ""
+            if not pat.match(uri):
+                continue
+            if err is not None:  # failed HTTP split, kept for audit
+                rows.append((i, uri, None, err))
+                continue
+            if status != 200:
+                continue
+            rows.append((i, uri, body.decode("utf-8", "replace"), None))
+        return rows
+
+    recs = _blob_fan_out(df, bin_col, id_col, extract, ROBOTS_SCHEMA)
     if not one_per_host:
         return recs
-    from pyspark.sql import functions as F
-
     from . import urltools
 
     ok = recs.filter(F.col("error").isNull()

@@ -1,9 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
-Sandbox runs local[N] on one 32-core/128GiB box; on a real cluster the same
-builder config applies (AQE handles runtime re-planning and skew-join
-splitting; Arrow batch size bounds Python-UDF memory when batches carry
-multi-MB media payloads)."""
+Runs local[N], N = ``SPARK_GRAFT_CPUS`` or else the host's core count; on a
+real cluster the same builder config applies (AQE handles runtime
+re-planning and skew-join splitting; Arrow batch size bounds Python-UDF
+memory when batches carry multi-MB media payloads)."""
 
 from __future__ import annotations
 
@@ -25,7 +25,7 @@ def get_spark(
     # (observed: local[32] slower than local[8] on the OCR stage without this)
     for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     shuffle_partitions = shuffle_partitions or max(cores, 32)
     # C3 retry budget: local mode IGNORES spark.task.maxFailures — retries
     # require the local[N, F] master form. F=2 means one retry, enough for

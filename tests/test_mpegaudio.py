@@ -189,8 +189,12 @@ class TestProbeDispatch:
             (6, None),
         ]
         df = spark.createDataFrame(rows, "doc_id long, media binary")
-        got = {r["doc_id"]: r for r in
-               multimodal.audio_container_metadata(df).collect()}
+        probed = multimodal.audio_container_metadata(df)
+        assert probed.schema.simpleString() == (
+            "struct<doc_id:bigint,codec:string,sample_rate:int,channels:int,"
+            "bitrate_kbps:int,n_frames:bigint,duration_sec:double,"
+            "vbr:boolean,error:string>")
+        got = {r["doc_id"]: r for r in probed.collect()}
         assert got[1]["codec"] == "raud-pcm"
         assert got[2]["codec"] == "pcm_s16le"
         assert got[3]["codec"] == "mpeg1-layer3"

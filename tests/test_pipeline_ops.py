@@ -1708,9 +1708,15 @@ class TestCompressionRatio:
             assert out[i] == round(len(zlib.compress(raw, 6)) / len(raw), 4)
         assert out[1] < out[2] < out[3]    # repetitive < prose < gibberish
         assert out[4] is None and out[5] is None
-        # input columns survive the projection
-        cols = textstats.with_compression_ratio(df).columns
-        assert cols == ["doc_id", "text", "compression_ratio"]
+        # input columns survive the projection with their types
+        assert textstats.with_compression_ratio(df).schema.simpleString() == (
+            "struct<doc_id:bigint,text:string,compression_ratio:double>")
+        # ... also under a name that needs quoting
+        quoted = textstats.with_compression_ratio(
+            df.withColumnRenamed("doc_id", "doc id"))
+        assert quoted.columns == ["doc id", "text", "compression_ratio"]
+        assert {r["doc id"]: r["compression_ratio"]
+                for r in quoted.collect()} == out
 
 
 class TestRemoveDuplicateSpans:
@@ -1847,6 +1853,15 @@ class TestSemanticDecontamPaths:
                        method=method).collect()}
             assert out[10] == (1.0, True), method
             assert out[11] == (None, False), method
+        # the UDF path passes a column name that needs quoting through
+        quoted = decontam.semantic_contamination(
+            corpus.withColumnRenamed("vec_id", "vec id"), bench,
+            threshold=0.9, method="udf")
+        assert quoted.columns == [
+            "vec id", "embedding", "max_benchmark_cosine", "contaminated"]
+        assert {r["vec id"]: (r["max_benchmark_cosine"], r["contaminated"])
+                for r in quoted.collect()} == {10: (1.0, True),
+                                               11: (None, False)}
 
     def test_literal_cap_and_method_guard(self, spark):
         import pytest as _pytest

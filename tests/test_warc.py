@@ -388,7 +388,11 @@ class TestRobotsTxt:
 
         df = spark.createDataFrame(
             [(1, self._blob()), (2, None)], "doc_id long, warc binary")
-        rows = warcsource.warc_robots_txt(df, one_per_host=False).collect()
+        raw = warcsource.warc_robots_txt(df, one_per_host=False)
+        assert raw.schema.simpleString() == (
+            "struct<doc_id:bigint,rec_idx:int,url:string,robots_txt:string,"
+            "error:string>")
+        rows = raw.collect()
         # two keepable robots captures + one null-blob error row
         assert sum(1 for r in rows if r.robots_txt is not None) == 2
         assert sum(1 for r in rows if r.error is not None) == 1
