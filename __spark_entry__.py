@@ -2454,10 +2454,11 @@ def _media_texts(n: int) -> list[tuple[int, str]]:
 
 
 def html_strip_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The HTML branch standalone under the hard gate: boilerplate strip +
+    """Html spans standalone under the hard gate: boilerplate strip +
     block classification over deterministic wrapped resumes, run through
-    the SAME map_rows path the pipeline uses; oracle = the shared pure
-    function's output as VALUES (length + md5 of the stripped text)."""
+    the SAME extract_spans Python stage the pipeline uses; oracle = the
+    shared pure function's output as VALUES (length + md5 of the stripped
+    text)."""
     import random
 
     from resume_ocr_spark import corpus
@@ -5290,6 +5291,8 @@ def oracle_sql() -> dict[str, str]:
              CAST(levenshtein(a.title, b.title) AS INT) AS dist
       FROM t a JOIN t b ON a.doc_id < b.doc_id
       WHERE levenshtein(a.title, b.title) <= 1
+        AND length(a.title) <= {dedup.FUZZY_MAX_LEN}
+        AND length(b.title) <= {dedup.FUZZY_MAX_LEN}
     """
 
     # winnowing: 3-gram hashes from the house i/i+1/i+2 shingle joins,
@@ -5317,6 +5320,7 @@ def oracle_sql() -> dict[str, str]:
         FROM wtoks a
         JOIN wtoks b ON b.doc_id = a.doc_id AND b.i = a.i + 1
         JOIN wtoks c ON c.doc_id = a.doc_id AND c.i = a.i + 2
+        WHERE a.i <= {textstats.WINNOW_POS_MAX}
       ), sel AS (
         SELECT doc_id,
                MIN(ghash * 1048576 + (1048575 - pos)) OVER win AS selkey,

@@ -25,10 +25,10 @@ SENIORITY_JUNIOR_MAX_YEARS = 2
 SENIORITY_PLENO_MAX_YEARS = 6
 
 # --- engine scale tuning ---------------------------------------------------
-# media spans per doc above this count as skewed (extract.skewed_doc_ids;
-# SURVEY.md §4: media-heavy docs pin tasks). The pipeline needs no salt:
-# the OCR stage repartitions by (doc_id, offset), so a skewed doc's spans
-# spread over every task
+# media spans per doc above this count as skewed (SURVEY.md §4: media-heavy
+# docs pin tasks); the corpus generators draw the skew tail above it. The
+# pipeline needs no salt: the OCR stage repartitions by (doc_id, offset),
+# so a skewed doc's spans spread over every task
 SKEW_SPAN_THRESHOLD = 32
 # Iceberg-layout shim: number of hash(doc_id) buckets in the warehouse
 WAREHOUSE_BUCKETS = 8

@@ -32,6 +32,8 @@ import zlib
 
 import numpy as np
 
+from ..config import MAX_FILE_SIZE
+
 MAGIC = b"RIMG1"
 
 # glyph geometry (pixels)
@@ -548,7 +550,15 @@ def compress_payload(payload: bytes) -> bytes:
 
 
 def decompress_payload(blob: bytes) -> bytes:
+    """Inflates at most ``MAX_FILE_SIZE + 1`` bytes: a longer output comes
+    back cut there, so the caller's size check reports "file too large"
+    without a zlib bomb ever inflating in full."""
+    d = zlib.decompressobj()
     try:
-        return zlib.decompress(blob)
+        out = d.decompress(blob, MAX_FILE_SIZE + 1)
     except zlib.error as exc:  # error-as-data upstream
         raise ImageDecodeError(f"corrupt compressed payload: {exc}") from exc
+    if not d.eof and len(out) <= MAX_FILE_SIZE:
+        raise ImageDecodeError(
+            "corrupt compressed payload: incomplete or truncated stream")
+    return out

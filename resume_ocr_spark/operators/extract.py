@@ -6,25 +6,26 @@ app/services/ocr_service.py:20-127 extraction; SURVEY.md §3.1 stage map):
 
     read documents_raw (bucket-pruned)
       → posexplode spans                       (P2 analog: per-span rows)
-      → split by branch                        (F5 kind dispatch — the OCR UDF
-                                                only ever sees media spans)
-        text  : pure Column ops (no Python)
-        html  : boilerplate strip in the batch runner (map_rows)
-        media : LEFT join media_blobs (broadcast small dict / AQE skew-join
-                otherwise) → repartition on (doc_id, offset) — span-level
-                parallelism is the skew salt: a doc with 10^3 media spans
-                spreads over the whole stage instead of pinning one task
+      → split by branch                        (F5 kind dispatch)
+        text  : pure Column ops (no Python); also routes null and
+                unsupported kinds to their error rows
+        html, pdf, image : one Python stage — repartition on
+                (doc_id, offset) (span-level parallelism is the skew salt:
+                a doc with 10^3 media spans spreads over the whole stage
+                instead of pinning one task) with a LEFT join of
+                media_blobs (broadcast small dict / shuffle join of the
+                media spans only otherwise) → map_rows(oracle.extract_span)
       → unionByName
       → groupBy(doc_id) collect_list + array_sort(struct(offset, kind,
         media_ref, text, …))                   (order restored by explicit
                                                 sort key, never row order)
       → left join doc ids (empty-span docs survive)
 
-Every branch emits the same span-result shape; failures are error *values*
+Both branches emit the same span-result shape; failures are error *values*
 (error-as-data, reference: app/services/analyze_service.py:105-117). The
-html and media branches run ``oracle.extract_span`` itself through
-``map_rows``, the one Arrow batch runner for every per-row Python UDF in
-the package (extraction, analysis, media, curation and ingest operators).
+Python branch runs ``oracle.extract_span`` itself through ``map_rows``,
+the one Arrow batch runner for every per-row Python UDF in the package
+(extraction, analysis, media, curation and ingest operators).
 """
 
 from __future__ import annotations
@@ -39,7 +40,6 @@ from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import StructType
 
 from .. import oracle
-from ..config import SKEW_SPAN_THRESHOLD
 
 BROADCAST_CUTOFF_CLUSTER = 64 * 1024 * 1024
 BROADCAST_CUTOFF_LOCAL = 256 * 1024 * 1024
@@ -93,14 +93,6 @@ def map_rows(df: DataFrame, keep: list[str], args: list[str],
     return df.select(*dict.fromkeys(keep + args)).mapInArrow(run, schema)
 
 
-def _extract_rows(spans: DataFrame) -> DataFrame:
-    """(doc_id, offset, kind, media_ref, text, payload) → span results via
-    ``oracle.extract_span``."""
-    return map_rows(spans, _SPAN_KEYS, ["kind", "text", "media_ref", "payload"],
-                    oracle.extract_span,
-                    "text string, error string, ocr_pages int")
-
-
 # --------------------------------------------------------------------------
 # pipeline
 # --------------------------------------------------------------------------
@@ -127,29 +119,27 @@ def extract_spans(
     broadcast_blobs: bool = False,
     ocr_partitions: int | None = None,
 ) -> DataFrame:
-    """Per-span extraction, branch-split so each branch's plan is minimal."""
-    is_text = F.col("kind") == "text"
-    is_html = F.col("kind") == "html"
-    is_media = F.col("kind").isin("pdf", "image")
+    """Per-span extraction, split in two: spans that need Python (html,
+    pdf, image) and spans handled by pure Column ops (everything else)."""
+    is_python = F.col("kind").isin("html", "pdf", "image")
 
     # text + unsupported-kind branch: one pure-Column scan — whole-stage
-    # codegen, zero Python, and one fewer pass over the source than
-    # separate branches. Emptiness uses the oracle's Python str.strip()
+    # codegen, zero Python. Emptiness uses the oracle's Python str.strip()
     # whitespace set (F.trim strips ASCII space only — a '\xa0' span must
     # be "empty file" on both sides, oracle.extract_span parity).
-    # NULL-safe routing: a null kind makes every branch predicate SQL
-    # NULL, which would silently drop the span — coalesce routes it here
-    # with the oracle's "unsupported kind: None".
+    # NULL-safe routing: a null kind makes the Python predicate SQL NULL,
+    # which would silently drop the span — coalesce routes it here with
+    # the oracle's "unsupported kind: None".
     from ..textproc import PY_WHITESPACE_CLASS
 
+    is_text = F.coalesce(F.col("kind") == "text", F.lit(False))
     stripped_len = F.length(F.regexp_replace(
         F.coalesce(F.col("text"), F.lit("")), PY_WHITESPACE_CLASS, ""))
     text_b = (
-        spans_df.filter(
-            is_text | ~F.coalesce(is_text | is_html | is_media, F.lit(False)))
+        spans_df.filter(~F.coalesce(is_python, F.lit(False)))
         .withColumn(
             "error",
-            F.when(~F.coalesce(is_text, F.lit(False)),
+            F.when(~is_text,
                    F.concat(F.lit("unsupported kind: "),
                             F.coalesce(F.col("kind"), F.lit("None"))))
             .when(stripped_len == 0, F.lit("empty file")))
@@ -159,10 +149,7 @@ def extract_spans(
         .select(_RESULT_COLS)
     )
 
-    html_b = _extract_rows(spans_df.filter(is_html).withColumn(
-        "payload", F.lit(None).cast("binary")))
-
-    # media branch: spread spans, join payloads, batch-extract
+    # Python branch: spread spans, join payloads, batch-extract
     blobs = blobs_df.select("media_ref", "payload")
     # explicit partition count: AQE's coalescing sizes partitions by bytes,
     # but media payloads are tiny relative to their OCR CPU cost — letting it
@@ -174,26 +161,34 @@ def extract_spans(
     if not ocr_partitions:
         sc = spans_df.sparkSession.sparkContext
         ocr_partitions = sc.defaultParallelism * 2
-    media_spans = spans_df.filter(is_media).select(
-        "doc_id", "offset", "kind", "media_ref")
+    py_spans = spans_df.filter(is_python).select(
+        "doc_id", "offset", "kind", "media_ref", "text")
     if broadcast_blobs:
         # repartition BEFORE the broadcast join: the shuffle then carries
-        # only the narrow span keys, never payload bytes — the map-side
-        # join attaches payloads after the exchange, same row distribution
-        media = media_spans.repartition(
+        # only the span keys and html text, never payload bytes — the
+        # map-side join attaches payloads after the exchange, same row
+        # distribution. Html spans (media_ref "") look up no blob.
+        spans = py_spans.repartition(
             ocr_partitions, "doc_id", "offset"
         ).join(F.broadcast(blobs), "media_ref", "left")
-        # left join: dangling refs become "missing media blob" error rows
     else:
-        # shuffle join repartitions by media_ref anyway; restore span-level
-        # distribution afterwards (payload bytes must cross here regardless)
-        media = media_spans.join(blobs, "media_ref", "left").repartition(
-            ocr_partitions, "doc_id", "offset")
-    media_b = _extract_rows(media.withColumn("text", F.lit("")))
-    # dangling media_ref: payload arrived null → oracle.extract_span returned
-    # "missing media blob" (it sees payload=None), so nothing extra needed.
+        # shuffle join repartitions by media_ref, so only media spans enter
+        # it: every html span shares media_ref "" and would hash into one
+        # join partition. Html rows rejoin (null payload) before the
+        # span-level repartition (payload bytes must cross here regardless)
+        is_html = F.col("kind") == "html"
+        spans = (
+            py_spans.filter(~is_html).join(blobs, "media_ref", "left")
+            .unionByName(py_spans.filter(is_html), allowMissingColumns=True)
+            .repartition(ocr_partitions, "doc_id", "offset"))
+    # oracle.extract_span returns for html before it reads the payload and
+    # never reads text for media; the left join hands a dangling media_ref
+    # a null payload, which it turns into "missing media blob".
+    py_b = map_rows(spans, _SPAN_KEYS, ["kind", "text", "media_ref", "payload"],
+                    oracle.extract_span,
+                    "text string, error string, ocr_pages int")
 
-    return text_b.unionByName(html_b).unionByName(media_b)
+    return text_b.unionByName(py_b)
 
 
 def reassemble(doc_ids_df: DataFrame, span_results: DataFrame) -> DataFrame:
@@ -279,17 +274,6 @@ def extract_documents(
     spans = explode_spans(docs_df)
     results = extract_spans(spans, blobs_df, broadcast_blobs, ocr_partitions)
     return with_doc_text(reassemble(docs_df, results))
-
-
-def skewed_doc_ids(docs_df: DataFrame, threshold: int = SKEW_SPAN_THRESHOLD) -> DataFrame:
-    """Docs whose media-span count exceeds the skew threshold (diagnostic /
-    metrics input; the pipeline itself is span-parallel so these don't pin
-    tasks, but the metrics table reports them)."""
-    return docs_df.select(
-        "doc_id",
-        F.size(F.filter("spans", lambda s: s.kind.isin("pdf", "image")))
-        .alias("media_spans"),
-    ).filter(F.col("media_spans") > threshold)
 
 
 def strip_html_column(

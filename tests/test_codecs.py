@@ -1,9 +1,14 @@
 """Unit tests: image/pdf/html codecs — the executable-spec building blocks."""
 
+import tracemalloc
+import zlib
+
 import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
+from resume_ocr_spark import oracle
+from resume_ocr_spark.config import MAX_FILE_SIZE
 from resume_ocr_spark.formats import htmlcodec, imagecodec as ic, pdfcodec as pc
 
 
@@ -162,6 +167,19 @@ class TestImageCodec:
     def test_corrupt_compressed_raises(self):
         with pytest.raises(ic.ImageDecodeError):
             ic.decompress_payload(b"\x78\x9cbroken")
+
+    def test_zlib_bomb_is_too_large_in_bounded_memory(self):
+        # 64 MiB of zeros, compressed 1 MiB at a time: never held inflated
+        comp, zeros = zlib.compressobj(9), bytes(1 << 20)
+        bomb = b"".join(comp.compress(zeros) for _ in range(64)) + comp.flush()
+        tracemalloc.start()
+        try:
+            out = oracle.extract_span("image", None, "m", bomb)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert out == ("", "file too large", 0)
+        assert peak < 3 * MAX_FILE_SIZE
 
 
 class TestPdfCodec:

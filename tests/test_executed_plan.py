@@ -48,6 +48,31 @@ def test_extract_pipeline_final_plan_join_strategies(spark):
 
 
 @pytest.mark.usefixtures("spark")
+def test_extract_documents_final_plan_one_python_stage(spark):
+    """Html, pdf and image spans cross the Python boundary in ONE
+    MapInArrow over ONE scan of documents_raw; the other two scans are the
+    pure-Column text branch and reassemble's doc-id sentinel."""
+    import __spark_entry__ as entrymod
+    from resume_ocr_spark import warehouse
+    from resume_ocr_spark.operators import extract
+
+    root = entrymod._corpus_warehouse(spark)
+    df = extract.extract_documents(
+        warehouse.read_table(spark, root, "documents_raw"),
+        warehouse.read_table(spark, root, "media_blobs"),
+        broadcast_blobs=True)
+    df.collect()
+    s = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in s
+    final = s.split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow") == 1, final
+    scans = re.findall(r"FileScan parquet[^\n]*", final)
+    tables = sorted(re.search(r"/(documents_raw|media_blobs)/", f).group(1)
+                    for f in scans)
+    assert tables == ["documents_raw"] * 3 + ["media_blobs"], tables
+
+
+@pytest.mark.usefixtures("spark")
 def test_curation_pipeline_final_plan_broadcast_and_bounded_exchanges(spark):
     import __spark_entry__ as entrymod
 

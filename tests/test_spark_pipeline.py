@@ -20,12 +20,16 @@ def wh(spark, small_corpus, tmp_path_factory):
     return root
 
 
-@pytest.fixture(scope="module")
-def spark_extracted(spark, wh):
+def _extracted(spark, wh, broadcast_blobs):
     docs_df = warehouse.read_table(spark, wh, "documents_raw")
     blobs_df = warehouse.read_table(spark, wh, "media_blobs")
-    out = extract.extract_documents(docs_df, blobs_df, broadcast_blobs=True)
+    out = extract.extract_documents(docs_df, blobs_df, broadcast_blobs)
     return {r["doc_id"]: r for r in out.collect()}
+
+
+@pytest.fixture(scope="module")
+def spark_extracted(spark, wh):
+    return _extracted(spark, wh, broadcast_blobs=True)
 
 
 @pytest.fixture(scope="module")
@@ -68,6 +72,15 @@ class TestSpanEquality:
         for doc_id, exp in oracle_result[0].items():
             assert spark_extracted[doc_id]["full_text"] == oracle.doc_text(
                 exp["spans"]), doc_id
+
+
+class TestSpanEqualityShuffleJoin(TestSpanEquality):
+    """The same span-for-span checks on the shuffle-join path: only media
+    spans enter the blob join, html spans rejoin before the repartition."""
+
+    @pytest.fixture(scope="class")
+    def spark_extracted(self, spark, wh):
+        return _extracted(spark, wh, broadcast_blobs=False)
 
 
 class TestAnalysisEquality:

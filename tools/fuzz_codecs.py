@@ -9,7 +9,9 @@ the two unbounded-cost OCR paths (all since fixed and test-pinned):
 1. container mutation — bit flips + truncations of VALID streams (much
    deeper reach than random bytes) across PDF / RIMG / JPEG / WAV / MP4 /
    MP3 / OGG, plus the reference's real PDF/PNG fixtures when present;
-   every decode must return or raise its documented error type only.
+   every decode must return or raise its documented error type only. A
+   zlib bomb (and its mutations) goes through oracle.extract_span, which
+   must stay total AND within a peak-memory budget.
 2. adversarial images — noise / flats / salt / mutated renders / stripes
    through preprocess, grid OCR, real-font OCR and ocr_image; must be
    total AND each page must finish within a wall budget (cost bombs are
@@ -17,9 +19,9 @@ the two unbounded-cost OCR paths (all since fixed and test-pinned):
 3. hostile strings — printable/unicode/regex-metachar soup through every
    textproc function.
 
-Exit 0 when leak-free, 1 otherwise. Not in the pytest suite (minutes of
-runtime); the fast pinned versions live in tests/test_codec_error_contract
-and tests/test_mpegaudio.
+Exit 0 when leak-free and within budget, 1 otherwise. Not in the pytest
+suite (minutes of runtime); the fast pinned versions live in
+tests/test_codec_error_contract, tests/test_mpegaudio and tests/test_codecs.
 """
 
 from __future__ import annotations
@@ -32,12 +34,15 @@ import string
 import struct
 import sys
 import time
+import tracemalloc
+import zlib
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 
-from resume_ocr_spark import textproc  # noqa: E402
+from resume_ocr_spark import oracle, textproc  # noqa: E402
+from resume_ocr_spark.config import MAX_FILE_SIZE  # noqa: E402
 from resume_ocr_spark.formats import (avcodec, exifcodec,  # noqa: E402
                                       htmlcodec, imagecodec,
                                       jpegcodec, jpegenc, mp4codec, mpegaudio,
@@ -46,13 +51,19 @@ from resume_ocr_spark.formats import (avcodec, exifcodec,  # noqa: E402
 
 FIXDIR = "/root/reference/tests/curriculos"
 PAGE_WALL_BUDGET = 30.0  # s; a single garbage page may not cost more
+BOMB_MIB = 64  # inflated size of the zlib bomb
+BOMB_MEM_BUDGET = 3 * MAX_FILE_SIZE  # B; traced peak of one bomb span
 
 leaks: collections.Counter = collections.Counter()
 examples: dict = {}
 slow: list = []
+heavy: list = []
+peaks: dict = {}
 
 
-def probe(name, fn, arg, ok_exc, budget=None):
+def probe(name, fn, arg, ok_exc, budget=None, mem_budget=None):
+    if mem_budget:
+        tracemalloc.start()
     t0 = time.time()
     try:
         fn(arg)
@@ -65,6 +76,12 @@ def probe(name, fn, arg, ok_exc, budget=None):
     dt = time.time() - t0
     if budget and dt > budget:
         slow.append((name, round(dt, 1)))
+    if mem_budget:
+        peak = tracemalloc.get_traced_memory()[1]
+        tracemalloc.stop()
+        peaks[name] = max(peaks.get(name, 0), peak)
+        if peak > mem_budget:
+            heavy.append((name, round(peak / 2**20)))
 
 
 def mutate(rng: random.Random, base: bytes) -> bytes:
@@ -152,7 +169,15 @@ def campaign_containers(n: int) -> None:
         reps = n if len(base) < 200_000 else max(50, n // 10)
         for _ in range(reps):
             probe(name, fn, mutate(rng, base), okexc)
-    print(f"containers: {len(cases)} cases fuzzed")
+    # zlib bomb: streamed 1 MiB at a time, so the harness never holds it
+    comp, zeros = zlib.compressobj(9), bytes(1 << 20)
+    bomb = b"".join(comp.compress(zeros) for _ in range(BOMB_MIB)) + comp.flush()
+    for b in [bomb] + [mutate(rng, bomb) for _ in range(max(20, n // 100))]:
+        probe("zlib_bomb", lambda p: oracle.extract_span("image", None, "m", p),
+              b, (), mem_budget=BOMB_MEM_BUDGET)
+    print(f"containers: {len(cases) + 1} cases fuzzed; zlib bomb peak "
+          f"{peaks['zlib_bomb'] / 2**20:.1f} MiB "
+          f"(budget {BOMB_MEM_BUDGET / 2**20:.0f} MiB)")
 
 
 def campaign_images(n: int) -> None:
@@ -232,8 +257,12 @@ def main() -> int:
         print("LEAK", k, c, "|", examples[k])
     if slow:
         print("SLOW (over budget):", slow[:10], f"({len(slow)} total)")
-    print(f"leak kinds: {len(leaks)}; slow pages: {len(slow)}")
-    return 1 if (leaks or slow) else 0
+    if heavy:
+        print("HEAVY (over memory budget):", heavy[:10],
+              f"({len(heavy)} total)")
+    print(f"leak kinds: {len(leaks)}; slow pages: {len(slow)}; "
+          f"over-memory spans: {len(heavy)}")
+    return 1 if (leaks or slow or heavy) else 0
 
 
 if __name__ == "__main__":
