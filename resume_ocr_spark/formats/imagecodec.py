@@ -272,22 +272,32 @@ def deskew(img: np.ndarray) -> np.ndarray:
 
 
 def median3(img: np.ndarray) -> np.ndarray:
-    p = np.pad(img, 1, mode="edge")
-    # distinct-value probe via bincount: O(n) adds instead of np.unique's
-    # full-image sort (uint8 domain, 256 bins)
-    vals = np.flatnonzero(np.bincount(img.ravel(), minlength=256))
-    if len(vals) <= 2:
+    """3×3 median with edge padding."""
+    h, w = img.shape
+    # two-valued probe: min, max and one equality pass over the uint8 page
+    # (a bincount histogram would first widen every pixel to intp)
+    lo, hi = img.min(), img.max()
+    if ((img == lo) | (img == hi)).all():
         # two-valued image: median of 9 == majority vote — separable box
-        # sum (2 adds per axis; counts ≤ 9 fit uint8)
-        h, w = img.shape
-        lo = int(vals[0])
-        hi_mask = (p > lo).astype(np.uint8)
+        # sum (2 adds per axis; counts ≤ 9 fit uint8). The mask is written
+        # straight into its edge-filled frame: no padded copy of the image
+        # and no separate bool → uint8 cast
+        hi_mask = np.empty((h + 2, w + 2), dtype=np.uint8)
+        np.greater(img, lo, out=hi_mask[1:-1, 1:-1].view(bool))
+        hi_mask[0, 1:-1] = hi_mask[1, 1:-1]
+        hi_mask[-1, 1:-1] = hi_mask[-2, 1:-1]
+        hi_mask[:, 0] = hi_mask[:, 1]
+        hi_mask[:, -1] = hi_mask[:, -2]
         rows = hi_mask[:, 0:w] + hi_mask[:, 1 : w + 1] + hi_mask[:, 2 : w + 2]
         s = rows[0:h] + rows[1 : h + 1] + rows[2 : h + 2]
-        return np.where(s >= 5, vals[-1], lo).astype(np.uint8)
+        # lo + (hi - lo)·[s ≥ 5] in place: uint8 throughout, never > hi
+        out = (s >= 5).view(np.uint8)
+        out *= hi - lo
+        out += lo
+        return out
+    p = np.pad(img, 1, mode="edge")
     stack = np.stack(
-        [p[dy : dy + img.shape[0], dx : dx + img.shape[1]]
-         for dy in range(3) for dx in range(3)],
+        [p[dy : dy + h, dx : dx + w] for dy in range(3) for dx in range(3)],
         axis=0,
     )
     return np.median(stack, axis=0).astype(np.uint8)
@@ -459,12 +469,15 @@ def _grid_ocr(binary: np.ndarray) -> tuple[str, int, int]:
     non_space_cells) — the exact-hit fraction is the engine-page confidence
     signal consumed by ocr_image's gate."""
     protos, (dr, dc) = _protos()
-    ys, xs = np.nonzero(binary)
-    if len(ys) == 0:
+    # ink extent from per-row / per-column any(): two boolean reductions
+    # instead of materialising every ink pixel's coordinates
+    ink_rows = np.flatnonzero(binary.any(axis=1))
+    if len(ink_rows) == 0:
         return "", 0, 0
-    top = int(ys.min()) - dr - MARGIN + TEXT_TOP  # text grid top row
-    left = int(xs.min()) - dc                      # text grid left col
-    bottom = int(ys.max())
+    ink_cols = np.flatnonzero(binary.any(axis=0))
+    top = int(ink_rows[0]) - dr - MARGIN + TEXT_TOP  # text grid top row
+    left = int(ink_cols[0]) - dc                      # text grid left col
+    bottom = int(ink_rows[-1])
     lines: list[str] = []
     n_exact = n_cells = 0
     li = 0
@@ -472,11 +485,11 @@ def _grid_ocr(binary: np.ndarray) -> tuple[str, int, int]:
         r0 = top + li * LINE_PITCH
         li += 1
         band = binary[r0 : r0 + CELL_H, :]
-        bxs = np.nonzero(band)[1]
+        bxs = np.flatnonzero(band.any(axis=0))  # band's ink columns
         if len(bxs) == 0:
             lines.append("")
             continue
-        n_cols = (int(bxs.max()) - left) // CELL_W + 1
+        n_cols = (int(bxs[-1]) - left) // CELL_W + 1
         gw = GLYPH_W * SCALE
         if left >= 0:
             # vectorized band matcher: gather every cell in one fancy index,

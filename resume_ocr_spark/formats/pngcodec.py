@@ -13,6 +13,8 @@ implemented here directly. Supports the whole fixture corpus
 
 Corrupt/unsupported input raises ``PngDecodeError`` — callers convert to
 error rows (error-as-data, reference: app/services/analyze_service.py:105-117).
+So does an image over ``MAX_PIXELS`` or an IDAT stream that inflates past
+the size its IHDR declares; neither is inflated in full.
 """
 
 from __future__ import annotations
@@ -25,6 +27,9 @@ import numpy as np
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
+# pixel cap, checked against the IHDR before anything is inflated or
+# allocated: ~33.5 MP, almost 4× a 300-dpi A4 scan (8.7 MP)
+MAX_PIXELS = 1 << 25
 
 
 class PngDecodeError(ValueError):
@@ -138,12 +143,24 @@ def decode_png(data: bytes) -> np.ndarray:
         raise PngDecodeError("Adam7 interlace not supported")
     if w == 0 or h == 0:
         raise PngDecodeError("zero-sized image")
+    if w * h > MAX_PIXELS:
+        raise PngDecodeError(f"image too large ({w}x{h} > {MAX_PIXELS} px)")
     ch = _CHANNELS[colortype]
+    # the IHDR fixes the inflated size exactly: inflate at most one byte
+    # past it, so an IDAT bomb stops there instead of inflating in full
+    expected = h * (w * ch + 1)
+    d = zlib.decompressobj()
     try:
-        raw = zlib.decompress(bytes(idat))
+        raw = d.decompress(idat, expected + 1)
     except zlib.error as exc:
         raise PngDecodeError(f"corrupt IDAT stream: {exc}") from exc
-    recon = _unfilter(raw, h, w * ch, ch)
+    if len(raw) > expected:
+        raise PngDecodeError(
+            f"IDAT inflates past the {expected} bytes its IHDR declares")
+    if not d.eof:
+        raise PngDecodeError(
+            "corrupt IDAT stream: incomplete or truncated stream")
+    recon = _unfilter(raw, h, w * ch, ch)  # also rejects a short stream
     img = recon.reshape(h, w, ch)
     if colortype == 3:
         if palette is None:

@@ -31,6 +31,8 @@ the one Arrow batch runner for every per-row Python UDF in the package
 from __future__ import annotations
 
 import functools
+import os
+import zipimport
 from collections.abc import Callable
 
 import pyarrow as pa
@@ -66,6 +68,44 @@ _RESULT_COLS = _SPAN_KEYS + ["text", "error", "ocr_pages"]
 # batch runner (Arrow-transferred; the only Python in the pipeline)
 # --------------------------------------------------------------------------
 
+def keep_unchanged_zip_directories() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    its ``(st_ino, st_size, st_mtime_ns)`` changed since the last read.
+
+    The Python worker calls ``importlib.invalidate_caches()`` before every
+    task, and on CPython 3.11 that makes each zipimporter re-parse its whole
+    archive directory: one per package directory of ``pyspark.zip`` (1,328
+    entries), py4j and any ``--py-files`` zip, a tenth of a CPU-second or
+    more per task. An unchanged archive now keeps the directory already
+    cached; a rewritten or replaced one is still re-read. Idempotent; any
+    surprise falls back to the original method. ``map_rows`` installs it
+    in every worker that runs one of its tasks."""
+    orig = zipimport.zipimporter.invalidate_caches
+    if getattr(orig, "_keeps_unchanged", False):
+        return
+    read_at: dict[str, tuple] = {}  # archive → its stat key when last read
+
+    @functools.wraps(orig)
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_ino, st.st_size, st.st_mtime_ns)
+            files = zipimport._zip_directory_cache.get(self.archive)
+            if files is not None and read_at.get(self.archive) == key:
+                self._files = files
+                return
+        except Exception:  # noqa: BLE001 — the original method decides
+            key = None
+        orig(self)
+        if key is not None:
+            # stat taken before the read: a change racing the read is
+            # caught by the next call's key mismatch
+            read_at[self.archive] = key
+
+    invalidate_caches._keeps_unchanged = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
 def map_rows(df: DataFrame, keep: list[str], args: list[str],
              fn: Callable[..., tuple], out_ddl: str) -> DataFrame:
     """The one Python row UDF runner for the whole package: ``fn(*args)``
@@ -80,6 +120,7 @@ def map_rows(df: DataFrame, keep: list[str], args: list[str],
     types = [to_arrow_type(f.dataType) for f in out.fields]
 
     def run(batches):
+        keep_unchanged_zip_directories()
         for batch in batches:
             cols = [batch.column(a).to_pylist() for a in args]
             results = list(zip(*(fn(*row) for row in zip(*cols))))
@@ -155,9 +196,10 @@ def extract_spans(
     # but media payloads are tiny relative to their OCR CPU cost — letting it
     # coalesce serializes the whole OCR stage (observed: 6 MB → 1 partition).
     # Chunky tasks: each Python task carries a fixed protocol overhead
-    # (~0.27 s measured here), so partitions target seconds of OCR work each;
-    # 2× parallelism bounds wave-straggle while span-level hashing spreads
-    # the skew tail (a doc with 10³ media spans never pins one task).
+    # (worker hand-off and Arrow stream set-up; map_rows skips the per-task
+    # zip re-parse), so partitions target seconds of OCR work each; 2×
+    # parallelism bounds wave-straggle while span-level hashing spreads the
+    # skew tail (a doc with 10³ media spans never pins one task).
     if not ocr_partitions:
         sc = spans_df.sparkSession.sparkContext
         ocr_partitions = sc.defaultParallelism * 2

@@ -5,7 +5,7 @@ import zlib
 
 import numpy as np
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from resume_ocr_spark import oracle
 from resume_ocr_spark.config import MAX_FILE_SIZE
@@ -113,6 +113,26 @@ class TestImageCodec:
             binary = binary[: rng.integers(binary.shape[0] // 2, binary.shape[0]),
                             : rng.integers(binary.shape[1] // 2, binary.shape[1])]
         assert ic._grid_ocr(binary) == self._grid_ocr_scalar(binary)
+
+    @given(st.integers(1, 40), st.integers(1, 40), st.integers(0, 255),
+           st.integers(0, 255), st.integers(0, 2**32 - 1))
+    @example(1, 17, 30, 220, 0)   # one row
+    @example(17, 1, 30, 220, 1)   # one column
+    @example(9, 9, 128, 128, 2)   # single-valued
+    @settings(max_examples=40, deadline=None)
+    def test_median3_two_valued_matches_padded_stack_median(
+            self, h, w, a, b, seed):
+        """The two-valued majority-vote path must equal the plain median
+        of the edge-padded 3x3 neighbourhood stack."""
+        rng = np.random.default_rng(seed)
+        img = np.where(rng.random((h, w)) < rng.random(), a, b).astype(np.uint8)
+        p = np.pad(img, 1, mode="edge")
+        stack = np.stack([p[dy : dy + h, dx : dx + w]
+                          for dy in range(3) for dx in range(3)])
+        out = ic.median3(img)
+        assert out.dtype == np.uint8
+        np.testing.assert_array_equal(
+            out, np.median(stack, axis=0).astype(np.uint8))
 
     @given(st.integers(0, 2**32 - 1))
     @settings(max_examples=20, deadline=None)

@@ -11,6 +11,7 @@ from __future__ import annotations
 import glob
 import os
 import struct
+import tracemalloc
 import zlib
 
 import numpy as np
@@ -108,6 +109,45 @@ def test_corrupt_png_is_error():
     # dispatcher: corrupt PNG surfaces as ImageDecodeError (error-as-data)
     with pytest.raises(imagecodec.ImageDecodeError):
         imagecodec.decode_image(good[:40])
+
+
+def _png_with_idat(w: int, h: int, idat: bytes) -> bytes:
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)  # 8-bit gray
+    return (pngcodec.PNG_MAGIC + _chunk(b"IHDR", ihdr)
+            + _chunk(b"IDAT", idat) + _chunk(b"IEND", b""))
+
+
+def test_idat_bomb_is_error_row_in_bounded_memory():
+    # a 4x4 gray IHDR over 64 MiB of inflated zeros, compressed 1 MiB at a
+    # time so the test never holds it inflated
+    comp, zeros = zlib.compressobj(9), bytes(1 << 20)
+    idat = b"".join(comp.compress(zeros) for _ in range(64)) + comp.flush()
+    bomb = _png_with_idat(4, 4, idat)
+    tracemalloc.start()
+    try:
+        out = oracle.extract_span("image", None, "m", bomb)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert out[0] == "" and out[2] == 0
+    assert out[1].startswith("corrupt PNG: IDAT inflates past")
+    assert peak < 4 << 20  # the payload's copies, never its 64 MiB inflation
+
+
+def test_pixel_cap_rejects_before_inflating():
+    side = int(pngcodec.MAX_PIXELS ** 0.5) + 1
+    with pytest.raises(pngcodec.PngDecodeError, match="image too large"):
+        pngcodec.decode_png(_png_with_idat(side, side, zlib.compress(b"")))
+
+
+def test_short_and_truncated_idat_are_errors():
+    raw = bytes(5 * (3 + 1))  # 5 rows of filter byte + 3 gray pixels
+    assert pngcodec.decode_png(
+        _png_with_idat(3, 5, zlib.compress(raw))).shape == (5, 3, 1)
+    with pytest.raises(pngcodec.PngDecodeError, match="decompressed size"):
+        pngcodec.decode_png(_png_with_idat(3, 5, zlib.compress(raw[:-1])))
+    with pytest.raises(pngcodec.PngDecodeError, match="truncated"):
+        pngcodec.decode_png(_png_with_idat(3, 5, zlib.compress(raw)[:-4]))
 
 
 @pytest.mark.skipif(not os.path.isdir(FIXDIR), reason="no reference fixtures")

@@ -10,8 +10,9 @@ the two unbounded-cost OCR paths (all since fixed and test-pinned):
    deeper reach than random bytes) across PDF / RIMG / JPEG / WAV / MP4 /
    MP3 / OGG, plus the reference's real PDF/PNG fixtures when present;
    every decode must return or raise its documented error type only. A
-   zlib bomb (and its mutations) goes through oracle.extract_span, which
-   must stay total AND within a peak-memory budget.
+   zlib bomb and a PNG-IDAT bomb (and their mutations) go through
+   oracle.extract_span, which must stay total AND within a peak-memory
+   budget.
 2. adversarial images — noise / flats / salt / mutated renders / stripes
    through preprocess, grid OCR, real-font OCR and ocr_image; must be
    total AND each page must finish within a wall budget (cost bombs are
@@ -172,12 +173,24 @@ def campaign_containers(n: int) -> None:
     # zlib bomb: streamed 1 MiB at a time, so the harness never holds it
     comp, zeros = zlib.compressobj(9), bytes(1 << 20)
     bomb = b"".join(comp.compress(zeros) for _ in range(BOMB_MIB)) + comp.flush()
+    # PNG-IDAT bomb: each stream again as the IDAT of a 64x64 gray PNG
+    # (mutations stay in the stream; the IHDR pixel cap has its own test)
+    ihdr = _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 64, 64, 8, 0, 0, 0, 0))
     for b in [bomb] + [mutate(rng, bomb) for _ in range(max(20, n // 100))]:
-        probe("zlib_bomb", lambda p: oracle.extract_span("image", None, "m", p),
-              b, (), mem_budget=BOMB_MEM_BUDGET)
-    print(f"containers: {len(cases) + 1} cases fuzzed; zlib bomb peak "
-          f"{peaks['zlib_bomb'] / 2**20:.1f} MiB "
+        png = (pngcodec.PNG_MAGIC + ihdr + _png_chunk(b"IDAT", b)
+               + _png_chunk(b"IEND", b""))
+        for name, payload in (("zlib_bomb", b), ("png_idat_bomb", png)):
+            probe(name, lambda p: oracle.extract_span("image", None, "m", p),
+                  payload, (), mem_budget=BOMB_MEM_BUDGET)
+    print(f"containers: {len(cases) + 2} cases fuzzed; bomb peaks "
+          f"zlib {peaks['zlib_bomb'] / 2**20:.1f} MiB, "
+          f"png idat {peaks['png_idat_bomb'] / 2**20:.1f} MiB "
           f"(budget {BOMB_MEM_BUDGET / 2**20:.0f} MiB)")
+
+
+def _png_chunk(typ: bytes, body: bytes) -> bytes:
+    return (struct.pack(">I", len(body)) + typ + body
+            + struct.pack(">I", zlib.crc32(typ + body)))
 
 
 def campaign_images(n: int) -> None:
