@@ -29,6 +29,8 @@ from __future__ import annotations
 import re
 import zlib
 
+from ..config import MAX_FILE_SIZE
+
 COLUMN_SPLIT_GAP = 150.0  # pt; two x-clusters farther apart than this = 2 columns
 LINE_Y_TOL = 2.0
 
@@ -277,10 +279,19 @@ def _get_stream(body: bytes) -> bytes | None:
         return None
     data = m.group(1)
     if b"/FlateDecode" in body:
+        # inflate at most one byte past the payload cap, so a Flate bomb
+        # stops there instead of inflating in full
+        d = zlib.decompressobj()
         try:
-            return zlib.decompress(data)
+            out = d.decompress(data, MAX_FILE_SIZE + 1)
         except zlib.error as exc:
             raise PdfParseError(f"corrupt Flate stream: {exc}") from exc
+        if len(out) > MAX_FILE_SIZE:
+            raise PdfParseError("Flate stream too large")
+        if not d.eof:
+            raise PdfParseError(
+                "corrupt Flate stream: incomplete or truncated stream")
+        return out
     return data
 
 

@@ -123,27 +123,38 @@ def doc_text(extracted_spans: list[dict]) -> str:
     return "\n".join(s["text"] for s in extracted_spans if s["error"] is None)
 
 
-def analyze_doc(extracted_spans: list[dict], query: str | None) -> dict:
-    """Per-document analysis row (ResumeResult analog,
-    reference: app/models/models.py:4-8 + llm_service rubric)."""
-    ok = [s for s in extracted_spans if s["error"] is None]
-    if not ok:
-        first_err = extracted_spans[0]["error"] if extracted_spans else "empty document"
-        return {"rejected": False, "error": first_err, "score_num": None,
-                "score_label": None, "summary": None, "emails": [], "phones": [],
-                "dates": [], "n_sections": 0}
-    text = doc_text(extracted_spans)
+# analyze_text's output, in order (the Spark analysis columns)
+ANALYSIS_FIELDS = ("rejected", "emails", "phones", "dates", "score_num",
+                   "score_label", "summary", "n_sections")
+
+
+def analyze_text(full_text: str | None, doc_error: str | None,
+                 query: str | None) -> tuple:
+    """The ``ANALYSIS_FIELDS`` of one document's full text: the whole
+    per-document analysis (ResumeResult analog, reference:
+    app/models/models.py:4-8 + llm_service rubric). Total: an errored
+    document is neither rejected nor scored, a rejected one is not scored.
+    ``analyze_doc`` and the Spark analysis UDF
+    (operators/analyze.analyze_documents) both call this."""
+    if doc_error is not None:
+        return False, [], [], [], None, None, None, 0
+    text = full_text or ""
     if not textproc.is_resume(text):
-        return {"rejected": True, "error": None, "score_num": None,
-                "score_label": None, "summary": None, "emails": [], "phones": [],
-                "dates": [], "n_sections": 0}
+        return True, [], [], [], None, None, None, 0
     fields = textproc.extract_fields(text)
-    score_num, score_label, summary, n_sections = textproc.analysis_fields(
-        text, query)
-    return {"rejected": False, "error": None, "score_num": score_num,
-            "score_label": score_label, "summary": summary,
-            "emails": fields["emails"], "phones": fields["phones"],
-            "dates": fields["dates"], "n_sections": n_sections}
+    return (False, fields["emails"], fields["phones"], fields["dates"],
+            *textproc.analysis_fields(text, query))
+
+
+def analyze_doc(extracted_spans: list[dict], query: str | None) -> dict:
+    """Per-document analysis row of ``analyze_text`` over the document's
+    text; the error is the first span's when no span succeeded."""
+    doc_error = None
+    if all(s["error"] is not None for s in extracted_spans):
+        doc_error = (extracted_spans[0]["error"] if extracted_spans
+                     else "empty document")
+    fields = analyze_text(doc_text(extracted_spans), doc_error, query)
+    return {"error": doc_error, **dict(zip(ANALYSIS_FIELDS, fields))}
 
 
 def run_pipeline(docs: list[dict], blob_rows: list[dict],

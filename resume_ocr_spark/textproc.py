@@ -17,9 +17,9 @@ data-processing semantics:
                        (reference: app/services/llm_service.py:93)
   experience_years() — total years across dated entries "(Mar 2021 - Presente)"
 
-All pure functions; the Spark side calls them inside Arrow batch UDFs except
-extract_fields, whose regexes are also evaluated as native Column ops
-(patterns kept dialect-neutral across Python re / Java regex / DuckDB).
+All pure functions; the Spark side runs them inside its one analysis UDF
+(oracle.analyze_text), so Python re is the only regex dialect that judges,
+extracts or scores a resume.
 """
 
 from __future__ import annotations
@@ -34,7 +34,6 @@ from .config import (
     VALIDATION_TEXT_CAP,
 )
 
-# dialect-neutral patterns (work identically in Python re, Java regex, DuckDB)
 # Python str.strip()'s whitespace set as a Java-regex character class, so
 # Column-side emptiness checks agree with the oracle's .strip() exactly
 # (Spark's F.trim / \s cover only the ASCII subset — '\xa0' et al differ).
@@ -80,12 +79,9 @@ MIN_HEADINGS_FOR_RESUME = 2
 # resumes vary heading wording ("PERFIL", "Resumo da Carreira", "Experiência
 # Relevante", "Habilidades" — all present in the reference's fixture PDFs),
 # so the judge counts distinct STEM FAMILIES whose capitalized form starts a
-# line (optionally bullet/dash-decorated). Patterns are dialect-neutral and
-# evaluated identically by Python re here and Java regex in
-# operators/analyze.classify_resumes — keep both in lockstep. The line
-# anchor is an explicit terminator class, NOT (?m)^: Java MULTILINE also
-# breaks on \r / U+0085 / U+2028-9 while Python's only breaks on \n, which
-# would let the Column mirror and the oracle disagree on bare-\r line ends.
+# line (optionally bullet/dash-decorated). The line anchor is an explicit
+# terminator class, NOT (?m)^ (which breaks on \n only), so a heading after
+# a bare \r / U+0085 / U+2028-9 line end still counts.
 _HL = r"(?:\A|[\n\r\u0085\u2028\u2029])[ \t>*•●○-]*"
 HEADING_STEM_PATTERNS = (
     _HL + r"(?:RESUMO|Resumo)",
@@ -114,9 +110,8 @@ HEADING_STEM_PATTERNS = (
 # The deterministic approximation: ≥3 distinct culinary families in the
 # validation window outweigh structural headings. Measured: receita_bolo
 # trips 12 families; every genuine fixture + synthetic resume trips 0.
-# Dialect-neutral spelled-case alternations (no (?i): Java regex needs
-# UNICODE_CASE for accented case folding, Python doesn't — explicit cases
-# keep the oracle and the Column mirror bit-identical).
+# Spelled-case alternations, not (?i): only the capitalizations listed
+# count, and NEGATIVE_TRIGGER_STEMS below is proved against exactly these.
 NEGATIVE_STEM_PATTERNS = (
     r"\b(?:X[ÍI]CARAS?|[Xx][íi]caras?)",
     r"(?:FARINHA|[Ff]arinha)",
@@ -134,10 +129,10 @@ NEGATIVE_STEM_PATTERNS = (
 )
 MAX_NEGATIVE_FOR_RESUME = 2  # ≥3 distinct culinary families ⇒ semantic reject
 
-# lowercase substring superset of every NEGATIVE_STEM_PATTERNS variant —
-# the Column-side fast trigger (SIMD contains) that gates the 13 regex
-# scans in analyze.classify_resumes; every regex match is guaranteed to
-# contain one of these in lower(text) (see test_oracle trigger test)
+# lowercase substring superset of every NEGATIVE_STEM_PATTERNS variant:
+# is_resume runs the 13 regex scans only when lower(head) contains one of
+# these, since every regex match contains one in its lowercase form (see
+# test_oracle trigger test) — a head without any can have no family
 NEGATIVE_TRIGGER_STEMS = (
     "xícara", "xicara", "farinha", "fermento",
     "çúcar", "çucar", "cúcar", "cucar",   # the four açúcar spellings
@@ -162,6 +157,9 @@ def is_resume(text: str) -> bool:
                         or re.search(PHONE_PATTERN, head) is not None)
     ):
         return False
+    low = head.lower()
+    if not any(s in low for s in NEGATIVE_TRIGGER_STEMS):
+        return True
     negative = sum(1 for p in NEGATIVE_STEM_PATTERNS if re.search(p, head))
     return negative <= MAX_NEGATIVE_FOR_RESUME
 

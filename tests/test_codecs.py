@@ -1,5 +1,6 @@
 """Unit tests: image/pdf/html codecs — the executable-spec building blocks."""
 
+import re
 import tracemalloc
 import zlib
 
@@ -235,6 +236,31 @@ class TestPdfCodec:
         pdf = pc.write_text_pdf([SAMPLE])
         with pytest.raises(pc.PdfParseError):
             pc.extract_text(pdf[: len(pdf) // 3])
+
+    @staticmethod
+    def _with_content_stream(stream: bytes) -> bytes:
+        pdf = pc.write_text_pdf(["x"])
+        m = re.search(rb"/FlateDecode >>\nstream\n(.*?)\nendstream", pdf, re.S)
+        return pdf[:m.start(1)] + stream + pdf[m.end(1):]
+
+    def test_flate_bomb_is_error_row_in_bounded_memory(self):
+        # a content stream of 64 MiB of zeros, compressed 1 MiB at a time
+        comp, zeros = zlib.compressobj(9), bytes(1 << 20)
+        bomb = b"".join(comp.compress(zeros) for _ in range(64)) + comp.flush()
+        pdf = self._with_content_stream(bomb)
+        tracemalloc.start()
+        try:
+            out = oracle.extract_span("pdf", None, "m", pdf)
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert out == ("", "Flate stream too large", 0)
+        assert peak < 3 * MAX_FILE_SIZE
+
+    def test_truncated_flate_stream_raises(self):
+        stream = zlib.compress(b"BT /F1 11 Tf (abc) Tj ET" * 50)
+        with pytest.raises(pc.PdfParseError, match="truncated"):
+            pc.extract_text(self._with_content_stream(stream[:-8]))
 
     def test_escapes_in_literals(self):
         tricky = "a(b)c\\d"

@@ -2,16 +2,13 @@
 RUNTIME (AQE-final) plan so regressions can't hide behind the pre-execution
 explain.
 
-Measured ground truth (this test documents it): the round-3 audit note
-claiming "AQE converts the two SortMergeJoins to broadcast at runtime" was
-an artifact — it inspected a count()-wrapped query execution whose column
-pruning shrank the payload side below the broadcast threshold. Executing
-the REAL frame (collect of the full payload) keeps exactly two
-SortMergeJoins: analyze's LeftOuter self-joins on doc_id, where BOTH sides
-are corpus-sized and co-partitioned — the correct 100 TB plan (broadcast
-there would scale with the corpus and OOM). Every dimension-shaped join
-still executes as broadcast. The pin: never MORE than those two SMJs, and
-never a cartesian."""
+Plans are read from the executed frame itself (collect, never count():
+a count()-wrapped query execution prunes columns differently and shows a
+different plan). The flagship keeps no SortMergeJoin: analysis is one
+Python pass per document, with no self-join back onto the corpus, and every
+remaining join is dimension-shaped (the blob dictionary, the top-K rank)
+and executes as broadcast. The pins: no SortMergeJoin, no cartesian, and
+analysis crosses into Python once per document (plus the top-K probe)."""
 
 import re
 
@@ -29,18 +26,7 @@ def test_extract_pipeline_final_plan_join_strategies(spark):
     df.collect()
     final = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in final, "AQE did not finalize the plan"
-    # key suffix is #NNN for strings but #NNNL for bigints — the L must be
-    # optional or long-keyed SMJs silently escape the pin (review r4);
-    # the raw-occurrence backstop catches any shape the regex misses
-    smj = re.findall(
-        r"SortMergeJoin \[(\w+)#\d+L?\], \[(\w+)#\d+L?\], (\w+)", final)
-    assert final.count("SortMergeJoin") == len(smj), (
-        "a SortMergeJoin printed in a shape the key regex does not parse")
-    assert len(smj) <= 2, f"new SortMergeJoins appeared: {smj}"
-    for left_key, right_key, join_type in smj:
-        # only the co-partitioned corpus-sized self-joins may sort-merge
-        assert (left_key, right_key) == ("doc_id", "doc_id"), smj
-        assert join_type == "LeftOuter", smj
+    assert "SortMergeJoin" not in final, final
     assert "BroadcastHashJoin" in final
     # no data-sized cartesian either (the only nested-loop the engine ever
     # plans is similarity's intentional 1-row probe broadcast)
@@ -70,6 +56,31 @@ def test_extract_documents_final_plan_one_python_stage(spark):
     tables = sorted(re.search(r"/(documents_raw|media_blobs)/", f).group(1)
                     for f in scans)
     assert tables == ["documents_raw"] * 3 + ["media_blobs"], tables
+
+
+@pytest.mark.usefixtures("spark")
+def test_analyze_documents_final_plan_one_python_pass(spark, tmp_path):
+    """Analysis runs oracle.analyze_text in ONE MapInArrow over the scan:
+    no self-join in summary mode; in ranked mode only the top-K probe
+    re-runs it, and the rank is the one (broadcast) join."""
+    from resume_ocr_spark.operators import analyze
+
+    path = str(tmp_path / "extracted")
+    spark.createDataFrame(
+        [("a", "RESUMO\nx\nEXPERIÊNCIA\ny python", None),
+         ("b", "", "empty document")],
+        "doc_id string, full_text string, doc_error string",
+    ).write.parquet(path)
+    for query, n_python, n_bhj in ((None, (1,), 0), ("python", (1, 2), 1)):
+        df = analyze.analyze_documents(spark.read.parquet(path), query=query)
+        df.collect()
+        s = df._jdf.queryExecution().executedPlan().toString()
+        # summary mode has no exchange, so AQE leaves that plan unwrapped
+        assert "isFinalPlan=false" not in s
+        final = s.split("== Initial Plan ==")[0]
+        assert final.count("MapInArrow") in n_python, (query, final)
+        assert final.count("BroadcastHashJoin") == n_bhj, (query, final)
+        assert "SortMergeJoin" not in final, (query, final)
 
 
 @pytest.mark.usefixtures("spark")

@@ -120,7 +120,7 @@ class TestOracle:
 
 
 def test_negative_trigger_stems_are_superset():
-    """The Column-side substring trigger must never underfire: every string
+    """is_resume's substring gate must never underfire: every string
     that matches any NEGATIVE_STEM_PATTERNS regex contains one of
     NEGATIVE_TRIGGER_STEMS in its lowercase form — enumerated over the
     case/accent variants each pattern accepts."""

@@ -152,3 +152,27 @@ def test_empty_media_table_reads_and_extracts(spark, small_corpus, tmp_path):
         broadcast_blobs=True)
     got = {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in out.collect()}
     assert got == {d["doc_id"]: oracle.extract_doc(d, {}) for d in docs}
+
+
+def test_analysis_columns_are_analyze_text(spark):
+    """Every analysis column is oracle.analyze_text's tuple for the row,
+    in both modes: error and empty docs, a culinary reject, a resume whose
+    headings follow bare \\r / U+2028 line ends (and whose phone uses
+    Arabic-Indic digits, which Python's \\d matches), whitespace-only text."""
+    rows = [
+        ("err", "", "corrupt Flate stream: x"),
+        ("empty", "", "empty document"),
+        ("recipe", "RESUMO\nBolo de cenoura\nINGREDIENTES\n2 xícaras de "
+                   "farinha\n3 ovos\nFORMAÇÃO\nModo de preparo: forno", None),
+        ("crlf", "Ana Silva\rRESUMO Engenheira de dados python\r"
+                 "EXPERIÊNCIA PROFISSIONAL\nDev (Mar 2021 - Presente)\n"
+                 "ana@x.com | (١١) 98765-4321", None),
+        ("blank", " \n\t   ", None),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id string, full_text string, doc_error string")
+    for query in (None, "engenheira python spark"):
+        got = {r["doc_id"]: tuple(r[c] for c in oracle.ANALYSIS_FIELDS) for r in
+               analyze.analyze_documents(df, query=query).collect()}
+        assert got == {d: oracle.analyze_text(t, e, query)
+                       for d, t, e in rows}, query

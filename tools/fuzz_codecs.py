@@ -10,9 +10,9 @@ the two unbounded-cost OCR paths (all since fixed and test-pinned):
    deeper reach than random bytes) across PDF / RIMG / JPEG / WAV / MP4 /
    MP3 / OGG, plus the reference's real PDF/PNG fixtures when present;
    every decode must return or raise its documented error type only. A
-   zlib bomb and a PNG-IDAT bomb (and their mutations) go through
-   oracle.extract_span, which must stay total AND within a peak-memory
-   budget.
+   zlib bomb, a PNG-IDAT bomb and a PDF-Flate bomb (and their mutations)
+   go through oracle.extract_span, which must stay total AND within a
+   peak-memory budget.
 2. adversarial images — noise / flats / salt / mutated renders / stripes
    through preprocess, grid OCR, real-font OCR and ocr_image; must be
    total AND each page must finish within a wall budget (cost bombs are
@@ -31,6 +31,7 @@ import collections
 import glob
 import os
 import random
+import re
 import string
 import struct
 import sys
@@ -174,17 +175,25 @@ def campaign_containers(n: int) -> None:
     comp, zeros = zlib.compressobj(9), bytes(1 << 20)
     bomb = b"".join(comp.compress(zeros) for _ in range(BOMB_MIB)) + comp.flush()
     # PNG-IDAT bomb: each stream again as the IDAT of a 64x64 gray PNG
-    # (mutations stay in the stream; the IHDR pixel cap has its own test)
+    # (mutations stay in the stream; the IHDR pixel cap has its own test);
+    # PDF-Flate bomb: each stream again as a one-page PDF's content stream
     ihdr = _png_chunk(b"IHDR", struct.pack(">IIBBBBB", 64, 64, 8, 0, 0, 0, 0))
+    pdf = pdfcodec.write_text_pdf(["x"])
+    content = re.search(rb"/FlateDecode >>\nstream\n(.*?)\nendstream", pdf,
+                        re.S)
     for b in [bomb] + [mutate(rng, bomb) for _ in range(max(20, n // 100))]:
         png = (pngcodec.PNG_MAGIC + ihdr + _png_chunk(b"IDAT", b)
                + _png_chunk(b"IEND", b""))
-        for name, payload in (("zlib_bomb", b), ("png_idat_bomb", png)):
-            probe(name, lambda p: oracle.extract_span("image", None, "m", p),
+        flate = pdf[:content.start(1)] + b + pdf[content.end(1):]
+        for name, kind, payload in (("zlib_bomb", "image", b),
+                                    ("png_idat_bomb", "image", png),
+                                    ("pdf_flate_bomb", "pdf", flate)):
+            probe(name, lambda p: oracle.extract_span(kind, None, "m", p),
                   payload, (), mem_budget=BOMB_MEM_BUDGET)
-    print(f"containers: {len(cases) + 2} cases fuzzed; bomb peaks "
+    print(f"containers: {len(cases) + 3} cases fuzzed; bomb peaks "
           f"zlib {peaks['zlib_bomb'] / 2**20:.1f} MiB, "
-          f"png idat {peaks['png_idat_bomb'] / 2**20:.1f} MiB "
+          f"png idat {peaks['png_idat_bomb'] / 2**20:.1f} MiB, "
+          f"pdf flate {peaks['pdf_flate_bomb'] / 2**20:.1f} MiB "
           f"(budget {BOMB_MEM_BUDGET / 2**20:.0f} MiB)")
 
 
