@@ -37,6 +37,10 @@ def _metrics_path(out_root: str) -> str:
     return os.path.join(out_root, "run_metrics", "data")
 
 
+def extracted_path(out_root: str) -> str:
+    return os.path.join(out_root, "documents_extracted", "data")
+
+
 def completed_buckets(spark: SparkSession, out_root: str, run_id: str) -> set[int]:
     path = _metrics_path(out_root)
     if not os.path.isdir(path):
@@ -82,7 +86,7 @@ def run_extraction(
         )
         broadcast_blobs = size < extract.blob_broadcast_cutoff(spark)
 
-    out_path = os.path.join(out_root, "documents_extracted", "data")
+    out_path = extracted_path(out_root)
     for i in range(0, len(pending), chunk_size):
         chunk = pending[i : i + chunk_size]
         t0 = time.time()

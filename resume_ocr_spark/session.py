@@ -1,17 +1,25 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory: the one way any entry point gets a session.
 
-Runs local[N], N = ``SPARK_GRAFT_CPUS`` or else the host's core count; on a
-real cluster the same builder config applies (AQE handles runtime
-re-planning and skew-join splitting; Arrow batch size bounds Python-UDF
-memory when batches carry multi-MB media payloads)."""
+- **Live session:** returned unchanged; no caller rewrites its confs.
+- **Launched by ``spark-submit``** (``PYSPARK_GATEWAY_PORT`` is set before
+  any context exists): the launcher's ``--master``/``--conf`` win, and
+  the pinned table below fills only the keys it left unset.
+- **Plain ``python``:** ``local[N, F]`` (N = ``SPARK_GRAFT_CPUS`` or else
+  the core count) plus the table — UTC, AQE skew join, task retries, an
+  Arrow batch cap that bounds Python-UDF memory on multi-MB media
+  payloads, and one BLAS thread per Python worker."""
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 from .config import ARROW_MAX_RECORDS_PER_BATCH
+
+BLAS_THREAD_VARS = ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS",
+                    "MKL_NUM_THREADS")
 
 
 def get_spark(
@@ -20,10 +28,12 @@ def get_spark(
     shuffle_partitions: int | None = None,
     task_retries: int | None = None,
 ) -> SparkSession:
+    if SparkContext._active_spark_context is not None:
+        return SparkSession.builder.getOrCreate()
     # one BLAS thread per Python worker: Spark already parallelizes across
     # workers, and N workers × M BLAS threads oversubscribes the box
     # (observed: local[32] slower than local[8] on the OCR stage without this)
-    for var in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
+    for var in BLAS_THREAD_VARS:
         os.environ.setdefault(var, "1")
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
     shuffle_partitions = shuffle_partitions or max(cores, 32)
@@ -32,24 +42,29 @@ def get_spark(
     # transient task faults; every stage is deterministic (value-hash salts,
     # seeded corpus, pure codecs) so a retried task reproduces its output
     # exactly (tests/test_retry_determinism.py injects failures to prove it).
-    task_retries = task_retries or int(
-        os.environ.get("SPARK_GRAFT_TASK_RETRIES", "2"))
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cores}, {task_retries}]")
-        .config("spark.task.maxFailures", str(task_retries))  # cluster parity
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
+    task_retries = task_retries or 2
+    pins = {
+        "spark.app.name": app_name,
+        "spark.master": f"local[{cores}, {task_retries}]",
+        "spark.task.maxFailures": str(task_retries),  # cluster parity
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch":
             str(ARROW_MAX_RECORDS_PER_BATCH),
-        )
-        .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-    )
-    return builder.getOrCreate()
+        "spark.sql.files.maxPartitionBytes": "128m",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.sql.session.timeZone": "UTC",
+        **{f"spark.executorEnv.{var}": os.environ[var]
+           for var in BLAS_THREAD_VARS},
+    }
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # under plain python this read shows pyspark-shell's local[*], so
+        # only the launcher's port can tell the two cases apart
+        SparkContext._ensure_initialized()
+        launcher = SparkConf()
+        pins = {k: v for k, v in pins.items() if not launcher.contains(k)}
+    return SparkSession.builder.config(map=pins).getOrCreate()

@@ -4,16 +4,7 @@ from __future__ import annotations
 
 import logging
 
-import pytest
-
 from resume_ocr_spark import applog
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from resume_ocr_spark.session import get_spark
-
-    return get_spark(app_name="test_applog", cores=4, shuffle_partitions=4)
 
 
 def _reset_logging():

@@ -5,19 +5,9 @@ from __future__ import annotations
 
 import tempfile
 
-import pytest
-
 import bench
 from resume_ocr_spark import corpus, warehouse
 from resume_ocr_spark.operators import extract
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from resume_ocr_spark.session import get_spark
-
-    return get_spark(app_name="test_spanmatch", cores=8,
-                     shuffle_partitions=16)
 
 
 def test_span_match_rate_full_parity(spark):

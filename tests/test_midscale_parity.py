@@ -14,18 +14,8 @@ from __future__ import annotations
 import random
 import tempfile
 
-import pytest
-
 from resume_ocr_spark import corpus, oracle, warehouse
 from resume_ocr_spark.operators import analyze, extract
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from resume_ocr_spark.session import get_spark
-
-    return get_spark(app_name="test_midscale", cores=16,
-                     shuffle_partitions=32)
 
 
 def test_midscale_span_and_analysis_parity(spark):

@@ -24,14 +24,6 @@ pytestmark = pytest.mark.skipif(
     not os.path.isdir(FIXDIR), reason="reference fixtures not present")
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from resume_ocr_spark.session import get_spark
-
-    return get_spark(app_name="test_real_pipeline", cores=8,
-                     shuffle_partitions=8)
-
-
 def _fixture_corpus():
     docs, blobs = [], []
     paths = sorted(glob.glob(os.path.join(FIXDIR, "*.pdf"))

@@ -99,7 +99,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
     import __spark_entry__ as entrymod
     from resume_ocr_spark.session import get_spark
 
-    spark = get_spark(app_name="contract", cores=16, shuffle_partitions=16)
+    spark = get_spark(app_name="contract", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")

@@ -52,7 +52,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
     import __spark_entry__ as entrymod
     from resume_ocr_spark.session import get_spark
 
-    spark = get_spark(app_name="plan_audit", cores=8, shuffle_partitions=16)
+    spark = get_spark(app_name="plan_audit", shuffle_partitions=16)
     jvm_utils = spark._sc._jvm.PythonSQLUtils
     lines = [
         "# PLANS — physical-plan audit of every contract query",

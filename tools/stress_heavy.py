@@ -403,8 +403,7 @@ def main() -> int:
 
     from resume_ocr_spark.session import get_spark
 
-    spark = get_spark(app_name="stress_heavy", cores=32,
-                      shuffle_partitions=64)
+    spark = get_spark(app_name="stress_heavy", shuffle_partitions=64)
     report: dict = {"sf_dir": SF_DIR, "replicas": REPLICAS,
                     "mega_frac": args.mega, "baseline": {}, "stress": {}}
 

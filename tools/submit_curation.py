@@ -15,32 +15,30 @@ Writes three tables under --output:
                   always the ORIGINAL text)
     audit/        one row per outcome with document counts
 
-Exits nonzero when the funnel keeps zero documents — a curation run that
-drops everything is a misconfiguration, not a result.
+Refuses a funnel that keeps zero documents — a curation run that drops
+everything is a misconfiguration, not a result.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, arg_parser,
+                                  entry, get_spark)
 
+
+@entry
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
+    ap = arg_parser()
     ap.add_argument("--benchmark", default=None,
                     help="parquet of eval-set rows (text column)")
     ap.add_argument("--weights", default=None,
                     help='JSON dict of per-group sampling rates')
     ap.add_argument("--default-weight", type=float, default=1.0)
     ap.add_argument("--group-col", default="lang")
-    ap.add_argument("--id-col", default="doc_id")
-    ap.add_argument("--text-col", default="text")
     ap.add_argument("--ngram", type=int, default=13)
     ap.add_argument("--seed", default="mix")
     ap.add_argument("--near-dup", action="store_true",
@@ -63,10 +61,9 @@ def main() -> int:
 
     weights = json.loads(args.weights) if args.weights else None
     if weights is not None and not isinstance(weights, dict):
-        print("invalid --weights: must be a JSON object", file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "invalid --weights: must be a JSON object")
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark(app_name="submit_curation")
     docs = spark.read.parquet(args.input)
     bench = spark.read.parquet(args.benchmark) if args.benchmark else None
 
@@ -91,9 +88,8 @@ def main() -> int:
         # stay for diagnosis, curated/ is never written.
         if rows.get("kept", 0) == 0:
             print(json.dumps({"outcomes": rows}))
-            print("curation kept zero documents — refusing the run "
-                  "(curated/ not written)", file=sys.stderr)
-            return 4
+            raise Refused(NOTHING_TO_DO, "curation kept zero documents — "
+                          "refusing the run (curated/ not written)")
         kept = annotated.filter(F.col("drop_reason").isNull()).drop(
             "drop_reason")
         if args.redact_pii:

@@ -39,8 +39,8 @@ corpus-scale shuffle is the canonical-URL fold (inherent: dedup IS a
 groupBy); --known suppression is a merge-hinted SMJ on the same key so
 at 10^12 URLs neither side broadcasts.
 
-Exit codes: 2 bad args/columns, 4 empty robots input (discovery over
-nothing is a misconfiguration, not a result).
+Refuses an empty robots input (discovery over nothing is a
+misconfiguration, not a result).
 """
 
 from __future__ import annotations
@@ -48,10 +48,13 @@ from __future__ import annotations
 import argparse
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from resume_ocr_spark.job import (NOTHING_TO_DO, Refused, entry, get_spark,
+                                  require_columns)
 
+
+@entry
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--robots", required=True,
@@ -74,20 +77,14 @@ def main() -> int:
 
     from resume_ocr_spark.operators import urltools
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark(app_name="submit_discovery")
     robots = spark.read.parquet(args.robots)
-    for c in ("host", "robots_txt"):
-        if c not in robots.columns:
-            print(f"--robots is missing column {c!r}", file=sys.stderr)
-            return 2
+    require_columns(robots, ["host", "robots_txt"], "--robots")
     if robots.isEmpty():
-        print("robots input is empty — refusing the run", file=sys.stderr)
-        return 4
+        raise Refused(NOTHING_TO_DO,
+                      "robots input is empty — refusing the run")
     bodies = spark.read.parquet(args.sitemaps)
-    for c in ("sitemap_url", "sitemap_xml"):
-        if c not in bodies.columns:
-            print(f"--sitemaps is missing column {c!r}", file=sys.stderr)
-            return 2
+    require_columns(bodies, ["sitemap_url", "sitemap_xml"], "--sitemaps")
 
     audit: list[tuple[str, int]] = []
 
@@ -120,10 +117,7 @@ def main() -> int:
 
     if args.feeds:
         feeds = spark.read.parquet(args.feeds)
-        for c in ("feed_url", "feed_xml"):
-            if c not in feeds.columns:
-                print(f"--feeds is missing column {c!r}", file=sys.stderr)
-                return 2
+        require_columns(feeds, ["feed_url", "feed_xml"], "--feeds")
         flinks = (urltools.feed_entries(feeds, xml_col="feed_xml")
                   .filter(F.col("link") != "")
                   .select(F.col("link").alias("raw_url"),
@@ -156,10 +150,7 @@ def main() -> int:
 
     if args.known:
         known = spark.read.parquet(args.known)
-        if "canonical_url" not in known.columns:
-            print("--known is missing column 'canonical_url'",
-                  file=sys.stderr)
-            return 2
+        require_columns(known, ["canonical_url"], "--known")
         # known is frontier-scale (same order as the output) — merge
         # SMJ on the fold's key, not a broadcast that grows with the
         # corpus

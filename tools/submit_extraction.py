@@ -4,19 +4,23 @@
         --warehouse <path> --output <path> --run-id <id> \
         [--query "..."] [--chunk-size N] [--ocr-partitions N]
 
-Exits nonzero if every document failed (the reference's all-failed gate,
-app/routers/analysis.py:518-539).
+Refuses a bad query or a missing warehouse; fails when every document
+failed (the reference's all-failed gate, app/routers/analysis.py:518-539).
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from resume_ocr_spark.job import (ALL_FAILED, INVALID, UNREACHABLE, Refused,
+                                  entry, get_spark)
 
+
+@entry
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--warehouse", required=True)
@@ -27,8 +31,6 @@ def main() -> int:
     ap.add_argument("--ocr-partitions", type=int, default=None)
     ap.add_argument("--log-dir", default="logs")
     args = ap.parse_args()
-
-    import os
 
     from resume_ocr_spark import applog, pipeline
     from resume_ocr_spark.textproc import normalize_query, query_terms
@@ -43,27 +45,28 @@ def main() -> int:
     args.query = normalize_query(args.query)
     if args.query is not None:
         if len(args.query) > 2500:
-            print("invalid query: longer than 2500 chars", file=sys.stderr)
-            return 2
+            raise Refused(INVALID, "invalid query: longer than 2500 chars")
         if not query_terms(args.query):
-            print("invalid query: no content terms", file=sys.stderr)
-            return 2
+            raise Refused(INVALID, "invalid query: no content terms")
 
     # S5 health gate: warehouse reachability before any stage runs
     # (reference: app/services/database_service.py:21-58 — 503 when down)
     manifest = os.path.join(args.warehouse, "documents_raw", "manifest.json")
     if not os.path.exists(manifest):
-        print(f"warehouse unreachable: {manifest} missing", file=sys.stderr)
-        return 3
+        raise Refused(UNREACHABLE,
+                      f"warehouse unreachable: {manifest} missing")
 
-    spark = SparkSession.builder.getOrCreate()
-    result = pipeline.run_extraction(
+    spark = get_spark(app_name="submit_extraction")
+    pipeline.run_extraction(
         spark, args.warehouse, args.output, run_id=args.run_id,
         query=args.query, chunk_size=args.chunk_size,
         ocr_partitions=args.ocr_partitions,
     )
     summary = pipeline.run_summary(spark, args.output, args.run_id).collect()[0]
-    n_ok = result.filter(F.col("doc_error").isNull()).count()
+    # the ok-count reads the column the extraction wrote; the returned
+    # analysed frame would re-run the analysis UDF over every document
+    n_ok = (spark.read.parquet(pipeline.extracted_path(args.output))
+            .filter(F.col("doc_error").isNull()).count())
     applog.log_run_event(
         args.run_id, "run_complete",
         buckets=summary["buckets_complete"], docs=summary["docs_processed"],
@@ -74,8 +77,7 @@ def main() -> int:
           f"parse_failures={summary['parse_failures']} ok_docs={n_ok}")
     if n_ok == 0 and summary["docs_processed"] > 0:
         applog.log_run_event(args.run_id, "all_failed")
-        print("all documents failed", file=sys.stderr)
-        return 1
+        raise Refused(ALL_FAILED, "all documents failed")
     return 0
 
 

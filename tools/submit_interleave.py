@@ -20,9 +20,9 @@ alt caption and source URL (operators/interleave.py). Writes under
     packed/  multimodal sequence-packing assignment (omit with --no-pack)
 
 Prints one JSON audit line (docs, spans, chrome removed, pairs,
-sequences). Exits 4 when the batch yields ZERO spans — a crawl batch
-that ingests nothing is a misconfiguration (wrong --html-col, empty
-fetch), not a result; spans/ is never written in that case.
+sequences). Refuses a batch that yields ZERO spans — a crawl batch that
+ingests nothing is a misconfiguration (wrong --html-col, empty fetch),
+not a result; spans/ is never written in that case.
 """
 
 from __future__ import annotations
@@ -31,10 +31,12 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from resume_ocr_spark.job import NOTHING_TO_DO, Refused, entry, get_spark
 
+
+@entry
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True)
@@ -54,7 +56,7 @@ def main() -> int:
 
     from resume_ocr_spark.operators import interleave
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark(app_name="submit_interleave")
     pages = spark.read.parquet(args.input)
 
     raw = interleave.html_to_spans(
@@ -81,9 +83,8 @@ def main() -> int:
         # submit_curation zero-keep convention)
         if audit["spans"] == 0:
             print(json.dumps(audit))
-            print("ingest produced zero spans — refusing the run "
-                  "(spans/ not written)", file=sys.stderr)
-            return 4
+            raise Refused(NOTHING_TO_DO, "ingest produced zero spans — "
+                          "refusing the run (spans/ not written)")
         table.write.mode("overwrite").parquet(f"{args.output}/spans")
 
         pairs = interleave.caption_pairs(table)

@@ -22,8 +22,7 @@ expiry orphan detection), packaged like the rest of the job family.
 Z-order column bounds are taken from a one-pass min/max aggregate over the
 table (the stand-in for Iceberg's table-level stats; at 10^12 rows the
 real table serves these from metadata, no scan). Columns must be integral.
-
-Exits 2 on invalid arguments."""
+"""
 
 from __future__ import annotations
 
@@ -34,14 +33,15 @@ import sys
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from resume_ocr_spark.job import INVALID, Refused, entry, get_spark
+
 
 def _zorder(spark: SparkSession, args) -> int:
     from resume_ocr_spark.operators import maintenance as mt
 
     cols = [c for c in args.cols.split(",") if c]
     if not cols:
-        print("--cols required for zorder", file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "--cols required for zorder")
     df = spark.read.parquet(args.table)
     stats = df.agg(*[f for c in cols
                      for f in (F.min(c).alias(f"lo_{c}"),
@@ -80,8 +80,7 @@ def _compact(spark: SparkSession, args) -> int:
                 rows.append((part if part != "." else "",
                              full, os.path.getsize(full)))
     if not rows:
-        print("no parquet files under --table", file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "no parquet files under --table")
     files = spark.createDataFrame(
         rows, "partition string, file string, bytes long")
     plan = mt.compaction_plan(files, target_bytes=args.target_bytes,
@@ -100,12 +99,9 @@ def _orphans(spark: SparkSession, args) -> int:
     try:
         retain = [int(s) for s in args.retain.split(",") if s]
     except ValueError:
-        print("--retain must be comma-separated snapshot ids",
-              file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "--retain must be comma-separated snapshot ids")
     if not retain:
-        print("--retain must name at least one snapshot", file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "--retain must name at least one snapshot")
     manifests = spark.read.parquet(args.manifests)
     storage = spark.read.parquet(args.storage)
     retained = spark.createDataFrame([(s,) for s in retain],
@@ -117,6 +113,7 @@ def _orphans(spark: SparkSession, args) -> int:
     return 0
 
 
+@entry
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mode", required=True,
@@ -134,16 +131,13 @@ def main() -> int:
     args = ap.parse_args()
 
     if args.mode in ("zorder", "compact") and not args.table:
-        print("--table required", file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "--table required")
     if args.mode == "orphans" and not (args.manifests and args.storage):
-        print("--manifests and --storage required", file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "--manifests and --storage required")
     if args.bits <= 0 or args.n_files <= 0 or args.target_bytes <= 0:
-        print("invalid sizing arguments", file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "invalid sizing arguments")
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark(app_name="submit_maintenance")
     if args.mode == "zorder":
         return _zorder(spark, args)
     if args.mode == "compact":

@@ -15,24 +15,24 @@ the job adds no exchange, so output partitioning follows the scan):
     fim/   (id, fim_applied, n_words, cut1, cut2, fim_text)
     span/  (id, n_words, phase, n_masked, n_spans, corrupted, target)
 
-Prints one JSON audit line. Exits 2 on invalid arguments, 4 when the
-corpus has zero words in --text-col (an objective rewrite of nothing is
-a misconfiguration, not a result — nothing is written in that case)."""
+Prints one JSON audit line. Refuses a corpus with zero words in
+--text-col (an objective rewrite of nothing is a misconfiguration, not
+a result — nothing is written in that case)."""
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, arg_parser,
+                                  entry, get_spark, require_columns)
 
+
+@entry
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
+    ap = arg_parser()
     ap.add_argument("--objective", choices=("fim", "span", "both"),
                     default="both")
     ap.add_argument("--rate", type=float, default=0.5)
@@ -41,22 +41,16 @@ def main() -> int:
     ap.add_argument("--span-len", type=int, default=3)
     ap.add_argument("--seed", default="fim")
     ap.add_argument("--span-seed", default="t5")
-    ap.add_argument("--id-col", default="doc_id")
-    ap.add_argument("--text-col", default="text")
     args = ap.parse_args()
     if not (0.0 <= args.rate <= 1.0) or args.min_words < 3 \
             or not 0 < args.span_len < args.stride:
-        print("invalid objective dials", file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "invalid objective dials")
 
     from resume_ocr_spark.operators import objectives
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark(app_name="submit_objectives")
     docs = spark.read.parquet(args.input)
-    if args.id_col not in docs.columns or args.text_col not in docs.columns:
-        print(f"input lacks columns {args.id_col}/{args.text_col}",
-              file=sys.stderr)
-        return 2
+    require_columns(docs, [args.id_col, args.text_col])
     docs = docs.select(args.id_col, args.text_col)
 
     audit: dict[str, int] = {}
@@ -78,8 +72,8 @@ def main() -> int:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_words").alias("n_words")).collect()[0]
     if not stats["n_words"]:
-        print("corpus has zero words — refusing the run", file=sys.stderr)
-        return 4
+        raise Refused(NOTHING_TO_DO,
+                      "corpus has zero words — refusing the run")
 
     audit["n_docs"] = int(stats["n_docs"])
     audit["n_words"] = int(stats["n_words"])

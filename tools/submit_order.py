@@ -24,23 +24,21 @@ present, else computed with textstats.with_quality_score (so the job
 runs directly on curated output that carried scores, or on raw text).
 
 Prints one JSON audit line (doc counts per epoch/phase — phase counts
-audit the threshold: phase 1 ≈ final_frac of scored docs). Exits 2 on
-invalid arguments, 4 on an empty corpus (refused before any write)."""
+audit the threshold: phase 1 ≈ final_frac of scored docs). Refuses an
+empty corpus before any write."""
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
+from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, arg_parser,
+                                  entry, get_spark, require_columns)
 
 
+@entry
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
+    ap = arg_parser()
     ap.add_argument("--schedule", choices=("epoch", "anneal"),
                     default="epoch")
     ap.add_argument("--epochs", type=int, default=1)
@@ -50,32 +48,25 @@ def main() -> int:
     ap.add_argument("--quality-col", default="quality")
     ap.add_argument("--sample-rate", type=float, default=0.5)
     ap.add_argument("--pack-budget", type=int, default=None)
-    ap.add_argument("--id-col", default="doc_id")
-    ap.add_argument("--text-col", default="text")
     args = ap.parse_args()
     if args.epochs < 1 or args.shards < 1 \
             or not 0.0 < args.final_frac < 1.0 \
             or not 0.0 < args.sample_rate <= 1.0 \
             or (args.pack_budget is not None and args.pack_budget < 1):
-        print("invalid order dials", file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "invalid order dials")
     seed = args.seed or ("anneal" if args.schedule == "anneal" else "epoch")
 
     from resume_ocr_spark.operators import packing, textstats
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark(app_name="submit_order")
     docs = spark.read.parquet(args.input)
-    if args.id_col not in docs.columns:
-        print(f"input lacks column {args.id_col}", file=sys.stderr)
-        return 2
+    require_columns(docs, [args.id_col])
     # every argument/schema refusal happens BEFORE the first write — a
     # partial output tree (order/ without packed/) must never survive
-    if args.pack_budget is not None and args.text_col not in docs.columns:
-        print(f"--pack-budget needs {args.text_col}", file=sys.stderr)
-        return 2
+    if args.pack_budget is not None:
+        require_columns(docs, [args.text_col], "--pack-budget input")
     if docs.limit(1).count() == 0:
-        print("corpus is empty — refusing the run", file=sys.stderr)
-        return 4
+        raise Refused(NOTHING_TO_DO, "corpus is empty — refusing the run")
 
     audit: dict[str, object] = {"schedule": args.schedule}
     if args.schedule == "epoch":
@@ -97,10 +88,8 @@ def main() -> int:
         if args.quality_col in docs.columns:
             scored = docs.select(args.id_col, args.quality_col)
         else:
-            if args.text_col not in docs.columns:
-                print(f"anneal needs {args.quality_col} or {args.text_col}",
-                      file=sys.stderr)
-                return 2
+            require_columns(docs, [args.text_col],
+                            f"anneal input without {args.quality_col}")
             scored = textstats.with_quality_score(
                 docs.select(args.id_col, args.text_col),
                 text_col=args.text_col).select(args.id_col, "quality")

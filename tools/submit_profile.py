@@ -28,46 +28,42 @@ a word that is modest in every batch but large in total can be missed.
 The CMS counters themselves are exact-merged — only the candidate LIST
 is per-batch.
 
-Exits 2 on invalid arguments, 4 when the input yields zero words."""
+Refuses an input that yields zero words."""
 
 from __future__ import annotations
 
-import argparse
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, arg_parser,
+                                  entry, get_spark)
 
+
+@entry
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
+    ap = arg_parser()
     ap.add_argument("--state", default=None,
                     help="a prior run's --output dir; its sketch tables "
                          "are merged in (incremental profiling)")
     ap.add_argument("--group-col", default="lang")
-    ap.add_argument("--id-col", default="doc_id")
-    ap.add_argument("--text-col", default="text")
     ap.add_argument("--len-width", type=float, default=200.0)
     ap.add_argument("--topk", type=int, default=20)
     args = ap.parse_args()
     if args.topk <= 0 or args.len_width <= 0:
-        print("invalid sizing arguments", file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "invalid sizing arguments")
     import os.path as _p
     if args.state and _p.abspath(args.state) == _p.abspath(args.output):
         # Spark reads are lazy: overwriting the directory a merge is still
         # reading from corrupts the state mid-job — demand a fresh output
-        print("--state must differ from --output (lazy reads would race "
-              "the overwrite); write to a new dir per batch",
-              file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "--state must differ from --output (lazy "
+                      "reads would race the overwrite); write to a new dir "
+                      "per batch")
 
     from resume_ocr_spark.operators import sketches as sk
     from resume_ocr_spark.operators.dedup import _tokens
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark(app_name="submit_profile")
     g = args.group_col
     docs = spark.read.parquet(args.input).select(
         F.col(args.id_col).alias("doc_id"), F.col(g),
@@ -76,9 +72,9 @@ def main() -> int:
     words = (docs.select(g, F.explode(_tokens("text")).alias("word"))
              .filter(F.col("word") != "")).persist()
     if words.limit(1).count() == 0:
-        print("input yields zero words — refusing the run", file=sys.stderr)
         words.unpersist()
-        return 4
+        raise Refused(NOTHING_TO_DO,
+                      "input yields zero words — refusing the run")
 
     # --- batch sketches (one scan of the words frame, all bounded-state)
     hll = sk.hll_registers(words, "word", [g])

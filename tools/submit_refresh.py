@@ -31,7 +31,7 @@ Writes three tables under --output:
     audit/      one row per outcome (added/changed/unchanged/removed/
                 robots_denied/noindex_dropped/emitted) with page counts
 
-Exit codes: 2 bad args, 4 empty new crawl (a refresh over nothing is a
+Refuses an empty new crawl (a refresh over nothing is a
 misconfiguration, not a result). An all-gated delta exits 0 — that is a
 legitimate month (nothing changed except denied pages) — but the audit
 row makes it visible.
@@ -43,10 +43,13 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from resume_ocr_spark.job import (NOTHING_TO_DO, Refused, entry, get_spark,
+                                  require_columns)
 
+
+@entry
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--new", required=True,
@@ -70,15 +73,11 @@ def main() -> int:
 
     from resume_ocr_spark.operators import urltools
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark(app_name="submit_refresh")
     new = spark.read.parquet(args.new)
-    for c in (args.url_col, args.content_col):
-        if c not in new.columns:
-            print(f"--new is missing column {c!r}", file=sys.stderr)
-            return 2
+    require_columns(new, [args.url_col, args.content_col], "--new")
     if new.isEmpty():
-        print("new crawl is empty — refusing the run", file=sys.stderr)
-        return 4
+        raise Refused(NOTHING_TO_DO, "new crawl is empty — refusing the run")
 
     digested = new.withColumn(
         "digest", F.md5(F.coalesce(F.col(args.content_col), F.lit(""))))

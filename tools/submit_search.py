@@ -23,8 +23,8 @@ segment merge.
         --output <new index dir> [--text-col <index text_col>]
 
 query writes the result parquet under --output/results and prints one
-JSON metrics line (mode, rows, index buckets touched). Exits 2 on
-invalid arguments, 4 when a query matches nothing.
+JSON metrics line (mode, rows, index buckets touched); a query that
+matches nothing exits NOTHING_TO_DO.
 """
 
 from __future__ import annotations
@@ -33,8 +33,10 @@ import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, entry,
+                                  get_spark, require_columns)
 
 
 def _load_index(spark, path):
@@ -45,14 +47,11 @@ def _load_index(spark, path):
     return post, dl, man
 
 
-def _build(args) -> int:
+def _build(spark, args) -> int:
     from resume_ocr_spark.operators import postings as P
 
-    spark = SparkSession.builder.getOrCreate()
     docs = spark.read.parquet(args.input)
-    if args.id_col not in docs.columns or args.text_col not in docs.columns:
-        print(f"input lacks {args.id_col}/{args.text_col}", file=sys.stderr)
-        return 2
+    require_columns(docs, [args.id_col, args.text_col])
     idx = P.PostingsIndex.build(docs, id_col=args.id_col,
                                 text_col=args.text_col, path=args.index,
                                 n_buckets=args.n_buckets)
@@ -68,25 +67,22 @@ def _build(args) -> int:
     return 0
 
 
-def _query(args) -> int:
+def _query(spark, args) -> int:
     from resume_ocr_spark.operators import postings as P
 
     modes = [m for m in (args.bm25, args.phrase, args.proximity,
                          args.phrases_file) if m]
     if len(modes) != 1:
-        print("exactly one of --bm25/--phrase/--proximity/--phrases-file",
-              file=sys.stderr)
-        return 2
-    spark = SparkSession.builder.getOrCreate()
+        raise Refused(INVALID, "exactly one of --bm25/--phrase/--proximity/"
+                               "--phrases-file")
     post, dl, man = _load_index(spark, args.index)
     idx = P.PostingsIndex(post, dl, man["id_col"], man["n_buckets"])
 
     if args.bm25:
         terms = P._query_terms(args.bm25)
         if not terms:
-            print("--bm25 query has no tokens after normalization",
-                  file=sys.stderr)
-            return 2
+            raise Refused(INVALID,
+                          "--bm25 query has no tokens after normalization")
         # only docs matching ≥1 term are results — without the filter
         # the all-docs-at-0.0 scan output pads top-k with noise and the
         # exit-4 contract is unreachable (review finding)
@@ -96,9 +92,8 @@ def _query(args) -> int:
     elif args.phrase:
         terms = P._phrase_tokens(args.phrase)
         if not terms:
-            print("--phrase has no tokens after normalization",
-                  file=sys.stderr)
-            return 2
+            raise Refused(INVALID,
+                          "--phrase has no tokens after normalization")
         out = idx.phrase(args.phrase)
         if args.snippets:
             docs = spark.read.parquet(args.snippets)
@@ -111,9 +106,8 @@ def _query(args) -> int:
         with open(args.phrases_file) as fh:
             phrases = [ln.strip() for ln in fh if ln.strip()]
         if not phrases or any(not P._phrase_tokens(p) for p in phrases):
-            print("--phrases-file is empty or holds a tokenless phrase",
-                  file=sys.stderr)
-            return 2
+            raise Refused(INVALID, "--phrases-file is empty or holds a "
+                                   "tokenless phrase")
         terms = sorted({w for p in phrases for w in P._phrase_tokens(p)})
         out = P.multi_phrase_matches(idx._pruned(terms), phrases,
                                      man["id_col"])
@@ -125,9 +119,8 @@ def _query(args) -> int:
         # _query_terms also dedups, so 'spark,spark' fails the ≥2 check
         terms = P._query_terms(" ".join(args.proximity.split(",")))
         if len(terms) < 2:
-            print("--proximity needs ≥2 distinct terms after "
-                  "normalization", file=sys.stderr)
-            return 2
+            raise Refused(INVALID, "--proximity needs ≥2 distinct terms "
+                                   "after normalization")
         out = idx.proximity(terms, max_window=args.max_window)
         mode = "proximity"
 
@@ -137,18 +130,16 @@ def _query(args) -> int:
     print(json.dumps({"mode": mode, "rows": n, "terms": len(terms),
                       "buckets_touched": buckets,
                       "n_buckets": man["n_buckets"]}))
-    return 0 if n > 0 else 4
+    return 0 if n > 0 else NOTHING_TO_DO
 
 
-def _merge(args) -> int:
+def _merge(spark, args) -> int:
     from resume_ocr_spark.operators import postings as P
 
-    spark = SparkSession.builder.getOrCreate()
     import os.path as _p
     if _p.abspath(args.index) == _p.abspath(args.output):
-        print("--output must differ from --index (lazy reads would race "
-              "the overwrite)", file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "--output must differ from --index (lazy reads "
+                               "would race the overwrite)")
     post, dl, man = _load_index(spark, args.index)
     delta = spark.read.parquet(args.delta)
     # the index's own text column unless --text-col overrides it
@@ -170,6 +161,7 @@ def _merge(args) -> int:
     return 0
 
 
+@entry
 def main() -> int:
     ap = argparse.ArgumentParser()
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -204,14 +196,10 @@ def main() -> int:
                    help="delta text column (default: the index's text_col)")
 
     args = ap.parse_args()
-    if args.cmd == "build":
-        if args.n_buckets <= 0:
-            print("invalid --n-buckets", file=sys.stderr)
-            return 2
-        return _build(args)
-    if args.cmd == "query":
-        return _query(args)
-    return _merge(args)
+    if args.cmd == "build" and args.n_buckets <= 0:
+        raise Refused(INVALID, "invalid --n-buckets")
+    run = {"build": _build, "query": _query, "merge": _merge}[args.cmd]
+    return run(get_spark(app_name="submit_search"), args)
 
 
 if __name__ == "__main__":

@@ -25,8 +25,7 @@ Writes under --output:
 and prints one JSON audit line {n_in, n_kept, mode, ...; threshold runs
 add sample_rate + the applied threshold_micro for reproducibility}.
 
-Exits 2 on statically invalid arguments (nothing written), 4 on a refused
-run. Refusal points: an empty MODEL side refuses before any write; a
+Refusal points: an empty MODEL side refuses before any write; a
 --threshold run whose quantile sample comes up empty refuses after
 scores/ (the model was valid — scores/ stays as the audit artifact,
 selected/ is never written, the submit_curation convention).
@@ -34,18 +33,18 @@ selected/ is never written, the submit_curation convention).
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, arg_parser,
+                                  entry, get_spark, require_columns)
 
+
+@entry
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
+    ap = arg_parser()
     ap.add_argument("--mode", choices=("dsir", "nb"), required=True)
     ap.add_argument("--target", default=None,
                     help="dsir: parquet of target-domain docs")
@@ -60,51 +59,36 @@ def main() -> int:
     ap.add_argument("--sample-rate", type=float, default=0.05,
                     help="md5 sample rate for the --threshold quantile")
     ap.add_argument("--min-score-micro", type=int, default=0)
-    ap.add_argument("--id-col", default="doc_id")
-    ap.add_argument("--text-col", default="text")
     args = ap.parse_args()
 
     if args.mode == "dsir":
         if not args.target:
-            print("--mode dsir requires --target", file=sys.stderr)
-            return 2
+            raise Refused(INVALID, "--mode dsir requires --target")
         if (args.keep_k is None) == (args.keep_frac is None):
-            print("--mode dsir takes exactly one of --keep-k / --keep-frac",
-                  file=sys.stderr)
-            return 2
+            raise Refused(INVALID, "--mode dsir takes exactly one of "
+                                   "--keep-k / --keep-frac")
         if args.threshold and args.keep_frac is None:
-            print("--threshold requires --keep-frac", file=sys.stderr)
-            return 2
+            raise Refused(INVALID, "--threshold requires --keep-frac")
         if args.threshold and not 0.0 < args.sample_rate <= 1.0:
-            print(f"--sample-rate must be in (0, 1]: {args.sample_rate}",
-                  file=sys.stderr)
-            return 2
+            raise Refused(INVALID, f"--sample-rate must be in (0, 1]: "
+                                   f"{args.sample_rate}")
         if args.keep_k is not None and args.keep_k <= 0:
-            print("--keep-k must be positive", file=sys.stderr)
-            return 2
+            raise Refused(INVALID, "--keep-k must be positive")
         if args.keep_frac is not None and not 0.0 < args.keep_frac <= 1.0:
-            print("--keep-frac must be in (0, 1]", file=sys.stderr)
-            return 2
-    else:
-        if not args.labeled:
-            print("--mode nb requires --labeled", file=sys.stderr)
-            return 2
+            raise Refused(INVALID, "--keep-frac must be in (0, 1]")
+    elif not args.labeled:
+        raise Refused(INVALID, "--mode nb requires --labeled")
 
     from resume_ocr_spark.operators import selection
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark(app_name="submit_selection")
     docs = spark.read.parquet(args.input)
-    if args.id_col not in docs.columns or args.text_col not in docs.columns:
-        print(f"input lacks columns {args.id_col}/{args.text_col}",
-              file=sys.stderr)
-        return 2
+    require_columns(docs, [args.id_col, args.text_col])
     n_in = docs.count()
 
     if args.mode == "dsir":
         target = spark.read.parquet(args.target)
-        if args.text_col not in target.columns:
-            print(f"--target lacks column {args.text_col}", file=sys.stderr)
-            return 2
+        require_columns(target, [args.text_col], "--target")
         try:
             # fit ONCE; scores/ gets the full weight table for audit, the
             # sample is drawn from the same frame without re-fitting
@@ -112,8 +96,7 @@ def main() -> int:
                 docs, target.select(args.text_col),
                 id_col=args.id_col, text_col=args.text_col)
         except ValueError as e:
-            print(f"refusing the run: {e}", file=sys.stderr)
-            return 4
+            raise Refused(NOTHING_TO_DO, f"refusing the run: {e}")
         if args.threshold:
             k = None
             audit = {"mode": "dsir", "keep_frac": args.keep_frac,
@@ -124,17 +107,12 @@ def main() -> int:
             audit = {"mode": "dsir", "k": k}
     else:
         labeled = spark.read.parquet(args.labeled)
-        missing = {args.text_col, "label"} - set(labeled.columns)
-        if missing:
-            print(f"--labeled lacks columns {sorted(missing)}",
-                  file=sys.stderr)
-            return 2
+        require_columns(labeled, [args.text_col, "label"], "--labeled")
         try:
             scores = selection.with_nb_quality_score(
                 docs, labeled, id_col=args.id_col, text_col=args.text_col)
         except ValueError as e:
-            print(f"refusing the run: {e}", file=sys.stderr)
-            return 4
+            raise Refused(NOTHING_TO_DO, f"refusing the run: {e}")
         audit = {"mode": "nb", "min_score_micro": args.min_score_micro}
 
     scores.write.mode("overwrite").parquet(f"{args.output}/scores")
@@ -151,8 +129,7 @@ def main() -> int:
             # scores/ stays (it is the audit artifact and was valid);
             # selected/ is never written on a refused selection stage —
             # same convention as submit_curation's curated/
-            print(f"refusing the run: {e}", file=sys.stderr)
-            return 4
+            raise Refused(NOTHING_TO_DO, f"refusing the run: {e}")
         kept_ids = sel.select(args.id_col)
         # record the reproducibility inputs: the applied threshold plus
         # the sample rate that derived it (the top-k path records k)

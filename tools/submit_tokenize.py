@@ -13,24 +13,24 @@ Writes under --output:
     packed/        (id, shard, seq_id, n_tokens, seq_offset) packing
                    assignment at --budget tokens per training sequence
 
-Exits 2 on invalid arguments, 4 when the corpus yields zero scorable
-words (a tokenizer trained on nothing is a misconfiguration, not a
-result — nothing is written in that case)."""
+Refuses a corpus that yields zero scorable words (a tokenizer trained
+on nothing is a misconfiguration, not a result — nothing is written in
+that case)."""
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 
-from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, arg_parser,
+                                  entry, get_spark)
 
+
+@entry
 def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
+    ap = arg_parser()
     ap.add_argument("--merges", default=None,
                     help="parquet (rank, a, b) of a trained merge table; "
                          "skips training")
@@ -38,18 +38,15 @@ def main() -> int:
     ap.add_argument("--sample-docs", type=int, default=10000)
     ap.add_argument("--budget", type=int, default=2048)
     ap.add_argument("--shards", type=int, default=64)
-    ap.add_argument("--id-col", default="doc_id")
-    ap.add_argument("--text-col", default="text")
     args = ap.parse_args()
     if args.num_merges < 0 or args.sample_docs <= 0 \
             or args.budget <= 0 or args.shards <= 0:
-        print("invalid sizing arguments", file=sys.stderr)
-        return 2
+        raise Refused(INVALID, "invalid sizing arguments")
 
     from resume_ocr_spark.operators import bpe
     from resume_ocr_spark.operators.packing import pack_sequences_from_counts
 
-    spark = SparkSession.builder.getOrCreate()
+    spark = get_spark(app_name="submit_tokenize")
     docs = spark.read.parquet(args.input).select(args.id_col, args.text_col)
 
     if args.merges:
@@ -66,9 +63,8 @@ def main() -> int:
     try:
         total = counts.agg(F.sum("bpe_tokens").alias("t")).collect()[0]["t"]
         if not total:
-            print("corpus yields zero scorable words — refusing the run",
-                  file=sys.stderr)
-            return 4
+            raise Refused(NOTHING_TO_DO, "corpus yields zero scorable words "
+                                         "— refusing the run")
         spark.createDataFrame(
             [(i, a, b) for i, (a, b) in enumerate(merges)],
             "rank int, a string, b string",
