@@ -288,20 +288,17 @@ def reassemble(doc_ids_df: DataFrame, span_results: DataFrame) -> DataFrame:
 def with_doc_text(extracted: DataFrame) -> DataFrame:
     """full_text = newline-join of successful span texts, in span order."""
     ok = F.filter("spans", lambda s: s.error.isNull())
-    return extracted.withColumn(
-        "full_text", F.array_join(F.transform(ok, lambda s: s.text), "\n")
-    ).withColumn(
-        "doc_error",
+    return extracted.select(
+        "*",
+        F.array_join(F.transform(ok, lambda s: s.text), "\n").alias("full_text"),
         F.when(F.size("spans") == 0, F.lit("empty document")).when(
             F.size(ok) == 0, F.element_at("spans", 1).error
-        ),
-    ).withColumn(
-        "ocr_pages", F.aggregate(
+        ).alias("doc_error"),
+        F.aggregate(
             "spans", F.lit(0), lambda acc, s: acc + F.coalesce(s.ocr_pages, F.lit(0))
-        )
-    ).withColumn(
-        "parse_failures",
-        F.size(F.filter("spans", lambda s: s.error.isNotNull())),
+        ).alias("ocr_pages"),
+        F.size(F.filter("spans", lambda s: s.error.isNotNull())
+               ).alias("parse_failures"),
     )
 
 

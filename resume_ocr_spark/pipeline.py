@@ -65,7 +65,6 @@ def run_extraction(
     run_id: str,
     query: str | None = None,
     chunk_size: int | None = None,
-    broadcast_blobs: bool | None = None,
     ocr_partitions: int | None = None,
 ) -> DataFrame:
     """Run (or resume) extraction run ``run_id``; returns the final analyzed
@@ -76,15 +75,14 @@ def run_extraction(
     pending = [b for b in all_buckets if b not in done]
     chunk_size = chunk_size or len(all_buckets)  # default: one job
 
-    if broadcast_blobs is None:
-        # broadcast the blob dictionary when its on-disk footprint is under
-        # the mode-aware cutoff (64 MB cluster / 256 MB single-JVM local)
-        blob_dir = os.path.join(wh_root, "media_blobs", "data")
-        size = sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(blob_dir) for f in fs
-        )
-        broadcast_blobs = size < extract.blob_broadcast_cutoff(spark)
+    # broadcast the blob dictionary when its on-disk footprint is under
+    # the mode-aware cutoff (64 MB cluster / 256 MB single-JVM local)
+    blob_dir = os.path.join(wh_root, "media_blobs", "data")
+    size = sum(
+        os.path.getsize(os.path.join(dp, f))
+        for dp, _, fs in os.walk(blob_dir) for f in fs
+    )
+    broadcast_blobs = size < extract.blob_broadcast_cutoff(spark)
 
     out_path = extracted_path(out_root)
     for i in range(0, len(pending), chunk_size):

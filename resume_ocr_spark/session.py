@@ -28,6 +28,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     task_retries: int | None = None,
 ) -> SparkSession:
+    """The session under the module's three-case rule. ``app_name`` names
+    only a plain-``python`` run: ``spark-submit`` always sets
+    ``spark.app.name`` (to the script's file name unless ``--name`` is
+    given), and the launcher's value wins."""
     if SparkContext._active_spark_context is not None:
         return SparkSession.builder.getOrCreate()
     # one BLAS thread per Python worker: Spark already parallelizes across

@@ -19,8 +19,11 @@ import json
 import os
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import IntegerType, StructType
 
 from .config import WAREHOUSE_BUCKETS
@@ -30,6 +33,9 @@ SPANS_SCHEMA = (
     "media_ref:string,offset:int>>"
 )
 BLOBS_SCHEMA = "media_ref string, kind string, payload binary"
+# rows per row group of a staged input file: Spark splits a file between
+# tasks at row-group boundaries only
+STAGED_ROW_GROUP = 1024
 
 
 def bucket_col(key: str = "doc_id", buckets: int = WAREHOUSE_BUCKETS):
@@ -95,18 +101,27 @@ def build_warehouse(
     buckets: int = WAREHOUSE_BUCKETS,
 ) -> None:
     """Materialize a synthetic corpus as the two input tables."""
-    docs_df = spark.createDataFrame(
-        [(d["doc_id"], [
-            (s["kind"], s["text"], s["media_ref"], s["offset"])
-            for s in d["spans"]
-        ]) for d in docs],
-        schema=SPANS_SCHEMA,
-    )
-    blobs_df = spark.createDataFrame(
-        [(b["media_ref"], b["kind"], bytearray(b["payload"])) for b in blobs],
-        schema=BLOBS_SCHEMA,
-    )
-    write_table(docs_df, root, "documents_raw", bucket_key="doc_id", buckets=buckets)
+    _write_rows(spark, docs, SPANS_SCHEMA, root, "documents_raw",
+                bucket_key="doc_id", buckets=buckets)
     # blobs bucketed by media_ref so a cluster-side sort-merge join can
     # co-locate; small dictionaries get broadcast anyway
-    write_table(blobs_df, root, "media_blobs", bucket_key="media_ref", buckets=buckets)
+    _write_rows(spark, blobs, BLOBS_SCHEMA, root, "media_blobs",
+                bucket_key="media_ref", buckets=buckets)
+
+
+def _write_rows(spark: SparkSession, rows: list[dict], ddl: str, root: str,
+                table: str, bucket_key: str, buckets: int) -> None:
+    """Write driver-side ``rows`` (only the schema's fields of each dict
+    are kept) as ``table``. The rows reach the executors as a parquet file
+    staged beside the table: a frame created from local data would ship
+    them inside its tasks."""
+    schema = StructType.fromDDL(ddl)
+    staged = os.path.join(root, table, "staged.parquet")
+    os.makedirs(os.path.dirname(staged), exist_ok=True)
+    pq.write_table(pa.Table.from_pylist(rows, schema=to_arrow_schema(schema)),
+                   staged, row_group_size=STAGED_ROW_GROUP)
+    try:
+        write_table(spark.read.schema(schema).parquet(staged), root, table,
+                    bucket_key=bucket_key, buckets=buckets)
+    finally:
+        os.remove(staged)

@@ -10,7 +10,7 @@ import pytest  # noqa: E402
 def spark():
     from resume_ocr_spark.session import get_spark
 
-    s = get_spark(app_name="tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
 
 

@@ -20,8 +20,7 @@ def test_span_match_rate_full_parity(spark):
     extract.extract_documents(dd, bb, broadcast_blobs=True).write.mode(
         "overwrite").parquet(out_dir)
 
-    sm = bench._span_match_rate(spark, out_dir, docs, blobs,
-                                sample_n=len(docs))
+    sm = bench.span_match(spark, out_dir, docs, blobs)
     assert sm["sampled"] == len(docs)
     assert sm["rate"] == 1.0, sm
     assert sm["strict_rate"] == 1.0, sm
@@ -31,6 +30,5 @@ def test_span_match_rate_full_parity(spark):
     mutated = [dict(d) for d in docs]
     victim = next(d for d in mutated if len(d["spans"]) > 1)
     victim["spans"] = victim["spans"][:-1]
-    sm_bad = bench._span_match_rate(spark, out_dir, mutated, blobs,
-                                    sample_n=len(mutated))
+    sm_bad = bench.span_match(spark, out_dir, mutated, blobs)
     assert sm_bad["rate"] < 1.0
