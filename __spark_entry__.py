@@ -1436,11 +1436,9 @@ def extract_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs_df = warehouse.read_table(spark, root, "documents_raw")
     blobs_df = warehouse.read_table(spark, root, "media_blobs")
     query = corpus.make_job_query(random.Random(7))
-    out = analyze.analyze_documents(
-        extract.extract_documents(docs_df, blobs_df, broadcast_blobs=True),
-        query=query,
-        persist_input=True,  # live extraction lineage feeds several branches
-    )
+    # the live extraction lineage feeds several branches in query mode
+    extracted = extract.extract_documents(docs_df, blobs_df).persist()
+    out = analyze.analyze_documents(extracted, query=query)
     return out.select(
         "doc_id",
         F.size("spans").alias("n_spans"),

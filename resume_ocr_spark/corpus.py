@@ -202,7 +202,10 @@ def gen_corpus(
 
 
 def _gen_docs_range(args: tuple[int, int, int]) -> tuple[list[dict], list[dict]]:
-    """Worker for gen_corpus_fast: docs [lo, hi) with per-doc seeds."""
+    """Docs [lo, hi) with per-doc seeds (``random.Random(f"{seed}:{i}")``),
+    so a corpus is the same in (n, seed) however its ranges are split over
+    worker processes; perfbench's ``inputs.mixed_corpus`` maps it over a
+    process pool."""
     seed, lo, hi = args
     docs: list[dict] = []
     blobs: list[dict] = []
@@ -212,27 +215,6 @@ def _gen_docs_range(args: tuple[int, int, int]) -> tuple[list[dict], list[dict]]
         d, b = _gen_one_doc(doc_id, rng)
         docs.append(d)
         blobs.extend(b)
-    return docs, blobs
-
-
-def gen_corpus_fast(n_docs: int, seed: int = 42, workers: int = 8
-                    ) -> tuple[list[dict], list[dict]]:
-    """Parallel corpus generation with per-doc seeding: deterministic in
-    (n_docs, seed) regardless of worker count. Same doc-mix probabilities as
-    gen_corpus but an independent RNG stream, and WITHOUT gen_corpus's
-    small-corpus override (gen_corpus forces negative docs in under-20-doc
-    corpora so tiny test fixtures always exercise the rejection path).
-    Bench-scale corpora only; tests pin the sequential gen_corpus."""
-    import multiprocessing
-
-    chunk = max(64, n_docs // (workers * 4))
-    ranges = [(seed, lo, min(lo + chunk, n_docs)) for lo in range(0, n_docs, chunk)]
-    docs: list[dict] = []
-    blobs: list[dict] = []
-    with multiprocessing.Pool(workers) as pool:
-        for d, b in pool.map(_gen_docs_range, ranges):
-            docs.extend(d)
-            blobs.extend(b)
     return docs, blobs
 
 

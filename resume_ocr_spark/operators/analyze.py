@@ -51,26 +51,19 @@ def extract_fields(df: DataFrame, col: str = "full_text") -> DataFrame:
                     "dates array<string>")
 
 
-def analyze_documents(extracted: DataFrame, query: str | None = None,
-                      persist_input: bool = False) -> DataFrame:
+def analyze_documents(extracted: DataFrame,
+                      query: str | None = None) -> DataFrame:
     """documents_extracted → resumes_analyzed.
 
     Output: the ``extracted`` columns (doc_id, spans, full_text, doc_error,
     …), then rejected, emails, phones, dates, score_num, score_label,
     summary, n_sections, rank (query mode; null otherwise).
 
-    ``persist_input=True`` caches the extracted frame first: in query mode
-    it feeds two branches (the analysis UDF and the top-k probe, which
-    re-runs it), so a live extraction lineage would otherwise be computed
-    twice. Leave False when the input is already a cheap scan
-    (pipeline.run_extraction reads back from parquet) — the cache is never
-    unpersisted here because the result is lazy; the pinned frame is handed
-    back as ``result.persisted_input`` so callers release it after
-    materializing (``storage.release_handles(result)``), or wrap the input
-    in ``storage.persisted(...)`` instead — one-shot jobs may simply let
-    session teardown reclaim it."""
-    if persist_input:
-        extracted = extracted.persist()
+    In query mode ``extracted`` feeds two branches (the analysis UDF and
+    the top-k probe, which re-runs it). A caller passing a live extraction
+    lineage rather than a parquet scan persists it first (``.persist()``,
+    or ``storage.persisted(...)`` to release it afterwards), so the
+    extraction runs once."""
     out = map_rows(extracted, extracted.columns, ["full_text", "doc_error"],
                    functools.partial(oracle.analyze_text, query=query),
                    _ANALYSIS_DDL)
@@ -78,8 +71,6 @@ def analyze_documents(extracted: DataFrame, query: str | None = None,
         out = rank_top_k(out)
     else:
         out = out.withColumn("rank", F.lit(None).cast("int"))
-    if persist_input:
-        out.persisted_input = extracted  # caller releases after materializing
     return out
 
 

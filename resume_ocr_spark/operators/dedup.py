@@ -773,7 +773,6 @@ def lsh_recall_eval(
     threshold: float = 0.5,
     k: int = MINHASH_K,
     bands: int = LSH_BANDS,
-    persist_words: bool = False,
 ) -> DataFrame:
     """Measured recall/cost of the MinHash-LSH banding path against the
     exact all-pairs Jaccard ground truth on the SAME slice — the eval you
@@ -801,15 +800,9 @@ def lsh_recall_eval(
     never data-sized.
 
     The words frame feeds five consumers (truth self-join ×2, sizes,
-    signatures, n_docs); ``persist_words=True`` caches the tokenize
-    scan across them — same contract as :func:`jaccard_pairs_lsh`: the
-    RETURNED frame carries ``.cached_words`` for the caller to unpersist
-    after materializing. Default False (the gate/bench call this
-    repeatedly; on the bounded eval slice recomputing is cheaper than
-    pinned storage)."""
+    signatures, n_docs) and is recomputed for each: on the bounded eval
+    slice that is cheaper than pinned storage."""
     words = _words(df, id_col, text_col)
-    if persist_words:
-        words.persist()
     # ground truth: exact all-pairs over the SAME words frame (the math of
     # jaccard_pairs, inlined so one scan serves truth + signatures)
     l, r = words.alias("l"), words.alias("r")
@@ -830,7 +823,7 @@ def lsh_recall_eval(
         .crossJoin(hit.agg(F.count("*").alias("n_retrieved")))
         .crossJoin(cand.agg(F.count("*").alias("n_candidates")))
     )
-    out = counts.select(
+    return counts.select(
         "n_docs", "n_true", "n_retrieved", "n_candidates",
         F.round(F.col("n_retrieved")
                 / F.when(F.col("n_true") > 0, F.col("n_true")), 4)
@@ -840,9 +833,6 @@ def lsh_recall_eval(
                          F.col("n_docs") * (F.col("n_docs") - 1)), 4)
         .alias("candidate_frac"),
     )
-    if persist_words:
-        out.cached_words = words  # caller unpersists after materializing
-    return out
 
 
 # --- incremental dedup (new batch vs historical index) ---------------------

@@ -13,8 +13,10 @@ app/services/ocr_service.py:20-127 extraction; SURVEY.md §3.1 stage map):
                 (doc_id, offset) (span-level parallelism is the skew salt:
                 a doc with 10^3 media spans spreads over the whole stage
                 instead of pinning one task) with a LEFT join of
-                media_blobs (broadcast small dict / shuffle join of the
-                media spans only otherwise) → map_rows(oracle.extract_span)
+                media_blobs (broadcast when its files sum under
+                blob_broadcast_cutoff, else a shuffle join of the media
+                spans only; extract_spans measures and decides)
+                → map_rows(oracle.extract_span)
       → unionByName
       → groupBy(doc_id) collect_list + array_sort(struct(offset, kind,
         media_ref, text, …))                   (order restored by explicit
@@ -34,6 +36,8 @@ import functools
 import os
 import zipimport
 from collections.abc import Callable
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -58,6 +62,14 @@ def blob_broadcast_cutoff(spark: SparkSession) -> int:
     # must keep the cluster cutoff
     is_single_jvm = master == "local" or master.startswith("local[")
     return BROADCAST_CUTOFF_LOCAL if is_single_jvm else BROADCAST_CUTOFF_CLUSTER
+
+
+def _on_disk_bytes(df: DataFrame) -> int:
+    """Summed size of the files ``df`` scans (0 for a frame built from
+    local rows). Assumes a filesystem the driver can ``stat``, as the
+    warehouse layout already does (``warehouse.manifest``)."""
+    return sum(os.path.getsize(url2pathname(urlparse(f).path))
+               for f in df.inputFiles())
 
 
 _SPAN_KEYS = ["doc_id", "offset", "kind", "media_ref"]
@@ -157,11 +169,16 @@ def explode_spans(docs_df: DataFrame) -> DataFrame:
 def extract_spans(
     spans_df: DataFrame,
     blobs_df: DataFrame,
-    broadcast_blobs: bool = False,
-    ocr_partitions: int | None = None,
+    broadcast_blobs: bool | None = None,
 ) -> DataFrame:
     """Per-span extraction, split in two: spans that need Python (html,
-    pdf, image) and spans handled by pure Column ops (everything else)."""
+    pdf, image) and spans handled by pure Column ops (everything else).
+
+    The blob join is chosen here from the blob table's on-disk size
+    (``_on_disk_bytes`` against ``blob_broadcast_cutoff``): broadcast under
+    the cutoff, shuffle join otherwise. ``broadcast_blobs`` overrides that
+    choice. The OCR stage is ``2 × defaultParallelism`` partitions, so
+    ``spark.default.parallelism`` sets its width."""
     is_python = F.col("kind").isin("html", "pdf", "image")
 
     # text + unsupported-kind branch: one pure-Column scan — whole-stage
@@ -200,29 +217,33 @@ def extract_spans(
     # zip re-parse), so partitions target seconds of OCR work each; 2×
     # parallelism bounds wave-straggle while span-level hashing spreads the
     # skew tail (a doc with 10³ media spans never pins one task).
-    if not ocr_partitions:
-        sc = spans_df.sparkSession.sparkContext
-        ocr_partitions = sc.defaultParallelism * 2
+    ocr_width = spans_df.sparkSession.sparkContext.defaultParallelism * 2
     py_spans = spans_df.filter(is_python).select(
         "doc_id", "offset", "kind", "media_ref", "text")
+    if broadcast_blobs is None:
+        broadcast_blobs = (_on_disk_bytes(blobs_df)
+                           < blob_broadcast_cutoff(spans_df.sparkSession))
     if broadcast_blobs:
         # repartition BEFORE the broadcast join: the shuffle then carries
         # only the span keys and html text, never payload bytes — the
         # map-side join attaches payloads after the exchange, same row
         # distribution. Html spans (media_ref "") look up no blob.
         spans = py_spans.repartition(
-            ocr_partitions, "doc_id", "offset"
+            ocr_width, "doc_id", "offset"
         ).join(F.broadcast(blobs), "media_ref", "left")
     else:
         # shuffle join repartitions by media_ref, so only media spans enter
         # it: every html span shares media_ref "" and would hash into one
         # join partition. Html rows rejoin (null payload) before the
-        # span-level repartition (payload bytes must cross here regardless)
+        # span-level repartition (payload bytes must cross here regardless).
+        # The merge hint keeps Spark's own size estimate from broadcasting
+        # a dictionary this rule chose to shuffle.
         is_html = F.col("kind") == "html"
         spans = (
-            py_spans.filter(~is_html).join(blobs, "media_ref", "left")
+            py_spans.filter(~is_html)
+            .join(blobs.hint("merge"), "media_ref", "left")
             .unionByName(py_spans.filter(is_html), allowMissingColumns=True)
-            .repartition(ocr_partitions, "doc_id", "offset"))
+            .repartition(ocr_width, "doc_id", "offset"))
     # oracle.extract_span returns for html before it reads the payload and
     # never reads text for media; the left join hands a dangling media_ref
     # a null payload, which it turns into "missing media blob".
@@ -305,13 +326,12 @@ def with_doc_text(extracted: DataFrame) -> DataFrame:
 def extract_documents(
     docs_df: DataFrame,
     blobs_df: DataFrame,
-    broadcast_blobs: bool = False,
-    ocr_partitions: int | None = None,
+    broadcast_blobs: bool | None = None,
 ) -> DataFrame:
     """End-to-end: documents_raw DF → (doc_id, spans, full_text, doc_error,
-    ocr_pages, parse_failures)."""
+    ocr_pages, parse_failures). ``extract_spans`` picks the blob join."""
     spans = explode_spans(docs_df)
-    results = extract_spans(spans, blobs_df, broadcast_blobs, ocr_partitions)
+    results = extract_spans(spans, blobs_df, broadcast_blobs)
     return with_doc_text(reassemble(docs_df, results))
 
 

@@ -13,7 +13,9 @@ north_rule requirements implemented here:
 
 At cluster scale each "chunk" is a job over a bucket range, the same way a
 backfill walks date partitions; the final ranking is a separate cheap reduce
-over the extracted table (top-k never needs the blobs again).
+over the extracted table (top-k never needs the blobs again). The plan
+inside each chunk (blob join strategy, OCR stage width) is
+``extract.extract_spans``'s to choose; this module only walks buckets.
 """
 
 from __future__ import annotations
@@ -65,24 +67,19 @@ def run_extraction(
     run_id: str,
     query: str | None = None,
     chunk_size: int | None = None,
-    ocr_partitions: int | None = None,
 ) -> DataFrame:
     """Run (or resume) extraction run ``run_id``; returns the final analyzed
-    DataFrame (reading the materialized output)."""
+    DataFrame (reading the materialized output). ``chunk_size`` buckets
+    run per job (default: all pending buckets in one job); below 1 it is
+    refused with ``ValueError``. ``extract.extract_spans`` chooses the blob
+    join and the OCR width."""
+    if chunk_size is not None and chunk_size < 1:
+        raise ValueError(f"chunk_size must be at least 1, got {chunk_size}")
     man = warehouse.manifest(wh_root, "documents_raw")
     all_buckets = list(range(man["buckets"]))
     done = completed_buckets(spark, out_root, run_id)
     pending = [b for b in all_buckets if b not in done]
-    chunk_size = chunk_size or len(all_buckets)  # default: one job
-
-    # broadcast the blob dictionary when its on-disk footprint is under
-    # the mode-aware cutoff (64 MB cluster / 256 MB single-JVM local)
-    blob_dir = os.path.join(wh_root, "media_blobs", "data")
-    size = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(blob_dir) for f in fs
-    )
-    broadcast_blobs = size < extract.blob_broadcast_cutoff(spark)
+    chunk_size = chunk_size or len(all_buckets)
 
     out_path = extracted_path(out_root)
     for i in range(0, len(pending), chunk_size):
@@ -91,10 +88,7 @@ def run_extraction(
         docs_df = warehouse.read_table(spark, wh_root, "documents_raw", buckets=chunk)
         blobs_df = warehouse.read_table(spark, wh_root, "media_blobs")
         extracted = extract.extract_documents(
-            docs_df.select("doc_id", "spans"),
-            blobs_df,
-            broadcast_blobs=broadcast_blobs,
-            ocr_partitions=ocr_partitions,
+            docs_df.select("doc_id", "spans"), blobs_df,
         ).withColumn("bucket", warehouse.bucket_col("doc_id", man["buckets"]))
         # per-bucket counters ride the write itself via observe()
         # accumulators — one scan per chunk, no post-write re-read

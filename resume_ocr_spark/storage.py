@@ -1,10 +1,11 @@
 """Pinned-storage discipline for long-lived sessions.
 
-Operators that cache an intermediate frame for multi-branch reuse
-(``analyze_documents(persist_input=True)``, ``jaccard_pairs_lsh(
-persist_words=True)``) cannot unpersist it themselves — their results are
-lazy, so releasing before the caller materializes would recompute the very
-lineage the cache exists to avoid. One-shot batch jobs can let session
+An operator that caches an intermediate frame for multi-branch reuse
+(``jaccard_pairs_lsh(persist_words=True)``) cannot unpersist it itself —
+its result is lazy, so releasing before the caller materializes would
+recompute the very lineage the cache exists to avoid; the same holds for
+a caller that persists its own input (a live extraction it analyses in
+query mode). One-shot batch jobs can let session
 teardown reclaim everything; a long-lived session that calls these
 repeatedly would accumulate pinned executor storage instead (round-2
 verdict ask #6). This module is the caller-side discipline:
@@ -13,8 +14,8 @@ verdict ask #6). This module is the caller-side discipline:
         rows = analyze_documents(e, query=q).collect()
     # e is unpersisted here, success or raise
 
-or, for operators that hand back their internal cache handle
-(``result.cached_words``, ``result.persisted_input``)::
+or, for an operator that hands back its internal cache handle
+(``result.cached_words``)::
 
     release_handles(result)   # after materializing
 """
@@ -27,7 +28,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 
 #: attribute names operators use to expose internally-pinned frames
-_HANDLE_ATTRS = ("cached_words", "persisted_input")
+_HANDLE_ATTRS = ("cached_words",)
 
 
 @contextmanager
@@ -45,9 +46,9 @@ def persisted(*dfs: DataFrame, blocking: bool = False) -> Iterator[DataFrame]:
 
 def release_handles(result: DataFrame, blocking: bool = False) -> int:
     """Unpersist every cache handle an operator attached to ``result``
-    (``cached_words`` from jaccard_pairs_lsh, ``persisted_input`` from
-    analyze_documents). Call after materializing. Returns the number of
-    frames released; safe to call twice (unpersist is idempotent)."""
+    (``cached_words`` from jaccard_pairs_lsh). Call after materializing.
+    Returns the number of frames released; safe to call twice (unpersist
+    is idempotent)."""
     released = 0
     for attr in _HANDLE_ATTRS:
         pinned = getattr(result, attr, None)

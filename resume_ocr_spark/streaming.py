@@ -12,9 +12,12 @@ training-data-pipeline capability set:
                         per-user sessionization with features session_window
                         can't emit (max intra-session gap), state carried
                         across micro-batches
+  stream_extract      — documents_raw files as micro-batches, each through
+                        the batch extract_documents plan (extract_spans
+                        picks the blob join and OCR width per batch)
 
-All three run with ``trigger(availableNow=True)`` in-sandbox, which makes
-their semantics batch-equivalent and therefore DuckDB-oracle-checkable; on a
+All four run with ``trigger(availableNow=True)`` in-sandbox, which makes
+their semantics batch-equivalent and therefore oracle-checkable; on a
 live stream the same code runs unbounded (stateful_sessions keeps the open
 session in state between micro-batches when ``flush_open=False``).
 
@@ -231,8 +234,6 @@ def stream_extract(
     wh_root: str,
     out_root: str,
     checkpoint_dir: str,
-    broadcast_blobs: bool = True,
-    ocr_partitions: int | None = None,
 ) -> int:
     """Streaming ingestion of documents_raw: parquet files landing in the
     table's data dir become micro-batches; each batch runs the SAME
@@ -246,6 +247,8 @@ def stream_extract(
     partition, so a crash between the write and the checkpoint commit
     replays the batch over itself instead of appending duplicates
     (foreachBatch is at-least-once; idempotence must live in the sink).
+    Each batch's blob join and OCR width are extract_spans's choice, the
+    same as for a batch run over the same warehouse.
 
     Runs one ``availableNow`` drain and returns the number of micro-batches
     processed; call again after new files land to process only the delta.
@@ -269,8 +272,7 @@ def stream_extract(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal n_batches
         out = _extract.extract_documents(
-            batch_df.select("doc_id", "spans"), blobs_df,
-            broadcast_blobs=broadcast_blobs, ocr_partitions=ocr_partitions)
+            batch_df.select("doc_id", "spans"), blobs_df)
         (
             out.withColumn("batch_id", F.lit(int(batch_id)))
             .write.mode("overwrite")

@@ -17,8 +17,7 @@ def test_span_match_rate_full_parity(spark):
     dd = warehouse.read_table(spark, root, "documents_raw")
     bb = warehouse.read_table(spark, root, "media_blobs")
     out_dir = tempfile.mkdtemp(prefix="spanmatch_out_")
-    extract.extract_documents(dd, bb, broadcast_blobs=True).write.mode(
-        "overwrite").parquet(out_dir)
+    extract.extract_documents(dd, bb).write.mode("overwrite").parquet(out_dir)
 
     sm = bench.span_match(spark, out_dir, docs, blobs)
     assert sm["sampled"] == len(docs)

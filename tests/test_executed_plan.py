@@ -45,8 +45,7 @@ def test_extract_documents_final_plan_one_python_stage(spark):
     root = entrymod._corpus_warehouse(spark)
     df = extract.extract_documents(
         warehouse.read_table(spark, root, "documents_raw"),
-        warehouse.read_table(spark, root, "media_blobs"),
-        broadcast_blobs=True)
+        warehouse.read_table(spark, root, "media_blobs"))
     df.collect()
     s = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in s
@@ -56,6 +55,34 @@ def test_extract_documents_final_plan_one_python_stage(spark):
     tables = sorted(re.search(r"/(documents_raw|media_blobs)/", f).group(1)
                     for f in scans)
     assert tables == ["documents_raw"] * 3 + ["media_blobs"], tables
+
+
+@pytest.mark.parametrize("cutoff, join, other", [
+    (None, "BroadcastHashJoin", "SortMergeJoin"),
+    (0, "SortMergeJoin", "BroadcastHashJoin"),
+])
+def test_extract_documents_blob_join_follows_blob_size(spark, monkeypatch,
+                                                       cutoff, join, other):
+    """extract_spans picks the blob join from the blob table's on-disk
+    size: the warehouse's few hundred KB broadcast under the default
+    cutoff, and a cutoff of 0 bytes makes it a sort-merge join (one bucket
+    of documents keeps the run short; the choice reads only the blobs)."""
+    import __spark_entry__ as entrymod
+    from resume_ocr_spark import warehouse
+    from resume_ocr_spark.operators import extract
+
+    if cutoff is not None:
+        monkeypatch.setattr(extract, "blob_broadcast_cutoff",
+                            lambda spark: cutoff)
+    root = entrymod._corpus_warehouse(spark)
+    df = extract.extract_documents(
+        warehouse.read_table(spark, root, "documents_raw", buckets=[0]),
+        warehouse.read_table(spark, root, "media_blobs"))
+    df.collect()
+    s = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in s
+    final = s.split("== Initial Plan ==")[0]
+    assert join in final and other not in final, final
 
 
 @pytest.mark.usefixtures("spark")

@@ -1,7 +1,7 @@
 """End-to-end test of tools/submit_extraction.py on a tiny warehouse: a
 good run prints its summary line with the oracle's ok-count, and the
-job refuses a bad query (2), a missing warehouse (3) and a run in which
-every document failed (1)."""
+job refuses a bad query or chunk size (2), a missing warehouse (3) and a
+run in which every document failed (1)."""
 
 import logging
 import re
@@ -9,7 +9,7 @@ import sys
 
 import pytest
 
-from resume_ocr_spark import corpus, oracle, warehouse
+from resume_ocr_spark import corpus, oracle, pipeline, warehouse
 
 
 @pytest.fixture
@@ -69,6 +69,12 @@ def test_refusals(spark, tmp_path, run_job):
     assert rc == 2 and "no content terms" in out.err
     rc, out = run_job(missing, "--query", "python " * 400)
     assert rc == 2 and "longer than 2500" in out.err
+    for size in ("0", "-2"):
+        rc, out = run_job(missing, "--chunk-size", size)
+        assert rc == 2 and "invalid chunk size" in out.err
+        with pytest.raises(ValueError, match="chunk_size"):
+            pipeline.run_extraction(spark, missing, str(tmp_path / "out"),
+                                    "r1", chunk_size=int(size))
 
 
 def test_all_documents_failed(spark, tmp_path, run_job):

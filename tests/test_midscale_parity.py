@@ -14,7 +14,7 @@ from __future__ import annotations
 import random
 import tempfile
 
-from resume_ocr_spark import corpus, oracle, warehouse
+from resume_ocr_spark import corpus, oracle, storage, warehouse
 from resume_ocr_spark.operators import analyze, extract
 
 
@@ -25,11 +25,11 @@ def test_midscale_span_and_analysis_parity(spark):
     dd = warehouse.read_table(spark, root, "documents_raw")
     bb = warehouse.read_table(spark, root, "media_blobs")
     query = corpus.make_job_query(random.Random(3))
-    out = analyze.analyze_documents(
-        extract.extract_documents(dd.select("doc_id", "spans"), bb,
-                                  broadcast_blobs=True),
-        query=query, persist_input=True)
-    got = {r["doc_id"]: r for r in out.collect()}
+    # the live extraction feeds the analysis UDF and the top-k probe
+    with storage.persisted(
+            extract.extract_documents(dd.select("doc_id", "spans"), bb)) as e:
+        got = {r["doc_id"]: r
+               for r in analyze.analyze_documents(e, query=query).collect()}
     exp = oracle.run_pipeline(docs, blobs, query=query)
 
     assert set(got) == set(exp)

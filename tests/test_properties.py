@@ -33,10 +33,10 @@ def test_span_input_order_invariance(spark, tmp_path):
     warehouse.build_warehouse(spark, r2, permuted, blobs)
     out1 = extract.extract_documents(
         warehouse.read_table(spark, r1, "documents_raw"),
-        warehouse.read_table(spark, r1, "media_blobs"), broadcast_blobs=True)
+        warehouse.read_table(spark, r1, "media_blobs"))
     out2 = extract.extract_documents(
         warehouse.read_table(spark, r2, "documents_raw"),
-        warehouse.read_table(spark, r2, "media_blobs"), broadcast_blobs=True)
+        warehouse.read_table(spark, r2, "media_blobs"))
     assert _span_rows(out1) == _span_rows(out2)
 
 
@@ -59,7 +59,7 @@ def test_random_payload_corruption_never_throws(spark, tmp_path):
     warehouse.build_warehouse(spark, root, docs, blobs)
     out = extract.extract_documents(
         warehouse.read_table(spark, root, "documents_raw"),
-        warehouse.read_table(spark, root, "media_blobs"), broadcast_blobs=True)
+        warehouse.read_table(spark, root, "media_blobs"))
     rows = out.collect()  # must not raise
     assert len(rows) == len(docs)
     # matches the single-node oracle under the same corruption
@@ -86,10 +86,10 @@ def test_compressed_and_raw_blobs_equivalent(spark, tmp_path):
     warehouse.build_warehouse(spark, r2, docs, raw_blobs)
     out1 = extract.extract_documents(
         warehouse.read_table(spark, r1, "documents_raw"),
-        warehouse.read_table(spark, r1, "media_blobs"), broadcast_blobs=True)
+        warehouse.read_table(spark, r1, "media_blobs"))
     out2 = extract.extract_documents(
         warehouse.read_table(spark, r2, "documents_raw"),
-        warehouse.read_table(spark, r2, "media_blobs"), broadcast_blobs=True)
+        warehouse.read_table(spark, r2, "media_blobs"))
     assert _span_rows(out1) == _span_rows(out2)
 
 
@@ -169,8 +169,7 @@ def test_edge_spans_match_oracle(spark):
         "media_ref:string,offset:int>>")
     blobs_df = spark.createDataFrame([], "media_ref string, payload binary")
     got = {r["doc_id"]: r for r in
-           extract.extract_documents(docs_df, blobs_df,
-                                     broadcast_blobs=True).collect()}
+           extract.extract_documents(docs_df, blobs_df).collect()}
     for doc_id, exp in expected.items():
         g = [(s["kind"], s["text"], s["media_ref"], s["offset"], s["error"])
              for s in got[doc_id]["spans"]]

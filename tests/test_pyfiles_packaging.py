@@ -54,8 +54,7 @@ def test_pipeline_runs_from_pyfiles_zip(tmp_path):
         warehouse.build_warehouse(spark, root, docs, blobs)
         out = extract.extract_documents(
             warehouse.read_table(spark, root, "documents_raw"),
-            warehouse.read_table(spark, root, "media_blobs"),
-            broadcast_blobs=True)
+            warehouse.read_table(spark, root, "media_blobs"))
         rows = {{r["doc_id"]: r for r in out.collect()}}
         exp = oracle.run_pipeline(docs, blobs, query=None)
         key = lambda s: (s["kind"], s["text"], s["media_ref"], s["offset"])

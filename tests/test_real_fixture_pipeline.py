@@ -53,9 +53,7 @@ def test_real_fixture_span_equality(spark, tmp_path):
     blobs_df = warehouse.read_table(spark, root, "media_blobs")
     query = "engenheiro de dados python spark aws sql"
     out = analyze.analyze_documents(
-        extract.extract_documents(
-            docs_df.select("doc_id", "spans"), blobs_df,
-            broadcast_blobs=True),
+        extract.extract_documents(docs_df.select("doc_id", "spans"), blobs_df),
         query=query)
     got = {r["doc_id"]: r for r in out.collect()}
     exp = oracle.run_pipeline(docs, blobs, query=query)

@@ -94,7 +94,7 @@ class TestSources:
             "spans", F.coalesce("spans", F.array().cast(sources.SPAN_TYPE)))
         blobs = spark.createDataFrame([], "media_ref string, payload binary")
         out = {r["doc_id"]: r for r in extract.extract_documents(
-            docs, blobs, broadcast_blobs=True).collect()}
+            docs, blobs).collect()}
         assert out["d1"]["spans"][0]["text"] == "hello"
         assert out["d1"]["spans"][1]["error"] is not None  # dangling media_ref
         assert out["d2"]["doc_error"] == "empty document"

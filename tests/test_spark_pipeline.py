@@ -20,7 +20,7 @@ def wh(spark, small_corpus, tmp_path_factory):
     return root
 
 
-def _extracted(spark, wh, broadcast_blobs):
+def _extracted(spark, wh, broadcast_blobs=None):
     docs_df = warehouse.read_table(spark, wh, "documents_raw")
     blobs_df = warehouse.read_table(spark, wh, "media_blobs")
     out = extract.extract_documents(docs_df, blobs_df, broadcast_blobs)
@@ -29,7 +29,7 @@ def _extracted(spark, wh, broadcast_blobs):
 
 @pytest.fixture(scope="module")
 def spark_extracted(spark, wh):
-    return _extracted(spark, wh, broadcast_blobs=True)
+    return _extracted(spark, wh)
 
 
 @pytest.fixture(scope="module")
@@ -89,7 +89,7 @@ class TestAnalysisEquality:
         _, query = oracle_result
         docs_df = warehouse.read_table(spark, wh, "documents_raw")
         blobs_df = warehouse.read_table(spark, wh, "media_blobs")
-        extracted = extract.extract_documents(docs_df, blobs_df, broadcast_blobs=True)
+        extracted = extract.extract_documents(docs_df, blobs_df)
         out = analyze.analyze_documents(extracted, query=query)
         return {r["doc_id"]: r for r in out.collect()}
 
@@ -118,7 +118,7 @@ class TestAnalysisEquality:
         exp = oracle.run_pipeline(docs, blobs, query=None)
         docs_df = warehouse.read_table(spark, wh, "documents_raw")
         blobs_df = warehouse.read_table(spark, wh, "media_blobs")
-        extracted = extract.extract_documents(docs_df, blobs_df, broadcast_blobs=True)
+        extracted = extract.extract_documents(docs_df, blobs_df)
         got = {r["doc_id"]: r for r in
                analyze.analyze_documents(extracted, query=None).collect()}
         for doc_id, e in exp.items():
@@ -148,8 +148,7 @@ def test_empty_media_table_reads_and_extracts(spark, small_corpus, tmp_path):
     blobs_df = warehouse.read_table(spark, root, "media_blobs")
     assert blobs_df.count() == 0
     out = extract.extract_documents(
-        warehouse.read_table(spark, root, "documents_raw"), blobs_df,
-        broadcast_blobs=True)
+        warehouse.read_table(spark, root, "documents_raw"), blobs_df)
     got = {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in out.collect()}
     assert got == {d["doc_id"]: oracle.extract_doc(d, {}) for d in docs}
 

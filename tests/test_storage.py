@@ -6,7 +6,7 @@ loop must not accumulate pinned executor storage."""
 from __future__ import annotations
 
 from resume_ocr_spark import storage
-from resume_ocr_spark.operators import analyze, dedup
+from resume_ocr_spark.operators import dedup
 
 
 def _pinned(df) -> bool:
@@ -31,23 +31,6 @@ def test_persisted_context_frees_on_raise(spark):
     except RuntimeError:
         pass
     assert not _pinned(df)
-
-
-def test_analyze_persist_input_handle_released(spark):
-    extracted = spark.createDataFrame(
-        [("d1", "RESUMO\nEXPERIÊNCIA PROFISSIONAL\nana@email.com", None),
-         ("d2", "texto qualquer sem estrutura", None)],
-        "doc_id string, full_text string, doc_error string")
-    out = analyze.analyze_documents(extracted, query="python", persist_input=True)
-    rows = out.collect()
-    assert len(rows) == 2
-    handle = out.persisted_input
-    assert _pinned(handle)
-    released = storage.release_handles(out, blocking=True)
-    assert released == 1
-    assert not _pinned(handle)
-    # idempotent second release
-    assert storage.release_handles(out) == 1
 
 
 def test_jaccard_lsh_words_handle_released(spark):

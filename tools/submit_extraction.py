@@ -2,10 +2,11 @@
 
     spark-submit --py-files dist/resume_ocr_spark.zip tools/submit_extraction.py \
         --warehouse <path> --output <path> --run-id <id> \
-        [--query "..."] [--chunk-size N] [--ocr-partitions N]
+        [--query "..."] [--chunk-size N]
 
-Refuses a bad query or a missing warehouse; fails when every document
-failed (the reference's all-failed gate, app/routers/analysis.py:518-539).
+Refuses a bad query, a chunk size below 1 or a missing warehouse; fails
+when every document failed (the reference's all-failed gate,
+app/routers/analysis.py:518-539).
 """
 
 from __future__ import annotations
@@ -28,7 +29,6 @@ def main() -> int:
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--query", default=None)  # ranked vs summary mode
     ap.add_argument("--chunk-size", type=int, default=None)
-    ap.add_argument("--ocr-partitions", type=int, default=None)
     ap.add_argument("--log-dir", default="logs")
     args = ap.parse_args()
 
@@ -48,6 +48,8 @@ def main() -> int:
             raise Refused(INVALID, "invalid query: longer than 2500 chars")
         if not query_terms(args.query):
             raise Refused(INVALID, "invalid query: no content terms")
+    if args.chunk_size is not None and args.chunk_size < 1:
+        raise Refused(INVALID, "invalid chunk size: must be at least 1")
 
     # S5 health gate: warehouse reachability before any stage runs
     # (reference: app/services/database_service.py:21-58 — 503 when down)
@@ -60,7 +62,6 @@ def main() -> int:
     pipeline.run_extraction(
         spark, args.warehouse, args.output, run_id=args.run_id,
         query=args.query, chunk_size=args.chunk_size,
-        ocr_partitions=args.ocr_partitions,
     )
     summary = pipeline.run_summary(spark, args.output, args.run_id).collect()[0]
     # the ok-count reads the column the extraction wrote; the returned
