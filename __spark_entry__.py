@@ -391,10 +391,7 @@ def dedup_jaccard_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join). Same threshold/slice as dedup_jaccard_pairs, so the two
     entries also evidence the LSH recall loss directly."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
-    # persist_words=False: the gate/bench call this repeatedly in one
-    # session; a pinned cache per call would leak executor storage
-    return dedup.jaccard_pairs_lsh(docs, "doc_id", "text", threshold=0.3,
-                                   persist_words=False)
+    return dedup.jaccard_pairs_lsh(docs, "doc_id", "text", threshold=0.3)
 
 
 def dp_group_counts_entry(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -724,7 +724,6 @@ def jaccard_pairs_lsh(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    persist_words: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """The 100 TB Jaccard path: exact word-set Jaccard computed only for
@@ -735,20 +734,12 @@ def jaccard_pairs_lsh(
     pair the banding misses is never scored — which is the standard
     cost/recall dial (MMDS ch.3).
 
-    Storage contract: with ``persist_words=True`` the word explode is
-    cached (it serves signatures, candidate gating, and scoring — the
-    dominant scan at scale). The cache is NOT released here because the
-    returned DataFrame is lazy; the caller must call
-    ``result.cached_words.unpersist()`` after materializing (or stop the
-    session). Callers that run this repeatedly in one session on small
-    inputs (the driver gate, the bench harness) pass
-    ``persist_words=False`` — recomputing the explode is cheaper than
-    accumulating pinned storage across runs."""
-    # one word explode serves signatures, candidate gating, and scoring —
-    # it is the dominant scan at scale, so cache it across the three uses
+    The word explode feeds signatures, candidate gating, and scoring and
+    is recomputed for each use, not cached: the result is lazy, so only
+    the caller could release such a cache, and callers that run this
+    repeatedly in one session (the driver gate, the stress harness) would
+    accumulate pinned executor storage instead."""
     words = _words(df, id_col, text_col)
-    if persist_words:
-        words.persist()
     # max_bucket_size forwards the degenerate-bucket dial (boilerplate
     # floods put C(m,2) candidate pairs in one bucket — cap before the join)
     cand = minhash_lsh_candidates(_minhash_from_words(words, id_col), id_col,
@@ -760,10 +751,7 @@ def jaccard_pairs_lsh(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("common"))
     )
-    out = _jaccard_from_common(words, common, id_col, threshold)
-    if persist_words:
-        out.cached_words = words  # caller unpersists after materializing
-    return out
+    return _jaccard_from_common(words, common, id_col, threshold)
 
 
 def lsh_recall_eval(

@@ -6,10 +6,11 @@ north_rule requirements implemented here:
     status, ts) — the Iceberg-shim analog of the reference's Mongo audit doc
     (reference: app/routers/analysis.py:558-567, database_service.py:60-69)
   - checkpoint/resume: buckets are processed in chunks; each chunk's output
-    overwrites exactly its bucket partitions (dynamic partition overwrite,
-    idempotent), then marker rows are appended.  A killed run restarts by
-    anti-joining completed buckets — only unfinished buckets are re-read
-    (partition pruning makes the skip free).
+    overwrites exactly its bucket partitions
+    (``warehouse.overwrite_partitions``, idempotent), then marker rows are
+    appended.  A killed run restarts by anti-joining completed buckets —
+    only unfinished buckets are re-read (partition pruning makes the skip
+    free).
 
 At cluster scale each "chunk" is a job over a bucket range, the same way a
 backfill walks date partitions; the final ranking is a separate cheap reduce
@@ -106,12 +107,7 @@ def run_extraction(
             ]
         extracted = extracted.observe(obs, *metric_cols)
         # idempotent: overwrite exactly this chunk's bucket partitions
-        (
-            extracted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(out_path)
-        )
+        warehouse.overwrite_partitions(extracted, out_path, "bucket")
         # per-bucket share of the chunk wall (buckets in a chunk run as one
         # job; summing rows must reproduce the chunk wall, not multiply it)
         wall_ms = int((time.time() - t0) * 1000 / max(len(chunk), 1))

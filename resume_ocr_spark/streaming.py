@@ -1,24 +1,46 @@
-"""Structured Streaming operators over the events stream.
+"""Structured Streaming operators.
 
-The reference is strictly batch (SURVEY.md §2.6 — no streaming surface
-anywhere in /root/reference/), so these are part of the beyond-the-reference
-training-data-pipeline capability set:
+The reference is strictly batch (SURVEY.md §2.6 — it has no streaming
+surface), so these are part of the beyond-the-reference
+training-data-pipeline capability set. Event-stream operators, drained
+into a memory sink by ``run_available_now``:
 
-  windowed_counts     — tumbling event-time window + watermark (the
-                        declarative path; lives in __spark_entry__ since r1)
-  session_window_agg  — built-in ``F.session_window`` gap-merge aggregation:
-                        Catalyst handles state, merge, and eviction
-  stateful_sessions   — ``applyInPandasWithState`` custom stateful operator:
-                        per-user sessionization with features session_window
-                        can't emit (max intra-session gap), state carried
-                        across micro-batches
-  stream_extract      — documents_raw files as micro-batches, each through
-                        the batch extract_documents plan (extract_spans
-                        picks the blob join and OCR width per batch)
+  windowed_counts_append — tumbling event-time window + watermark in
+                           append mode (the complete-mode windowed_counts
+                           lives in __spark_entry__ since r1)
+  dedup_within_watermark — exactly-once event dedup with watermark-bounded
+                           state
+  session_window_agg     — built-in ``F.session_window`` gap-merge
+                           aggregation: Catalyst handles state, merge, and
+                           eviction
+  stateful_sessions      — ``applyInPandasWithState`` custom stateful
+                           operator: per-user sessionization with features
+                           session_window can't emit (max intra-session
+                           gap), state carried across micro-batches
 
-All four run with ``trigger(availableNow=True)`` in-sandbox, which makes
-their semantics batch-equivalent and therefore oracle-checkable; on a
-live stream the same code runs unbounded (stateful_sessions keeps the open
+Resumable writers, over parquet files landing in a directory
+(``_file_stream``):
+
+  stream_extract    — documents_raw through the batch extract_documents
+                      plan (extract_spans picks the blob join and OCR
+                      width per batch)
+  stream_curate     — quality filter + exact dedup against the persisted
+                      fingerprint index of earlier batches
+  stream_discovery  — feed links anti-joined against the persisted frontier
+  stream_profile    — per-batch sketch deltas, merged by profile_from_state
+  stream_index      — per-batch postings segments, resolved by
+                      index_from_segments
+  stream_interleave — a stateless projection on Spark's own file sink
+
+All but stream_interleave share one drain and one sink: ``_drain`` runs
+a per-batch function under a checkpoint and returns the batch count, and
+``_write_batch`` lands each batch as its own ``batch_id`` partition through
+``warehouse.overwrite_partitions``, so a replayed batch overwrites itself
+and never appends a duplicate.
+
+Everything runs with ``trigger(availableNow=True)`` here, which makes
+the semantics batch-equivalent and therefore oracle-checkable; on a live
+stream the same code runs unbounded (stateful_sessions keeps the open
 session in state between micro-batches when ``flush_open=False``).
 
 Timestamps cross the Arrow boundary as epoch *microsecond* longs — exact in
@@ -28,12 +50,16 @@ int64, no float rounding in the correctness hash.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
+
+from . import warehouse
+from .storage import persisted
 
 SESSION_GAP = "4 hours"
 SESSION_GAP_US = 4 * 3600 * 1_000_000
@@ -229,6 +255,62 @@ def _stateful_fn(flush_open: bool):
     return fn
 
 
+def _file_stream(spark: SparkSession, path: str, schema: str | None = None,
+                 max_files_per_trigger: int | None = None) -> DataFrame:
+    """Parquet files landing anywhere under ``path`` as a stream. The
+    ``schema`` DDL defaults to the files' own; ``max_files_per_trigger``
+    caps the files per micro-batch (``None``: no cap)."""
+    if schema is None:
+        schema = (spark.read.option("recursiveFileLookup", "true")
+                  .parquet(path).schema)
+    reader = (spark.readStream.schema(schema)
+              .option("recursiveFileLookup", "true"))
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(path)
+
+
+def _drain(stream: DataFrame, checkpoint_dir: str,
+           process: Callable[[DataFrame, int], None]) -> int:
+    """Run ``process(batch_df, batch_id)`` on every micro-batch the stream
+    holds now (one ``availableNow`` trigger, progress committed to
+    ``checkpoint_dir``) and return how many batches ran. foreachBatch is
+    at-least-once — a batch whose checkpoint commit was lost replays — so
+    ``process`` writes through :func:`_write_batch`, never by appending."""
+    n_batches = 0
+
+    def each(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal n_batches
+        process(batch_df, int(batch_id))
+        n_batches += 1
+
+    (stream.writeStream.foreachBatch(each)
+     .option("checkpointLocation", checkpoint_dir)
+     .trigger(availableNow=True)
+     .start()
+     .awaitTermination())
+    return n_batches
+
+
+def _write_batch(df: DataFrame, path: str, batch_id: int, *more: str) -> None:
+    """Land ``df`` as micro-batch ``batch_id``'s partition of ``path`` (then
+    by the ``more`` columns), replacing whatever an earlier attempt of the
+    same batch left there."""
+    warehouse.overwrite_partitions(
+        df.withColumn("batch_id", F.lit(batch_id)), path, "batch_id", *more)
+
+
+def _earlier_batches(spark: SparkSession, path: str, batch_id: int,
+                     col: str, ddl: str) -> DataFrame:
+    """Column ``col`` of every batch landed at ``path`` except ``batch_id``
+    itself, or an empty ``ddl`` frame before the first batch lands."""
+    try:
+        landed = spark.read.parquet(path)
+    except AnalysisException:  # no batch has landed yet
+        return spark.createDataFrame([], ddl)
+    return landed.filter(F.col("batch_id") != batch_id).select(col)
+
+
 def stream_extract(
     spark: SparkSession,
     wh_root: str,
@@ -237,7 +319,7 @@ def stream_extract(
 ) -> int:
     """Streaming ingestion of documents_raw: parquet files landing in the
     table's data dir become micro-batches; each batch runs the SAME
-    extract_documents plan via ``foreachBatch`` and appends to the
+    extract_documents plan via :func:`_drain` and appends to the
     extracted table. The file-source + checkpoint pair gives exactly-once
     file processing — a killed stream resumes from the last committed
     batch, and already-processed files are never re-extracted (the
@@ -246,7 +328,7 @@ def stream_extract(
     ``batch_id`` and each batch dynamically overwrites exactly its own
     partition, so a crash between the write and the checkpoint commit
     replays the batch over itself instead of appending duplicates
-    (foreachBatch is at-least-once; idempotence must live in the sink).
+    (the drain is at-least-once; idempotence must live in the sink).
     Each batch's blob join and OCR width are extract_spans's choice, the
     same as for a batch run over the same warehouse.
 
@@ -254,42 +336,18 @@ def stream_extract(
     processed; call again after new files land to process only the delta.
     On a live cluster, drop the trigger for continuous ingestion.
     """
-    import os as _os
-
     from .operators import extract as _extract
 
-    data_dir = _os.path.join(wh_root, "documents_raw", "data")
-    schema = spark.read.parquet(data_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(data_dir)
-    )
-    blobs_df = spark.read.parquet(_os.path.join(wh_root, "media_blobs", "data"))
-    out_path = _os.path.join(out_root, "documents_extracted_stream", "data")
-    n_batches = 0
+    stream = _file_stream(spark, os.path.join(wh_root, "documents_raw", "data"),
+                          warehouse.SPANS_SCHEMA)
+    blobs_df = warehouse.read_table(spark, wh_root, "media_blobs")
+    out_path = os.path.join(out_root, "documents_extracted_stream", "data")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        out = _extract.extract_documents(
-            batch_df.select("doc_id", "spans"), blobs_df)
-        (
-            out.withColumn("batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_path)
-        )
-        n_batches += 1
+        _write_batch(_extract.extract_documents(batch_df, blobs_df),
+                     out_path, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches
+    return _drain(stream, checkpoint_dir, process)
 
 
 def stateful_sessions(stream: DataFrame, flush_open: bool = True) -> DataFrame:
@@ -341,65 +399,26 @@ def stream_curate(
     Returns the number of micro-batches processed in this availableNow
     drain; call again after new files land to curate only the delta.
     """
-    import os as _os
-
-    from pyspark.errors import AnalysisException
-
     from .operators import dedup as _dedup
     from .operators.textstats import with_quality_filter
 
-    schema = spark.read.parquet(docs_dir).schema
-    reader = (spark.readStream.schema(schema)
-              .option("recursiveFileLookup", "true"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir)
-
-    kept_path = _os.path.join(out_root, "curated_docs", "data")
-    index_path = _os.path.join(out_root, "curated_index", "data")
-    n_batches = 0
+    stream = _file_stream(spark, docs_dir,
+                          max_files_per_trigger=max_files_per_trigger)
+    kept_path = os.path.join(out_root, "curated_docs", "data")
+    index_path = os.path.join(out_root, "curated_index", "data")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        try:
-            seen = (spark.read.parquet(index_path)
-                    .filter(F.col("batch_id") != int(batch_id))
-                    .select("fingerprint"))
-        except AnalysisException:  # first batch: no index yet
-            seen = spark.createDataFrame([], "fingerprint string")
+        seen = _earlier_batches(spark, index_path, batch_id, "fingerprint",
+                                "fingerprint string")
         survivors = with_quality_filter(batch_df).filter(F.col("keep")).drop(
             "keep", "reasons")
-        fresh = _dedup.incremental_exact(survivors, seen).withColumn(
-            "batch_id", F.lit(int(batch_id)))
         # persist: the quality→dedup→anti-join plan feeds TWO sinks; without
         # it the second write recomputes everything including the index scan
-        fresh.persist()
-        try:
-            (
-                fresh.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(kept_path)
-            )
-            (
-                fresh.select("fingerprint", "batch_id")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(index_path)
-            )
-        finally:
-            fresh.unpersist()
-        n_batches += 1
+        with persisted(_dedup.incremental_exact(survivors, seen)) as fresh:
+            _write_batch(fresh, kept_path, batch_id)
+            _write_batch(fresh.select("fingerprint"), index_path, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches
+    return _drain(stream, checkpoint_dir, process)
 
 
 def stream_discovery(
@@ -422,48 +441,24 @@ def stream_discovery(
 
     Returns the number of micro-batches drained (availableNow); call
     again after new feed files land to discover only the delta."""
-    import os as _os
+    from .operators import urltools
 
-    from pyspark.sql.utils import AnalysisException
-
-    from resume_ocr_spark.operators import urltools
-
-    schema = "feed_url string, feed_xml string"
-    stream = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        stream = stream.option("maxFilesPerTrigger",
-                               int(max_files_per_trigger))
-    stream = stream.parquet(feeds_dir)
-    frontier_path = _os.path.join(out_root, "frontier_stream", "data")
-    n_batches = 0
+    stream = _file_stream(spark, feeds_dir, "feed_url string, feed_xml string",
+                          max_files_per_trigger)
+    frontier_path = os.path.join(out_root, "frontier_stream", "data")
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        try:
-            seen = (spark.read.parquet(frontier_path)
-                    .filter(F.col("batch_id") != int(batch_id))
-                    .select("canonical_url"))
-        except AnalysisException:  # first batch: no frontier yet
-            seen = spark.createDataFrame([], "canonical_url string")
+        seen = _earlier_batches(spark, frontier_path, batch_id,
+                                "canonical_url", "canonical_url string")
         links = (urltools.feed_entries(batch_df, xml_col="feed_xml")
                  .filter(F.col("link") != "")
                  .select(urltools.canonical_url_expr(F.col("link"))
                          .alias("canonical_url"))
                  .distinct())
-        fresh = links.join(seen, "canonical_url", "left_anti").withColumn(
-            "batch_id", F.lit(int(batch_id)))
-        (fresh.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id")
-         .parquet(frontier_path))
-        n_batches += 1
+        _write_batch(links.join(seen, "canonical_url", "left_anti"),
+                     frontier_path, batch_id)
 
-    q = (stream.writeStream.foreachBatch(process)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return n_batches
+    return _drain(stream, checkpoint_dir, process)
 
 
 def stream_interleave(
@@ -471,14 +466,13 @@ def stream_interleave(
     pages_dir: str,
     out_root: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
 ) -> str:
     """Streaming twin of the interleave ingest front door: crawl pages
     ``(doc_id, html)`` landing as parquet files in ``pages_dir`` become
     micro-batches, and each batch appends its interleaved span rows to
     the output table. ``interleave.html_to_spans`` is a STATELESS
     Column projection, so the exact batch expression tree runs
-    unchanged under Structured Streaming — no foreachBatch, no state
+    unchanged under Structured Streaming — no per-batch drain, no state
     store, no watermark; exactly-once lands on the file sink's commit
     log (a replayed batch overwrites its own files, never duplicates).
 
@@ -489,14 +483,10 @@ def stream_interleave(
 
     Returns the output path; drain again after new page files land to
     ingest only the delta (availableNow trigger)."""
-    from resume_ocr_spark.operators import interleave
+    from .operators import interleave
 
-    schema = "doc_id string, html string"
-    stream = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        stream = stream.option("maxFilesPerTrigger",
-                               int(max_files_per_trigger))
-    spans = interleave.html_to_spans(stream.parquet(pages_dir))
+    spans = interleave.html_to_spans(
+        _file_stream(spark, pages_dir, "doc_id string, html string"))
     out_path = os.path.join(out_root, "spans_stream")
     q = (spans.writeStream.format("parquet")
          .option("path", out_path)
@@ -532,25 +522,17 @@ def stream_profile(
     from .operators import sketches as _sk
     from .operators.dedup import _tokens
 
-    schema = (spark.read.option("recursiveFileLookup", "true")
-              .parquet(docs_dir).schema)
-    reader = (spark.readStream.schema(schema)
-              .option("recursiveFileLookup", "true"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir)
-
+    stream = _file_stream(spark, docs_dir,
+                          max_files_per_trigger=max_files_per_trigger)
     regs_path = os.path.join(out_root, "hll_regs", "data")
     totals_path = os.path.join(out_root, "totals", "data")
-    n_batches = 0
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
         words = (batch_df
                  .select(group_col, F.explode(_tokens("text")).alias("word"))
                  .filter(F.col("word") != ""))
-        regs = (_sk.hll_registers(words, "word", [group_col])
-                .withColumn("batch_id", F.lit(int(batch_id))))
+        _write_batch(_sk.hll_registers(words, "word", [group_col]),
+                     regs_path, batch_id)
         totals = (
             words.groupBy(group_col)
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_words"))
@@ -560,21 +542,10 @@ def stream_profile(
             .select(group_col,
                     F.coalesce("n_words", F.lit(0).cast("bigint"))
                      .alias("n_words"),
-                    "n_docs")
-            .withColumn("batch_id", F.lit(int(batch_id))))
-        for frame, path in ((regs, regs_path), (totals, totals_path)):
-            (frame.write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("batch_id")
-             .parquet(path))
-        n_batches += 1
+                    "n_docs"))
+        _write_batch(totals, totals_path, batch_id)
 
-    q = (stream.writeStream.foreachBatch(process)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return n_batches
+    return _drain(stream, checkpoint_dir, process)
 
 
 def profile_from_state(
@@ -605,7 +576,6 @@ def stream_index(
     docs_dir: str,
     out_root: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
 ) -> int:
     """Streaming incremental index maintenance: parquet files landing in
     ``docs_dir`` become micro-batches; each batch's positional postings
@@ -625,43 +595,17 @@ def stream_index(
     drain; call again after new files land to index only the delta."""
     from .operators import postings as _post
 
-    schema = spark.read.option("recursiveFileLookup", "true") \
-        .parquet(docs_dir).schema
-    reader = (spark.readStream.schema(schema)
-              .option("recursiveFileLookup", "true"))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(docs_dir)
-
+    stream = _file_stream(spark, docs_dir)
     post_path = os.path.join(out_root, "postings", "data")
     dl_path = os.path.join(out_root, "doclens", "data")
-    n_batches = 0
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        seg = (_post.build_postings(batch_df)
-               .withColumn("tbucket",
-                           _post._bucket_col(F.col("term"),
-                                             _post.N_BUCKETS))
-               .withColumn("batch_id", F.lit(int(batch_id))))
-        (seg.write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id", "tbucket")
-         .parquet(post_path))
-        (_post.doc_lengths(batch_df)
-         .withColumn("batch_id", F.lit(int(batch_id)))
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id")
-         .parquet(dl_path))
-        n_batches += 1
+        seg = _post.build_postings(batch_df).withColumn(
+            "tbucket", _post._bucket_col(F.col("term"), _post.N_BUCKETS))
+        _write_batch(seg, post_path, batch_id, "tbucket")
+        _write_batch(_post.doc_lengths(batch_df), dl_path, batch_id)
 
-    q = (stream.writeStream.foreachBatch(process)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
-    return n_batches
+    return _drain(stream, checkpoint_dir, process)
 
 
 def index_from_segments(

@@ -70,6 +70,18 @@ def write_table(
     return path
 
 
+def overwrite_partitions(df: DataFrame, path: str, *cols: str) -> None:
+    """Write ``df`` to ``path`` partitioned by ``cols``, replacing exactly
+    the partitions ``df`` has rows for (dynamic partition overwrite) and
+    keeping every other one. This is the resume rule: a rerun of the same
+    write (a bucket chunk after a kill, a replayed micro-batch) rewrites
+    itself instead of appending duplicates."""
+    (df.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy(*cols)
+     .parquet(path))
+
+
 def read_table(
     spark: SparkSession, root: str, table: str, buckets: list[int] | None = None
 ) -> DataFrame:

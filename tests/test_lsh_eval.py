@@ -35,8 +35,7 @@ class TestLshRecallEval:
         row = dedup.lsh_recall_eval(df, threshold=0.3).collect()[0]
 
         n_true = dedup.jaccard_pairs(df, threshold=0.3).count()
-        n_retrieved = dedup.jaccard_pairs_lsh(
-            df, threshold=0.3, persist_words=False).count()
+        n_retrieved = dedup.jaccard_pairs_lsh(df, threshold=0.3).count()
         sigs = dedup.minhash_signatures(df)
         n_cand = dedup.minhash_lsh_candidates(sigs, "doc_id").count()
 

@@ -156,6 +156,29 @@ class TestStreamingSessions:
         assert ids == {d["doc_id"] for d in docs}
         assert got.count() == len(docs)        # no duplicates either
 
+    def test_stream_extract_empty_media_blobs(self, spark, tmp_path):
+        """A text-only warehouse has an empty media_blobs table: its files
+        carry no rows to infer a schema from, so the blobs must be read
+        through the table's manifest like every batch reader does."""
+        from resume_ocr_spark import oracle, warehouse
+
+        docs = [{"doc_id": f"txt-{i}",
+                 "spans": [{"kind": "text", "text": f"plain resume {i}",
+                            "media_ref": None, "offset": 0},
+                           {"kind": "text", "text": "" if i % 2 else "more",
+                            "media_ref": None, "offset": 1}]}
+                for i in range(5)]
+        root, out, cp = (str(tmp_path / p) for p in ("wh", "out", "cp"))
+        warehouse.build_warehouse(spark, root, docs, blobs=[])
+
+        assert streamops.stream_extract(spark, root, out, cp) >= 1
+        got = {r["doc_id"]: [s.asDict() for s in r["spans"]]
+               for r in spark.read.parquet(
+                   f"{out}/documents_extracted_stream/data").collect()}
+        assert set(got) == {d["doc_id"] for d in docs}
+        for d in docs:
+            assert got[d["doc_id"]] == oracle.extract_doc(d, {}), d["doc_id"]
+
     def test_state_carried_across_microbatches(self, spark, events_pdf,
                                                tmp_path):
         # three time-contiguous files + maxFilesPerTrigger=1 → three

@@ -81,13 +81,6 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
         "  → one diagnostics row) — constant-size build sides, pinned by",
         "  tests/test_plans.py::test_lsh_recall_eval_no_cartesian; the",
         "  data-sized joins in the same plan are equi-joins.",
-        "- extract_pipeline's RUNTIME plan (AQE-final section below) keeps",
-        "  exactly two SortMergeJoins: analyze's LeftOuter self-joins on",
-        "  doc_id with BOTH sides corpus-sized and co-partitioned — the",
-        "  correct 100 TB strategy (broadcast would scale with the corpus).",
-        "  The round-3 note claiming AQE converts them was measured on a",
-        "  count()-pruned twin plan; tests/test_executed_plan.py now pins",
-        "  the real one.",
         "",
         "| query | joins | exchanges | bcast | reused | codegen | pushdown | NL/cartesian |",
         "|---|---|---|---|---|---|---|---|",
@@ -124,9 +117,8 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> None:
         lines += [
             f"- finalized: {'isFinalPlan=true' in final}",
             f"- BroadcastHashJoin: {final.count('BroadcastHashJoin')}",
-            f"- SortMergeJoin: {len(smj)} "
-            + (f"({'; '.join(f'{a}⋈{b} {t}' for a, b, t in smj)}) — the"
-               " co-partitioned corpus-sized self-joins, correct at scale"
+            f"- SortMergeJoin: {len(smj)}"
+            + (f" ({'; '.join(f'{a}⋈{b} {t}' for a, b, t in smj)})"
                if smj else ""),
             f"- cartesian/nested-loop: "
             f"{'YES' if 'CartesianProduct' in final else 'none'}",

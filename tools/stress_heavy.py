@@ -105,7 +105,7 @@ def run_family(spark, docs_path: str, results: dict) -> None:
     def jaccard_lsh():
         return force(dedup.jaccard_pairs_lsh(
             docs, "doc_id", "text", threshold=0.3,
-            max_bucket_size=MAX_BUCKET, persist_words=False))
+            max_bucket_size=MAX_BUCKET))
 
     def cluster_star():
         sigs = dedup.minhash_signatures(docs, "doc_id", "text")
