@@ -10,6 +10,10 @@ Distributed re-expression of the reference's LLM analysis + assembly
     (extract.map_rows); no self-join, no second regex dialect
   - ranking: ``orderBy().limit(K)`` → TakeOrderedAndProject (no global
     window; scale-safe top-k), rank broadcast-joined back onto the table
+
+The two steps are separate functions (``score_documents``,
+``rank_documents``) so ``pipeline.run_extraction`` can score each chunk
+before its write and rank the written table afterwards.
 """
 
 from __future__ import annotations
@@ -53,25 +57,36 @@ def extract_fields(df: DataFrame, col: str = "full_text") -> DataFrame:
 
 def analyze_documents(extracted: DataFrame,
                       query: str | None = None) -> DataFrame:
-    """documents_extracted → resumes_analyzed.
+    """documents_extracted → resumes_analyzed: :func:`score_documents`,
+    then :func:`rank_documents`.
 
     Output: the ``extracted`` columns (doc_id, spans, full_text, doc_error,
     …), then rejected, emails, phones, dates, score_num, score_label,
     summary, n_sections, rank (query mode; null otherwise).
 
-    In query mode ``extracted`` feeds two branches (the analysis UDF and
-    the top-k probe, which re-runs it). A caller passing a live extraction
-    lineage rather than a parquet scan persists it first (``.persist()``,
-    or ``storage.persisted(...)`` to release it afterwards), so the
-    extraction runs once."""
-    out = map_rows(extracted, extracted.columns, ["full_text", "doc_error"],
-                   functools.partial(oracle.analyze_text, query=query),
-                   _ANALYSIS_DDL)
+    In query mode the scored frame feeds two branches (the table and the
+    top-k probe, which re-runs the scoring). A caller passing a live
+    extraction lineage rather than a parquet scan persists it first
+    (``.persist()``, or ``storage.persisted(...)`` to release it
+    afterwards), so the extraction runs once."""
+    return rank_documents(score_documents(extracted, query), query)
+
+
+def score_documents(extracted: DataFrame,
+                    query: str | None = None) -> DataFrame:
+    """Adds the ``oracle.ANALYSIS_FIELDS`` columns: one
+    ``oracle.analyze_text`` call per document, in one Python pass."""
+    return map_rows(extracted, extracted.columns, ["full_text", "doc_error"],
+                    functools.partial(oracle.analyze_text, query=query),
+                    _ANALYSIS_DDL)
+
+
+def rank_documents(scored: DataFrame, query: str | None = None) -> DataFrame:
+    """Adds ``rank``: :func:`rank_top_k` in query mode, null otherwise. No
+    Python: over a scored table this is a scan and one broadcast join."""
     if query:
-        out = rank_top_k(out)
-    else:
-        out = out.withColumn("rank", F.lit(None).cast("int"))
-    return out
+        return rank_top_k(scored)
+    return scored.withColumn("rank", F.lit(None).cast("int"))
 
 
 def rank_top_k(analyzed: DataFrame, k: int = TOP_K) -> DataFrame:

@@ -123,11 +123,14 @@ def map_rows(df: DataFrame, keep: list[str], args: list[str],
     """The one Python row UDF runner for the whole package: ``fn(*args)``
     runs once per row and its tuple fills the ``out_ddl`` columns; the
     ``keep`` columns pass through as Arrow arrays, untouched and with their
-    ``df`` types. ``fn`` must be total (error-as-data), so no input row can
+    ``df`` types. An ``out_ddl`` column replaces a ``keep`` column of the
+    same name, so re-running an operator over its own output recomputes
+    its columns. ``fn`` must be total (error-as-data), so no input row can
     fail the task. A row that fans out to several output rows returns one
     ``array<struct<…>>`` column, which the caller explodes with
     ``.select(*keep, F.inline(col))``."""
     out = StructType.fromDDL(out_ddl)
+    keep = [c for c in keep if c not in out.fieldNames()]
     schema = StructType([df.schema[c] for c in keep] + out.fields)
     types = [to_arrow_type(f.dataType) for f in out.fields]
 

@@ -3,37 +3,63 @@
 north_rule requirements implemented here:
   - per-partition lineage/metrics: one ``run_metrics`` row per input bucket
     (run_id, bucket, docs_processed, ocr_pages, parse_failures, wall_ms,
-    status, ts) — the Iceberg-shim analog of the reference's Mongo audit doc
-    (reference: app/routers/analysis.py:558-567, database_service.py:60-69)
+    status, ts, query) — the Iceberg-shim analog of the reference's Mongo
+    audit doc (reference: app/routers/analysis.py:558-567,
+    database_service.py:60-69)
   - checkpoint/resume: buckets are processed in chunks; each chunk's output
     overwrites exactly its bucket partitions
     (``warehouse.overwrite_partitions``, idempotent), then marker rows are
-    appended.  A killed run restarts by anti-joining completed buckets —
-    only unfinished buckets are re-read (partition pruning makes the skip
+    appended.  A killed run restarts by skipping completed buckets — only
+    unfinished buckets are re-read (partition pruning makes the skip
     free).
 
+Each chunk extracts and analyses in one written pass: ``documents_extracted``
+carries the ``oracle.ANALYSIS_FIELDS`` columns, scored under the run's
+query, so the final ranking is a separate cheap reduce over the written
+table (no Python, and top-k never needs the blobs again). The query is
+bound to the run: it is recorded in the markers, and a resume under a
+different query is refused, since it would mix two scorings in one table.
+
+The markers are a few rows per chunk, so the driver writes and reads them
+itself with pyarrow rather than through a Spark job: one parquet file per
+chunk, staged under a dot name (which Spark and pyarrow both skip) and
+moved into place with ``os.replace``. Like the ``os.path`` checks on the
+output root, this assumes a filesystem the driver can reach.
+
 At cluster scale each "chunk" is a job over a bucket range, the same way a
-backfill walks date partitions; the final ranking is a separate cheap reduce
-over the extracted table (top-k never needs the blobs again). The plan
-inside each chunk (blob join strategy, OCR stage width) is
-``extract.extract_spans``'s to choose; this module only walks buckets.
+backfill walks date partitions. The plan inside each chunk (blob join
+strategy, OCR stage width) is ``extract.extract_spans``'s to choose; this
+module only walks buckets.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from . import warehouse
 from .operators import analyze, extract
 
 METRICS_SCHEMA = (
     "run_id string, bucket int, docs_processed long, ocr_pages long, "
-    "parse_failures long, wall_ms long, status string, ts double"
+    "parse_failures long, wall_ms long, status string, ts double, "
+    "query string"
 )
+
+
+@functools.cache
+def _metrics_arrow_schema() -> pa.Schema:
+    # needs a live session to parse the DDL, so built on first use
+    return to_arrow_schema(StructType.fromDDL(METRICS_SCHEMA))
 
 
 def _metrics_path(out_root: str) -> str:
@@ -44,21 +70,31 @@ def extracted_path(out_root: str) -> str:
     return os.path.join(out_root, "documents_extracted", "data")
 
 
-def completed_buckets(spark: SparkSession, out_root: str, run_id: str) -> set[int]:
+def _complete_markers(out_root: str, run_id: str) -> list[dict]:
+    """(bucket, query) of every ``complete`` marker row of ``run_id``."""
     path = _metrics_path(out_root)
     if not os.path.isdir(path):
-        return set()
-    df = spark.read.schema(METRICS_SCHEMA).parquet(path)
-    rows = (
-        df.filter((F.col("run_id") == run_id) & (F.col("status") == "complete"))
-        .select("bucket").distinct().collect()
-    )
-    return {r["bucket"] for r in rows}
+        return []
+    return pq.read_table(
+        path, schema=_metrics_arrow_schema(), columns=["bucket", "query"],
+        filters=[("run_id", "==", run_id), ("status", "==", "complete")],
+    ).to_pylist()
+
+
+def completed_buckets(spark: SparkSession, out_root: str, run_id: str) -> set[int]:
+    return {m["bucket"] for m in _complete_markers(out_root, run_id)}
 
 
 def _append_metrics(spark: SparkSession, out_root: str, rows: list[tuple]) -> None:
-    df = spark.createDataFrame(rows, schema=METRICS_SCHEMA)
-    df.coalesce(1).write.mode("append").parquet(_metrics_path(out_root))
+    path = _metrics_path(out_root)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    staged = os.path.join(path, "." + name)
+    schema = _metrics_arrow_schema()
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=schema)
+    pq.write_table(table, staged)
+    os.replace(staged, os.path.join(path, name))
 
 
 def run_extraction(
@@ -69,13 +105,19 @@ def run_extraction(
     query: str | None = None,
     chunk_size: int | None = None,
 ) -> DataFrame:
-    """Run (or resume) extraction run ``run_id``; returns the final analyzed
-    DataFrame (reading the materialized output). ``chunk_size`` buckets
-    run per job (default: all pending buckets in one job); below 1 it is
-    refused with ``ValueError``. ``extract.extract_spans`` chooses the blob
-    join and the OCR width."""
+    """Run (or resume) extraction run ``run_id``; returns the ranked
+    analysis (``analyze.rank_documents``) over the written table.
+    ``chunk_size`` buckets run per job (default: all pending buckets in one
+    job). ``ValueError`` refuses the arguments: a ``chunk_size`` below 1,
+    or a ``query`` other than the one the run's earlier chunks were scored
+    under. ``extract.extract_spans`` chooses the blob join and the OCR
+    width."""
     if chunk_size is not None and chunk_size < 1:
         raise ValueError(f"chunk_size must be at least 1, got {chunk_size}")
+    earlier = {m["query"] for m in _complete_markers(out_root, run_id)}
+    if earlier - {query}:
+        raise ValueError(f"run {run_id} was scored under query "
+                         f"{earlier.pop()!r}, not {query!r}")
     man = warehouse.manifest(wh_root, "documents_raw")
     all_buckets = list(range(man["buckets"]))
     done = completed_buckets(spark, out_root, run_id)
@@ -91,6 +133,8 @@ def run_extraction(
         extracted = extract.extract_documents(
             docs_df.select("doc_id", "spans"), blobs_df,
         ).withColumn("bucket", warehouse.bucket_col("doc_id", man["buckets"]))
+        # the analysis rides the chunk's write: one Python pass per document
+        extracted = analyze.score_documents(extracted, query)
         # per-bucket counters ride the write itself via observe()
         # accumulators — one scan per chunk, no post-write re-read
         # (conditional sums, one triple per bucket in the chunk)
@@ -118,12 +162,12 @@ def run_extraction(
              int(m.get(f"docs_{b}") or 0),
              int(m.get(f"pages_{b}") or 0),
              int(m.get(f"fails_{b}") or 0),
-             wall_ms, "complete", now)
+             wall_ms, "complete", now, query)
             for b in chunk
         ])
 
-    extracted_all = spark.read.option("basePath", out_path).parquet(out_path)
-    return analyze.analyze_documents(extracted_all, query=query)
+    scored = spark.read.option("basePath", out_path).parquet(out_path)
+    return analyze.rank_documents(scored, query)
 
 
 def run_summary(spark: SparkSession, out_root: str, run_id: str) -> DataFrame:

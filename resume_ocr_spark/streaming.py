@@ -304,11 +304,16 @@ def _earlier_batches(spark: SparkSession, path: str, batch_id: int,
                      col: str, ddl: str) -> DataFrame:
     """Column ``col`` of every batch landed at ``path`` except ``batch_id``
     itself, or an empty ``ddl`` frame before the first batch lands."""
-    try:
-        landed = spark.read.parquet(path)
-    except AnalysisException:  # no batch has landed yet
-        return spark.createDataFrame([], ddl)
-    return landed.filter(F.col("batch_id") != batch_id).select(col)
+    # a missing path is the common "no batch yet" case: checked first, so
+    # Spark does not log a failed read; a path holding only a killed first
+    # batch's temporary files still fails the read
+    if os.path.isdir(path):
+        try:
+            landed = spark.read.parquet(path)
+            return landed.filter(F.col("batch_id") != batch_id).select(col)
+        except AnalysisException:
+            pass
+    return spark.createDataFrame([], ddl)
 
 
 def stream_extract(

@@ -110,6 +110,25 @@ def test_analyze_documents_final_plan_one_python_pass(spark, tmp_path):
         assert "SortMergeJoin" not in final, (query, final)
 
 
+def test_run_extraction_result_runs_no_python(spark, small_corpus, tmp_path):
+    """Each chunk writes its analysis columns, so the frame run_extraction
+    returns is a reduce over the written table: a scan and the broadcast
+    rank join, with no MapInArrow."""
+    from resume_ocr_spark import pipeline, warehouse
+
+    wh = str(tmp_path / "wh")
+    docs, blobs = small_corpus
+    warehouse.build_warehouse(spark, wh, docs[:8], blobs, buckets=2)
+    df = pipeline.run_extraction(spark, wh, str(tmp_path / "out"), "r1",
+                                 query="python engineer")
+    df.collect()
+    s = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in s
+    final = s.split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow") == 0, final
+    assert final.count("BroadcastHashJoin") == 1, final
+
+
 @pytest.mark.usefixtures("spark")
 def test_curation_pipeline_final_plan_broadcast_and_bounded_exchanges(spark):
     import __spark_entry__ as entrymod

@@ -89,3 +89,17 @@ def test_all_documents_failed(spark, tmp_path, run_job):
     assert rc == 1, out.err
     assert out.out.strip().endswith("ok_docs=0")
     assert "all documents failed" in out.err
+
+
+def test_resume_under_another_query_is_refused(spark, tmp_path, run_job):
+    """A run is scored under one query: resuming it under another exits 2
+    and leaves the run as it was."""
+    docs, blobs = corpus.gen_corpus(4, seed=5151, with_edge_cases=False)
+    wh = str(tmp_path / "wh")
+    warehouse.build_warehouse(spark, wh, docs, blobs)
+    rc, out = run_job(wh, "--query", "senior python engineer")
+    assert rc == 0, out.err
+    rc, out = run_job(wh, "--query", "junior chef")
+    assert rc == 2 and "senior python engineer" in out.err, out.err
+    rc, out = run_job(wh, "--query", "senior python engineer")
+    assert rc == 0, out.err

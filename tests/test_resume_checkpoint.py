@@ -3,7 +3,7 @@ produces output identical to an uninterrupted run (north_rule)."""
 
 import pytest
 
-from resume_ocr_spark import pipeline, warehouse
+from resume_ocr_spark import oracle, pipeline, warehouse
 from pyspark.sql import functions as F
 
 
@@ -85,3 +85,65 @@ def test_rerun_of_complete_run_is_noop(spark, wh, tmp_path_factory):
     m2 = spark.read.schema(pipeline.METRICS_SCHEMA).parquet(
         pipeline._metrics_path(out)).count()
     assert m1 == m2, "no new marker rows on a no-op resume"
+
+
+QUERY = "senior python data engineer"
+
+
+def _killed_run(spark, wh, out, run_id, query, after):
+    """Run chunk by chunk (one bucket each) and kill the run once ``after``
+    chunks have written their markers."""
+    calls = {"n": 0}
+    orig = pipeline._append_metrics
+
+    def boom(spark_, out_root_, rows_):
+        orig(spark_, out_root_, rows_)
+        calls["n"] += 1
+        if calls["n"] == after:
+            raise RuntimeError(f"simulated kill after chunk {after}")
+
+    pipeline._append_metrics = boom
+    try:
+        with pytest.raises(RuntimeError):
+            pipeline.run_extraction(spark, wh, out, run_id=run_id,
+                                    query=query, chunk_size=1)
+    finally:
+        pipeline._append_metrics = orig
+
+
+def _analysis(df):
+    return sorted(tuple(r) for r in df.select(
+        "doc_id", *oracle.ANALYSIS_FIELDS, "rank").collect())
+
+
+def test_query_mode_kill_and_resume_identical(spark, wh, tmp_path_factory):
+    """The analysis columns are written per chunk under the run's query: a
+    killed-and-resumed ranked run has the same analysis and ranks as an
+    uninterrupted one."""
+    out_a = str(tmp_path_factory.mktemp("out_qa"))
+    out_b = str(tmp_path_factory.mktemp("out_qb"))
+    full = pipeline.run_extraction(spark, wh, out_a, run_id="q1", query=QUERY)
+    _killed_run(spark, wh, out_b, "q2", QUERY, after=2)
+    assert len(pipeline.completed_buckets(spark, out_b, "q2")) == 2
+    resumed = pipeline.run_extraction(spark, wh, out_b, run_id="q2",
+                                      query=QUERY, chunk_size=1)
+    want = _analysis(full)
+    assert sum(r[-1] is not None for r in want) > 0, "no document ranked"
+    assert _analysis(resumed) == want
+
+
+def test_resume_under_another_query_is_refused(spark, wh, tmp_path_factory):
+    """The query is bound to the run: its markers record it, and a resume
+    under another query (or none) is refused before any chunk runs."""
+    out = str(tmp_path_factory.mktemp("out_qr"))
+    _killed_run(spark, wh, out, "q3", QUERY, after=1)
+
+    def queries():
+        return [r["query"] for r in spark.read.schema(pipeline.METRICS_SCHEMA)
+                .parquet(pipeline._metrics_path(out)).collect()]
+
+    assert queries() == [QUERY]
+    for other in ("junior chef", None):
+        with pytest.raises(ValueError, match="query"):
+            pipeline.run_extraction(spark, wh, out, run_id="q3", query=other)
+    assert queries() == [QUERY]

@@ -175,3 +175,20 @@ def test_analysis_columns_are_analyze_text(spark):
                analyze.analyze_documents(df, query=query).collect()}
         assert got == {d: oracle.analyze_text(t, e, query)
                        for d, t, e in rows}, query
+
+
+def test_rerun_operator_replaces_its_own_columns(spark):
+    """map_rows: an output column replaces a kept column of the same name,
+    so classify_resumes over a frame that already has ``rejected`` (as
+    documents_extracted now does) yields one, recomputed ``rejected``."""
+    rows = [("cv", "RESUMO\nEngenheira de dados python\nEXPERIÊNCIA\n"
+                   "Dev (Mar 2021 - Presente)", None),
+            ("recipe", "Bolo de cenoura\n2 xícaras de farinha", None),
+            ("err", "", "empty document")]
+    df = spark.createDataFrame(
+        [(d, t, e, None) for d, t, e in rows],
+        "doc_id string, full_text string, doc_error string, rejected boolean")
+    out = analyze.classify_resumes(df)
+    assert out.columns == ["doc_id", "full_text", "doc_error", "rejected"]
+    got = {r["doc_id"]: r["rejected"] for r in out.collect()}
+    assert got == {d: oracle.analyze_text(t, e, None)[0] for d, t, e in rows}

@@ -22,6 +22,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SKIP = {
     "streaming_window_counts", "streaming_sessionize",
     "streaming_stateful_sessions", "streaming_extract_ingest",
+    "streaming_window_counts_append", "streaming_feed_discovery",
+    "streaming_sketch_profile",
 }
 
 

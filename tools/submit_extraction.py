@@ -4,8 +4,9 @@
         --warehouse <path> --output <path> --run-id <id> \
         [--query "..."] [--chunk-size N]
 
-Refuses a bad query, a chunk size below 1 or a missing warehouse; fails
-when every document failed (the reference's all-failed gate,
+Refuses a bad query, a chunk size below 1, a missing warehouse or a
+resume under a query other than the run's own; fails when every document
+failed (the reference's all-failed gate,
 app/routers/analysis.py:518-539).
 """
 
@@ -59,13 +60,16 @@ def main() -> int:
                       f"warehouse unreachable: {manifest} missing")
 
     spark = get_spark(app_name="submit_extraction")
-    pipeline.run_extraction(
-        spark, args.warehouse, args.output, run_id=args.run_id,
-        query=args.query, chunk_size=args.chunk_size,
-    )
+    try:
+        pipeline.run_extraction(
+            spark, args.warehouse, args.output, run_id=args.run_id,
+            query=args.query, chunk_size=args.chunk_size,
+        )
+    except ValueError as exc:  # a resume under another query
+        raise Refused(INVALID, f"invalid resume: {exc}") from exc
     summary = pipeline.run_summary(spark, args.output, args.run_id).collect()[0]
     # the ok-count reads the column the extraction wrote; the returned
-    # analysed frame would re-run the analysis UDF over every document
+    # ranked frame would add a top-k job for nothing
     n_ok = (spark.read.parquet(pipeline.extracted_path(args.output))
             .filter(F.col("doc_error").isNull()).count())
     applog.log_run_event(
