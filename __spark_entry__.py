@@ -365,13 +365,12 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_cluster_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERING: LSH candidate pairs → connected components →
     (doc_id, cluster_id=min id in component), the canonical keep-list step.
-    Spark side is the large-star/small-star formulation (log rounds,
-    diameter-independent — the 100 TB form; the min-label propagation twin
-    `dedup.dedup_clusters` is hash-equal and pytest-pinned); the oracle is
-    a DuckDB recursive CTE computing the same closure."""
+    Spark side is `dedup.dedup_clusters`, the large-star/small-star
+    formulation (log rounds, diameter-independent — the 100 TB form); the
+    oracle is a DuckDB recursive CTE computing the same closure."""
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     sigs = dedup.minhash_signatures(docs, "doc_id", "text")
-    return dedup.dedup_clusters_star(
+    return dedup.dedup_clusters(
         dedup.minhash_lsh_candidates(sigs, "doc_id"))
 
 

@@ -117,85 +117,10 @@ def gen_corpus(
     n_docs: int, seed: int = 42, with_edge_cases: bool = True
 ) -> tuple[list[dict], list[dict]]:
     """Returns (documents, blobs): documents rows {doc_id, spans}, blob rows
-    {media_ref, kind, payload}. Fully deterministic in (n_docs, seed)."""
-    rng = random.Random(seed)
-    docs: list[dict] = []
-    blobs: list[dict] = []
-
-    def add_blob(doc_id: str, idx: int, kind: str, payload: bytes) -> str:
-        ref = f"blob:{doc_id}:{idx}"
-        blobs.append({
-            "media_ref": ref, "kind": kind,
-            "payload": imagecodec.compress_payload(payload),
-        })
-        return ref
-
-    def pdf_payload(rng: random.Random, text: str, scanned: bool) -> bytes:
-        lines = text.split("\n")
-        if rng.random() < 0.10 and len(lines) > 6:  # ~10% multi-page
-            cut = len(lines) // 2
-            pages = ["\n".join(lines[:cut]), "\n".join(lines[cut:])]
-        else:
-            pages = [text]
-        if scanned:
-            imgs = [
-                imagecodec.render_text_image(p, skew=rng.choice(imagecodec.SKEW_CANDIDATES))
-                for p in pages
-            ]
-            return pdfcodec.write_scanned_pdf(imgs)
-        return pdfcodec.write_text_pdf(
-            pages, cid=rng.random() < 0.3, two_column=rng.random() < 0.2
-        )
-
-    for i in range(n_docs):
-        doc_id = f"doc{i:08d}"
-        roll = rng.random()
-        spans: list[dict] = []
-        if roll < 0.40:  # text-only, 1–4 spans
-            text = make_resume_text(rng)
-            parts = _split_n(text, rng.randint(1, 4))
-            for off, part in enumerate(parts):
-                spans.append(_span("text", text=part, offset=off))
-        elif roll < 0.60:  # html
-            spans.append(_span("html", text=wrap_html(make_resume_text(rng))))
-        elif roll < 0.80:  # pdf
-            scanned = rng.random() < 0.4
-            ref = add_blob(doc_id, 0, "pdf",
-                           pdf_payload(rng, make_resume_text(rng), scanned))
-            spans.append(_span("pdf", media_ref=ref))
-        elif roll < 0.90:  # image
-            text = make_resume_text(rng)
-            img = imagecodec.render_text_image(
-                text, skew=rng.choice(imagecodec.SKEW_CANDIDATES))
-            ref = add_blob(doc_id, 0, "image", img)
-            spans.append(_span("image", media_ref=ref))
-        elif roll < 0.95:  # interleaved mixed-kind — order matters
-            text = make_resume_text(rng)
-            parts = _split_n(text, 3)
-            spans.append(_span("text", text=parts[0], offset=0))
-            ref = add_blob(doc_id, 1, "pdf", pdf_payload(rng, parts[1], scanned=False))
-            spans.append(_span("pdf", media_ref=ref, offset=1))
-            img = imagecodec.render_text_image(parts[2])
-            ref2 = add_blob(doc_id, 2, "image", img)
-            spans.append(_span("image", media_ref=ref2, offset=2))
-        elif roll < 0.99 or n_docs < 20:  # negatives
-            neg = rng.choice([RECIPE_TEXT, GENERIC_TEXT])
-            if rng.random() < 0.5:
-                spans.append(_span("text", text=neg))
-            else:
-                ref = add_blob(doc_id, 0, "pdf",
-                               pdf_payload(rng, neg, scanned=rng.random() < 0.5))
-                spans.append(_span("pdf", media_ref=ref))
-        else:  # ~1% skew tail: many media spans on one doc
-            n_media = rng.randint(SKEW_SPAN_THRESHOLD + 18, 4 * SKEW_SPAN_THRESHOLD)
-            for off in range(n_media):
-                img = imagecodec.render_text_image(f"fragmento {off} do dossiê")
-                ref = add_blob(doc_id, off, "image", img)
-                spans.append(_span("image", media_ref=ref, offset=off))
-        for off, s in enumerate(spans):
-            s["offset"] = off
-        docs.append({"doc_id": doc_id, "spans": spans})
-
+    {media_ref, kind, payload}. Fully deterministic in (n_docs, seed): each
+    doc draws from its own seeded rng, so doc ``i`` is the same in every
+    corpus of that seed with more than ``i`` docs."""
+    docs, blobs = _gen_docs_range((seed, 0, n_docs))
     if with_edge_cases:
         docs.extend(_edge_docs(blobs))
     return docs, blobs

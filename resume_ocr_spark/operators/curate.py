@@ -117,7 +117,7 @@ def curate(
         # near-dup input = survivors of quality + exact dedup (recomputed
         # zero-shuffle like the decontam survivor set below): signatures →
         # star-edge buckets → log-round components → keep min id/cluster.
-        # dedup_clusters_star emits only ids that share a bucket, so the
+        # dedup_clusters emits only ids that share a bucket, so the
         # left join leaves singleton docs NULL (= kept).
         fp = with_fingerprint(with_quality_filter(docs, text_col), text_col)
         exact_keeper = F.min(F.when(F.col("keep"), F.col(id_col))).over(
@@ -129,11 +129,11 @@ def curate(
             nd_surv, id_col, text_col, k=minhash_k, shingle=shingle)
         edges = _dedup.minhash_lsh_star_edges(
             sigs, id_col, k=minhash_k, bands=lsh_bands)
-        # dedup_clusters_star's output schema is fixed (doc_id, cluster_id)
+        # dedup_clusters' output schema is fixed (doc_id, cluster_id)
         # regardless of the input id column — rename before filtering so a
         # non-default id_col resolves
         nd_dropped = (
-            _dedup.dedup_clusters_star(edges)
+            _dedup.dedup_clusters(edges)
             .withColumnRenamed("doc_id", id_col)
             .filter(F.col(id_col) != F.col("cluster_id"))
             .select(F.col(id_col), F.lit(True).alias("_neardup"))

@@ -180,10 +180,10 @@ def minhash_lsh_star_edges(
     vertices, so connected components over star edges equal components
     over :func:`minhash_lsh_candidates` pairs (pinned in tests) — while a
     mega-bucket of 10⁵ boilerplate near-dups costs 10⁵ edges, not 5×10⁹.
-    This is the edge set :func:`dedup_clusters` / :func:`dedup_clusters_star`
-    should consume at scale; pairwise candidates remain the right input
-    for pair VERIFICATION (LSH-gated exact Jaccard), where the cap
-    parameter bounds the degenerate buckets instead."""
+    This is the edge set :func:`dedup_clusters` should consume at scale;
+    pairwise candidates remain the right input for pair VERIFICATION
+    (LSH-gated exact Jaccard), where the cap parameter bounds the
+    degenerate buckets instead."""
     banded = _banded(sigs, id_col, k, bands)
     reps = banded.groupBy("band", "bh").agg(F.min(id_col).alias("_rep"))
     return (
@@ -559,101 +559,41 @@ def semantic_dedup(
     return out
 
 
-def dedup_clusters(pairs: DataFrame, max_iters: int = 50,
+def dedup_clusters(pairs: DataFrame, max_rounds: int = 25,
                    checkpoint_dir: str | None = None) -> DataFrame:
     """Near-dup pair list → connected components: (doc_id, cluster_id) with
     cluster_id = the smallest id in the component (the canonical keep id —
     the step a real dedup pipeline runs after pair generation; everything
-    with doc_id != cluster_id is a drop candidate).
+    with doc_id != cluster_id is a drop candidate). Only ids that appear in
+    ``pairs`` are labeled (singletons need no cluster).
 
-    Distributed min-label propagation: each iteration joins current labels
-    across edges and keeps the per-node minimum; converges in O(component
-    diameter) iterations — near-dup clusters are shallow (dups of dups of
-    one source). Non-convergence within ``max_iters`` RAISES rather than
-    silently returning intermediate labels (the oracle computes the full
-    closure — a capped partial answer would diverge unseen). Only ids that
-    appear in ``pairs`` are labeled (singletons need no cluster). At
-    extreme scale swap the propagation for large-star/small-star (Kiveris
-    et al.) — same join shape, logarithmic rounds.
-
-    Storage: edges and labels are eagerly checkpointed — edges so the
-    upstream pair-generation DAG (often an LSH band self-join) executes
-    ONCE instead of once per round, labels every few rounds to cut lineage
-    growth. Superseded label snapshots become unreferenced on the next
-    checkpoint and are reclaimed asynchronously by Spark's ContextCleaner.
-
-    ``checkpoint_dir=None`` uses ``localCheckpoint`` (executor-local blocks:
-    fast, but lost with an executor — fine in single-JVM/local runs).  On a
-    real cluster pass a reliable ``checkpoint_dir`` (HDFS/S3/shared FS):
-    snapshots then go through ``checkpoint()`` to fault-tolerant storage, so
-    an executor loss replays from the last snapshot instead of killing the
-    job (round-2 verdict, What's wrong #5)."""
-    spark = pairs.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-    def _snap(df: DataFrame) -> DataFrame:
-        if checkpoint_dir is not None:
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    edges = _snap(edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct())
-    labels = _snap(edges.select(F.col("src").alias("id")).distinct()
-                   .withColumn("label", F.col("id")))
-    for it in range(max_iters):
-        nbr = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src").agg(F.min("label").alias("nbr_label"))
-        )
-        new = (
-            labels.join(nbr, labels.id == nbr.src, "left")
-            .select(
-                labels.id,
-                F.least(
-                    F.col("label"),
-                    F.coalesce(F.col("nbr_label"), F.col("label")),
-                ).alias("label"),
-            )
-        )
-        if it % 3 == 2:  # bound lineage; every round would pin a snapshot
-            new = _snap(new)
-        changed = (
-            new.alias("n").join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label")).limit(1).count()
-        )
-        labels = new
-        if changed == 0:
-            return labels.select(F.col("id").alias("doc_id"),
-                                 F.col("label").alias("cluster_id"))
-    raise RuntimeError(
-        f"dedup_clusters did not converge in {max_iters} rounds — a "
-        f"component deeper than {max_iters} hops; raise max_iters or use a "
-        "large-star/small-star formulation")
-
-
-def dedup_clusters_star(pairs: DataFrame, max_rounds: int = 25,
-                        checkpoint_dir: str | None = None) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the formulation that replaces :func:`dedup_clusters`' min-label
-    propagation at extreme scale: O(log n) rounds regardless of component
-    DIAMETER (propagation needs O(diameter) rounds — a pathological chain
-    of re-posts makes that unbounded), one driver-side convergence check
-    per round instead of one per hop.
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond"): O(log n) rounds regardless of
+    component DIAMETER (min-label propagation needs O(diameter) rounds — a
+    pathological chain of re-posts makes that unbounded), one driver-side
+    convergence check per round.
 
       large-star(u): every strictly-larger neighbor of u links to
                      m = min(Γ(u) ∪ {u})
       small-star(u): every not-larger neighbor (and u itself) links to m
 
     Alternating the two contracts every component to a star centered on
-    its minimum id; labels then read directly off the final edges. Output
-    schema/semantics are identical to dedup_clusters (hash-equal on the
-    same input, pinned in tests): (doc_id, cluster_id=min id in
-    component), only ids appearing in ``pairs``. Snapshot/checkpoint
-    semantics follow dedup_clusters (``checkpoint_dir`` → reliable)."""
+    its minimum id; labels then read directly off the final edges.
+    Non-convergence within ``max_rounds`` RAISES rather than returning
+    intermediate labels (the oracle computes the full closure — a capped
+    partial answer would diverge unseen).
+
+    Storage: the input's nodes and edges and each round's edges are
+    eagerly checkpointed, so the upstream pair-generation DAG (often an LSH band
+    self-join) runs ONCE and lineage stays one round deep; superseded
+    snapshots are reclaimed asynchronously by Spark's ContextCleaner.
+
+    ``checkpoint_dir=None`` uses ``localCheckpoint`` (executor-local blocks:
+    fast, but lost with an executor — fine in single-JVM/local runs). On a
+    real cluster pass a reliable ``checkpoint_dir`` (HDFS/S3/shared FS):
+    snapshots then go through ``checkpoint()`` to fault-tolerant storage, so
+    an executor loss replays from the last snapshot instead of killing the
+    job."""
     spark = pairs.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
@@ -709,7 +649,7 @@ def dedup_clusters_star(pairs: DataFrame, max_rounds: int = 25,
         prev = cur
     else:
         raise RuntimeError(
-            f"dedup_clusters_star did not converge in {max_rounds} rounds")
+            f"dedup_clusters did not converge in {max_rounds} rounds")
     neigh_min = (edges.groupBy("u").agg(F.min("v").alias("nm"))
                  .select(F.col("u").alias("id"), "nm"))
     return (nodes.join(neigh_min, "id", "left")

@@ -54,6 +54,11 @@ METRICS_SCHEMA = (
     "parse_failures long, wall_ms long, status string, ts double, "
     "query string"
 )
+# run_summary's columns, typed as Spark's groupBy rollup would type them
+_SUMMARY_SCHEMA = (
+    "run_id string, buckets_complete long not null, docs_processed long, "
+    "ocr_pages long, parse_failures long, last_ts double"
+)
 
 
 @functools.cache
@@ -70,19 +75,20 @@ def extracted_path(out_root: str) -> str:
     return os.path.join(out_root, "documents_extracted", "data")
 
 
-def _complete_markers(out_root: str, run_id: str) -> list[dict]:
-    """(bucket, query) of every ``complete`` marker row of ``run_id``."""
+def _complete_markers(out_root: str, run_id: str, columns: list[str]) -> pa.Table:
+    """``columns`` of every ``complete`` marker row of ``run_id``."""
     path = _metrics_path(out_root)
+    schema = _metrics_arrow_schema()
     if not os.path.isdir(path):
-        return []
+        return schema.empty_table().select(columns)
     return pq.read_table(
-        path, schema=_metrics_arrow_schema(), columns=["bucket", "query"],
+        path, schema=schema, columns=columns,
         filters=[("run_id", "==", run_id), ("status", "==", "complete")],
-    ).to_pylist()
+    )
 
 
 def completed_buckets(spark: SparkSession, out_root: str, run_id: str) -> set[int]:
-    return {m["bucket"] for m in _complete_markers(out_root, run_id)}
+    return set(_complete_markers(out_root, run_id, ["bucket"])["bucket"].to_pylist())
 
 
 def _append_metrics(spark: SparkSession, out_root: str, rows: list[tuple]) -> None:
@@ -114,7 +120,7 @@ def run_extraction(
     width."""
     if chunk_size is not None and chunk_size < 1:
         raise ValueError(f"chunk_size must be at least 1, got {chunk_size}")
-    earlier = {m["query"] for m in _complete_markers(out_root, run_id)}
+    earlier = set(_complete_markers(out_root, run_id, ["query"])["query"].to_pylist())
     if earlier - {query}:
         raise ValueError(f"run {run_id} was scored under query "
                          f"{earlier.pop()!r}, not {query!r}")
@@ -125,11 +131,11 @@ def run_extraction(
     chunk_size = chunk_size or len(all_buckets)
 
     out_path = extracted_path(out_root)
+    blobs_df = warehouse.read_table(spark, wh_root, "media_blobs")
     for i in range(0, len(pending), chunk_size):
         chunk = pending[i : i + chunk_size]
         t0 = time.time()
         docs_df = warehouse.read_table(spark, wh_root, "documents_raw", buckets=chunk)
-        blobs_df = warehouse.read_table(spark, wh_root, "media_blobs")
         extracted = extract.extract_documents(
             docs_df.select("doc_id", "spans"), blobs_df,
         ).withColumn("bucket", warehouse.bucket_col("doc_id", man["buckets"]))
@@ -172,16 +178,15 @@ def run_extraction(
 
 def run_summary(spark: SparkSession, out_root: str, run_id: str) -> DataFrame:
     """Point lookup + rollup over run_metrics (reference S6 analog,
-    database_service.py:72-83)."""
-    df = spark.read.schema(METRICS_SCHEMA).parquet(_metrics_path(out_root))
-    return (
-        df.filter(F.col("run_id") == run_id)
-        .groupBy("run_id")
-        .agg(
-            F.countDistinct("bucket").alias("buckets_complete"),
-            F.sum("docs_processed").alias("docs_processed"),
-            F.sum("ocr_pages").alias("ocr_pages"),
-            F.sum("parse_failures").alias("parse_failures"),
-            F.max("ts").alias("last_ts"),
-        )
-    )
+    database_service.py:72-83): one row (run_id, buckets_complete,
+    docs_processed, ocr_pages, parse_failures, last_ts), or none for a run
+    without markers. Rolled up on the driver from the marker files; the
+    frame is built from the Arrow table, which starts no Spark job."""
+    counts = ["docs_processed", "ocr_pages", "parse_failures"]
+    aggs = [("bucket", "count_distinct"), *((c, "sum") for c in counts),
+            ("ts", "max")]
+    markers = _complete_markers(out_root, run_id, ["run_id", "bucket", *counts, "ts"])
+    rollup = markers.group_by("run_id").aggregate(aggs).select(
+        ["run_id", *(f"{c}_{fn}" for c, fn in aggs)])
+    schema = to_arrow_schema(StructType.fromDDL(_SUMMARY_SCHEMA))
+    return spark.createDataFrame(pa.Table.from_arrays(rollup.columns, schema=schema))

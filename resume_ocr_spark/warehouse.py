@@ -46,22 +46,18 @@ def write_table(
     df: DataFrame,
     root: str,
     table: str,
-    bucket_key: str | None = "doc_id",
+    bucket_key: str = "doc_id",
     buckets: int = WAREHOUSE_BUCKETS,
     mode: str = "overwrite",
 ) -> str:
     path = os.path.join(root, table, "data")
-    writer = df
-    if bucket_key is not None:
-        writer = df.withColumn("bucket", bucket_col(bucket_key, buckets))
-        writer.write.mode(mode).partitionBy("bucket").parquet(path)
-    else:
-        writer.write.mode(mode).parquet(path)
+    (df.withColumn("bucket", bucket_col(bucket_key, buckets))
+     .write.mode(mode).partitionBy("bucket").parquet(path))
     manifest = {
         "table": table,
         "layout": "iceberg-shim-v1",
         "bucket_key": bucket_key,
-        "buckets": buckets if bucket_key else 0,
+        "buckets": buckets,
         "schema": df.schema.jsonValue(),
         "written_at": time.time(),
     }
@@ -91,9 +87,7 @@ def read_table(
     empty frame instead of failing schema inference."""
     base = os.path.join(root, table, "data")
     man = manifest(root, table)
-    schema = StructType.fromJson(man["schema"])
-    if man["bucket_key"] is not None:
-        schema = schema.add("bucket", IntegerType())
+    schema = StructType.fromJson(man["schema"]).add("bucket", IntegerType())
     df = spark.read.schema(schema).option("basePath", base).parquet(base)
     if buckets is not None:
         df = df.filter(F.col("bucket").isin([int(b) for b in buckets]))

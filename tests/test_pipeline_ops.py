@@ -60,11 +60,9 @@ class TestDedup:
         df = spark.createDataFrame(rows, "doc_id long, text string")
         sigs = dedup.minhash_signatures(df, "doc_id", "text")
         via_pairs = {(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(
-            dedup.minhash_lsh_candidates(sigs, "doc_id"), max_iters=100
-        ).collect()}
+            dedup.minhash_lsh_candidates(sigs, "doc_id")).collect()}
         via_star = {(r["doc_id"], r["cluster_id"]) for r in dedup.dedup_clusters(
-            dedup.minhash_lsh_star_edges(sigs, "doc_id"), max_iters=100
-        ).collect()}
+            dedup.minhash_lsh_star_edges(sigs, "doc_id")).collect()}
         assert via_pairs == via_star
         assert len(via_pairs) > 0
 
@@ -86,8 +84,8 @@ class TestDedup:
         assert len(uncapped) >= 20 * 19 // 2  # the clique the cap removes
 
     def test_cluster_connected_components(self, spark):
-        """Min-label propagation finds components, incl. a 6-deep chain
-        (stresses >1 propagation round) and leaves singletons unlabeled."""
+        """Components are found, incl. a 6-deep chain (more than one
+        large-star/small-star round), and singletons stay unlabeled."""
         pairs = spark.createDataFrame(
             [(2, 3), (3, 4), (4, 5), (5, 6), (6, 7),   # chain 2..7
              (10, 11), (11, 12),                        # triangle-ish
@@ -116,10 +114,10 @@ class TestDedup:
         assert _glob.glob(ckdir + "/*/rdd-*"), "no reliable snapshot written"
 
     def test_cluster_star_matches_propagation(self, spark):
-        """Large-star/small-star (log-round form) computes the same
-        components as min-label propagation — pinned on a mixed graph and
-        on a 60-node path whose diameter would cost propagation 60 rounds
-        but star only O(log n)."""
+        """Large-star/small-star computes the same components as a
+        union-find over the same edges — pinned on a mixed graph and on a
+        60-node path whose diameter would cost min-label propagation 60
+        rounds but star only O(log n)."""
         import random
 
         rng = random.Random(17)
@@ -128,24 +126,34 @@ class TestDedup:
         edges += [(rng.randrange(100, 160), rng.randrange(100, 160))
                   for _ in range(60)]
         edges = [(a, b) for a, b in edges if a != b]
+        parent = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)  # the root is the min id
+        want = {x: find(x) for x in parent}
         pairs = spark.createDataFrame(edges, "id_a long, id_b long")
-        prop = {r["doc_id"]: r["cluster_id"]
-                for r in dedup.dedup_clusters(pairs, max_iters=100).collect()}
         star = {r["doc_id"]: r["cluster_id"]
-                for r in dedup.dedup_clusters_star(pairs).collect()}
-        assert star == prop
+                for r in dedup.dedup_clusters(pairs).collect()}
+        assert star == want
 
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(500, 560)], "id_a long, id_b long")
         star = {r["doc_id"]: r["cluster_id"]
-                for r in dedup.dedup_clusters_star(chain).collect()}
+                for r in dedup.dedup_clusters(chain).collect()}
         assert star == {i: 500 for i in range(500, 561)}
 
     def test_cluster_star_reliable_checkpoint(self, spark, tmp_path):
         pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
                                       "id_a long, id_b long")
         got = {r["doc_id"]: r["cluster_id"]
-               for r in dedup.dedup_clusters_star(
+               for r in dedup.dedup_clusters(
                    pairs, checkpoint_dir=str(tmp_path / "ck")).collect()}
         assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
 

@@ -1,6 +1,9 @@
 """Kill-and-resume: interrupted run resumes from last complete bucket and
 produces output identical to an uninterrupted run (north_rule)."""
 
+import glob
+import os
+
 import pytest
 
 from resume_ocr_spark import oracle, pipeline, warehouse
@@ -66,14 +69,39 @@ def test_kill_and_resume_identical(spark, wh, tmp_path_factory):
 
 
 def test_metrics_rollup(spark, wh, tmp_path_factory, small_corpus):
+    """run_summary rolls up one run's markers on the driver: the same row
+    and schema as a Spark groupBy over the marker files, whether the run
+    wrote one marker file (one chunk) or four (chunk_size=1), and without
+    starting a Spark job."""
     out = str(tmp_path_factory.mktemp("out_m"))
     pipeline.run_extraction(spark, wh, out, run_id="r3")
-    row = pipeline.run_summary(spark, out, "r3").collect()[0]
+    pipeline.run_extraction(spark, wh, out, run_id="r3c", chunk_size=1)
+    path = pipeline._metrics_path(out)
+    assert len(glob.glob(os.path.join(path, "*.parquet"))) == 1 + 4
+    markers = spark.read.schema(pipeline.METRICS_SCHEMA).parquet(path)
     docs, _ = small_corpus
-    assert row["docs_processed"] == len(docs)
-    assert row["buckets_complete"] == 4
-    assert row["ocr_pages"] > 0
-    assert row["parse_failures"] >= 5  # the edge docs
+    sc = spark.sparkContext
+    for run_id in ("r3", "r3c"):
+        sc.setJobGroup(f"summary_{run_id}", "run_summary")
+        try:
+            summary = pipeline.run_summary(spark, out, run_id)
+            row = summary.collect()[0]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(f"summary_{run_id}") == []
+        want = (markers.filter(F.col("run_id") == run_id).groupBy("run_id")
+                .agg(F.countDistinct("bucket").alias("buckets_complete"),
+                     F.sum("docs_processed").alias("docs_processed"),
+                     F.sum("ocr_pages").alias("ocr_pages"),
+                     F.sum("parse_failures").alias("parse_failures"),
+                     F.max("ts").alias("last_ts")))
+        assert summary.schema == want.schema
+        assert [row] == want.collect()
+        assert row["docs_processed"] == len(docs)
+        assert row["buckets_complete"] == 4
+        assert row["ocr_pages"] > 0
+        assert row["parse_failures"] >= 5  # the edge docs
+    assert pipeline.run_summary(spark, out, "r-none").collect() == []
 
 
 def test_rerun_of_complete_run_is_noop(spark, wh, tmp_path_factory):

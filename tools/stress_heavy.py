@@ -110,7 +110,7 @@ def run_family(spark, docs_path: str, results: dict) -> None:
     def cluster_star():
         sigs = dedup.minhash_signatures(docs, "doc_id", "text")
         edges = dedup.minhash_lsh_star_edges(sigs, "doc_id")
-        return force(dedup.dedup_clusters_star(edges))
+        return force(dedup.dedup_clusters(edges))
 
     def curation():
         bench = docs.filter(F.col("doc_id") < 3).select(
