@@ -2,10 +2,12 @@
 
 Mirrors the reference's logging setup (reference:
 app/config/logging_config.py — RotatingFileHandler 10 MB × 5 backups,
-``"%(asctime)s | %(name)s | %(levelname)s | %(message)s"``, console echo)
-for the DRIVER process of a Spark job; executor logs stay on Spark's own
-log4j. ``read_app_logs`` turns the rotated files back into a DataFrame so
-the log-by-id lookup surface (S6) extends to app logs: filter by run_id
+``"%(asctime)s | %(name)s | %(levelname)s | %(message)s"``) for the DRIVER
+process of a Spark job, minus its console echo: ``spark-submit`` merges
+the Python driver's stderr into its stdout, which a job keeps for its one
+audit line (``job.main``). Executor logs stay on Spark's own log4j.
+``read_app_logs`` turns the rotated files back into a DataFrame so the
+log-by-id lookup surface (S6) extends to app logs: filter by run_id
 token, level, or time range with ordinary Column predicates.
 """
 
@@ -28,8 +30,7 @@ BACKUP_COUNT = 5
 _LINE_PATTERN = r"^([^|]+) \| ([^|]+) \| ([^|]+) \| (.*)$"
 
 
-def setup_logging(log_dir: str = "logs", level: int = logging.INFO,
-                  console: bool = True) -> logging.Logger:
+def setup_logging(log_dir: str = "logs") -> logging.Logger:
     """Configure the root logger with the reference's rotation policy."""
     os.makedirs(log_dir, exist_ok=True)
     root = logging.getLogger()
@@ -49,11 +50,6 @@ def setup_logging(log_dir: str = "logs", level: int = logging.INFO,
     # reference is sparkless and doesn't need this)
     for noisy in ("py4j", "pyspark"):
         logging.getLogger(noisy).setLevel(logging.WARNING)
-    if console:
-        ch = logging.StreamHandler()
-        ch.setLevel(level)
-        ch.setFormatter(fmt)
-        root.addHandler(ch)
     logging.getLogger(__name__).info("logging configured (rotating sink)")
     return root
 
@@ -92,7 +88,8 @@ def read_app_logs(spark: SparkSession, log_dir: str = "logs") -> DataFrame:
 def log_run_event(run_id: str, event: str, **fields) -> None:
     """One structured audit line per run event (the Mongo-audit-doc analog,
     reference: app/services/database_service.py:60-69): key=value pairs on
-    one line so read_app_logs filters reconstruct any run's timeline."""
-    kv = " ".join(f"{k}={v}" for k, v in sorted(fields.items()))
+    one line, in the order given, so read_app_logs filters reconstruct any
+    run's timeline."""
+    kv = " ".join(f"{k}={v}" for k, v in fields.items())
     logging.getLogger("resume_ocr_spark.run").info(
         "run_id=%s event=%s %s", run_id, event, kv)

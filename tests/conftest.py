@@ -1,3 +1,5 @@
+import importlib
+import logging
 import os
 import sys
 
@@ -19,3 +21,31 @@ def small_corpus():
     from resume_ocr_spark import corpus
 
     return corpus.gen_corpus(40, seed=42)
+
+
+@pytest.fixture
+def run_job(tmp_path, capsys):
+    """``run_job(["submit_<job>", *args])`` runs that ``tools/`` job
+    in-process and returns ``(rc, stdout, stderr)``. Its run events go to
+    ``tmp_path / "logs"``; the root logger's handlers and level, which
+    the job's log sink replaces, are handed back afterwards."""
+    root = logging.getLogger()
+    saved, level = list(root.handlers), root.level
+
+    def run(argv):
+        name, *args = argv
+        main = importlib.import_module(f"tools.{name}").main
+        capsys.readouterr()
+        rc = main(["--log-dir", str(tmp_path / "logs"), *args])
+        out = capsys.readouterr()
+        return rc, out.out, out.err
+
+    yield run
+    for h in list(root.handlers):
+        if h not in saved:
+            h.close()
+            root.removeHandler(h)
+    for h in saved:
+        if h not in root.handlers:
+            root.addHandler(h)
+    root.setLevel(level)

@@ -3,6 +3,7 @@ records → provenance-gated sitemap parsing → canonical frontier with
 feed union, pending index shards, known-URL suppression and audit-sum
 checks — the packaged form of the round-5 discovery family."""
 
+import json
 import os
 import sys
 
@@ -39,17 +40,6 @@ FEED = ("<rss><item><title>T</title>"
         "</rss>")
 
 
-def _run(argv):
-    from tools import submit_discovery
-
-    old = sys.argv
-    sys.argv = ["submit_discovery.py"] + argv
-    try:
-        return submit_discovery.main()
-    finally:
-        sys.argv = old
-
-
 def _write_inputs(spark, tmp_path, with_rogue=True):
     robots_p = str(tmp_path / "robots")
     spark.createDataFrame(ROBOTS_ROWS, "host string, robots_txt string"
@@ -69,11 +59,13 @@ def _write_inputs(spark, tmp_path, with_rogue=True):
 
 
 @pytest.mark.usefixtures("spark")
-def test_discovery_end_to_end(spark, tmp_path):
+def test_discovery_end_to_end(spark, tmp_path, run_job):
     robots_p, sitemaps_p, feeds_p = _write_inputs(spark, tmp_path)
     out = str(tmp_path / "out")
-    assert _run(["--robots", robots_p, "--sitemaps", sitemaps_p,
-                 "--feeds", feeds_p, "--output", out]) == 0
+    rc, stdout, _ = run_job(["submit_discovery", "--robots", robots_p,
+                             "--sitemaps", sitemaps_p, "--feeds", feeds_p,
+                             "--output", out])
+    assert rc == 0
 
     frontier = {r.canonical_url: (r.via, r.src)
                 for r in spark.read.parquet(f"{out}/frontier").collect()}
@@ -99,19 +91,20 @@ def test_discovery_end_to_end(spark, tmp_path):
     assert audit["feed_urls"] == 2
     assert audit["pending"] == 2
     assert audit["frontier"] == 3
+    assert json.loads(stdout) == audit
 
 
 @pytest.mark.usefixtures("spark")
-def test_known_suppression_and_no_provenance_gate(spark, tmp_path):
+def test_known_suppression_and_no_provenance_gate(spark, tmp_path, run_job):
     robots_p, sitemaps_p, feeds_p = _write_inputs(spark, tmp_path)
     known_p = str(tmp_path / "known")
     spark.createDataFrame([("https://a.com/page/2",)],
                           "canonical_url string"
                           ).write.mode("overwrite").parquet(known_p)
     out = str(tmp_path / "out2")
-    assert _run(["--robots", robots_p, "--sitemaps", sitemaps_p,
-                 "--known", known_p, "--no-provenance-gate",
-                 "--output", out]) == 0
+    assert run_job(["submit_discovery", "--robots", robots_p,
+                    "--sitemaps", sitemaps_p, "--known", known_p,
+                    "--no-provenance-gate", "--output", out])[0] == 0
     frontier = {r.canonical_url for r in
                 spark.read.parquet(f"{out}/frontier").collect()}
     # rogue body now parsed; page/2 suppressed as known; no feeds arg
@@ -125,7 +118,7 @@ def test_known_suppression_and_no_provenance_gate(spark, tmp_path):
 
 
 @pytest.mark.usefixtures("spark")
-def test_empty_robots_refused_and_bad_columns(spark, tmp_path):
+def test_empty_robots_refused_and_bad_columns(spark, tmp_path, run_job):
     robots_p = str(tmp_path / "robots_e")
     spark.createDataFrame([], "host string, robots_txt string"
                           ).write.parquet(robots_p)
@@ -134,16 +127,16 @@ def test_empty_robots_refused_and_bad_columns(spark, tmp_path):
                           "sitemap_url string, sitemap_xml string"
                           ).write.parquet(sitemaps_p)
     out = str(tmp_path / "out3")
-    assert _run(["--robots", robots_p, "--sitemaps", sitemaps_p,
-                 "--output", out]) == 4
+    assert run_job(["submit_discovery", "--robots", robots_p,
+                    "--sitemaps", sitemaps_p, "--output", out])[0] == 4
     bad_p = str(tmp_path / "bad")
     spark.createDataFrame([("h",)], "host string").write.parquet(bad_p)
-    assert _run(["--robots", bad_p, "--sitemaps", sitemaps_p,
-                 "--output", out]) == 2
+    assert run_job(["submit_discovery", "--robots", bad_p,
+                    "--sitemaps", sitemaps_p, "--output", out])[0] == 2
 
 
 @pytest.mark.usefixtures("spark")
-def test_max_per_host_budget(spark, tmp_path):
+def test_max_per_host_budget(spark, tmp_path, run_job):
     robots_p = str(tmp_path / "robots_b")
     spark.createDataFrame(
         [("a.com", "Sitemap: https://a.com/s1.xml")],
@@ -156,8 +149,9 @@ def test_max_per_host_budget(spark, tmp_path):
                           "sitemap_url string, sitemap_xml string"
                           ).write.parquet(sitemaps_p)
     out = str(tmp_path / "out_b")
-    assert _run(["--robots", robots_p, "--sitemaps", sitemaps_p,
-                 "--max-per-host", "7", "--output", out]) == 0
+    assert run_job(["submit_discovery", "--robots", robots_p,
+                    "--sitemaps", sitemaps_p, "--max-per-host", "7",
+                    "--output", out])[0] == 0
     fr = spark.read.parquet(f"{out}/frontier")
     assert fr.count() == 7
     audit = {r.counter: r.n for r in
@@ -166,8 +160,9 @@ def test_max_per_host_budget(spark, tmp_path):
     assert audit["frontier"] == 7
     # budget keeper set is deterministic across runs
     out2 = str(tmp_path / "out_b2")
-    assert _run(["--robots", robots_p, "--sitemaps", sitemaps_p,
-                 "--max-per-host", "7", "--output", out2]) == 0
+    assert run_job(["submit_discovery", "--robots", robots_p,
+                    "--sitemaps", sitemaps_p, "--max-per-host", "7",
+                    "--output", out2])[0] == 0
     a = sorted(r.canonical_url for r in fr.collect())
     b = sorted(r.canonical_url for r in
                spark.read.parquet(f"{out2}/frontier").collect())

@@ -289,17 +289,8 @@ class TestInterleavedQuality:
 
 
 class TestSubmitInterleave:
-    def _run(self, argv):
-        import sys
-        from tools import submit_interleave
-        old = sys.argv
-        sys.argv = ["submit_interleave.py"] + argv
-        try:
-            return submit_interleave.main()
-        finally:
-            sys.argv = old
-
-    def test_job_writes_three_tables_consistently(self, spark, tmp_path):
+    def test_job_writes_three_tables_consistently(self, spark, tmp_path,
+                                                  run_job):
         src = str(tmp_path / "pages.parquet")
         spark.createDataFrame(
             [(i,
@@ -310,8 +301,8 @@ class TestSubmitInterleave:
              for i in range(30)],
             "doc_id int, html string").write.parquet(src)
         out = str(tmp_path / "out")
-        rc = self._run(["--input", src, "--output", out,
-                        "--budget", "128", "--shards", "4"])
+        rc = run_job(["submit_interleave", "--input", src, "--output", out,
+                      "--budget", "128", "--shards", "4"])[0]
         assert rc == 0
         tbl = spark.read.parquet(f"{out}/spans")
         pairs = spark.read.parquet(f"{out}/pairs")
@@ -326,12 +317,12 @@ class TestSubmitInterleave:
         assert packed.count() == 30
         assert packed.agg(F2.max("seq_offset")).collect()[0][0] < 128
 
-    def test_zero_span_ingest_refused(self, spark, tmp_path):
+    def test_zero_span_ingest_refused(self, spark, tmp_path, run_job):
         src = str(tmp_path / "empty.parquet")
         spark.createDataFrame([(1, ""), (2, None)],
                               "doc_id int, html string").write.parquet(src)
         out = str(tmp_path / "out2")
-        rc = self._run(["--input", src, "--output", out])
+        rc = run_job(["submit_interleave", "--input", src, "--output", out])[0]
         assert rc == 4
         import os
         assert not os.path.exists(f"{out}/spans")

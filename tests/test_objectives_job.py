@@ -12,27 +12,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF = "/root/testdata/sf0.001"
 
 
-def _run(argv, capsys):
-    from tools import submit_objectives
-
-    old = sys.argv
-    sys.argv = ["submit_objectives.py"] + argv
-    try:
-        rc = submit_objectives.main()
-    finally:
-        sys.argv = old
-    return rc, capsys.readouterr().out
-
-
 @pytest.mark.usefixtures("spark")
-def test_both_objectives_end_to_end(spark, tmp_path, capsys):
+def test_both_objectives_end_to_end(spark, tmp_path, run_job):
     import json
 
     src = os.path.join(SF, "documents.parquet")
     out = str(tmp_path / "obj")
-    rc, stdout = _run(["--input", src, "--output", out], capsys)
+    rc, stdout, _ = run_job(["submit_objectives", "--input", src,
+                             "--output", out])
     assert rc == 0
-    audit = json.loads(stdout.strip().splitlines()[-1])
+    audit = json.loads(stdout)
     fim = spark.read.parquet(f"{out}/fim")
     span = spark.read.parquet(f"{out}/span")
     assert audit["n_docs"] == fim.count() == span.count()
@@ -45,28 +34,30 @@ def test_both_objectives_end_to_end(spark, tmp_path, capsys):
 
 
 @pytest.mark.usefixtures("spark")
-def test_single_objective_and_guards(spark, tmp_path, capsys):
+def test_single_objective_and_guards(spark, tmp_path, run_job):
     src = str(tmp_path / "empty_src")
     spark.createDataFrame(
         [(1, ""), (2, "   "), (3, None)], "doc_id long, text string"
     ).write.parquet(src)
     out = str(tmp_path / "obj")
-    rc, _ = _run(["--input", src, "--output", out, "--objective", "fim"],
-                 capsys)
+    rc, _, _ = run_job(["submit_objectives", "--input", src, "--output", out,
+                        "--objective", "fim"])
     assert rc == 4  # zero words refused
     assert not os.path.exists(f"{out}/fim")  # nothing written
-    rc, _ = _run(["--input", src, "--output", out, "--rate", "1.5"], capsys)
+    rc, _, _ = run_job(["submit_objectives", "--input", src, "--output", out,
+                        "--rate", "1.5"])
     assert rc == 2
-    rc, _ = _run(["--input", src, "--output", out, "--span-len", "16"],
-                 capsys)
+    rc, _, _ = run_job(["submit_objectives", "--input", src, "--output", out,
+                        "--span-len", "16"])
     assert rc == 2
     # missing column
-    rc, _ = _run(["--input", src, "--output", out, "--text-col", "body"],
-                 capsys)
+    rc, _, _ = run_job(["submit_objectives", "--input", src, "--output", out,
+                        "--text-col", "body"])
     assert rc == 2
     # span-only run over a real corpus writes only span/
-    rc, _ = _run(["--input", os.path.join(SF, "documents.parquet"),
-                  "--output", out, "--objective", "span"], capsys)
+    rc, _, _ = run_job(["submit_objectives",
+                        "--input", os.path.join(SF, "documents.parquet"),
+                        "--output", out, "--objective", "span"])
     assert rc == 0
     assert os.path.exists(f"{out}/span")
     assert not os.path.exists(f"{out}/fim")

@@ -14,27 +14,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF = "/root/testdata/sf0.001"
 
 
-def _run(argv, capsys):
-    from tools import submit_order
-
-    old = sys.argv
-    sys.argv = ["submit_order.py"] + argv
-    try:
-        rc = submit_order.main()
-    finally:
-        sys.argv = old
-    return rc, capsys.readouterr().out
-
-
 @pytest.mark.usefixtures("spark")
-def test_epoch_schedule_end_to_end(spark, tmp_path, capsys):
+def test_epoch_schedule_end_to_end(spark, tmp_path, run_job):
     src = os.path.join(SF, "documents.parquet")
     out = str(tmp_path / "ord")
-    rc, stdout = _run(["--input", src, "--output", out,
-                       "--epochs", "2", "--shards", "4",
-                       "--pack-budget", "256"], capsys)
+    rc, stdout, _ = run_job(["submit_order", "--input", src, "--output", out,
+                             "--epochs", "2", "--shards", "4",
+                             "--pack-budget", "256"])
     assert rc == 0
-    audit = json.loads(stdout.strip().splitlines()[-1])
+    audit = json.loads(stdout)
     n_src = spark.read.parquet(src).count()
     order = spark.read.parquet(f"{out}/order")
     assert audit["docs_per_epoch"] == {"0": n_src, "1": n_src}
@@ -51,14 +39,14 @@ def test_epoch_schedule_end_to_end(spark, tmp_path, capsys):
 
 @pytest.mark.usefixtures("spark")
 def test_anneal_schedule_computes_quality_when_missing(spark, tmp_path,
-                                                       capsys):
+                                                       run_job):
     src = os.path.join(SF, "documents.parquet")
     out = str(tmp_path / "ann")
-    rc, stdout = _run(["--input", src, "--output", out,
-                       "--schedule", "anneal", "--final-frac", "0.25",
-                       "--shards", "4"], capsys)
+    rc, stdout, _ = run_job(["submit_order", "--input", src, "--output", out,
+                             "--schedule", "anneal", "--final-frac", "0.25",
+                             "--shards", "4"])
     assert rc == 0
-    audit = json.loads(stdout.strip().splitlines()[-1])
+    audit = json.loads(stdout)
     order = spark.read.parquet(f"{out}/order")
     n_src = spark.read.parquet(src).count()
     per_phase = audit["docs_per_phase"]
@@ -74,15 +62,16 @@ def test_anneal_schedule_computes_quality_when_missing(spark, tmp_path,
 
 
 @pytest.mark.usefixtures("spark")
-def test_guards(spark, tmp_path, capsys):
+def test_guards(spark, tmp_path, run_job):
     src = os.path.join(SF, "documents.parquet")
-    rc, _ = _run(["--input", src, "--output", str(tmp_path / "x"),
-                  "--final-frac", "1.5"], capsys)
+    rc, _, _ = run_job(["submit_order", "--input", src,
+                        "--output", str(tmp_path / "x"),
+                        "--final-frac", "1.5"])
     assert rc == 2
     empty = str(tmp_path / "empty_src")
     spark.createDataFrame([], "doc_id long, text string") \
          .write.parquet(empty)
-    rc, _ = _run(["--input", empty, "--output", str(tmp_path / "y")],
-                 capsys)
+    rc, _, _ = run_job(["submit_order", "--input", empty,
+                        "--output", str(tmp_path / "y")])
     assert rc == 4
     assert not os.path.exists(str(tmp_path / "y"))

@@ -1425,24 +1425,16 @@ class TestUnigramLogprob:
 
 class TestSubmitCuration:
     def test_job_writes_three_tables_and_audit_sums(self, spark, docs,
-                                                    tmp_path):
-        import json
-        import sys
-        from tools import submit_curation
+                                                    tmp_path, run_job):
         src = str(tmp_path / "in.parquet")
         docs.select("doc_id", "text", "lang").limit(100).write.parquet(src)
         bench = str(tmp_path / "bench.parquet")
         docs.select("text").limit(2).write.parquet(bench)
         out = str(tmp_path / "out")
-        argv = ["submit_curation.py", "--input", src, "--output", out,
-                "--benchmark", bench, "--ngram", "3",
-                "--weights", '{"en": 0.9}', "--default-weight", "0.8"]
-        old = sys.argv
-        sys.argv = argv
-        try:
-            rc = submit_curation.main()
-        finally:
-            sys.argv = old
+        rc = run_job(["submit_curation", "--input", src, "--output", out,
+                      "--benchmark", bench, "--ngram", "3",
+                      "--weights", '{"en": 0.9}',
+                      "--default-weight", "0.8"])[0]
         assert rc == 0
         ann = spark.read.parquet(f"{out}/annotated")
         kept = spark.read.parquet(f"{out}/curated")
@@ -1453,11 +1445,10 @@ class TestSubmitCuration:
         assert kept.count() == audit["kept"] > 0
         assert "drop_reason" not in kept.columns
 
-    def test_redact_pii_scrubs_survivors_only(self, spark, tmp_path):
+    def test_redact_pii_scrubs_survivors_only(self, spark, tmp_path,
+                                              run_job):
         """--redact-pii: curated/ text is scrubbed with audit counts;
         annotated/ keeps the original text as the funnel record."""
-        import sys
-        from tools import submit_curation
         rows = [(i, f"contact me at user{i}@example.com about the job "
                     "and more words here to pass quality " * 3)
                 for i in range(30)]
@@ -1465,13 +1456,8 @@ class TestSubmitCuration:
         spark.createDataFrame(rows, "doc_id long, text string") \
             .write.parquet(src)
         out = str(tmp_path / "outp")
-        old = sys.argv
-        sys.argv = ["x", "--input", src, "--output", out,
-                    "--group-col", "doc_id", "--redact-pii"]
-        try:
-            rc = submit_curation.main()
-        finally:
-            sys.argv = old
+        rc = run_job(["submit_curation", "--input", src, "--output", out,
+                      "--group-col", "doc_id", "--redact-pii"])[0]
         assert rc == 0
         kept = spark.read.parquet(f"{out}/curated")
         assert kept.filter(F.col("text").contains("@")).count() == 0
@@ -1479,19 +1465,12 @@ class TestSubmitCuration:
         ann = spark.read.parquet(f"{out}/annotated")
         assert ann.filter(F.col("text").contains("@")).count() == ann.count()
 
-    def test_job_refuses_zero_keep(self, spark, docs, tmp_path):
-        import sys
-        from tools import submit_curation
+    def test_job_refuses_zero_keep(self, spark, docs, tmp_path, run_job):
         src = str(tmp_path / "in2.parquet")
         docs.select("doc_id", "text", "lang").limit(20).write.parquet(src)
-        old = sys.argv
-        sys.argv = ["x", "--input", src, "--output",
-                    str(tmp_path / "out2"),
-                    "--weights", "{}", "--default-weight", "0.0"]
-        try:
-            rc = submit_curation.main()
-        finally:
-            sys.argv = old
+        rc = run_job(["submit_curation", "--input", src,
+                      "--output", str(tmp_path / "out2"),
+                      "--weights", "{}", "--default-weight", "0.0"])[0]
         assert rc == 4
         # the refusal must happen BEFORE curated/ is written — a retry or
         # downstream consumer must not find a complete-looking empty
@@ -1503,21 +1482,14 @@ class TestSubmitCuration:
 
 
 class TestSubmitTokenize:
-    def test_job_trains_applies_and_packs(self, spark, docs, tmp_path):
-        import json as _json
-        import sys
-        from tools import submit_tokenize
+    def test_job_trains_applies_and_packs(self, spark, docs, tmp_path,
+                                          run_job):
         src = str(tmp_path / "tok_in.parquet")
         docs.select("doc_id", "text").limit(60).write.parquet(src)
         out = str(tmp_path / "tok_out")
-        old = sys.argv
-        sys.argv = ["x", "--input", src, "--output", out,
-                    "--num-merges", "50", "--sample-docs", "30",
-                    "--budget", "128", "--shards", "4"]
-        try:
-            rc = submit_tokenize.main()
-        finally:
-            sys.argv = old
+        rc = run_job(["submit_tokenize", "--input", src, "--output", out,
+                      "--num-merges", "50", "--sample-docs", "30",
+                      "--budget", "128", "--shards", "4"])[0]
         assert rc == 0
         merges = spark.read.parquet(f"{out}/merges").orderBy("rank").collect()
         counts = spark.read.parquet(f"{out}/token_counts")
@@ -1529,13 +1501,9 @@ class TestSubmitTokenize:
             F.col("n_tokens") != F.col("bpe_tokens")).count() == 0
         # merges round-trip: re-running with --merges reproduces counts
         out2 = str(tmp_path / "tok_out2")
-        sys.argv = ["x", "--input", src, "--output", out2,
-                    "--merges", f"{out}/merges",
-                    "--budget", "128", "--shards", "4"]
-        try:
-            rc2 = submit_tokenize.main()
-        finally:
-            sys.argv = old
+        rc2 = run_job(["submit_tokenize", "--input", src, "--output", out2,
+                       "--merges", f"{out}/merges",
+                       "--budget", "128", "--shards", "4"])[0]
         assert rc2 == 0
         a = sorted(map(tuple, counts.collect()))
         b = sorted(map(tuple,
@@ -1543,21 +1511,15 @@ class TestSubmitTokenize:
         assert a == b
         assert len(merges) == 50
 
-    def test_job_refuses_empty_corpus(self, spark, tmp_path):
+    def test_job_refuses_empty_corpus(self, spark, tmp_path, run_job):
         import os
-        import sys
-        from tools import submit_tokenize
         src = str(tmp_path / "tok_empty.parquet")
         spark.createDataFrame(
             [(1, "..."), (2, None)], "doc_id long, text string"
         ).write.parquet(src)
         out = str(tmp_path / "tok_empty_out")
-        old = sys.argv
-        sys.argv = ["x", "--input", src, "--output", out]
-        try:
-            rc = submit_tokenize.main()
-        finally:
-            sys.argv = old
+        rc = run_job(["submit_tokenize", "--input", src,
+                      "--output", out])[0]
         assert rc == 4
         assert not os.path.exists(out)  # refusal writes nothing
 
@@ -2090,20 +2052,12 @@ class TestGroupQuota:
                           group_quota=0)
 
     def test_job_end_to_end_with_quota_audit_sums(self, spark, docs,
-                                                  tmp_path):
-        import sys
-
-        from tools import submit_curation
+                                                  tmp_path, run_job):
         src = str(tmp_path / "inq.parquet")
         docs.select("doc_id", "text", "lang").limit(100).write.parquet(src)
         out = str(tmp_path / "outq")
-        old = sys.argv
-        sys.argv = ["x", "--input", src, "--output", out,
-                    "--group-quota", "4"]
-        try:
-            rc = submit_curation.main()
-        finally:
-            sys.argv = old
+        rc = run_job(["submit_curation", "--input", src, "--output", out,
+                      "--group-quota", "4"])[0]
         assert rc == 0
         audit = {r["outcome"]: r["n_docs"] for r in
                  spark.read.parquet(f"{out}/audit").collect()}
@@ -2463,24 +2417,15 @@ class TestLeakageSafeSplit:
 
 
 class TestSubmitSelection:
-    def _run(self, argv):
-        import sys
-        from tools import submit_selection
-        old = sys.argv
-        sys.argv = ["submit_selection.py"] + argv
-        try:
-            return submit_selection.main()
-        finally:
-            sys.argv = old
-
-    def test_dsir_mode_selects_k_and_audits(self, spark, docs, tmp_path):
+    def test_dsir_mode_selects_k_and_audits(self, spark, docs, tmp_path,
+                                            run_job):
         src = str(tmp_path / "in.parquet")
         docs.select("doc_id", "text", "lang").limit(100).write.parquet(src)
         tgt = str(tmp_path / "target.parquet")
         docs.filter("lang = 'en'").select("text").limit(20).write.parquet(tgt)
         out = str(tmp_path / "out")
-        rc = self._run(["--input", src, "--output", out,
-                        "--mode", "dsir", "--target", tgt, "--keep-k", "30"])
+        rc = run_job(["submit_selection", "--input", src, "--output", out,
+                      "--mode", "dsir", "--target", tgt, "--keep-k", "30"])[0]
         assert rc == 0
         sel = spark.read.parquet(f"{out}/selected")
         sc = spark.read.parquet(f"{out}/scores")
@@ -2493,20 +2438,20 @@ class TestSubmitSelection:
             sc, 30).select("doc_id").collect()}
         assert {r["doc_id"] for r in sel.select("doc_id").collect()} == want
 
-    def test_dsir_keep_frac_resolves_k(self, spark, docs, tmp_path):
+    def test_dsir_keep_frac_resolves_k(self, spark, docs, tmp_path, run_job):
         src = str(tmp_path / "inf.parquet")
         docs.select("doc_id", "text").limit(80).write.parquet(src)
         tgt = str(tmp_path / "tgtf.parquet")
         docs.select("text").limit(10).write.parquet(tgt)
         out = str(tmp_path / "outf")
-        rc = self._run(["--input", src, "--output", out,
-                        "--mode", "dsir", "--target", tgt,
-                        "--keep-frac", "0.25"])
+        rc = run_job(["submit_selection", "--input", src, "--output", out,
+                      "--mode", "dsir", "--target", tgt,
+                      "--keep-frac", "0.25"])[0]
         assert rc == 0
         assert spark.read.parquet(f"{out}/selected").count() == 20
 
     def test_dsir_threshold_mode_filters_without_topk(self, spark, docs,
-                                                      tmp_path):
+                                                      tmp_path, run_job):
         """--threshold: keep-x% via the sample-estimated Gumbel quantile;
         selected set equals the operator's own filter over the written
         scores (no global top-k anywhere)."""
@@ -2515,10 +2460,9 @@ class TestSubmitSelection:
         tgt = str(tmp_path / "tgtt.parquet")
         docs.select("text").limit(15).write.parquet(tgt)
         out = str(tmp_path / "outt")
-        rc = self._run(["--input", src, "--output", out,
-                        "--mode", "dsir", "--target", tgt,
-                        "--keep-frac", "0.4", "--threshold",
-                        "--sample-rate", "0.5"])
+        rc = run_job(["submit_selection", "--input", src, "--output", out,
+                      "--mode", "dsir", "--target", tgt, "--keep-frac", "0.4",
+                      "--threshold", "--sample-rate", "0.5"])[0]
         assert rc == 0
         from resume_ocr_spark.operators import selection
         sc = spark.read.parquet(f"{out}/scores")
@@ -2528,11 +2472,11 @@ class TestSubmitSelection:
                spark.read.parquet(f"{out}/selected").collect()}
         assert got == want and 0 < len(got) < 100
         # --threshold without --keep-frac is invalid
-        assert self._run(["--input", src, "--output", out, "--mode", "dsir",
-                          "--target", tgt, "--keep-k", "5",
-                          "--threshold"]) == 2
+        assert run_job(["submit_selection", "--input", src, "--output", out,
+                        "--mode", "dsir", "--target", tgt, "--keep-k", "5",
+                        "--threshold"])[0] == 2
 
-    def test_nb_mode_thresholds_on_score(self, spark, tmp_path):
+    def test_nb_mode_thresholds_on_score(self, spark, tmp_path, run_job):
         rows = [(i, "good clean prose document " * 4) for i in range(10)]
         rows += [(100 + i, "zzspam qqqjunk xxcasino " * 4) for i in range(10)]
         src = str(tmp_path / "innb.parquet")
@@ -2544,33 +2488,34 @@ class TestSubmitSelection:
              ("zzspam qqqjunk xxcasino " * 4, False)],
             "text string, label boolean").write.parquet(lab)
         out = str(tmp_path / "outnb")
-        rc = self._run(["--input", src, "--output", out,
-                        "--mode", "nb", "--labeled", lab])
+        rc = run_job(["submit_selection", "--input", src, "--output", out,
+                      "--mode", "nb", "--labeled", lab])[0]
         assert rc == 0
         kept = {r["doc_id"] for r in
                 spark.read.parquet(f"{out}/selected").collect()}
         assert kept == set(range(10))
 
     def test_refusal_before_write_and_arg_validation(self, spark, docs,
-                                                     tmp_path):
+                                                     tmp_path, run_job):
         import os
         src = str(tmp_path / "inr.parquet")
         docs.select("doc_id", "text").limit(10).write.parquet(src)
         empty_tgt = str(tmp_path / "empty.parquet")
         docs.select("text").filter("doc_id < 0").write.parquet(empty_tgt)
         out = str(tmp_path / "outr")
-        rc = self._run(["--input", src, "--output", out,
-                        "--mode", "dsir", "--target", empty_tgt,
-                        "--keep-k", "5"])
+        rc = run_job(["submit_selection", "--input", src, "--output", out,
+                      "--mode", "dsir", "--target", empty_tgt,
+                      "--keep-k", "5"])[0]
         assert rc == 4
         assert not os.path.exists(out)  # refusal BEFORE any write
         # exactly one of keep-k/keep-frac
-        assert self._run(["--input", src, "--output", out, "--mode", "dsir",
-                          "--target", empty_tgt]) == 2
-        assert self._run(["--input", src, "--output", out, "--mode", "dsir",
-                          "--target", empty_tgt, "--keep-k", "5",
-                          "--keep-frac", "0.5"]) == 2
-        assert self._run(["--input", src, "--output", out,
-                          "--mode", "nb"]) == 2
-        assert self._run(["--input", src, "--output", out, "--mode", "dsir",
-                          "--target", empty_tgt, "--keep-frac", "1.5"]) == 2
+        assert run_job(["submit_selection", "--input", src, "--output", out,
+                        "--mode", "dsir", "--target", empty_tgt])[0] == 2
+        assert run_job(["submit_selection", "--input", src, "--output", out,
+                        "--mode", "dsir", "--target", empty_tgt,
+                        "--keep-k", "5", "--keep-frac", "0.5"])[0] == 2
+        assert run_job(["submit_selection", "--input", src, "--output", out,
+                        "--mode", "nb"])[0] == 2
+        assert run_job(["submit_selection", "--input", src, "--output", out,
+                        "--mode", "dsir", "--target", empty_tgt,
+                        "--keep-frac", "1.5"])[0] == 2

@@ -5,6 +5,7 @@ corpus. This is the resume/checkpoint story for the profiling pass: the
 persisted sketches ARE the checkpoint, and merging them replaces any
 rescan of prior batches."""
 
+import json
 import os
 import sys
 
@@ -15,23 +16,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF = "/root/testdata/sf0.01"
 
 
-def _run(argv):
-    from tools import submit_profile
-
-    old = sys.argv
-    sys.argv = ["submit_profile.py"] + argv
-    try:
-        return submit_profile.main()
-    finally:
-        sys.argv = old
-
-
 def _rows(spark, path):
     return sorted(map(tuple, spark.read.parquet(path).collect()))
 
 
 @pytest.mark.usefixtures("spark")
-def test_incremental_profile_equals_whole(spark, tmp_path):
+def test_incremental_profile_equals_whole(spark, tmp_path, run_job):
     docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
     half1 = str(tmp_path / "half1")
     half2 = str(tmp_path / "half2")
@@ -39,13 +29,16 @@ def test_incremental_profile_equals_whole(spark, tmp_path):
     docs.filter("doc_id % 2 = 1").write.parquet(half2)
 
     whole_out = str(tmp_path / "whole")
-    assert _run(["--input", os.path.join(SF, "documents.parquet"),
-                 "--output", whole_out]) == 0
+    assert run_job(["submit_profile",
+                    "--input", os.path.join(SF, "documents.parquet"),
+                    "--output", whole_out])[0] == 0
 
     b1 = str(tmp_path / "b1")
     b2 = str(tmp_path / "b2")
-    assert _run(["--input", half1, "--output", b1]) == 0
-    assert _run(["--input", half2, "--output", b2, "--state", b1]) == 0
+    assert run_job(["submit_profile", "--input", half1,
+                    "--output", b1])[0] == 0
+    assert run_job(["submit_profile", "--input", half2, "--output", b2,
+                    "--state", b1])[0] == 0
 
     # sketch state identical — merge law end-to-end through parquet
     for table in ("hll_words", "cms_words", "len_bins", "totals"):
@@ -63,12 +56,15 @@ def test_incremental_profile_equals_whole(spark, tmp_path):
 
 
 @pytest.mark.usefixtures("spark")
-def test_profile_sanity_and_refusals(spark, tmp_path):
+def test_profile_sanity_and_refusals(spark, tmp_path, run_job):
     out = str(tmp_path / "out")
-    assert _run(["--input", os.path.join(SF, "documents.parquet"),
-                 "--output", out]) == 0
+    rc, stdout, _ = run_job(["submit_profile",
+                             "--input", os.path.join(SF, "documents.parquet"),
+                             "--output", out])
+    assert rc == 0
     prof = {r["lang"]: r for r in
             spark.read.parquet(f"{out}/profile").collect()}
+    assert json.loads(stdout) == {"groups": len(prof)}
     docs = spark.read.parquet(os.path.join(SF, "documents.parquet"))
     n_en = docs.filter("lang = 'en'").count()
     assert prof["en"]["n_docs"] == n_en
@@ -86,16 +82,19 @@ def test_profile_sanity_and_refusals(spark, tmp_path):
         assert row["len_p50"] <= row["len_p95"] <= row["len_p99"]
 
     # invalid sizing → exit 2; empty-words corpus → exit 4, writes nothing
-    assert _run(["--input", os.path.join(SF, "documents.parquet"),
-                 "--output", out, "--topk", "0"]) == 2
+    assert run_job(["submit_profile",
+                    "--input", os.path.join(SF, "documents.parquet"),
+                    "--output", out, "--topk", "0"])[0] == 2
     # state == output would race the lazy merge reads against the
     # overwrite — refused up front
-    assert _run(["--input", os.path.join(SF, "documents.parquet"),
-                 "--output", out, "--state", out]) == 2
+    assert run_job(["submit_profile",
+                    "--input", os.path.join(SF, "documents.parquet"),
+                    "--output", out, "--state", out])[0] == 2
     empty = str(tmp_path / "empty")
     spark.createDataFrame([(1, "en", "!!!")],
                           "doc_id long, lang string, text string"
                           ).write.parquet(empty)
     refuse_out = str(tmp_path / "refused")
-    assert _run(["--input", empty, "--output", refuse_out]) == 4
+    assert run_job(["submit_profile", "--input", empty,
+                    "--output", refuse_out])[0] == 4
     assert not os.path.exists(refuse_out)

@@ -19,17 +19,6 @@ def _crawl(spark, rows):
     return spark.createDataFrame(rows, "url string, html string, lang string")
 
 
-def _run(argv):
-    from tools import submit_refresh
-
-    old = sys.argv
-    sys.argv = ["submit_refresh.py"] + argv
-    try:
-        return submit_refresh.main()
-    finally:
-        sys.argv = old
-
-
 def _page(i, noindex=False, rev=""):
     meta = '<meta name="robots" content="noindex">' if noindex else ""
     return (f"https://site.com/{'private' if i % 5 == 0 else 'pub'}/p{i}",
@@ -38,7 +27,7 @@ def _page(i, noindex=False, rev=""):
 
 
 @pytest.mark.usefixtures("spark")
-def test_refresh_two_rounds(spark, tmp_path):
+def test_refresh_two_rounds(spark, tmp_path, run_job):
     crawl1 = _crawl(spark, [_page(i, noindex=(i % 7 == 0))
                             for i in range(60)])
     crawl1_p = str(tmp_path / "crawl1")
@@ -49,8 +38,8 @@ def test_refresh_two_rounds(spark, tmp_path):
                           ).write.parquet(robots_p)
 
     out1 = str(tmp_path / "out1")
-    rc = _run(["--new", crawl1_p, "--output", out1,
-               "--robots", robots_p, "--agent", "trainbot"])
+    rc = run_job(["submit_refresh", "--new", crawl1_p, "--output", out1,
+                  "--robots", robots_p, "--agent", "trainbot"])[0]
     assert rc == 0
     audit1 = {r.outcome: r.n_pages
               for r in spark.read.parquet(f"{out1}/audit").collect()}
@@ -77,9 +66,9 @@ def test_refresh_two_rounds(spark, tmp_path):
     crawl2_p = str(tmp_path / "crawl2")
     crawl2.write.parquet(crawl2_p)
     out2 = str(tmp_path / "out2")
-    rc = _run(["--new", crawl2_p, "--output", out2,
-               "--manifest", f"{out1}/manifest",
-               "--robots", robots_p, "--agent", "trainbot"])
+    rc = run_job(["submit_refresh", "--new", crawl2_p, "--output", out2,
+                  "--manifest", f"{out1}/manifest", "--robots", robots_p,
+                  "--agent", "trainbot"])[0]
     assert rc == 0
     audit2 = {r.outcome: r.n_pages
               for r in spark.read.parquet(f"{out2}/audit").collect()}
@@ -99,31 +88,33 @@ def test_refresh_two_rounds(spark, tmp_path):
 
 
 @pytest.mark.usefixtures("spark")
-def test_refresh_refuses_empty_crawl(spark, tmp_path):
+def test_refresh_refuses_empty_crawl(spark, tmp_path, run_job):
     empty = _crawl(spark, []).filter("1=0")
     p = str(tmp_path / "empty")
     empty.write.parquet(p)
-    assert _run(["--new", p, "--output", str(tmp_path / "o")]) == 4
+    assert run_job(["submit_refresh", "--new", p,
+                    "--output", str(tmp_path / "o")])[0] == 4
 
 
 @pytest.mark.usefixtures("spark")
-def test_refresh_missing_column_is_arg_error(spark, tmp_path):
+def test_refresh_missing_column_is_arg_error(spark, tmp_path, run_job):
     df = spark.createDataFrame([("u",)], "url string")
     p = str(tmp_path / "nocontent")
     df.write.parquet(p)
-    assert _run(["--new", p, "--output", str(tmp_path / "o")]) == 2
+    assert run_job(["submit_refresh", "--new", p,
+                    "--output", str(tmp_path / "o")])[0] == 2
 
 
 @pytest.mark.usefixtures("spark")
-def test_refresh_json_line_matches_audit(spark, tmp_path, capsys):
+def test_refresh_json_line_matches_audit(spark, tmp_path, run_job):
     crawl = _crawl(spark, [_page(i) for i in range(12)])
     p = str(tmp_path / "c")
     crawl.write.parquet(p)
     out = str(tmp_path / "o")
-    assert _run(["--new", p, "--output", out, "--no-noindex-gate"]) == 0
-    line = [ln for ln in capsys.readouterr().out.splitlines()
-            if ln.startswith("{")][-1]
-    payload = json.loads(line)
+    rc, stdout, _ = run_job(["submit_refresh", "--new", p, "--output", out,
+                             "--no-noindex-gate"])
+    assert rc == 0
+    payload = json.loads(stdout)
     audit = {r.outcome: r.n_pages
              for r in spark.read.parquet(f"{out}/audit").collect()}
     assert payload["outcomes"] == audit
@@ -131,7 +122,7 @@ def test_refresh_json_line_matches_audit(spark, tmp_path, capsys):
 
 
 @pytest.mark.usefixtures("spark")
-def test_refresh_chains_with_custom_url_col(spark, tmp_path):
+def test_refresh_chains_with_custom_url_col(spark, tmp_path, run_job):
     # manifest/ is written with (url, digest) regardless of --url-col;
     # run 2 must read it back under that contract (review r5: the old
     # code selected args.url_col from the manifest and crashed)
@@ -141,12 +132,12 @@ def test_refresh_chains_with_custom_url_col(spark, tmp_path):
     p = str(tmp_path / "c1")
     df.write.parquet(p)
     out1 = str(tmp_path / "o1")
-    assert _run(["--new", p, "--output", out1, "--url-col", "page_url",
-                 "--no-noindex-gate"]) == 0
+    assert run_job(["submit_refresh", "--new", p, "--output", out1,
+                    "--url-col", "page_url", "--no-noindex-gate"])[0] == 0
     out2 = str(tmp_path / "o2")
-    assert _run(["--new", p, "--output", out2, "--url-col", "page_url",
-                 "--manifest", f"{out1}/manifest",
-                 "--no-noindex-gate"]) == 0
+    assert run_job(["submit_refresh", "--new", p, "--output", out2,
+                    "--url-col", "page_url", "--manifest", f"{out1}/manifest",
+                    "--no-noindex-gate"])[0] == 0
     audit = {r.outcome: r.n_pages
              for r in spark.read.parquet(f"{out2}/audit").collect()}
     assert audit == {"unchanged": 8, "emitted": 0}

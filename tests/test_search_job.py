@@ -15,29 +15,20 @@ SF = "/root/testdata/sf0.001"
 DOCS = os.path.join(SF, "documents.parquet")
 
 
-def _run(argv, capsys):
-    from tools import submit_search
-
-    old = sys.argv
-    sys.argv = ["submit_search.py"] + argv
-    try:
-        rc = submit_search.main()
-    finally:
-        sys.argv = old
-    out = capsys.readouterr().out.strip().splitlines()
-    return rc, (json.loads(out[-1]) if out else None)
-
-
 @pytest.mark.usefixtures("spark")
-def test_search_job_end_to_end(spark, tmp_path, capsys):
+def test_search_job_end_to_end(spark, tmp_path, run_job):
     idx = str(tmp_path / "idx")
-    rc, meta = _run(["build", "--input", DOCS, "--index", idx], capsys)
+    rc, out, _ = run_job(["submit_search", "build", "--input", DOCS,
+                          "--index", idx])
+    meta = json.loads(out)
     assert rc == 0 and meta["n_docs"] == 500
 
     # bm25: top-10, equal to the library scan path's ranking head
     outd = str(tmp_path / "q1")
-    rc, meta = _run(["query", "--index", idx, "--output", outd,
-                     "--bm25", "spark query window merge"], capsys)
+    rc, out, _ = run_job(["submit_search", "query", "--index", idx,
+                          "--output", outd,
+                          "--bm25", "spark query window merge"])
+    meta = json.loads(out)
     assert rc == 0 and meta["rows"] == 10
     assert len(meta["buckets_touched"]) <= 4
     from resume_ocr_spark.operators import retrieval
@@ -51,36 +42,41 @@ def test_search_job_end_to_end(spark, tmp_path, capsys):
 
     # phrase with snippets
     outp = str(tmp_path / "q2")
-    rc, meta = _run(["query", "--index", idx, "--output", outp,
-                     "--phrase", "big data merge", "--snippets", DOCS],
-                    capsys)
+    rc, out, _ = run_job(["submit_search", "query", "--index", idx,
+                          "--output", outp, "--phrase", "big data merge",
+                          "--snippets", DOCS])
+    meta = json.loads(out)
     assert rc == 0 and meta["rows"] >= 1
     snip = spark.read.parquet(f"{outp}/results").collect()[0]
     assert "big data merge" in snip.snippet
 
     # proximity
     outx = str(tmp_path / "q3")
-    rc, meta = _run(["query", "--index", idx, "--output", outx,
-                     "--proximity", "spark,query,window",
-                     "--max-window", "12"], capsys)
+    rc, out, _ = run_job(["submit_search", "query", "--index", idx,
+                          "--output", outx,
+                          "--proximity", "spark,query,window",
+                          "--max-window", "12"])
+    meta = json.loads(out)
     assert rc == 0 and meta["rows"] >= 1
     assert spark.read.parquet(f"{outx}/results") \
         .filter("min_window > 12").count() == 0
 
     # no-hit query exits 4
     outn = str(tmp_path / "q4")
-    rc, meta = _run(["query", "--index", idx, "--output", outn,
-                     "--phrase", "zeppelin zeppelin zeppelin"], capsys)
-    assert rc == 4
+    rc, out, _ = run_job(["submit_search", "query", "--index", idx,
+                          "--output", outn,
+                          "--phrase", "zeppelin zeppelin zeppelin"])
+    meta = json.loads(out)
+    assert rc == 4 and meta["rows"] == 0
 
     # invalid: two modes at once
-    rc, _ = _run(["query", "--index", idx, "--output", outn,
-                  "--bm25", "x", "--phrase", "y"], capsys)
+    rc, _, _ = run_job(["submit_search", "query", "--index", idx,
+                        "--output", outn, "--bm25", "x", "--phrase", "y"])
     assert rc == 2
 
 
 @pytest.mark.usefixtures("spark")
-def test_search_job_merge_equals_fresh_build(spark, tmp_path, capsys):
+def test_search_job_merge_equals_fresh_build(spark, tmp_path, run_job):
     docs = spark.read.parquet(DOCS)
     base_p = str(tmp_path / "base.parquet")
     delta_p = str(tmp_path / "delta.parquet")
@@ -93,11 +89,13 @@ def test_search_job_merge_equals_fresh_build(spark, tmp_path, capsys):
      .write.parquet(delta_p))
 
     idx = str(tmp_path / "idx")
-    rc, _ = _run(["build", "--input", base_p, "--index", idx], capsys)
+    rc, _, _ = run_job(["submit_search", "build", "--input", base_p,
+                        "--index", idx])
     assert rc == 0
     merged = str(tmp_path / "merged")
-    rc, meta = _run(["merge", "--index", idx, "--delta", delta_p,
-                     "--output", merged], capsys)
+    rc, out, _ = run_job(["submit_search", "merge", "--index", idx,
+                          "--delta", delta_p, "--output", merged])
+    meta = json.loads(out)
     assert rc == 0 and meta["n_docs"] == 420  # 400 base − 100 replaced + 120
 
     # final corpus state = base minus replaced + delta
@@ -105,7 +103,8 @@ def test_search_job_merge_equals_fresh_build(spark, tmp_path, capsys):
     (spark.read.parquet(base_p).filter("doc_id < 300")
      .unionByName(spark.read.parquet(delta_p)).write.parquet(final_p))
     fresh = str(tmp_path / "fresh")
-    rc, _ = _run(["build", "--input", final_p, "--index", fresh], capsys)
+    rc, _, _ = run_job(["submit_search", "build", "--input", final_p,
+                        "--index", fresh])
     assert rc == 0
 
     key = lambda r: (r.term, r.doc_id, r.tf, tuple(r.positions), r.tbucket)
@@ -114,10 +113,10 @@ def test_search_job_merge_equals_fresh_build(spark, tmp_path, capsys):
     assert a == b
     # the merged index answers queries identically to the fresh one
     o1, o2 = str(tmp_path / "o1"), str(tmp_path / "o2")
-    rc1, _ = _run(["query", "--index", merged, "--output", o1,
-                   "--bm25", "fresh recrawl spark"], capsys)
-    rc2, _ = _run(["query", "--index", fresh, "--output", o2,
-                   "--bm25", "fresh recrawl spark"], capsys)
+    rc1, _, _ = run_job(["submit_search", "query", "--index", merged,
+                         "--output", o1, "--bm25", "fresh recrawl spark"])
+    rc2, _, _ = run_job(["submit_search", "query", "--index", fresh,
+                         "--output", o2, "--bm25", "fresh recrawl spark"])
     assert rc1 == 0 and rc2 == 0
     r1 = [tuple(r) for r in spark.read.parquet(f"{o1}/results")
           .orderBy("doc_id").collect()]
@@ -126,21 +125,23 @@ def test_search_job_merge_equals_fresh_build(spark, tmp_path, capsys):
     assert r1 == r2
 
     # merge refuses in-place overwrite
-    rc, _ = _run(["merge", "--index", merged, "--delta", delta_p,
-                  "--output", merged], capsys)
+    rc, _, _ = run_job(["submit_search", "merge", "--index", merged,
+                        "--delta", delta_p, "--output", merged])
     assert rc == 2
 
 
 @pytest.mark.usefixtures("spark")
-def test_search_job_blocklist_mode(spark, tmp_path, capsys):
+def test_search_job_blocklist_mode(spark, tmp_path, run_job):
     idx = str(tmp_path / "idx")
-    rc, _ = _run(["build", "--input", DOCS, "--index", idx], capsys)
+    rc, _, _ = run_job(["submit_search", "build", "--input", DOCS,
+                        "--index", idx])
     assert rc == 0
     bl = tmp_path / "blocklist.txt"
     bl.write_text("big data merge\nwindow fast query\n\n")
     outd = str(tmp_path / "qb")
-    rc, meta = _run(["query", "--index", idx, "--output", outd,
-                     "--phrases-file", str(bl)], capsys)
+    rc, out, _ = run_job(["submit_search", "query", "--index", idx,
+                          "--output", outd, "--phrases-file", str(bl)])
+    meta = json.loads(out)
     assert rc == 0 and meta["mode"] == "blocklist" and meta["rows"] >= 1
     from resume_ocr_spark.operators import postings
     got = {(r.doc_id, r.phrase)
@@ -155,7 +156,7 @@ def test_search_job_blocklist_mode(spark, tmp_path, capsys):
 
 
 @pytest.mark.usefixtures("spark")
-def test_search_job_contract_fixes(spark, tmp_path, capsys):
+def test_search_job_contract_fixes(spark, tmp_path, run_job):
     """Review-driven CLI contracts: bm25 no-match exits 4 (matched-only
     results, no zero-score padding), tokenless phrase exits 2 instead of
     a traceback, proximity input normalizes like every other mode, and
@@ -165,47 +166,52 @@ def test_search_job_contract_fixes(spark, tmp_path, capsys):
     body_p = str(tmp_path / "body.parquet")
     docs.withColumnRenamed("text", "body").write.parquet(body_p)
     idx = str(tmp_path / "idx")
-    rc, _ = _run(["build", "--input", body_p, "--index", idx,
-                  "--text-col", "body"], capsys)
+    rc, _, _ = run_job(["submit_search", "build", "--input", body_p,
+                        "--index", idx, "--text-col", "body"])
     assert rc == 0
 
     # bm25 that matches nothing → 0 result rows → exit 4
     out1 = str(tmp_path / "o1")
-    rc, meta = _run(["query", "--index", idx, "--output", out1,
-                     "--bm25", "zzznotaword qqqneither"], capsys)
+    rc, out, _ = run_job(["submit_search", "query", "--index", idx,
+                          "--output", out1,
+                          "--bm25", "zzznotaword qqqneither"])
+    meta = json.loads(out)
     assert rc == 4 and meta["rows"] == 0
 
     # matched-only: a 1-term query returns only docs containing it
     out2 = str(tmp_path / "o2")
-    rc, _ = _run(["query", "--index", idx, "--output", out2,
-                  "--bm25", "zeppelin spark"], capsys)
+    rc, _, _ = run_job(["submit_search", "query", "--index", idx,
+                        "--output", out2, "--bm25", "zeppelin spark"])
     assert rc == 0
     assert spark.read.parquet(f"{out2}/results") \
         .filter("n_terms_matched = 0").count() == 0
 
     # tokenless phrase / bm25 → exit 2, not a traceback
-    rc, _ = _run(["query", "--index", idx, "--output", out2,
-                  "--phrase", "###"], capsys)
+    rc, _, _ = run_job(["submit_search", "query", "--index", idx,
+                        "--output", out2, "--phrase", "###"])
     assert rc == 2
-    rc, _ = _run(["query", "--index", idx, "--output", out2,
-                  "--bm25", "!!!"], capsys)
+    rc, _, _ = run_job(["submit_search", "query", "--index", idx,
+                        "--output", out2, "--bm25", "!!!"])
     assert rc == 2
 
     # proximity normalizes case/padding; duplicate terms → exit 2
     out3 = str(tmp_path / "o3")
-    rc, meta = _run(["query", "--index", idx, "--output", out3,
-                     "--proximity", "Spark, Query, Window"], capsys)
+    rc, out, _ = run_job(["submit_search", "query", "--index", idx,
+                          "--output", out3,
+                          "--proximity", "Spark, Query, Window"])
+    meta = json.loads(out)
     assert rc == 0 and meta["rows"] >= 1
-    rc, _ = _run(["query", "--index", idx, "--output", out3,
-                  "--proximity", "spark,spark"], capsys)
+    rc, _, _ = run_job(["submit_search", "query", "--index", idx,
+                        "--output", out3, "--proximity", "spark,spark"])
     assert rc == 2
 
     # snippets read the manifest's text_col (body), not a hardcoded
     # 'text' — the docs parquet has NO text column at all
     out4 = str(tmp_path / "o4")
-    rc, meta = _run(["query", "--index", idx, "--output", out4,
-                     "--phrase", "big data merge", "--snippets", body_p],
-                    capsys)
+    rc, out, _ = run_job(["submit_search", "query", "--index", idx,
+                          "--output", out4, "--phrase", "big data merge",
+                          "--snippets", body_p])
+    meta = json.loads(out)
     assert rc == 0 and meta["rows"] >= 1
     assert "big data merge" in spark.read.parquet(
         f"{out4}/results").collect()[0].snippet
@@ -218,8 +224,9 @@ def test_search_job_contract_fixes(spark, tmp_path, capsys):
      .withColumn("body", F.concat(F.lit("zeppelin "), F.col("body")))
      .write.parquet(delta_p))
     merged = str(tmp_path / "merged")
-    rc, meta = _run(["merge", "--index", idx, "--delta", delta_p,
-                     "--output", merged], capsys)
+    rc, out, _ = run_job(["submit_search", "merge", "--index", idx,
+                          "--delta", delta_p, "--output", merged])
+    meta = json.loads(out)
     assert rc == 0 and meta["n_docs"] == 505
     hits = spark.read.parquet(f"{merged}/postings").filter(
         "term = 'zeppelin'").collect()

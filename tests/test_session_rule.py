@@ -3,11 +3,14 @@ one rule: a live session comes back unchanged, a ``spark-submit`` launch
 keeps the launcher's ``--master``/``--conf`` and gains the pinned table
 only where it left a key unset, and a plain ``python`` process builds
 ``local[N, F]`` plus the table (pinned by the packaging and retry tests,
-which start that way)."""
+which start that way). ``job.main`` is the one harness every packaged
+job runs under."""
 
 from __future__ import annotations
 
+import functools
 import glob
+import importlib
 import json
 import os
 import pathlib
@@ -31,6 +34,23 @@ def test_no_session_builder_outside_session_module():
             and "SparkSession.builder" in pathlib.Path(p).read_text()]
     assert len(paths) > 20
     assert bare == []
+
+
+def test_every_job_runs_under_the_one_harness():
+    from resume_ocr_spark import job
+
+    paths = sorted(glob.glob(os.path.join(ROOT, "tools", "submit_*.py")))
+    assert len(paths) == 12
+    for p in paths:
+        name = os.path.basename(p)[:-3]
+        text = pathlib.Path(p).read_text()
+        for banned in ("print(", "sys.argv", "parse_args", "applog.",
+                       ".unpersist("):
+            assert banned not in text, (name, banned)
+        main = importlib.import_module(f"tools.{name}").main
+        assert isinstance(main, functools.partial), name
+        assert main.func is job.main, name
+        assert main.args[0].prog == name
 
 
 def test_live_session_is_returned_unchanged(spark):

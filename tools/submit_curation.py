@@ -27,36 +27,36 @@ import sys
 from pyspark.sql import functions as F
 
 from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, arg_parser,
-                                  entry, get_spark)
+                                  get_spark, harness)
+from resume_ocr_spark.storage import persisted
 
 
-@entry
-def main() -> int:
-    ap = arg_parser()
-    ap.add_argument("--benchmark", default=None,
-                    help="parquet of eval-set rows (text column)")
-    ap.add_argument("--weights", default=None,
-                    help='JSON dict of per-group sampling rates')
-    ap.add_argument("--default-weight", type=float, default=1.0)
-    ap.add_argument("--group-col", default="lang")
-    ap.add_argument("--ngram", type=int, default=13)
-    ap.add_argument("--seed", default="mix")
-    ap.add_argument("--near-dup", action="store_true",
-                    help="enable the MinHash fuzzy-dedup stage")
-    ap.add_argument("--group-quota", type=int, default=None,
-                    help="keep at most N survivors per --group-col value "
-                         "(CommonCrawl-style per-domain cap; deterministic "
-                         "hash order, overflow reported as over_quota)")
-    ap.add_argument("--minhash-k", type=int, default=128)
-    ap.add_argument("--lsh-bands", type=int, default=16)
-    ap.add_argument("--shingle", type=int, default=5)
-    ap.add_argument("--redact-pii", action="store_true",
-                    help="scrub emails/phones from the SURVIVORS' text "
-                         "before writing curated/ (annotated/ keeps the "
-                         "original text as the audit record); adds "
-                         "n_emails_redacted/n_phones_redacted columns")
-    args = ap.parse_args()
+ap = arg_parser("submit_curation")
+ap.add_argument("--benchmark", default=None,
+                help="parquet of eval-set rows (text column)")
+ap.add_argument("--weights", default=None,
+                help='JSON dict of per-group sampling rates')
+ap.add_argument("--default-weight", type=float, default=1.0)
+ap.add_argument("--group-col", default="lang")
+ap.add_argument("--ngram", type=int, default=13)
+ap.add_argument("--seed", default="mix")
+ap.add_argument("--near-dup", action="store_true",
+                help="enable the MinHash fuzzy-dedup stage")
+ap.add_argument("--group-quota", type=int, default=None,
+                help="keep at most N survivors per --group-col value "
+                     "(CommonCrawl-style per-domain cap; deterministic "
+                     "hash order, overflow reported as over_quota)")
+ap.add_argument("--minhash-k", type=int, default=128)
+ap.add_argument("--lsh-bands", type=int, default=16)
+ap.add_argument("--shingle", type=int, default=5)
+ap.add_argument("--redact-pii", action="store_true",
+                help="scrub emails/phones from the SURVIVORS' text "
+                     "before writing curated/ (annotated/ keeps the "
+                     "original text as the audit record); adds "
+                     "n_emails_redacted/n_phones_redacted columns")
 
+
+def run(args) -> dict:
     from resume_ocr_spark.operators import curate
 
     weights = json.loads(args.weights) if args.weights else None
@@ -76,8 +76,7 @@ def main() -> int:
         lsh_bands=args.lsh_bands, shingle=args.shingle,
         group_quota=args.group_quota,
     )
-    annotated.persist()
-    try:
+    with persisted(annotated):
         annotated.write.mode("overwrite").parquet(f"{args.output}/annotated")
         audit = curate.curation_audit(annotated)
         audit.write.mode("overwrite").parquet(f"{args.output}/audit")
@@ -87,9 +86,9 @@ def main() -> int:
         # downstream consumer to pick up (ADVICE r3) — annotated/ + audit/
         # stay for diagnosis, curated/ is never written.
         if rows.get("kept", 0) == 0:
-            print(json.dumps({"outcomes": rows}))
             raise Refused(NOTHING_TO_DO, "curation kept zero documents — "
-                          "refusing the run (curated/ not written)")
+                          "refusing the run (curated/ not written)",
+                          {"outcomes": rows})
         kept = annotated.filter(F.col("drop_reason").isNull()).drop(
             "drop_reason")
         if args.redact_pii:
@@ -99,11 +98,10 @@ def main() -> int:
                     .drop(args.text_col)
                     .withColumnRenamed("text_redacted", args.text_col))
         kept.write.mode("overwrite").parquet(f"{args.output}/curated")
-    finally:
-        annotated.unpersist()
-    print(json.dumps({"outcomes": rows}))
-    return 0
+    return {"outcomes": rows}
 
+
+main = harness(ap, run)
 
 if __name__ == "__main__":
     sys.exit(main())

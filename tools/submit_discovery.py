@@ -45,36 +45,35 @@ misconfiguration, not a result).
 
 from __future__ import annotations
 
-import argparse
 import sys
 
 from pyspark.sql import functions as F
 
-from resume_ocr_spark.job import (NOTHING_TO_DO, Refused, entry, get_spark,
-                                  require_columns)
+from resume_ocr_spark.job import (NOTHING_TO_DO, Refused, get_spark, harness,
+                                  parser, require_columns)
+from resume_ocr_spark.storage import persisted
 
 
-@entry
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--robots", required=True,
-                    help="parquet of (host, robots_txt) bodies")
-    ap.add_argument("--sitemaps", required=True,
-                    help="parquet of fetched (sitemap_url, sitemap_xml)")
-    ap.add_argument("--feeds", default=None,
-                    help="parquet of fetched (feed_url, feed_xml)")
-    ap.add_argument("--known", default=None,
-                    help="parquet with canonical_url — the previous "
-                         "frontier; suppresses already-known URLs")
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--no-provenance-gate", action="store_true",
-                    help="parse every provided sitemap body, advertised "
-                         "or not")
-    ap.add_argument("--max-per-host", type=int, default=None,
-                    help="per-host fetch budget for this round — exact "
-                         "deterministic two-phase cap on the frontier")
-    args = ap.parse_args()
+ap = parser("submit_discovery")
+ap.add_argument("--robots", required=True,
+                help="parquet of (host, robots_txt) bodies")
+ap.add_argument("--sitemaps", required=True,
+                help="parquet of fetched (sitemap_url, sitemap_xml)")
+ap.add_argument("--feeds", default=None,
+                help="parquet of fetched (feed_url, feed_xml)")
+ap.add_argument("--known", default=None,
+                help="parquet with canonical_url — the previous "
+                     "frontier; suppresses already-known URLs")
+ap.add_argument("--output", required=True)
+ap.add_argument("--no-provenance-gate", action="store_true",
+                help="parse every provided sitemap body, advertised "
+                     "or not")
+ap.add_argument("--max-per-host", type=int, default=None,
+                help="per-host fetch budget for this round — exact "
+                     "deterministic two-phase cap on the frontier")
 
+
+def run(args) -> dict:
     from resume_ocr_spark.operators import urltools
 
     spark = get_spark(app_name="submit_discovery")
@@ -158,29 +157,25 @@ def main() -> int:
         frontier = frontier.join(
             known.select("canonical_url").hint("merge"),
             "canonical_url", "left_anti")
-        frontier = frontier.persist()
-        n_frontier = frontier.count()
-        audit.append(("known_suppressed", before - n_frontier))
-    else:
-        frontier = frontier.persist()
-        n_frontier = frontier.count()
 
-    audit.append(("sitemap_urls", pages.filter(
-        F.col("via") == "sitemap").count()))
-    n_pending = pending.count()
-    audit.append(("pending", n_pending))
-    audit.append(("frontier", n_frontier))
+    with persisted(frontier):
+        n_frontier = frontier.count()
+        if args.known:
+            audit.append(("known_suppressed", before - n_frontier))
+        audit.append(("sitemap_urls", pages.filter(
+            F.col("via") == "sitemap").count()))
+        audit.append(("pending", pending.count()))
+        audit.append(("frontier", n_frontier))
 
-    frontier.write.mode("overwrite").parquet(f"{args.output}/frontier")
-    pending.write.mode("overwrite").parquet(f"{args.output}/pending")
+        frontier.write.mode("overwrite").parquet(f"{args.output}/frontier")
+        pending.write.mode("overwrite").parquet(f"{args.output}/pending")
     spark.createDataFrame(
         [(k, int(v)) for k, v in audit], "counter string, n long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{args.output}/audit")
-    for k, v in audit:
-        print(f"{k}: {v}")
-    frontier.unpersist()
-    return 0
+    return dict(audit)
 
+
+main = harness(ap, run)
 
 if __name__ == "__main__":
     sys.exit(main())

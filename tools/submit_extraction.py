@@ -12,34 +12,26 @@ app/routers/analysis.py:518-539).
 
 from __future__ import annotations
 
-import argparse
 import os
 import sys
 
 from pyspark.sql import functions as F
 
 from resume_ocr_spark.job import (ALL_FAILED, INVALID, UNREACHABLE, Refused,
-                                  entry, get_spark)
+                                  get_spark, harness, parser)
 
 
-@entry
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--warehouse", required=True)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--run-id", required=True)
-    ap.add_argument("--query", default=None)  # ranked vs summary mode
-    ap.add_argument("--chunk-size", type=int, default=None)
-    ap.add_argument("--log-dir", default="logs")
-    args = ap.parse_args()
+ap = parser("submit_extraction")
+ap.add_argument("--warehouse", required=True)
+ap.add_argument("--output", required=True)
+ap.add_argument("--run-id", required=True)
+ap.add_argument("--query", default=None)  # ranked vs summary mode
+ap.add_argument("--chunk-size", type=int, default=None)
 
-    from resume_ocr_spark import applog, pipeline
+
+def run(args) -> dict:
+    from resume_ocr_spark import pipeline
     from resume_ocr_spark.textproc import normalize_query, query_terms
-
-    # S7 rotating app-log sink (reference: app/config/logging_config.py)
-    applog.setup_logging(args.log_dir)
-    applog.log_run_event(args.run_id, "run_start",
-                         warehouse=args.warehouse, output=args.output)
 
     # P12 query normalization then driver-side validation (reference F9,
     # llm_service.py:158-235 — rejects the whole run before executor work)
@@ -72,19 +64,16 @@ def main() -> int:
     # ranked frame would add a top-k job for nothing
     n_ok = (spark.read.parquet(pipeline.extracted_path(args.output))
             .filter(F.col("doc_error").isNull()).count())
-    applog.log_run_event(
-        args.run_id, "run_complete",
-        buckets=summary["buckets_complete"], docs=summary["docs_processed"],
-        ocr_pages=summary["ocr_pages"],
-        parse_failures=summary["parse_failures"], ok_docs=n_ok)
-    print(f"run={args.run_id} buckets={summary['buckets_complete']} "
-          f"docs={summary['docs_processed']} ocr_pages={summary['ocr_pages']} "
-          f"parse_failures={summary['parse_failures']} ok_docs={n_ok}")
+    audit = {"run": args.run_id, "buckets": summary["buckets_complete"],
+             "docs": summary["docs_processed"],
+             "ocr_pages": summary["ocr_pages"],
+             "parse_failures": summary["parse_failures"], "ok_docs": n_ok}
     if n_ok == 0 and summary["docs_processed"] > 0:
-        applog.log_run_event(args.run_id, "all_failed")
-        raise Refused(ALL_FAILED, "all documents failed")
-    return 0
+        raise Refused(ALL_FAILED, "all documents failed", audit)
+    return audit
 
+
+main = harness(ap, run)
 
 if __name__ == "__main__":
     sys.exit(main())

@@ -27,33 +27,32 @@ not a result; spans/ is never written in that case.
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
 
 from pyspark.sql import functions as F
 
-from resume_ocr_spark.job import NOTHING_TO_DO, Refused, entry, get_spark
+from resume_ocr_spark.job import (NOTHING_TO_DO, Refused, get_spark, harness,
+                                  parser, written)
+from resume_ocr_spark.storage import persisted
 
 
-@entry
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--html-col", default="html")
-    ap.add_argument("--id-col", default="doc_id")
-    ap.add_argument("--chrome-min-docs", type=int, default=2,
-                    help="drop every copy of a media_ref seen in >= N "
-                         "distinct documents (site chrome)")
-    ap.add_argument("--keep-chrome", action="store_true",
-                    help="skip boilerplate-media removal entirely")
-    ap.add_argument("--image-token-cost", type=int, default=64)
-    ap.add_argument("--budget", type=int, default=8192)
-    ap.add_argument("--shards", type=int, default=256)
-    ap.add_argument("--no-pack", action="store_true")
-    args = ap.parse_args()
+ap = parser("submit_interleave")
+ap.add_argument("--input", required=True)
+ap.add_argument("--output", required=True)
+ap.add_argument("--html-col", default="html")
+ap.add_argument("--id-col", default="doc_id")
+ap.add_argument("--chrome-min-docs", type=int, default=2,
+                help="drop every copy of a media_ref seen in >= N "
+                     "distinct documents (site chrome)")
+ap.add_argument("--keep-chrome", action="store_true",
+                help="skip boilerplate-media removal entirely")
+ap.add_argument("--image-token-cost", type=int, default=64)
+ap.add_argument("--budget", type=int, default=8192)
+ap.add_argument("--shards", type=int, default=256)
+ap.add_argument("--no-pack", action="store_true")
 
+
+def run(args) -> dict:
     from resume_ocr_spark.operators import interleave
 
     spark = get_spark(app_name="submit_interleave")
@@ -69,8 +68,7 @@ def main() -> int:
     else:
         table = interleave.drop_frequent_media(
             raw, min_docs=args.chrome_min_docs)
-    table.persist()
-    try:
+    with persisted(table):
         stats = table.agg(
             F.count(F.lit(1)).alias("docs"),
             F.sum(F.size("spans")).alias("spans"),
@@ -82,28 +80,24 @@ def main() -> int:
         # a complete-looking table for a downstream consumer (the
         # submit_curation zero-keep convention)
         if audit["spans"] == 0:
-            print(json.dumps(audit))
             raise Refused(NOTHING_TO_DO, "ingest produced zero spans — "
-                          "refusing the run (spans/ not written)")
+                          "refusing the run (spans/ not written)", audit)
         table.write.mode("overwrite").parquet(f"{args.output}/spans")
 
-        pairs = interleave.caption_pairs(table)
-        pairs.write.mode("overwrite").parquet(f"{args.output}/pairs")
-        audit["pairs"] = spark.read.parquet(f"{args.output}/pairs").count()
+        audit["pairs"] = written(interleave.caption_pairs(table),
+                                 f"{args.output}/pairs").count()
 
         if not args.no_pack:
             packed = interleave.pack_interleaved(
                 table, image_token_cost=args.image_token_cost,
                 budget=args.budget, shards=args.shards)
-            packed.write.mode("overwrite").parquet(f"{args.output}/packed")
             audit["sequences"] = (
-                spark.read.parquet(f"{args.output}/packed")
+                written(packed, f"{args.output}/packed")
                 .select("shard", "seq_id").distinct().count())
-    finally:
-        table.unpersist()
-    print(json.dumps(audit))
-    return 0
+    return audit
 
+
+main = harness(ap, run)
 
 if __name__ == "__main__":
     sys.exit(main())

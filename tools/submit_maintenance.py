@@ -26,17 +26,17 @@ real table serves these from metadata, no scan). Columns must be integral.
 
 from __future__ import annotations
 
-import argparse
 import os
 import sys
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from resume_ocr_spark.job import INVALID, Refused, entry, get_spark
+from resume_ocr_spark.job import (INVALID, Refused, get_spark, harness, parser,
+                                  written)
 
 
-def _zorder(spark: SparkSession, args) -> int:
+def _zorder(spark: SparkSession, args) -> dict:
     from resume_ocr_spark.operators import maintenance as mt
 
     cols = [c for c in args.cols.split(",") if c]
@@ -51,24 +51,20 @@ def _zorder(spark: SparkSession, args) -> int:
     laid = mt.zorder_layout(df, cols, mins, maxs,
                             bits=args.bits, n_files=args.n_files)
     data_path = os.path.join(args.output, "data")
-    laid.write.mode("overwrite").parquet(data_path)
     # manifest: per-FILE row counts and per-column min/max — the stats a
     # reader prunes on; written from the landed files so it certifies the
     # actual layout, not the plan
-    landed = spark.read.parquet(data_path).withColumn(
-        "file", F.input_file_name())
+    landed = written(laid, data_path).withColumn("file", F.input_file_name())
     manifest = landed.groupBy("file").agg(
         F.count(F.lit(1)).alias("rows"),
         *[f for c in cols for f in (F.min(c).alias(f"min_{c}"),
                                     F.max(c).alias(f"max_{c}"))])
     manifest.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(args.output, "manifest"))
-    n = manifest.count()
-    print(f"z-ordered {args.table} on {cols} into {n} file(s)")
-    return 0
+    return {"mode": "zorder", "files": manifest.count()}
 
 
-def _compact(spark: SparkSession, args) -> int:
+def _compact(spark: SparkSession, args) -> dict:
     from resume_ocr_spark.operators import maintenance as mt
 
     rows = []
@@ -89,11 +85,10 @@ def _compact(spark: SparkSession, args) -> int:
         os.path.join(args.output, "plan"))
     n_grp = plan.filter("group IS NOT NULL") \
         .select("partition", "group").distinct().count()
-    print(f"planned {n_grp} rewrite group(s) over {len(rows)} file(s)")
-    return 0
+    return {"mode": "compact", "groups": n_grp, "files": len(rows)}
 
 
-def _orphans(spark: SparkSession, args) -> int:
+def _orphans(spark: SparkSession, args) -> dict:
     from resume_ocr_spark.operators import maintenance as mt
 
     try:
@@ -109,27 +104,25 @@ def _orphans(spark: SparkSession, args) -> int:
     orphans = mt.orphan_files(storage, manifests, retained)
     orphans.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(args.output, "orphans"))
-    print(f"found {orphans.count()} orphan file(s)")
-    return 0
+    return {"mode": "orphans", "orphans": orphans.count()}
 
 
-@entry
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--mode", required=True,
-                    choices=["zorder", "compact", "orphans"])
-    ap.add_argument("--table", default=None)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--cols", default="")
-    ap.add_argument("--bits", type=int, default=8)
-    ap.add_argument("--n-files", type=int, default=32)
-    ap.add_argument("--target-bytes", type=int, default=134217728)
-    ap.add_argument("--small-factor", type=float, default=0.75)
-    ap.add_argument("--manifests", default=None)
-    ap.add_argument("--storage", default=None)
-    ap.add_argument("--retain", default="")
-    args = ap.parse_args()
+ap = parser("submit_maintenance")
+ap.add_argument("--mode", required=True,
+                choices=["zorder", "compact", "orphans"])
+ap.add_argument("--table", default=None)
+ap.add_argument("--output", required=True)
+ap.add_argument("--cols", default="")
+ap.add_argument("--bits", type=int, default=8)
+ap.add_argument("--n-files", type=int, default=32)
+ap.add_argument("--target-bytes", type=int, default=134217728)
+ap.add_argument("--small-factor", type=float, default=0.75)
+ap.add_argument("--manifests", default=None)
+ap.add_argument("--storage", default=None)
+ap.add_argument("--retain", default="")
 
+
+def run(args) -> dict:
     if args.mode in ("zorder", "compact") and not args.table:
         raise Refused(INVALID, "--table required")
     if args.mode == "orphans" and not (args.manifests and args.storage):
@@ -144,6 +137,8 @@ def main() -> int:
         return _compact(spark, args)
     return _orphans(spark, args)
 
+
+main = harness(ap, run)
 
 if __name__ == "__main__":
     sys.exit(main())

@@ -21,27 +21,27 @@ a result — nothing is written in that case)."""
 
 from __future__ import annotations
 
-import json
 import sys
 
 from pyspark.sql import functions as F
 
 from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, arg_parser,
-                                  entry, get_spark, require_columns)
+                                  get_spark, harness, require_columns,
+                                  written)
 
 
-@entry
-def main() -> int:
-    ap = arg_parser()
-    ap.add_argument("--objective", choices=("fim", "span", "both"),
-                    default="both")
-    ap.add_argument("--rate", type=float, default=0.5)
-    ap.add_argument("--min-words", type=int, default=8)
-    ap.add_argument("--stride", type=int, default=16)
-    ap.add_argument("--span-len", type=int, default=3)
-    ap.add_argument("--seed", default="fim")
-    ap.add_argument("--span-seed", default="t5")
-    args = ap.parse_args()
+ap = arg_parser("submit_objectives")
+ap.add_argument("--objective", choices=("fim", "span", "both"),
+                default="both")
+ap.add_argument("--rate", type=float, default=0.5)
+ap.add_argument("--min-words", type=int, default=8)
+ap.add_argument("--stride", type=int, default=16)
+ap.add_argument("--span-len", type=int, default=3)
+ap.add_argument("--seed", default="fim")
+ap.add_argument("--span-seed", default="t5")
+
+
+def run(args) -> dict:
     if not (0.0 <= args.rate <= 1.0) or args.min_words < 3 \
             or not 0 < args.span_len < args.stride:
         raise Refused(INVALID, "invalid objective dials")
@@ -78,19 +78,18 @@ def main() -> int:
     audit["n_docs"] = int(stats["n_docs"])
     audit["n_words"] = int(stats["n_words"])
     if fim is not None:
-        fim.write.mode("overwrite").parquet(f"{args.output}/fim")
-        back = spark.read.parquet(f"{args.output}/fim")
+        back = written(fim, f"{args.output}/fim")
         audit["fim_applied"] = back.filter("fim_applied").count()
     if span is not None:
-        span.write.mode("overwrite").parquet(f"{args.output}/span")
-        back = spark.read.parquet(f"{args.output}/span")
+        back = written(span, f"{args.output}/span")
         m = back.agg(F.sum("n_masked").alias("m"),
                      F.sum("n_spans").alias("s")).collect()[0]
         audit["span_masked_words"] = int(m["m"])
         audit["span_runs"] = int(m["s"])
-    print(json.dumps(audit))
-    return 0
+    return audit
 
+
+main = harness(ap, run)
 
 if __name__ == "__main__":
     sys.exit(main())

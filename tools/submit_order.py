@@ -29,26 +29,26 @@ empty corpus before any write."""
 
 from __future__ import annotations
 
-import json
 import sys
 
 from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, arg_parser,
-                                  entry, get_spark, require_columns)
+                                  get_spark, harness, require_columns,
+                                  written)
 
 
-@entry
-def main() -> int:
-    ap = arg_parser()
-    ap.add_argument("--schedule", choices=("epoch", "anneal"),
-                    default="epoch")
-    ap.add_argument("--epochs", type=int, default=1)
-    ap.add_argument("--shards", type=int, default=64)
-    ap.add_argument("--seed", default=None)
-    ap.add_argument("--final-frac", type=float, default=0.25)
-    ap.add_argument("--quality-col", default="quality")
-    ap.add_argument("--sample-rate", type=float, default=0.5)
-    ap.add_argument("--pack-budget", type=int, default=None)
-    args = ap.parse_args()
+ap = arg_parser("submit_order")
+ap.add_argument("--schedule", choices=("epoch", "anneal"),
+                default="epoch")
+ap.add_argument("--epochs", type=int, default=1)
+ap.add_argument("--shards", type=int, default=64)
+ap.add_argument("--seed", default=None)
+ap.add_argument("--final-frac", type=float, default=0.25)
+ap.add_argument("--quality-col", default="quality")
+ap.add_argument("--sample-rate", type=float, default=0.5)
+ap.add_argument("--pack-budget", type=int, default=None)
+
+
+def run(args) -> dict:
     if args.epochs < 1 or args.shards < 1 \
             or not 0.0 < args.final_frac < 1.0 \
             or not 0.0 < args.sample_rate <= 1.0 \
@@ -109,13 +109,12 @@ def main() -> int:
             docs.select(args.id_col, args.text_col), id_col=args.id_col,
             text_col=args.text_col, budget=args.pack_budget,
             shards=args.shards)
-        packed.write.mode("overwrite").parquet(f"{args.output}/packed")
-        audit["packed_sequences"] = spark.read.parquet(
-            f"{args.output}/packed").count()
+        audit["packed_sequences"] = written(
+            packed, f"{args.output}/packed").count()
+    return audit
 
-    print(json.dumps(audit))
-    return 0
 
+main = harness(ap, run)
 
 if __name__ == "__main__":
     sys.exit(main())

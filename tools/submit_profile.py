@@ -37,19 +37,20 @@ import sys
 from pyspark.sql import functions as F
 
 from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, arg_parser,
-                                  entry, get_spark)
+                                  get_spark, harness, written)
+from resume_ocr_spark.storage import persisted
 
 
-@entry
-def main() -> int:
-    ap = arg_parser()
-    ap.add_argument("--state", default=None,
-                    help="a prior run's --output dir; its sketch tables "
-                         "are merged in (incremental profiling)")
-    ap.add_argument("--group-col", default="lang")
-    ap.add_argument("--len-width", type=float, default=200.0)
-    ap.add_argument("--topk", type=int, default=20)
-    args = ap.parse_args()
+ap = arg_parser("submit_profile")
+ap.add_argument("--state", default=None,
+                help="a prior run's --output dir; its sketch tables "
+                     "are merged in (incremental profiling)")
+ap.add_argument("--group-col", default="lang")
+ap.add_argument("--len-width", type=float, default=200.0)
+ap.add_argument("--topk", type=int, default=20)
+
+
+def run(args) -> dict:
     if args.topk <= 0 or args.len_width <= 0:
         raise Refused(INVALID, "invalid sizing arguments")
     import os.path as _p
@@ -70,59 +71,55 @@ def main() -> int:
         F.col(args.text_col).alias("text"))
 
     words = (docs.select(g, F.explode(_tokens("text")).alias("word"))
-             .filter(F.col("word") != "")).persist()
-    if words.limit(1).count() == 0:
-        words.unpersist()
-        raise Refused(NOTHING_TO_DO,
-                      "input yields zero words — refusing the run")
+             .filter(F.col("word") != ""))
+    with persisted(words):
+        if words.limit(1).count() == 0:
+            raise Refused(NOTHING_TO_DO,
+                          "input yields zero words — refusing the run")
 
-    # --- batch sketches (one scan of the words frame, all bounded-state)
-    hll = sk.hll_registers(words, "word", [g])
-    cms = sk.cms_build(words.select("word"), "word")
-    lens = sk.histogram_bins(
-        docs.select(g, F.length("text").cast("double").alias("len")),
-        "len", [g], width=args.len_width)
-    totals = words.groupBy(g).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_words")
-    ).join(
-        docs.groupBy(g).agg(F.count(F.lit(1)).cast("bigint")
-                            .alias("n_docs")), g)
-    cand = (words.groupBy("word")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .orderBy(F.desc("c"), "word")
-            .limit(4 * args.topk).select("word"))
+        # --- batch sketches (one scan of the words frame, all bounded-state)
+        hll = sk.hll_registers(words, "word", [g])
+        cms = sk.cms_build(words.select("word"), "word")
+        lens = sk.histogram_bins(
+            docs.select(g, F.length("text").cast("double").alias("len")),
+            "len", [g], width=args.len_width)
+        totals = words.groupBy(g).agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_words")
+        ).join(
+            docs.groupBy(g).agg(F.count(F.lit(1)).cast("bigint")
+                                .alias("n_docs")), g)
+        cand = (words.groupBy("word")
+                .agg(F.count(F.lit(1)).alias("c"))
+                .orderBy(F.desc("c"), "word")
+                .limit(4 * args.topk).select("word"))
 
-    # --- merge prior state (sketch-table merges; batches 1..N never rescan)
-    if args.state:
-        hll = sk.hll_merge(
-            spark.read.parquet(f"{args.state}/hll_words"), hll, [g])
-        cms = sk.cms_merge(
-            spark.read.parquet(f"{args.state}/cms_words"), cms)
-        lens = sk.histogram_merge(
-            spark.read.parquet(f"{args.state}/len_bins"), lens, [g])
-        totals = (
-            spark.read.parquet(f"{args.state}/totals").union(totals)
-            .groupBy(g).agg(F.sum("n_words").cast("bigint").alias("n_words"),
-                            F.sum("n_docs").cast("bigint").alias("n_docs"))
-            .select(g, "n_words", "n_docs"))
-        cand = (spark.read.parquet(f"{args.state}/candidates")
-                .union(cand).distinct())
+        # --- merge prior state (sketch merges; batches 1..N never rescan)
+        if args.state:
+            hll = sk.hll_merge(
+                spark.read.parquet(f"{args.state}/hll_words"), hll, [g])
+            cms = sk.cms_merge(
+                spark.read.parquet(f"{args.state}/cms_words"), cms)
+            lens = sk.histogram_merge(
+                spark.read.parquet(f"{args.state}/len_bins"), lens, [g])
+            totals = (
+                spark.read.parquet(f"{args.state}/totals").union(totals)
+                .groupBy(g)
+                .agg(F.sum("n_words").cast("bigint").alias("n_words"),
+                     F.sum("n_docs").cast("bigint").alias("n_docs"))
+                .select(g, "n_words", "n_docs"))
+            cand = (spark.read.parquet(f"{args.state}/candidates")
+                    .union(cand).distinct())
 
-    # --- persist the mergeable state (the next run's --state)
-    hll.write.mode("overwrite").parquet(f"{args.output}/hll_words")
-    cms.write.mode("overwrite").parquet(f"{args.output}/cms_words")
-    lens.write.mode("overwrite").parquet(f"{args.output}/len_bins")
-    totals.select(g, "n_words", "n_docs").write.mode("overwrite") \
-        .parquet(f"{args.output}/totals")
-    cand.write.mode("overwrite").parquet(f"{args.output}/candidates")
+        # --- persist the mergeable state (the next run's --state)
+        hll_t = written(hll, f"{args.output}/hll_words")
+        cms_t = written(cms, f"{args.output}/cms_words")
+        lens_t = written(lens, f"{args.output}/len_bins")
+        tot_t = written(totals.select(g, "n_words", "n_docs"),
+                        f"{args.output}/totals")
+        cand_t = written(cand, f"{args.output}/candidates")
 
-    # --- derived profile (reads back the persisted state so the written
-    # files, not the lineage, are what the profile certifies)
-    hll_t = spark.read.parquet(f"{args.output}/hll_words")
-    lens_t = spark.read.parquet(f"{args.output}/len_bins")
-    cms_t = spark.read.parquet(f"{args.output}/cms_words")
-    cand_t = spark.read.parquet(f"{args.output}/candidates")
-    tot_t = spark.read.parquet(f"{args.output}/totals")
+    # --- derived profile (from the written state: the files, not the
+    # lineage, are what the profile certifies)
 
     est = sk.hll_estimate(hll_t, [g]).select(
         g, F.col("est_distinct").alias("est_distinct_words"))
@@ -140,11 +137,10 @@ def main() -> int:
     top.coalesce(1).write.mode("overwrite") \
         .parquet(f"{args.output}/top_words")
 
-    n_groups = profile.count()
-    words.unpersist()
-    print(f"profiled {n_groups} group(s) -> {args.output}")
-    return 0
+    return {"groups": profile.count()}
 
+
+main = harness(ap, run)
 
 if __name__ == "__main__":
     sys.exit(main())

@@ -39,38 +39,36 @@ row makes it visible.
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
 
 from pyspark.sql import functions as F
 
-from resume_ocr_spark.job import (NOTHING_TO_DO, Refused, entry, get_spark,
-                                  require_columns)
+from resume_ocr_spark.job import (NOTHING_TO_DO, Refused, get_spark, harness,
+                                  parser, require_columns)
+from resume_ocr_spark.storage import persisted
 
 
-@entry
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--new", required=True,
-                    help="parquet of the new crawl (url + content columns)")
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--manifest", default=None,
-                    help="parquet (url, digest) manifest from the previous "
-                         "run; omit on the first run")
-    ap.add_argument("--robots", default=None,
-                    help="parquet of (host, robots_txt) bodies")
-    ap.add_argument("--agent", default="*",
-                    help="product token for robots.txt group selection")
-    ap.add_argument("--url-col", default="url")
-    ap.add_argument("--content-col", default="html")
-    ap.add_argument("--no-noindex-gate", action="store_true",
-                    help="skip the <meta name=robots> noindex drop")
-    ap.add_argument("--default-deny", action="store_true",
-                    help="robots.txt default: deny when no rule matches "
-                         "(RFC default is allow)")
-    args = ap.parse_args()
+ap = parser("submit_refresh")
+ap.add_argument("--new", required=True,
+                help="parquet of the new crawl (url + content columns)")
+ap.add_argument("--output", required=True)
+ap.add_argument("--manifest", default=None,
+                help="parquet (url, digest) manifest from the previous "
+                     "run; omit on the first run")
+ap.add_argument("--robots", default=None,
+                help="parquet of (host, robots_txt) bodies")
+ap.add_argument("--agent", default="*",
+                help="product token for robots.txt group selection")
+ap.add_argument("--url-col", default="url")
+ap.add_argument("--content-col", default="html")
+ap.add_argument("--no-noindex-gate", action="store_true",
+                help="skip the <meta name=robots> noindex drop")
+ap.add_argument("--default-deny", action="store_true",
+                help="robots.txt default: deny when no rule matches "
+                     "(RFC default is allow)")
 
+
+def run(args) -> dict:
     from resume_ocr_spark.operators import urltools
 
     spark = get_spark(app_name="submit_refresh")
@@ -103,9 +101,7 @@ def main() -> int:
             "url", F.lit("added").alias("status"),
             F.lit(None).cast("string").alias("old_digest"),
             "new_digest", *passthrough)
-    delta.persist()
-    work = None
-    try:
+    with persisted(delta):
         status_counts = {
             r["status"]: r["n"] for r in
             delta.groupBy("status").agg(F.count("*").alias("n")).collect()}
@@ -138,30 +134,26 @@ def main() -> int:
             aggs.append(F.sum((keep_cond & F.col("robots_noindex"))
                               .cast("long")).alias("noindex_dropped"))
             keep_cond = keep_cond & ~F.col("robots_noindex")
-        work = work.persist()
-        counters = work.agg(*aggs).collect()[0].asDict()
-        n_work = counters.pop("n_work")
-        for k in ("robots_denied", "noindex_dropped"):
-            if k in counters:
-                v = int(counters[k] or 0)
-                audit_rows.append((k, v))
-                n_work -= v
-        audit_rows.append(("emitted", int(n_work)))
+        with persisted(work):
+            counters = work.agg(*aggs).collect()[0].asDict()
+            n_work = counters.pop("n_work")
+            for k in ("robots_denied", "noindex_dropped"):
+                if k in counters:
+                    v = int(counters[k] or 0)
+                    audit_rows.append((k, v))
+                    n_work -= v
+            audit_rows.append(("emitted", int(n_work)))
 
-        work.filter(keep_cond).write.mode("overwrite").parquet(
-            f"{args.output}/delta")
-        manifest_out.write.mode("overwrite").parquet(
-            f"{args.output}/manifest")
-        spark.createDataFrame(
-            audit_rows, "outcome string, n_pages bigint"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{args.output}/audit")
-    finally:
-        delta.unpersist()
-        if work is not None:
-            work.unpersist()
-    print(json.dumps({"outcomes": dict(audit_rows)}))
-    return 0
+            work.filter(keep_cond).write.mode("overwrite").parquet(
+                f"{args.output}/delta")
+    manifest_out.write.mode("overwrite").parquet(f"{args.output}/manifest")
+    spark.createDataFrame(
+        audit_rows, "outcome string, n_pages bigint"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{args.output}/audit")
+    return {"outcomes": dict(audit_rows)}
 
+
+main = harness(ap, run)
 
 if __name__ == "__main__":
     sys.exit(main())

@@ -29,14 +29,13 @@ matches nothing exits NOTHING_TO_DO.
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
 
 from pyspark.sql import functions as F
 
-from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, entry,
-                                  get_spark, require_columns)
+from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, get_spark,
+                                  harness, parser, require_columns, written)
 
 
 def _load_index(spark, path):
@@ -47,7 +46,7 @@ def _load_index(spark, path):
     return post, dl, man
 
 
-def _build(spark, args) -> int:
+def _build(spark, args) -> dict:
     from resume_ocr_spark.operators import postings as P
 
     docs = spark.read.parquet(args.input)
@@ -62,12 +61,10 @@ def _build(spark, args) -> int:
         json.dump({"layout": "postings-v1", "id_col": args.id_col,
                    "text_col": args.text_col,
                    "n_buckets": args.n_buckets, "n_docs": n_docs}, fh)
-    print(json.dumps({"mode": "build", "n_docs": n_docs,
-                      "n_buckets": args.n_buckets}))
-    return 0
+    return {"mode": "build", "n_docs": n_docs, "n_buckets": args.n_buckets}
 
 
-def _query(spark, args) -> int:
+def _query(spark, args) -> dict:
     from resume_ocr_spark.operators import postings as P
 
     modes = [m for m in (args.bm25, args.phrase, args.proximity,
@@ -124,16 +121,16 @@ def _query(spark, args) -> int:
         out = idx.proximity(terms, max_window=args.max_window)
         mode = "proximity"
 
-    out.write.mode("overwrite").parquet(f"{args.output}/results")
-    n = spark.read.parquet(f"{args.output}/results").count()
+    n = written(out, f"{args.output}/results").count()
     buckets = sorted({P.term_bucket(t, man["n_buckets"]) for t in terms})
-    print(json.dumps({"mode": mode, "rows": n, "terms": len(terms),
-                      "buckets_touched": buckets,
-                      "n_buckets": man["n_buckets"]}))
-    return 0 if n > 0 else NOTHING_TO_DO
+    audit = {"mode": mode, "rows": n, "terms": len(terms),
+             "buckets_touched": buckets, "n_buckets": man["n_buckets"]}
+    if n == 0:
+        raise Refused(NOTHING_TO_DO, "the query matched nothing", audit)
+    return audit
 
 
-def _merge(spark, args) -> int:
+def _merge(spark, args) -> dict:
     from resume_ocr_spark.operators import postings as P
 
     import os.path as _p
@@ -152,55 +149,54 @@ def _merge(spark, args) -> int:
         .parquet(f"{args.output}/postings")
     dl_m = P.merge_postings(dl, P.doc_lengths(delta, man["id_col"],
                                               text_col), man["id_col"])
-    dl_m.write.mode("overwrite").parquet(f"{args.output}/doclens")
-    n_docs = spark.read.parquet(f"{args.output}/doclens").count()
+    n_docs = written(dl_m, f"{args.output}/doclens").count()
     man.update({"n_docs": n_docs})
     with open(f"{args.output}/manifest.json", "w") as fh:
         json.dump(man, fh)
-    print(json.dumps({"mode": "merge", "n_docs": n_docs}))
-    return 0
+    return {"mode": "merge", "n_docs": n_docs}
 
 
-@entry
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    sub = ap.add_subparsers(dest="cmd", required=True)
+ap = parser("submit_search")
+sub = ap.add_subparsers(dest="cmd", required=True)
 
-    b = sub.add_parser("build")
-    b.add_argument("--input", required=True)
-    b.add_argument("--index", required=True)
-    b.add_argument("--id-col", default="doc_id")
-    b.add_argument("--text-col", default="text")
-    b.add_argument("--n-buckets", type=int, default=64)
+b = sub.add_parser("build")
+b.add_argument("--input", required=True)
+b.add_argument("--index", required=True)
+b.add_argument("--id-col", default="doc_id")
+b.add_argument("--text-col", default="text")
+b.add_argument("--n-buckets", type=int, default=64)
 
-    q = sub.add_parser("query")
-    q.add_argument("--index", required=True)
-    q.add_argument("--output", required=True)
-    q.add_argument("--bm25", default=None)
-    q.add_argument("--phrase", default=None)
-    q.add_argument("--proximity", default=None)
-    q.add_argument("--phrases-file", default=None,
-                   help="blocklist mode: file of phrases (one per line), "
-                        "all matched in one index pass")
-    q.add_argument("--topk", type=int, default=10)
-    q.add_argument("--max-window", type=int, default=None)
-    q.add_argument("--snippets", default=None,
-                   help="docs parquet to render phrase snippets from")
-    q.add_argument("--snippet-width", type=int, default=5)
+q = sub.add_parser("query")
+q.add_argument("--index", required=True)
+q.add_argument("--output", required=True)
+q.add_argument("--bm25", default=None)
+q.add_argument("--phrase", default=None)
+q.add_argument("--proximity", default=None)
+q.add_argument("--phrases-file", default=None,
+               help="blocklist mode: file of phrases (one per line), "
+                    "all matched in one index pass")
+q.add_argument("--topk", type=int, default=10)
+q.add_argument("--max-window", type=int, default=None)
+q.add_argument("--snippets", default=None,
+               help="docs parquet to render phrase snippets from")
+q.add_argument("--snippet-width", type=int, default=5)
 
-    m = sub.add_parser("merge")
-    m.add_argument("--index", required=True)
-    m.add_argument("--delta", required=True)
-    m.add_argument("--output", required=True)
-    m.add_argument("--text-col", default=None,
-                   help="delta text column (default: the index's text_col)")
+m = sub.add_parser("merge")
+m.add_argument("--index", required=True)
+m.add_argument("--delta", required=True)
+m.add_argument("--output", required=True)
+m.add_argument("--text-col", default=None,
+               help="delta text column (default: the index's text_col)")
 
-    args = ap.parse_args()
+
+def run(args) -> dict:
     if args.cmd == "build" and args.n_buckets <= 0:
         raise Refused(INVALID, "invalid --n-buckets")
-    run = {"build": _build, "query": _query, "merge": _merge}[args.cmd]
-    return run(get_spark(app_name="submit_search"), args)
+    cmd = {"build": _build, "query": _query, "merge": _merge}[args.cmd]
+    return cmd(get_spark(app_name="submit_search"), args)
 
+
+main = harness(ap, run)
 
 if __name__ == "__main__":
     sys.exit(main())

@@ -33,34 +33,33 @@ selected/ is never written, the submit_curation convention).
 
 from __future__ import annotations
 
-import json
 import sys
 
 from pyspark.sql import functions as F
 
 from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, arg_parser,
-                                  entry, get_spark, require_columns)
+                                  get_spark, harness, require_columns,
+                                  written)
 
 
-@entry
-def main() -> int:
-    ap = arg_parser()
-    ap.add_argument("--mode", choices=("dsir", "nb"), required=True)
-    ap.add_argument("--target", default=None,
-                    help="dsir: parquet of target-domain docs")
-    ap.add_argument("--labeled", default=None,
-                    help="nb: parquet with (text, label boolean)")
-    ap.add_argument("--keep-k", type=int, default=None)
-    ap.add_argument("--keep-frac", type=float, default=None)
-    ap.add_argument("--threshold", action="store_true",
-                    help="with --keep-frac: select via a sample-estimated "
-                         "Gumbel-key quantile (zero-shuffle filter, the "
-                         "10^12-doc path) instead of exact global top-k")
-    ap.add_argument("--sample-rate", type=float, default=0.05,
-                    help="md5 sample rate for the --threshold quantile")
-    ap.add_argument("--min-score-micro", type=int, default=0)
-    args = ap.parse_args()
+ap = arg_parser("submit_selection")
+ap.add_argument("--mode", choices=("dsir", "nb"), required=True)
+ap.add_argument("--target", default=None,
+                help="dsir: parquet of target-domain docs")
+ap.add_argument("--labeled", default=None,
+                help="nb: parquet with (text, label boolean)")
+ap.add_argument("--keep-k", type=int, default=None)
+ap.add_argument("--keep-frac", type=float, default=None)
+ap.add_argument("--threshold", action="store_true",
+                help="with --keep-frac: select via a sample-estimated "
+                     "Gumbel-key quantile (zero-shuffle filter, the "
+                     "10^12-doc path) instead of exact global top-k")
+ap.add_argument("--sample-rate", type=float, default=0.05,
+                help="md5 sample rate for the --threshold quantile")
+ap.add_argument("--min-score-micro", type=int, default=0)
 
+
+def run(args) -> dict:
     if args.mode == "dsir":
         if not args.target:
             raise Refused(INVALID, "--mode dsir requires --target")
@@ -115,11 +114,10 @@ def main() -> int:
             raise Refused(NOTHING_TO_DO, f"refusing the run: {e}")
         audit = {"mode": "nb", "min_score_micro": args.min_score_micro}
 
-    scores.write.mode("overwrite").parquet(f"{args.output}/scores")
     # derive kept_ids from the parquet just written, NOT the lazy scores
     # plan — otherwise the semi-join re-runs the whole scoring scan (and
     # the dsir top-k window) a second time over the full input
-    scores_on_disk = spark.read.parquet(f"{args.output}/scores")
+    scores_on_disk = written(scores, f"{args.output}/scores")
     if args.mode == "dsir" and args.threshold:
         try:
             sel = selection.gumbel_threshold_filter(
@@ -147,12 +145,12 @@ def main() -> int:
     # AQE broadcasts the semi-join while kept_ids is small, degrades to a
     # shuffled semi-join when k is corpus-scale — both never replicate docs
     selected = docs.join(kept_ids, args.id_col, "left_semi")
-    selected.write.mode("overwrite").parquet(f"{args.output}/selected")
-    n_kept = spark.read.parquet(f"{args.output}/selected").count()
+    n_kept = written(selected, f"{args.output}/selected").count()
     audit.update({"n_in": int(n_in), "n_kept": int(n_kept)})
-    print(json.dumps(audit))
-    return 0
+    return audit
 
+
+main = harness(ap, run)
 
 if __name__ == "__main__":
     sys.exit(main())

@@ -19,26 +19,26 @@ that case)."""
 
 from __future__ import annotations
 
-import json
 import sys
 
 from pyspark.sql import functions as F
 
 from resume_ocr_spark.job import (INVALID, NOTHING_TO_DO, Refused, arg_parser,
-                                  entry, get_spark)
+                                  get_spark, harness)
+from resume_ocr_spark.storage import persisted
 
 
-@entry
-def main() -> int:
-    ap = arg_parser()
-    ap.add_argument("--merges", default=None,
-                    help="parquet (rank, a, b) of a trained merge table; "
-                         "skips training")
-    ap.add_argument("--num-merges", type=int, default=2000)
-    ap.add_argument("--sample-docs", type=int, default=10000)
-    ap.add_argument("--budget", type=int, default=2048)
-    ap.add_argument("--shards", type=int, default=64)
-    args = ap.parse_args()
+ap = arg_parser("submit_tokenize")
+ap.add_argument("--merges", default=None,
+                help="parquet (rank, a, b) of a trained merge table; "
+                     "skips training")
+ap.add_argument("--num-merges", type=int, default=2000)
+ap.add_argument("--sample-docs", type=int, default=10000)
+ap.add_argument("--budget", type=int, default=2048)
+ap.add_argument("--shards", type=int, default=64)
+
+
+def run(args) -> dict:
     if args.num_merges < 0 or args.sample_docs <= 0 \
             or args.budget <= 0 or args.shards <= 0:
         raise Refused(INVALID, "invalid sizing arguments")
@@ -59,8 +59,7 @@ def main() -> int:
 
     counts = bpe.with_bpe_token_counts(
         docs, merges, id_col=args.id_col, text_col=args.text_col)
-    counts.persist()
-    try:
+    with persisted(counts):
         total = counts.agg(F.sum("bpe_tokens").alias("t")).collect()[0]["t"]
         if not total:
             raise Refused(NOTHING_TO_DO, "corpus yields zero scorable words "
@@ -77,12 +76,11 @@ def main() -> int:
             id_col=args.id_col, budget=args.budget, shards=args.shards)
         packed.write.mode("overwrite").parquet(f"{args.output}/packed")
         n_docs = counts.count()
-        print(json.dumps({"n_docs": n_docs, "n_merges": len(merges),
-                          "total_tokens": int(total)}))
-    finally:
-        counts.unpersist()
-    return 0
+    return {"n_docs": n_docs, "n_merges": len(merges),
+            "total_tokens": int(total)}
 
+
+main = harness(ap, run)
 
 if __name__ == "__main__":
     sys.exit(main())
