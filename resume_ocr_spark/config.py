@@ -6,9 +6,7 @@ scale-tuning values are ours.
 
 # --- reference semantics (must not drift) ---------------------------------
 # reference: app/config/constants.py:4-16
-MAX_FILES = 20                  # per-request cap (informational; engine is unbounded)
 MAX_FILE_SIZE = 10 * 1024 * 1024  # 10 MB payload cap -> error-as-data above this
-SUPPORTED_KINDS = ("text", "html", "pdf", "image")
 # reference: app/services/ocr_service.py:61 — direct-text PDF threshold
 PDF_TEXT_THRESHOLD = 200
 # reference: app/utils/validation_service.py:149 — classifier input cap

@@ -16,10 +16,13 @@ one), prints the audit as one JSON line on stdout and returns the code:
     4  NOTHING_TO_DO  the input yields nothing to do (empty corpus, zero
                       words, no match); refused rather than writing an
                       empty-but-plausible output tree
+    5  CRASHED        the run raised; its traceback goes to stderr
 
 A job gets its session from ``get_spark`` (re-exported from ``session``)
 and refuses by raising :class:`Refused`: the message goes to stderr, and
-an audit the refusal carries is printed as a success's would be."""
+an audit the refusal carries is printed as a success's would be. Any
+other exception is logged as ``run_failed`` and exits 5;
+``KeyboardInterrupt`` and ``SystemExit`` propagate."""
 
 from __future__ import annotations
 
@@ -28,12 +31,13 @@ import functools
 import json
 import sys
 import time
+import traceback
 import uuid
 
 from . import applog
 from .session import get_spark  # noqa: F401 — re-exported for the jobs
 
-ALL_FAILED, INVALID, UNREACHABLE, NOTHING_TO_DO = 1, 2, 3, 4
+ALL_FAILED, INVALID, UNREACHABLE, NOTHING_TO_DO, CRASHED = 1, 2, 3, 4, 5
 
 
 class Refused(Exception):
@@ -61,9 +65,10 @@ def main(ap, run, argv=None) -> int:
             print(json.dumps(r.audit))
         print(r, file=sys.stderr)
         return r.code
-    except BaseException as exc:
+    except Exception as exc:
         log("run_failed", error=repr(exc))
-        raise
+        traceback.print_exc()
+        return CRASHED
     log("run_complete", wall_s=round(time.monotonic() - t0, 3),
         audit=json.dumps(audit))
     print(json.dumps(audit))

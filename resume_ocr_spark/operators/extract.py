@@ -290,16 +290,10 @@ def reassemble(doc_ids_df: DataFrame, span_results: DataFrame) -> DataFrame:
         F.coalesce(F.col("ocr_pages"), F.lit(0)).alias("k_pages"),
         span_struct.alias("span"),
     )
-    null_keyed = F.lit(None).cast(
-        "struct<k_off:int,k_kind:string,k_kind_n:int,k_ref:string,k_ref_n:int,"
-        "k_text:string,k_text_n:int,k_err:string,k_err_n:int,k_pages:int,"
-        "span:struct<offset:int,kind:string,media_ref:string,"
-        "text:string,error:string,ocr_pages:int>>"
-    )
-    sentinels = doc_ids_df.select("doc_id").withColumn("kspan", null_keyed)
     rows = span_results.select("doc_id", keyed.alias("kspan"))
     return (
-        rows.unionByName(sentinels)
+        rows.unionByName(doc_ids_df.select("doc_id"),
+                         allowMissingColumns=True)
         .groupBy("doc_id")
         .agg(
             F.transform(

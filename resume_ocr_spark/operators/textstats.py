@@ -249,49 +249,191 @@ def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+def _ngram_counts(df: DataFrame, text_col: str, n: int) -> DataFrame:
+    """``(w1, …, wn, n_occurrences)`` over every run of ``n`` adjacent
+    words (the counter behind :func:`bigram_counts`/:func:`trigram_counts`)."""
+    from .dedup import _tokens
+
+    cols = [f"w{k + 1}" for k in range(n)]
+    # CASE guard: sequence(0, -1) would count DOWN (the dedup._shingles
+    # gotcha), so docs shorter than n words get an explicit empty array
+    grams = F.expr(
+        f"CASE WHEN size(_t) >= {n} THEN "
+        f"transform(sequence(0, size(_t) - {n}), i -> struct("
+        + ", ".join(f"_t[i + {k}] AS {c}" for k, c in enumerate(cols))
+        + ")) ELSE array() END")
+    return (
+        df.select(F.filter(_tokens(text_col),
+                           lambda x: x != "").alias("_t"))
+        .select(F.explode(grams).alias("p"))
+        .select(*[f"p.{c}" for c in cols])
+        .groupBy(*cols)
+        .agg(F.count(F.lit(1)).alias("n_occurrences"))
+    )
+
+
 def bigram_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adjacent-word-pair counts ``(w1, w2, n_occurrences)`` — the bigram
     model input. Pairs are built per row as an array transform (zero
     shuffle until the final count groupBy, which is bounded by the number
     of DISTINCT bigrams, not corpus size)."""
-    from .dedup import _tokens
-
-    # CASE guard: sequence(1, 0) would count DOWN (the dedup._shingles
-    # gotcha), so sub-2-word docs get an explicit empty array
-    pairs = F.expr(
-        "CASE WHEN size(_t) >= 2 THEN "
-        "transform(sequence(1, size(_t) - 1),"
-        " i -> struct(_t[i - 1] AS w1, _t[i] AS w2)) "
-        "ELSE array() END")
-    return (
-        df.select(F.filter(_tokens(text_col),
-                           lambda x: x != "").alias("_t"))
-        .select(F.explode(pairs).alias("p"))
-        .select("p.w1", "p.w2")
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("n_occurrences"))
-    )
+    return _ngram_counts(df, text_col, 2)
 
 
 def trigram_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adjacent-word-triple counts ``(w1, w2, w3, n_occurrences)`` — the
     trigram model input; same zero-shuffle per-row transform as
     :func:`bigram_counts`, groupBy bounded by DISTINCT trigrams."""
+    return _ngram_counts(df, text_col, 3)
+
+
+# --- the n-gram LM skeleton the scorers below share --------------------------
+#
+# A scorer collects its model frames to the driver under one row cap, ships
+# them back as broadcast tables, explodes the corpus into one
+# (id, word, prev[, prev2]) row per token position, left-joins the tables on
+# those contexts and averages −log p per document: one groupBy(id), and the
+# corpus never shuffles to meet the model.
+
+
+def _model_too_large(max_model_rows: int, what: str) -> ValueError:
+    return ValueError(
+        f"model too large to broadcast (>{max_model_rows} rows across "
+        f"{what}); raise min_count or train on a smaller sample")
+
+
+def _capped_collect(frames, max_model_rows: int, what: str) -> list:
+    """Each frame's rows, collected under one cap shared by all of them."""
+    # limit(cap + 1) BOUNDS the collect itself: an over-sized model pulls
+    # at most cap+1 rows to the driver before the error fires, instead of
+    # OOMing the driver first and never reaching a post-hoc length check
+    rows = [f.limit(max_model_rows + 1).collect() for f in frames]
+    if sum(map(len, rows)) > max_model_rows:
+        raise _model_too_large(max_model_rows, what)
+    return rows
+
+
+def _pruned(counts: DataFrame, n: int, min_count: int) -> DataFrame:
+    """An n-word count frame as ``(w1, …, wn, n_occurrences)`` without the
+    n-grams seen fewer than ``min_count`` times (the model-size dial)."""
+    return (counts.filter(F.col("n_occurrences") >= min_count)
+            .select(*[f"w{k + 1}" for k in range(n)], "n_occurrences"))
+
+
+def _local(spark, rows, schema: str) -> DataFrame:
+    """Driver rows as a broadcastable frame. An empty model becomes one
+    all-empty sentinel row (no token is ever "", so it never matches)."""
+    sentinel = tuple("" if f.split()[1] == "string" else 0
+                     for f in schema.split(","))
+    return spark.createDataFrame([tuple(r) for r in rows] or [sentinel],
+                                 schema)
+
+
+def _contexts(df: DataFrame, id_col: str, text_col: str, order: int,
+              carry: tuple[str, ...] = ()) -> DataFrame:
+    """``(id, *carry, word, prev[, prev2])``, aliased ``w``: one row per
+    token position, the ``order − 1`` preceding words as context (NULL
+    where the document has none). Zero-shuffle: no window, no self-join."""
     from .dedup import _tokens
 
-    triples = F.expr(
-        "CASE WHEN size(_t) >= 3 THEN "
-        "transform(sequence(1, size(_t) - 2),"
-        " i -> struct(_t[i - 1] AS w1, _t[i] AS w2, _t[i + 1] AS w3)) "
-        "ELSE array() END")
+    toks = F.filter(_tokens(text_col), lambda x: x != "")
+    ctx = ["word", "prev", "prev2"][:order]
+    # get() tolerates the out-of-range probe on empty docs (plain _t[i]
+    # throws INVALID_ARRAY_INDEX under Spark 4's stricter default)
+    pos_structs = F.expr(
+        "transform(sequence(1, greatest(size(_t), 1)),"
+        " i -> struct(get(_t, i - 1) AS word"
+        + "".join(f", CASE WHEN i > {k} THEN get(_t, i - {k + 1}) END AS {c}"
+                  for k, c in enumerate(ctx[1:], 1))
+        + "))")
     return (
-        df.select(F.filter(_tokens(text_col),
-                           lambda x: x != "").alias("_t"))
-        .select(F.explode(triples).alias("p"))
-        .select("p.w1", "p.w2", "p.w3")
-        .groupBy("w1", "w2", "w3")
-        .agg(F.count(F.lit(1)).alias("n_occurrences"))
+        df.select(F.col(id_col), *[F.col(c) for c in carry], toks.alias("_t"))
+        .select(F.col(id_col), *carry, F.explode(pos_structs).alias("s"))
+        # size-1 sequence on empty docs yields one NULL-word row → totality
+        .select(id_col, *carry, *[f"s.{c}" for c in ctx])
+        .alias("w")
     )
+
+
+def _mean_nll(joined: DataFrame, id_col: str, carry: tuple[str, ...] = (),
+              **probs) -> DataFrame:
+    """Per id (+ ``carry``): ``round(avg(−log p), 4)`` under each named
+    probability Column, plus ``n_scored_words``. The NULL-word row of a
+    zero-token document counts 0 and leaves every mean NULL."""
+    return (
+        joined.select(
+            F.col(f"w.{id_col}").alias(id_col),
+            *[F.col(f"w.{c}").alias(c) for c in carry],
+            F.col("w.word").alias("word"),
+            *[F.when(F.col("w.word").isNotNull(), -F.log(p)).alias(name)
+              for name, p in probs.items()])
+        .groupBy(id_col, *carry)
+        .agg(*[F.round(F.avg(name), 4).alias(name) for name in probs],
+             F.count("word").alias("n_scored_words"))
+    )
+
+
+class _AddAlpha:
+    """The add-α unigram + bigram model of collected count rows:
+
+      P(w)      = (c(w) + α) / (T + α·(V+1))
+      P(w|prev) = (c(prev,w) + α) / (c(prev) + α·(V+1))"""
+
+    def __init__(self, spark, uni_rows, big_rows, alpha: float):
+        self.alpha = alpha
+        self.total = float(sum(r[1] for r in uni_rows))
+        self.floor = alpha * (len(uni_rows) + 1)
+        self.uni = _local(spark, uni_rows, "word string, c bigint")
+        self.big = _local(spark, big_rows, "w1 string, w2 string, c bigint")
+
+    def join(self, words: DataFrame, tag: str = "") -> DataFrame:
+        """Left-broadcast-join c(w), c(prev) and c(prev, w) onto the
+        :func:`_contexts` frame as ``{tag}u``, ``{tag}up`` and ``{tag}b``."""
+        u, up, b = f"{tag}u", f"{tag}up", f"{tag}b"
+        return (
+            words
+            .join(F.broadcast(self.uni).alias(u),
+                  F.col("w.word") == F.col(f"{u}.word"), "left")
+            .join(F.broadcast(self.uni.withColumnRenamed("word", "pword")
+                              ).alias(up),
+                  F.col("w.prev") == F.col(f"{up}.pword"), "left")
+            .join(F.broadcast(self.big).alias(b),
+                  (F.col("w.prev") == F.col(f"{b}.w1"))
+                  & (F.col("w.word") == F.col(f"{b}.w2")), "left")
+        )
+
+    def probs(self, tag: str = ""):
+        """``(P(w), P(w|prev))`` over the columns :meth:`join` added."""
+        def c(t):
+            return F.coalesce(F.col(f"{tag}{t}.c"), F.lit(0))
+        return ((c("u") + F.lit(self.alpha)) / F.lit(self.total + self.floor),
+                (c("b") + F.lit(self.alpha)) / (c("up") + F.lit(self.floor)))
+
+    def interpolated(self, lam: float, tag: str = ""):
+        """``λ·P(w|prev) + (1−λ)·P(w)``; the first word scores P(w) alone."""
+        p_uni, p_big = self.probs(tag)
+        return F.when(F.col("w.prev").isNull(), p_uni).otherwise(
+            F.lit(lam) * p_big + F.lit(1.0 - lam) * p_uni)
+
+
+def _check_add_alpha(alpha: float, lam: float) -> None:
+    if alpha <= 0:
+        raise ValueError("alpha must be > 0 (the α floor is what keeps "
+                         "unseen words/bigrams off log(0))")
+    if not 0.0 <= lam <= 1.0:
+        raise ValueError(f"lam must be in [0, 1] (got {lam})")
+
+
+def _add_alpha_model(spark, unigrams: DataFrame, bigrams: DataFrame,
+                     alpha: float, min_count: int, max_model_rows: int,
+                     ) -> _AddAlpha:
+    """The :class:`_AddAlpha` model of one unigram + bigram frame pair,
+    both collected under one ``max_model_rows`` cap."""
+    uni_rows, big_rows = _capped_collect(
+        [unigrams.select("word", "n_occurrences"),
+         _pruned(bigrams, 2, min_count)],
+        max_model_rows, "unigrams + bigrams")
+    return _AddAlpha(spark, uni_rows, big_rows, alpha)
 
 
 def with_trigram_logprob(
@@ -325,87 +467,23 @@ def with_trigram_logprob(
     stays a zero-shuffle array transform → five broadcast joins → one
     groupBy(id). Totality matches the bigram scorer (zero-token docs →
     NULL nll, 0 words)."""
-    from .dedup import _tokens
-
     if alpha <= 0:
         raise ValueError("alpha must be > 0")
     if not (0.0 <= lam3 and 0.0 <= lam2 and lam3 + lam2 <= 1.0):
         raise ValueError(f"need lam3, lam2 >= 0 and lam3+lam2 <= 1 "
                          f"(got {lam3}, {lam2})")
     lam1 = 1.0 - lam3 - lam2
-    lam32 = lam3 + lam2
-    uni_rows = (unigrams.select("word", "n_occurrences")
-                .limit(max_model_rows + 1).collect())
-    big_rows = (
-        bigrams.filter(F.col("n_occurrences") >= min_count)
-        .select("w1", "w2", "n_occurrences")
-        .limit(max_model_rows + 1).collect()
-    )
-    tri_rows = (
-        trigrams.filter(F.col("n_occurrences") >= min_count)
-        .select("w1", "w2", "w3", "n_occurrences")
-        .limit(max_model_rows + 1).collect()
-    )
-    if len(uni_rows) + len(big_rows) + len(tri_rows) > max_model_rows:
-        raise ValueError(
-            f"model too large to broadcast (>{max_model_rows} rows across "
-            "unigrams + bigrams + trigrams); raise min_count or train on "
-            "a smaller sample")
-    total = float(sum(r["n_occurrences"] for r in uni_rows))
-    vsize = len(uni_rows)
-    floor = alpha * (vsize + 1)
+    uni_rows, big_rows, tri_rows = _capped_collect(
+        [unigrams.select("word", "n_occurrences"),
+         _pruned(bigrams, 2, min_count), _pruned(trigrams, 3, min_count)],
+        max_model_rows, "unigrams + bigrams + trigrams")
     spark = df.sparkSession
-    uni_local = spark.createDataFrame(
-        [(r["word"], int(r["n_occurrences"])) for r in uni_rows]
-        or [("", 0)],
-        "word string, c bigint",
-    )
-    big_local = spark.createDataFrame(
-        [(r["w1"], r["w2"], int(r["n_occurrences"])) for r in big_rows]
-        or [("", "", 0)],
-        "w1 string, w2 string, c bigint",
-    )
-    tri_local = spark.createDataFrame(
-        [(r["w1"], r["w2"], r["w3"], int(r["n_occurrences"]))
-         for r in tri_rows]
-        or [("", "", "", 0)],
-        "w1 string, w2 string, w3 string, c bigint",
-    )
-    toks = F.filter(_tokens(text_col), lambda x: x != "")
-    pos_structs = F.expr(
-        "transform(sequence(1, greatest(size(_t), 1)),"
-        " i -> struct(get(_t, i - 1) AS word,"
-        " CASE WHEN i > 1 THEN get(_t, i - 2) END AS prev,"
-        " CASE WHEN i > 2 THEN get(_t, i - 3) END AS prev2))")
-    words = (
-        df.select(F.col(id_col), toks.alias("_t"))
-        .select(F.col(id_col), F.explode(pos_structs).alias("s"))
-        .select(id_col, "s.word", "s.prev", "s.prev2")
-    )
-    cw = F.coalesce(F.col("u.c"), F.lit(0))
-    cprev = F.coalesce(F.col("up.c"), F.lit(0))
-    cbig = F.coalesce(F.col("b.c"), F.lit(0))
-    cctx = F.coalesce(F.col("bc.c"), F.lit(0))
-    ctri = F.coalesce(F.col("tr.c"), F.lit(0))
-    p_uni = (cw + F.lit(alpha)) / F.lit(total + floor)
-    p_big = (cbig + F.lit(alpha)) / (cprev + F.lit(floor))
-    p_tri = (ctri + F.lit(alpha)) / (cctx + F.lit(floor))
-    p = (F.when(F.col("w.prev").isNull(), p_uni)
-         .when(F.col("w.prev2").isNull(),
-               F.lit(lam32) * p_big + F.lit(lam1) * p_uni)
-         .otherwise(F.lit(lam3) * p_tri + F.lit(lam2) * p_big
-                    + F.lit(lam1) * p_uni))
-    scored = (
-        words.alias("w")
-        .join(F.broadcast(uni_local).alias("u"),
-              F.col("w.word") == F.col("u.word"), "left")
-        .join(F.broadcast(uni_local.withColumnRenamed("word", "pword")
-                          ).alias("up"),
-              F.col("w.prev") == F.col("up.pword"), "left")
-        .join(F.broadcast(big_local).alias("b"),
-              (F.col("w.prev") == F.col("b.w1"))
-              & (F.col("w.word") == F.col("b.w2")), "left")
-        .join(F.broadcast(big_local.withColumnRenamed("w1", "x1")
+    m = _AddAlpha(spark, uni_rows, big_rows, alpha)
+    tri_local = _local(spark, tri_rows,
+                       "w1 string, w2 string, w3 string, c bigint")
+    joined = (
+        m.join(_contexts(df, id_col, text_col, 3))
+        .join(F.broadcast(m.big.withColumnRenamed("w1", "x1")
                           .withColumnRenamed("w2", "x2")).alias("bc"),
               (F.col("w.prev2") == F.col("bc.x1"))
               & (F.col("w.prev") == F.col("bc.x2")), "left")
@@ -413,14 +491,16 @@ def with_trigram_logprob(
               (F.col("w.prev2") == F.col("tr.w1"))
               & (F.col("w.prev") == F.col("tr.w2"))
               & (F.col("w.word") == F.col("tr.w3")), "left")
-        .select(F.col(f"w.{id_col}").alias(id_col),
-                F.col("w.word").alias("word"),
-                F.when(F.col("w.word").isNotNull(), -F.log(p)).alias("nll"))
     )
-    return scored.groupBy(id_col).agg(
-        F.round(F.avg("nll"), 4).alias("trigram_nll"),
-        F.count("word").alias("n_scored_words"),
-    )
+    p_uni, p_big = m.probs()
+    p_tri = ((F.coalesce(F.col("tr.c"), F.lit(0)) + F.lit(alpha))
+             / (F.coalesce(F.col("bc.c"), F.lit(0)) + F.lit(m.floor)))
+    p = (F.when(F.col("w.prev").isNull(), p_uni)
+         .when(F.col("w.prev2").isNull(),
+               F.lit(lam3 + lam2) * p_big + F.lit(lam1) * p_uni)
+         .otherwise(F.lit(lam3) * p_tri + F.lit(lam2) * p_big
+                    + F.lit(lam1) * p_uni))
+    return _mean_nll(joined, id_col, trigram_nll=p)
 
 
 def with_kneser_ney_logprob(
@@ -464,84 +544,64 @@ def with_kneser_ney_logprob(
     one groupBy(id).  Output ``(id_col, kn_nll, n_scored_words)``,
     rounded to 4 decimals (the log-expression hash-gating rule);
     zero-token docs → NULL nll, 0 words."""
-    from .dedup import _tokens
-
     if not (0.0 < d3 < 1.0 and 0.0 < d2 < 1.0):
         raise ValueError(f"discounts must be in (0, 1) (got {d3}, {d2})")
     if not (0.0 < eps < 1.0):
         raise ValueError(f"eps must be in (0, 1) (got {eps})")
-    tri = (trigrams.filter(F.col("n_occurrences") >= min_count)
-           .select("w1", "w2", "w3",
-                   F.col("n_occurrences").cast("bigint").alias("c")))
-    big = (bigrams.filter(F.col("n_occurrences") >= min_count)
-           .select("w1", "w2"))
-    tri_rows = tri.limit(max_model_rows + 1).collect()
+    unicont = (_pruned(bigrams, 2, min_count).groupBy("w2")
+               .agg(F.count(F.lit(1)).alias("n1p_w")))
+    tri_rows, unicont_rows = _capped_collect(
+        [_pruned(trigrams, 3, min_count), unicont], max_model_rows,
+        "the five KN tables")
     # ctx3/cont2/mid are pure groupbys of tri_rows, which is already on
     # the driver (and already capped) — deriving them here instead of
-    # re-aggregating `tri` three more times removes three full scans +
-    # shuffles of the training slice per fit. tri rows are distinct on
-    # (w1,w2,w3), so counts below are row counts / distinct-w3 counts.
-    _ctx3: dict[tuple, list] = {}
-    _cont2: dict[tuple, int] = {}
-    _mid: dict[str, list] = {}  # w2 -> [row count, distinct-w3 set]
-    for r in tri_rows:
-        k = (r["w1"], r["w2"])
-        acc = _ctx3.setdefault(k, [0, 0])
-        acc[0] += int(r["c"])
+    # re-aggregating the trigram frame three more times removes three full
+    # scans + shuffles of the training slice per fit. tri rows are distinct
+    # on (w1,w2,w3), so counts below are row counts / distinct-w3 counts.
+    ctx3: dict[tuple, list] = {}
+    cont2: dict[tuple, int] = {}
+    mid: dict[str, list] = {}  # w2 -> [row count, distinct-w3 set]
+    for w1, w2, w3, c in tri_rows:
+        acc = ctx3.setdefault((w1, w2), [0, 0])
+        acc[0] += c
         acc[1] += 1
-        _cont2[(r["w2"], r["w3"])] = _cont2.get((r["w2"], r["w3"]), 0) + 1
-        m = _mid.setdefault(r["w2"], [0, set()])
+        cont2[(w2, w3)] = cont2.get((w2, w3), 0) + 1
+        m = mid.setdefault(w2, [0, set()])
         m[0] += 1
-        m[1].add(r["w3"])
-    ctx3_rows = [{"w1": k[0], "w2": k[1], "c_ctx": v[0], "n1p": v[1]}
-                 for k, v in _ctx3.items()]
-    cont2_rows = [{"w2": k[0], "w3": k[1], "n_cont": v}
-                  for k, v in _cont2.items()]
-    mid_rows = [{"w2": w2, "n_mid": m[0], "n_types": len(m[1])}
-                for w2, m in _mid.items()]
-    unicont_rows = (big.groupBy("w2")
-                    .agg(F.count(F.lit(1)).alias("n1p_w"))
-                    .limit(max_model_rows + 1).collect())
-    n_model = (len(tri_rows) + len(ctx3_rows) + len(cont2_rows)
-               + len(mid_rows) + len(unicont_rows))
-    if n_model > max_model_rows:
-        raise ValueError(
-            f"model too large to broadcast (>{max_model_rows} rows across "
-            "the five KN tables); raise min_count or train on a smaller "
-            "sample")
-    nb = float(sum(r["n1p_w"] for r in unicont_rows))  # N1+(··)
+        m[1].add(w3)
+    if (len(tri_rows) + len(ctx3) + len(cont2) + len(mid)
+            + len(unicont_rows)) > max_model_rows:
+        raise _model_too_large(max_model_rows, "the five KN tables")
+    nb = float(sum(r[1] for r in unicont_rows))  # N1+(··)
     vsize = len(unicont_rows)
     uniform = eps / (vsize + 1.0)
     spark = df.sparkSession
-    tri_local = spark.createDataFrame(
-        [(r["w1"], r["w2"], r["w3"], int(r["c"])) for r in tri_rows]
-        or [("", "", "", 0)],
-        "w1 string, w2 string, w3 string, c bigint")
-    ctx3_local = spark.createDataFrame(
-        [(r["w1"], r["w2"], int(r["c_ctx"]), int(r["n1p"]))
-         for r in ctx3_rows] or [("", "", 0, 0)],
-        "w1 string, w2 string, c_ctx bigint, n1p bigint")
-    cont2_local = spark.createDataFrame(
-        [(r["w2"], r["w3"], int(r["n_cont"])) for r in cont2_rows]
-        or [("", "", 0)],
-        "w2 string, w3 string, n_cont bigint")
-    mid_local = spark.createDataFrame(
-        [(r["w2"], int(r["n_mid"]), int(r["n_types"])) for r in mid_rows]
-        or [("", 0, 0)],
-        "w2 string, n_mid bigint, n_types bigint")
-    unicont_local = spark.createDataFrame(
-        [(r["w2"], int(r["n1p_w"])) for r in unicont_rows] or [("", 0)],
-        "w2 string, n1p_w bigint")
-    toks = F.filter(_tokens(text_col), lambda x: x != "")
-    pos_structs = F.expr(
-        "transform(sequence(1, greatest(size(_t), 1)),"
-        " i -> struct(get(_t, i - 1) AS word,"
-        " CASE WHEN i > 1 THEN get(_t, i - 2) END AS prev,"
-        " CASE WHEN i > 2 THEN get(_t, i - 3) END AS prev2))")
-    words = (
-        df.select(F.col(id_col), toks.alias("_t"))
-        .select(F.col(id_col), F.explode(pos_structs).alias("s"))
-        .select(id_col, "s.word", "s.prev", "s.prev2")
+    tri_local = _local(spark, tri_rows,
+                       "w1 string, w2 string, w3 string, c bigint")
+    ctx3_local = _local(spark, [(*k, *v) for k, v in ctx3.items()],
+                        "w1 string, w2 string, c_ctx bigint, n1p bigint")
+    cont2_local = _local(spark, [(*k, v) for k, v in cont2.items()],
+                         "w2 string, w3 string, n_cont bigint")
+    mid_local = _local(spark, [(w2, n, len(w3s))
+                               for w2, (n, w3s) in mid.items()],
+                       "w2 string, n_mid bigint, n_types bigint")
+    unicont_local = _local(spark, unicont_rows, "w2 string, n1p_w bigint")
+    joined = (
+        _contexts(df, id_col, text_col, 3)
+        .join(F.broadcast(tri_local).alias("tr"),
+              (F.col("w.prev2") == F.col("tr.w1"))
+              & (F.col("w.prev") == F.col("tr.w2"))
+              & (F.col("w.word") == F.col("tr.w3")), "left")
+        .join(F.broadcast(ctx3_local).alias("x3"),
+              (F.col("w.prev2") == F.col("x3.w1"))
+              & (F.col("w.prev") == F.col("x3.w2")), "left")
+        .join(F.broadcast(cont2_local).alias("c2"),
+              (F.col("w.prev") == F.col("c2.w2"))
+              & (F.col("w.word") == F.col("c2.w3")), "left")
+        .join(F.broadcast(mid_local).alias("m"),
+              F.col("w.prev") == F.col("m.w2"), "left")
+        .join(F.broadcast(unicont_local).alias("uc"),
+              F.col("w.word") == F.col("uc.w2"), "left")
     )
     p1 = (F.lit(1.0 - eps) * F.coalesce(F.col("uc.n1p_w"), F.lit(0))
           / F.lit(nb) + F.lit(uniform)) if nb > 0 else F.lit(
@@ -563,30 +623,24 @@ def with_kneser_ney_logprob(
     p = (F.when(F.col("w.prev").isNull(), p1)
          .when(F.col("w.prev2").isNull(), p2)
          .otherwise(p3))
-    scored = (
-        words.alias("w")
-        .join(F.broadcast(tri_local).alias("tr"),
-              (F.col("w.prev2") == F.col("tr.w1"))
-              & (F.col("w.prev") == F.col("tr.w2"))
-              & (F.col("w.word") == F.col("tr.w3")), "left")
-        .join(F.broadcast(ctx3_local).alias("x3"),
-              (F.col("w.prev2") == F.col("x3.w1"))
-              & (F.col("w.prev") == F.col("x3.w2")), "left")
-        .join(F.broadcast(cont2_local).alias("c2"),
-              (F.col("w.prev") == F.col("c2.w2"))
-              & (F.col("w.word") == F.col("c2.w3")), "left")
-        .join(F.broadcast(mid_local).alias("m"),
-              F.col("w.prev") == F.col("m.w2"), "left")
-        .join(F.broadcast(unicont_local).alias("uc"),
-              F.col("w.word") == F.col("uc.w2"), "left")
-        .select(F.col(f"w.{id_col}").alias(id_col),
-                F.col("w.word").alias("word"),
-                F.when(F.col("w.word").isNotNull(), -F.log(p)).alias("nll"))
-    )
-    return scored.groupBy(id_col).agg(
-        F.round(F.avg("nll"), 4).alias("kn_nll"),
-        F.count("word").alias("n_scored_words"),
-    )
+    return _mean_nll(joined, id_col, kn_nll=p)
+
+
+def _bigram_scorer(spark, unigrams: DataFrame, bigrams: DataFrame,
+                   lam: float, alpha: float, min_count: int,
+                   max_model_rows: int):
+    """Check the parameters and collect the interpolated-bigram model once;
+    returns ``score(df, id_col, text_col, carry_cols)``, the
+    :func:`with_bigram_logprob` output under that model."""
+    _check_add_alpha(alpha, lam)
+    m = _add_alpha_model(spark, unigrams, bigrams, alpha, min_count,
+                         max_model_rows)
+
+    def score(df, id_col, text_col, carry_cols=()):
+        carry = tuple(carry_cols)
+        return _mean_nll(m.join(_contexts(df, id_col, text_col, 2, carry)),
+                         id_col, carry, bigram_nll=m.interpolated(lam))
+    return score
 
 
 def with_bigram_logprob(
@@ -630,83 +684,9 @@ def with_bigram_logprob(
     no window, no self-join) → two broadcast joins → one groupBy(id).
     Totality: zero-token documents survive with ``bigram_nll = NULL,
     n_scored_words = 0``."""
-    from .dedup import _tokens
-
-    if alpha <= 0:
-        raise ValueError("alpha must be > 0 (the α floor is what keeps "
-                         "unseen words/bigrams off log(0))")
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"lam must be in [0, 1] (got {lam})")
-    # limit(cap + 1) BOUNDS the collect itself: an over-sized model pulls
-    # at most cap+1 rows to the driver before the error fires, instead of
-    # OOMing the driver first and never reaching a post-hoc length check
-    uni_rows = (unigrams.select("word", "n_occurrences")
-                .limit(max_model_rows + 1).collect())
-    big_rows = (
-        bigrams.filter(F.col("n_occurrences") >= min_count)
-        .select("w1", "w2", "n_occurrences")
-        .limit(max_model_rows + 1).collect()
-    )
-    if len(uni_rows) + len(big_rows) > max_model_rows:
-        raise ValueError(
-            f"model too large to broadcast (>{max_model_rows} rows across "
-            "unigrams + bigrams); raise min_count or train on a smaller "
-            "sample")
-    total = float(sum(r["n_occurrences"] for r in uni_rows))
-    vsize = len(uni_rows)
-    floor = alpha * (vsize + 1)
-    spark = df.sparkSession
-    uni_local = spark.createDataFrame(
-        [(r["word"], int(r["n_occurrences"])) for r in uni_rows]
-        or [("", 0)],
-        "word string, c bigint",
-    )
-    big_local = spark.createDataFrame(
-        [(r["w1"], r["w2"], int(r["n_occurrences"])) for r in big_rows]
-        or [("", "", 0)],
-        "w1 string, w2 string, c bigint",
-    )
-    # (pos, word, prev) structs per row — zero-shuffle, no window
-    toks = F.filter(_tokens(text_col), lambda x: x != "")
-    # get() tolerates the out-of-range probe on empty docs (plain _t[i]
-    # throws INVALID_ARRAY_INDEX under Spark 4's stricter default)
-    pos_structs = F.expr(
-        "transform(sequence(1, greatest(size(_t), 1)),"
-        " i -> struct(get(_t, i - 1) AS word,"
-        " CASE WHEN i > 1 THEN get(_t, i - 2) END AS prev))")
-    carry = [c for c in carry_cols]
-    words = (
-        df.select(F.col(id_col), *[F.col(c) for c in carry], toks.alias("_t"))
-        .select(F.col(id_col), *carry, F.explode(pos_structs).alias("s"))
-        # size-1 sequence on empty docs yields one NULL-word row → totality
-        .select(id_col, *carry, "s.word", "s.prev")
-    )
-    cw = F.coalesce(F.col("u.c"), F.lit(0))
-    cprev = F.coalesce(F.col("up.c"), F.lit(0))
-    cbig = F.coalesce(F.col("b.c"), F.lit(0))
-    p_uni = (cw + F.lit(alpha)) / F.lit(total + floor)
-    p_big = (cbig + F.lit(alpha)) / (cprev + F.lit(floor))
-    p = F.when(F.col("w.prev").isNull(), p_uni).otherwise(
-        F.lit(lam) * p_big + F.lit(1.0 - lam) * p_uni)
-    scored = (
-        words.alias("w")
-        .join(F.broadcast(uni_local).alias("u"),
-              F.col("w.word") == F.col("u.word"), "left")
-        .join(F.broadcast(uni_local.withColumnRenamed("word", "pword")
-                          ).alias("up"),
-              F.col("w.prev") == F.col("up.pword"), "left")
-        .join(F.broadcast(big_local).alias("b"),
-              (F.col("w.prev") == F.col("b.w1"))
-              & (F.col("w.word") == F.col("b.w2")), "left")
-        .select(F.col(f"w.{id_col}").alias(id_col),
-                *[F.col(f"w.{c}").alias(c) for c in carry],
-                F.col("w.word").alias("word"),
-                F.when(F.col("w.word").isNotNull(), -F.log(p)).alias("nll"))
-    )
-    return scored.groupBy(id_col, *carry).agg(
-        F.round(F.avg("nll"), 4).alias("bigram_nll"),
-        F.count("word").alias("n_scored_words"),
-    )
+    return _bigram_scorer(df.sparkSession, unigrams, bigrams, lam, alpha,
+                          min_count, max_model_rows)(
+        df, id_col, text_col, carry_cols)
 
 
 def ccnet_ppl_buckets(
@@ -752,8 +732,7 @@ def ccnet_ppl_buckets(
     full-corpus scoring lineage executes exactly once and the rank window
     sorts ONLY the sample (``sample_cap``/65536 of the corpus — the scale
     dial); the 3-row-per-language threshold table broadcast-joins back.
-    The corpus is never globally sorted. Cost note: the bounded model
-    collect/broadcast happens twice (once per scorer call).
+    The corpus is never globally sorted.
     """
     from pyspark.sql.window import Window
 
@@ -764,6 +743,8 @@ def ccnet_ppl_buckets(
             f"sample_cap must be in (0, 65536]: {sample_cap} — a cap of 0 "
             "would empty the threshold sample and silently label the whole "
             "corpus 'unbucketed'")
+    score = _bigram_scorer(df.sparkSession, unigrams, bigrams, lam, alpha,
+                           min_count, max_model_rows)
     langed = with_lang_id(df, text_col).select(
         id_col, "lang_pred", text_col)
     sample_docs = (
@@ -771,19 +752,11 @@ def ccnet_ppl_buckets(
         .filter(F.col("_b") < sample_cap).drop("_b")
     )
     samp = (
-        with_bigram_logprob(
-            sample_docs, unigrams, bigrams, id_col=id_col,
-            text_col=text_col, lam=lam, alpha=alpha, min_count=min_count,
-            max_model_rows=max_model_rows, carry_cols=("lang_pred",),
-        )
+        score(sample_docs, id_col, text_col, ("lang_pred",))
         .filter(F.col("bigram_nll").isNotNull())
         .select("lang_pred", "bigram_nll", id_col)
     )
-    scored = with_bigram_logprob(
-        langed, unigrams, bigrams, id_col=id_col, text_col=text_col,
-        lam=lam, alpha=alpha, min_count=min_count,
-        max_model_rows=max_model_rows, carry_cols=("lang_pred",),
-    )
+    scored = score(langed, id_col, text_col, ("lang_pred",))
     w_rk = Window.partitionBy("lang_pred").orderBy("bigram_nll", id_col)
     w_n = Window.partitionBy("lang_pred")
     ranked = (samp.withColumn("_rk", F.row_number().over(w_rk))
@@ -843,91 +816,17 @@ def with_lm_contrast(
     log-expression hash-gating rule) with the contrast defined ON the
     rounded means so the oracle replays it exactly. Zero-token docs →
     NULL scores, 0 words."""
-    from .dedup import _tokens
-
-    if alpha <= 0:
-        raise ValueError("alpha must be > 0")
-    if not 0.0 <= lam <= 1.0:
-        raise ValueError(f"lam must be in [0, 1] (got {lam})")
+    _check_add_alpha(alpha, lam)
     spark = df.sparkSession
-
-    def _model(unigrams: DataFrame, bigrams: DataFrame):
-        uni_rows = (unigrams.select("word", "n_occurrences")
-                    .limit(max_model_rows + 1).collect())
-        big_rows = (bigrams.filter(F.col("n_occurrences") >= min_count)
-                    .select("w1", "w2", "n_occurrences")
-                    .limit(max_model_rows + 1).collect())
-        if len(uni_rows) + len(big_rows) > max_model_rows:
-            raise ValueError(
-                f"model too large to broadcast (>{max_model_rows} rows); "
-                "raise min_count or train on a smaller sample")
-        total = float(sum(r["n_occurrences"] for r in uni_rows))
-        floor = alpha * (len(uni_rows) + 1)
-        uni_local = spark.createDataFrame(
-            [(r["word"], int(r["n_occurrences"])) for r in uni_rows]
-            or [("", 0)], "word string, c bigint")
-        big_local = spark.createDataFrame(
-            [(r["w1"], r["w2"], int(r["n_occurrences"])) for r in big_rows]
-            or [("", "", 0)], "w1 string, w2 string, c bigint")
-        return uni_local, big_local, total, floor
-
-    t_uni, t_big, t_total, t_floor = _model(target_unigrams, target_bigrams)
-    r_uni, r_big, r_total, r_floor = _model(ref_unigrams, ref_bigrams)
-    if t_total == 0 or r_total == 0:
+    t = _add_alpha_model(spark, target_unigrams, target_bigrams, alpha,
+                         min_count, max_model_rows)
+    r = _add_alpha_model(spark, ref_unigrams, ref_bigrams, alpha,
+                         min_count, max_model_rows)
+    if t.total == 0 or r.total == 0:
         raise ValueError("both models need at least one training token")
-
-    toks = F.filter(_tokens(text_col), lambda x: x != "")
-    pos_structs = F.expr(
-        "transform(sequence(1, greatest(size(_t), 1)),"
-        " i -> struct(get(_t, i - 1) AS word,"
-        " CASE WHEN i > 1 THEN get(_t, i - 2) END AS prev))")
-    words = (
-        df.select(F.col(id_col), toks.alias("_t"))
-        .select(F.col(id_col), F.explode(pos_structs).alias("s"))
-        .select(id_col, "s.word", "s.prev")
-    )
-
-    def _p(u, up, b, total, floor):
-        p_uni = ((F.coalesce(F.col(f"{u}.c"), F.lit(0)) + F.lit(alpha))
-                 / F.lit(total + floor))
-        p_big = ((F.coalesce(F.col(f"{b}.c"), F.lit(0)) + F.lit(alpha))
-                 / (F.coalesce(F.col(f"{up}.c"), F.lit(0)) + F.lit(floor)))
-        return F.when(F.col("w.prev").isNull(), p_uni).otherwise(
-            F.lit(lam) * p_big + F.lit(1.0 - lam) * p_uni)
-
-    scored = (
-        words.alias("w")
-        .join(F.broadcast(t_uni).alias("tu"),
-              F.col("w.word") == F.col("tu.word"), "left")
-        .join(F.broadcast(t_uni.withColumnRenamed("word", "pword")
-                          ).alias("tp"),
-              F.col("w.prev") == F.col("tp.pword"), "left")
-        .join(F.broadcast(t_big).alias("tb"),
-              (F.col("w.prev") == F.col("tb.w1"))
-              & (F.col("w.word") == F.col("tb.w2")), "left")
-        .join(F.broadcast(r_uni).alias("ru"),
-              F.col("w.word") == F.col("ru.word"), "left")
-        .join(F.broadcast(r_uni.withColumnRenamed("word", "pword")
-                          ).alias("rp"),
-              F.col("w.prev") == F.col("rp.pword"), "left")
-        .join(F.broadcast(r_big).alias("rb"),
-              (F.col("w.prev") == F.col("rb.w1"))
-              & (F.col("w.word") == F.col("rb.w2")), "left")
-        .select(
-            F.col(f"w.{id_col}").alias(id_col),
-            F.col("w.word").alias("word"),
-            F.when(F.col("w.word").isNotNull(),
-                   -F.log(_p("tu", "tp", "tb", t_total, t_floor))
-                   ).alias("t_nll"),
-            F.when(F.col("w.word").isNotNull(),
-                   -F.log(_p("ru", "rp", "rb", r_total, r_floor))
-                   ).alias("r_nll"),
-        )
-    )
-    return (scored.groupBy(id_col)
-            .agg(F.round(F.avg("t_nll"), 4).alias("target_nll"),
-                 F.round(F.avg("r_nll"), 4).alias("ref_nll"),
-                 F.count("word").alias("n_scored_words"))
+    joined = r.join(t.join(_contexts(df, id_col, text_col, 2), "t"), "r")
+    return (_mean_nll(joined, id_col, target_nll=t.interpolated(lam, "t"),
+                      ref_nll=r.interpolated(lam, "r"))
             .withColumn(
                 "lm_contrast",
                 F.round(F.col("ref_nll") - F.col("target_nll"), 4))

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 
 
 @contextmanager
-def persisted(*dfs: DataFrame, blocking: bool = False) -> Iterator[DataFrame]:
+def persisted(*dfs: DataFrame) -> Iterator[DataFrame]:
     """Persist the given frame(s) for the block, unpersist on exit (success
     or raise). Yields the single frame, or the tuple when given several."""
     for df in dfs:
@@ -30,4 +30,4 @@ def persisted(*dfs: DataFrame, blocking: bool = False) -> Iterator[DataFrame]:
         yield dfs[0] if len(dfs) == 1 else dfs
     finally:
         for df in dfs:
-            df.unpersist(blocking=blocking)
+            df.unpersist()

@@ -7,7 +7,6 @@ import json
 import logging
 import re
 
-import pytest
 from pyspark.errors import AnalysisException
 
 from resume_ocr_spark import applog
@@ -60,7 +59,7 @@ def test_format_matches_reference_shape(tmp_path):
 
 
 def test_job_run_events_read_back(spark, tmp_path, run_job):
-    """A good, a refused and a failed run of two jobs each log run_start
+    """A good, a refused and a crashed run of two jobs each log run_start
     and one closing event under their own run id and job name, and the
     run_complete audit is the one JSON line the run printed."""
     table = str(tmp_path / "table")
@@ -73,10 +72,12 @@ def test_job_run_events_read_back(spark, tmp_path, run_job):
     spark.createDataFrame([], "url string, html string").write.parquet(crawl)
     assert run_job(["submit_refresh", "--new", crawl,
                     "--output", str(tmp_path / "r")])[0] == 4
-    with pytest.raises(AnalysisException):
-        run_job(["submit_maintenance", "--mode", "zorder", "--cols", "id",
-                 "--table", str(tmp_path / "missing"),
-                 "--output", str(tmp_path / "z")])
+    rc, _, err = run_job(["submit_maintenance", "--mode", "zorder",
+                          "--cols", "id",
+                          "--table", str(tmp_path / "missing"),
+                          "--output", str(tmp_path / "z")])
+    assert rc == 5  # CRASHED, not ALL_FAILED's 1
+    assert AnalysisException.__name__ in err  # the traceback
 
     runs: dict[str, dict[str, str]] = {}
     for row in applog.read_app_logs(spark, str(tmp_path / "logs")).filter(

@@ -121,6 +121,29 @@ def test_deterministic_across_runs(spark, frames):
     assert a == b
 
 
+def test_model_collected_once(spark, frames):
+    """The sample and the corpus are scored under one model collect: a
+    ccnet_ppl_buckets call starts as many Spark jobs as one
+    with_bigram_logprob call (the collects are the only eager work)."""
+    _, df, uni, big = frames
+    sc = spark.sparkContext
+
+    def jobs(group, call):
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    bigram = jobs("lm_jobs_bigram",
+                  lambda: textstats.with_bigram_logprob(df, uni, big))
+    ccnet = jobs("lm_jobs_ccnet",
+                 lambda: textstats.ccnet_ppl_buckets(df, uni, big))
+    assert bigram > 0
+    assert ccnet == bigram
+
+
 def test_carry_cols_leaves_scores_unchanged(spark, frames):
     _, df, uni, big = frames
     tagged = df.withColumn("src", F.when(F.col("doc_id") % 2 == 0, "a")

@@ -1444,6 +1444,12 @@ class TestSubmitCuration:
         assert sum(audit.values()) == 100
         assert kept.count() == audit["kept"] > 0
         assert "drop_reason" not in kept.columns
+        bad = tmp_path / "bad_weights"
+        rc, _, err = run_job(["submit_curation", "--input", src,
+                              "--output", str(bad),
+                              "--weights", '{"en": 0.9'])
+        assert rc == 2 and "invalid --weights" in err
+        assert not bad.exists()
 
     def test_redact_pii_scrubs_survivors_only(self, spark, tmp_path,
                                               run_job):

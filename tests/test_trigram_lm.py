@@ -125,9 +125,10 @@ def test_trigram_sees_past_bigram_saturation(spark):
 
 @pytest.mark.usefixtures("spark")
 def test_totality_and_guards(spark):
-    texts = {0: "", 1: "   ", 2: "one"}
+    texts = {0: "", 1: "   ", 2: "one", 3: None}
     got = _score_df(spark, texts)
     assert got[0] == (None, 0) and got[1] == (None, 0)
+    assert got[3] == (None, 0)
     assert got[2][1] == 1
     df = spark.createDataFrame([(0, "x")], "doc_id long, text string")
     uni = textstats.word_counts(df)

@@ -59,7 +59,10 @@ ap.add_argument("--redact-pii", action="store_true",
 def run(args) -> dict:
     from resume_ocr_spark.operators import curate
 
-    weights = json.loads(args.weights) if args.weights else None
+    try:
+        weights = json.loads(args.weights) if args.weights else None
+    except json.JSONDecodeError as exc:
+        raise Refused(INVALID, f"invalid --weights: {exc}") from None
     if weights is not None and not isinstance(weights, dict):
         raise Refused(INVALID, "invalid --weights: must be a JSON object")
 
